@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 import graft.streaming.PartitionedTable
@@ -62,16 +62,8 @@ object AnnBuildSoak {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(5000000L)
     val out = sys.env.getOrElse("SPARK_GRAFT_ANNSOAK_OUT", "BENCH_annsoak.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ann-build-soak")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft_annsoak_wh").toString)
-      .getOrCreate()
+    val spark =
+      GraftSession(warehouse = Some(Files.createTempDirectory("graft_annsoak_wh")))
     spark.sparkContext.setLogLevel("ERROR")
     val work = Files.createTempDirectory("graft_annsoak")
     try {

@@ -93,26 +93,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Always use the sort-based shuffle writer (r18, guide §2.2 —
-      // the 8-beats-32-core inversion's root cause): with R = cores,
-      // the bypass-merge writer opens M×R per-reduce files per shuffle
-      // (cores² block files) and concatenates them via transferTo →
-      // mmap/munmap, whose TLB shootdowns serialize a many-vCPU host —
-      // jstack'd in AB_CORES/AB_BYPASS_r18.json; the sort writer is
-      // −2.3 s over the four kernel-shuffle queries at 32 cores, parity
-      // elsewhere. At production R (> 200) the threshold is moot (the
-      // sort writer is chosen anyway); env override for A/Bs.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
 
     // spill accounting (r11 VERDICT item 4 — the memory-pressure

@@ -32,17 +32,12 @@ object BloomProbe {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val runs = args.lift(2).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // pin the shuffled shape the operator targets: at probe scale AQE
-      // would broadcast the build side and there would be no probe-side
-      // Exchange to cut — at 100 TB there is
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
+    val spark = GraftSession()
+    // pin the shuffled shape the operator targets: at probe scale AQE
+    // would broadcast the build side and there would be no probe-side
+    // Exchange to cut — at 100 TB there is
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     spark.sparkContext.setLogLevel("ERROR")
 
     val probe = Tables.lineitem(spark, d)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the ONE iterative operator's scale story with numbers
@@ -27,12 +26,7 @@ object ComponentsProbe {
     val tiers = if (args.length > 1) args.drop(1).toSeq
       else Seq("/root/testdata/sf0.1", "/root/repo/testdata-local/sf1",
         "/root/repo/testdata-local5/sf5")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     import graft.operators.Dedup
 

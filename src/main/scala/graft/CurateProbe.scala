@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** r18 measurement tool (guide §1: measure BEFORE touching the most
@@ -17,15 +16,7 @@ object CurateProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val runs = args.lift(1).map(_.toInt).getOrElse(3)
     val out = args.lift(2).getOrElse("/tmp/curate_probe.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     import graft.operators.{Dedup, Pipeline, TextAnalysis}
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Path}
 
 /** GB-scale ingest soak (round-8 VERDICT item 6): generates a
@@ -121,18 +120,11 @@ object IngestSoak {
   def main(args: Array[String]): Unit = {
     startHeapSampler()
     val n = args.headOption.map(_.toLong).getOrElse(4000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // pin splits below the per-file compressed size so the bz2
-      // BYBLOCK splittable path engages inside each file too — on a
-      // real multi-GB dump the 128 MB default does this by itself
-      .config("spark.sql.files.maxPartitionBytes", "2m")
-      .getOrCreate()
+    val spark = GraftSession()
+    // pin splits below the per-file compressed size so the bz2
+    // BYBLOCK splittable path engages inside each file too — on a
+    // real multi-GB dump the 128 MB default does this by itself
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "2m")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

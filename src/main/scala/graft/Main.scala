@@ -177,13 +177,7 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     val cfg = parse(args.toList)
-    val spark = SparkSession.builder()
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     run(spark, cfg).foreach(println)
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measures the index-maintenance trilogy's scale contract: merging a
@@ -37,15 +37,10 @@ object MaintainProbe {
     val out = args.headOption.getOrElse("MAINTAIN_r12.json")
     val tiers = if (args.length > 1) args.drop(1).toSeq
       else Seq("/root/testdata/sf0.1", "/root/repo/testdata-local/sf1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bounded bucket size: the derived bucket count must grow with
-      // the standing corpus for the O(bucket) touched-rewrite bound
-      .config("spark.graft.bucket.targetRows", (1 << 16).toString)
-      .getOrCreate()
+    val spark = GraftSession()
+    // bounded bucket size: the derived bucket count must grow with
+    // the standing corpus for the O(bucket) touched-rewrite bound
+    spark.conf.set("spark.graft.bucket.targetRows", (1 << 16).toString)
     spark.sparkContext.setLogLevel("ERROR")
     import graft.operators.{Retrieval, Similarity}
 

@@ -12,8 +12,7 @@ import java.nio.file.{Files, Paths}
   * Usage: sbt "runMain graft.PlanDump <sfDir> <outDir> <suffix> [q1,q2,...]"
   * Defaults: /root/testdata/sf0.1 plans/r17 before <the Bench headline set>.
   *
-  * Session config mirrors graft.Bench (same master/core/shuffle
-  * settings from SPARK_GRAFT_CPUS) so the dumped plans are the plans
+  * Runs on the shared GraftSession, so the dumped plans are the plans
   * the bench actually runs. Each file carries the lazy formatted plan
   * and, when the query executes cheaply, the POST-RUN adaptive plan
   * (AQE finalizes join strategy + coalescing only after execution).
@@ -39,19 +38,7 @@ object PlanDump {
     val names =
       if (args.length > 3) args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq
       else defaultQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // mirror graft.Bench's shuffle-writer choice (r18) so dumped
-      // plans come from the session the bench actually runs
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
 
@@ -95,7 +82,7 @@ object PlanDump {
           if (captured.get.nonEmpty) captured.get
           else df2.queryExecution.executedPlan.toString
         Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"),
-          s"== $name @ $sfDir (local[$cpus]) ==\n\n" +
+          s"== $name @ $sfDir (${spark.sparkContext.master}) ==\n\n" +
             "---- explain(formatted), pre-execution ----\n" + lazyPlan +
             "\n---- executed plan (AQE final) ----\n" + finalPlan + "\n")
         println(s"[plandump] $name -> $outDir/${name}_$suffix.txt")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Unified-recipe recall corpora (r14 VERDICT item 6): the driver
@@ -28,11 +27,7 @@ object RecallGen {
 
   def main(args: Array[String]): Unit = {
     val outBase = args.headOption.getOrElse("recall-local")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     val tiers = Seq("u0.01" -> 500L, "u0.1" -> 2000L, "u1" -> 20000L)
     tiers.foreach { case (name, n) =>

@@ -18,16 +18,8 @@ object RetrievalProbe {
     val out = args.headOption.getOrElse("RETRIEVAL_r11.json")
     val dirs = if (args.length > 1) args.drop(1).toSeq
       else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_retprobe_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark =
+      GraftSession(warehouse = Some(java.nio.file.Files.createTempDirectory("graft_retprobe_wh")))
     spark.sparkContext.setLogLevel("ERROR")
     def fmt(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))

@@ -71,20 +71,13 @@ object SkewCheck {
 
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("testdata-local/sf1skew")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // the tier is ~100 MB; scale the byte thresholds down with it
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8m")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
+    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+    // the tier is ~100 MB; scale the byte thresholds down with it
+    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
+    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8m")
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.sparkContext.setLogLevel("ERROR")
 
     def time[T](body: => T): (T, Double) = {

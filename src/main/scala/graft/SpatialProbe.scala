@@ -82,12 +82,7 @@ object SpatialProbe {
 
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/repo/testdata-local/sf1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
 
     if (d == "cluster") {

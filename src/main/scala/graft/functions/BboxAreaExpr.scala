@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftshim.{ColumnBridge => ExpressionUtils}
+import org.apache.spark.sql.graftshim.{ColumnBridge => ExpressionUtils, DoubleInputs}
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expression for the equal-area bbox size
@@ -19,15 +19,16 @@ import org.apache.spark.sql.types._
   * round-trip per row).
   *
   * Null semantics: NULL if any corner is NULL (null-intolerant),
-  * matching SQL arithmetic.
+  * matching SQL arithmetic. Numeric corners of any type (e.g. the
+  * replicated table's decimal(10,7)) are cast to double by the
+  * analyzer, for the Column and the SQL forms alike.
   */
 case class BboxArea(minLon: Expression, minLat: Expression,
     maxLon: Expression, maxLat: Expression)
-  extends QuaternaryExpression {
+  extends QuaternaryExpression with DoubleInputs {
 
   private val R = 6371007.0
 
-  // inputs are cast to double at the Column/registry boundary
   override def dataType: DataType = DoubleType
   override def nullable: Boolean =
     minLon.nullable || minLat.nullable || maxLon.nullable || maxLat.nullable
@@ -62,11 +63,9 @@ case class BboxArea(minLon: Expression, minLat: Expression,
 }
 
 object BboxArea {
-  /** Column-API entry point (casts inputs to double). */
+  /** Column-API entry point. */
   def bboxArea(minLon: Column, minLat: Column, maxLon: Column, maxLat: Column): Column =
     ExpressionUtils.column(BboxArea(
-      ExpressionUtils.expression(minLon.cast(DoubleType)),
-      ExpressionUtils.expression(minLat.cast(DoubleType)),
-      ExpressionUtils.expression(maxLon.cast(DoubleType)),
-      ExpressionUtils.expression(maxLat.cast(DoubleType))))
+      ExpressionUtils.expression(minLon), ExpressionUtils.expression(minLat),
+      ExpressionUtils.expression(maxLon), ExpressionUtils.expression(maxLat)))
 }

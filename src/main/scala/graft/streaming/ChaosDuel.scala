@@ -249,14 +249,8 @@ object ChaosDuel {
       .orElse(SparkSession.getDefaultSession)
       .filterNot(_.sparkContext.isStopped)
     val spark = existing.getOrElse {
-      val s = SparkSession.builder()
-        .master("local[2]")
-        .appName("graft-chaos-verify")
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.warehouse.dir",
-          Files.createTempDirectory("graft_chaos_wh").toString)
-        .getOrCreate()
+      val s = graft.GraftSession(cores = 2,
+        warehouse = Some(Files.createTempDirectory("graft_chaos_wh")))
       s.sparkContext.setLogLevel("ERROR")
       s
     }

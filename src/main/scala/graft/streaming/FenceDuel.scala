@@ -52,15 +52,8 @@ import org.apache.spark.sql.functions._
 object FenceDuel {
 
   private def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-fence-duel")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft_duel_wh").toString)
-      .getOrCreate()
+    val s = graft.GraftSession(cores = 2,
+      warehouse = Some(Files.createTempDirectory("graft_duel_wh")))
     s.sparkContext.setLogLevel("ERROR")
     s
   }

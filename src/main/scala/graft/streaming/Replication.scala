@@ -380,17 +380,25 @@ object Replication {
     // our nonce just before the steal, writes just after the
     // stealer's verify) is closed by the monotonic GENERATION check
     // at the commit point.
+    //
+    // Release stops the heartbeat through a latch, never an interrupt:
+    // FileChannel is interruptible, and an interrupt landing in
+    // `refresh` between truncate and write would close the channel with
+    // LOCK empty — no nonce, so no tombstone, and the next acquirer
+    // refused for a whole staleness horizon. The join lets an in-flight
+    // refresh finish before the tombstone is written.
     val lost = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val released = new java.util.concurrent.CountDownLatch(1)
     val hb = new Thread(() => {
-      try while (!lost.get()) {
-        Thread.sleep(HeartbeatMillis)
+      try while (!lost.get() &&
+          !released.await(HeartbeatMillis, java.util.concurrent.TimeUnit.MILLISECONDS)) {
         if (pathNonce()) refresh(ch) else lost.set(true)
       }
-      catch { case _: Throwable => } // released (interrupt/close) or io fault
+      catch { case _: Throwable => } // io fault: the commit fence decides
     }, s"graft-lock-heartbeat-$lock")
     hb.setDaemon(true); hb.start()
     try body(new WriterLease(lock, nonce, generation, lost)) finally {
-      hb.interrupt(); hb.join(HeartbeatMillis * 5)
+      released.countDown(); hb.join()
       if (pathNonce()) {
         // Leave a RELEASED tombstone carrying the fencing generation,
         // never delete: deleting reset the epoch to 1 on the next
@@ -409,8 +417,8 @@ object Replication {
   }
 
   /** Write the RELEASED tombstone through the heartbeat channel, with
-    * a PATH-based fallback: the heartbeat interrupt can land mid-
-    * refresh and close the SHARED channel (FileChannel is an
+    * a PATH-based fallback: an interrupt of the releasing thread
+    * closes the SHARED channel (FileChannel is an
     * InterruptibleChannel), so the channel write can throw
     * ClosedChannelException on a perfectly clean release. Pre-r15 the
     * fallback DELETED the lock file — reintroducing the epoch-reset

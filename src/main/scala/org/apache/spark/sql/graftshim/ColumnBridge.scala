@@ -1,8 +1,9 @@
 package org.apache.spark.sql.graftshim
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.{AbstractDataType, DoubleType}
 
 /** Narrow bridge to the `private[sql]` Column⇄Expression converters —
   * the one place this library reaches into Spark's namespace. Spark 4
@@ -14,4 +15,11 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+}
+
+/** An expression whose every input the analyzer casts to DOUBLE
+  * (`ImplicitCastInputTypes` names the private[sql] `AbstractDataType`,
+  * so the mix-in lives behind the bridge). */
+trait DoubleInputs extends ImplicitCastInputTypes {
+  override def inputTypes: Seq[AbstractDataType] = children.map(_ => DoubleType)
 }

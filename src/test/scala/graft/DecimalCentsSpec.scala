@@ -96,4 +96,19 @@ class DecimalCentsSpec extends AnyFunSuite {
     assert(java.lang.Double.doubleToLongBits(sumNew) ===
       java.lang.Double.doubleToLongBits(sumRef))
   }
+
+  test("agg_group outside the long-cents envelope raises instead of wrapping") {
+    // ten rows of 1e14 at no discount: each x10000 product (1e18) fits a
+    // long, their sum (1e19) does not. The session pins ANSI mode, so the
+    // SUM throws rather than returning a wrapped negative total.
+    val d = java.nio.file.Files.createTempDirectory("graft_cents_overflow").toString
+    Seq.fill(10)(("A", "F", 1.0, 1.0e14, 0.0))
+      .toDF("l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice", "l_discount")
+      .write.parquet(s"$d/lineitem.parquet")
+    val e = intercept[Exception] {
+      Relational.queries("agg_group")(spark, d).collect()
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ArithmeticException]), e)
+  }
 }

@@ -88,7 +88,7 @@ class LockSpec extends AnyFunSuite {
   }
 
   test("tombstone survives a closed channel: the fallback writes by PATH, never deletes") {
-    // the heartbeat interrupt can close the shared FileChannel
+    // an interrupt of the releasing thread closes the shared FileChannel
     // (InterruptibleChannel) mid-release; the old fallback DELETED the
     // LOCK file, resetting the fencing epoch (r14 ADVICE). The fallback
     // must land the same released-tombstone bytes path-based.
@@ -108,6 +108,23 @@ class LockSpec extends AnyFunSuite {
     Replication.withWriterLease(dir) { lease =>
       assert(lease.generation === 8L)
     }
+  }
+
+  test("back-to-back leases at a 1 ms heartbeat: every release leaves an acquirable lock") {
+    // at a 1 ms period many releases land while the heartbeat is inside
+    // `refresh`; stopping it with an interrupt there closes the channel
+    // between truncate and write, leaves LOCK empty and refuses the next
+    // cycle for the whole staleness horizon. Forked: the period is read
+    // once per JVM.
+    val dir = lockDir()
+    val javaBin = java.nio.file.Paths.get(
+      System.getProperty("java.home"), "bin", "java").toString
+    val p = new ProcessBuilder(javaBin, "-Dgraft.lease.heartbeat.ms=1",
+      "-cp", System.getProperty("java.class.path"),
+      "graft.LeaseCycles", dir.toString, "300").redirectErrorStream(true).start()
+    val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
+    assert(p.waitFor() === 0, out)
+    assert(Replication.lockReleased(dir))
   }
 
   test("release is idempotent against a successor: a finished run never deletes the next holder's lock") {
@@ -155,5 +172,20 @@ class LockSpec extends AnyFunSuite {
       // waiting on vacuum)
       assert(t.vacuum() == 0, "refused commit left no unreferenced dirs")
     }
+  }
+}
+
+/** `LockSpec`'s forked child: `<dir> <n>` runs n back-to-back lease
+  * cycles and exits 1 if any acquisition was refused. */
+object LeaseCycles {
+  def main(args: Array[String]): Unit = {
+    val dir = java.nio.file.Paths.get(args(0))
+    // bodies of 0-2 ms, so releases land at every phase of the heartbeat
+    val refused = (1 to args(1).toInt).count { i =>
+      try { Replication.withWriterLease(dir)(_ => Thread.sleep(i % 3)); false }
+      catch { case _: IllegalStateException => true }
+    }
+    println(s"$refused of ${args(1)} acquisitions refused")
+    sys.exit(if (refused == 0) 0 else 1)
   }
 }

@@ -52,6 +52,23 @@ class SqlSurfaceSpec extends AnyFunSuite {
       rows(Spatial.joinBboxAuto(spark, d), "c_custkey"))
   }
 
+  test("SQL bbox_area over decimal(10,7) corners equals the Column form") {
+    // the replicated osm_changeset table stores coordinates as decimal(10,7)
+    import spark.implicits._
+    graft.functions.GraftExtensions.register(spark)
+    val cs = Seq("min_lon", "min_lat", "max_lon", "max_lat")
+    val df = Seq((-74.05, 40.68, -74.04, 40.69), (10.1234567, -5.5, 10.2, -5.4))
+      .toDF(cs: _*).select(cs.map(c => $"$c".cast("decimal(10,7)").as(c)): _*)
+    df.createOrReplaceTempView("bbox_decimal")
+    val sql = spark.sql(
+      "SELECT bbox_area(min_lon, min_lat, max_lon, max_lat) FROM bbox_decimal")
+      .collect().map(_.getDouble(0)).toSeq
+    val dsl = df.select(graft.functions.BboxArea.bboxArea(
+      $"min_lon", $"min_lat", $"max_lon", $"max_lat")).collect().map(_.getDouble(0)).toSeq
+    assert(sql === dsl)
+    assert(sql.forall(_ > 0.0))
+  }
+
   test("GridBboxJoinRule fires on the SQL-typed containment join") {
     val prev = spark.conf.getOption(graft.plans.GridBboxJoinRule.SkipBytesKey)
     spark.conf.set(graft.plans.GridBboxJoinRule.SkipBytesKey, "0")

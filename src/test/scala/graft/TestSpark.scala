@@ -5,16 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all suites. */
 object TestSpark {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession(cores = 8,
+      warehouse = Some(java.nio.file.Files.createTempDirectory("graft_warehouse")))
     s.sparkContext.setLogLevel("WARN")
     s
   }

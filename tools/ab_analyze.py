@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Analyze the interleaved A/B drift experiment (tools/ab_drift.sh).
+"""Analyze an interleaved A/B bench experiment (tools/ab.sh).
 
 Reads /tmp/ab_ra.jsonl (r12 HEAD) and /tmp/ab_rb.jsonl (r13 HEAD):
 one bench JSON line per run, interleaved A/B/A/B in one session.
