@@ -146,9 +146,7 @@ object AnnBuildSoak {
       val qs = e.filter(col("vec_id") < NQueries)
         .select(col("vec_id"), col("embedding")).collect()
         .map(r => (r.getLong(0), Similarity.collectVector(r, 1)))
-      val (qsc, qq) = Similarity.quantizeCols(col("embedding"))
-      val qfeat = e.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("query_id"), qsc.as("q_scale"), qq.as("qq"))
+      val qfeat = Similarity.int8Queries(Similarity.queryBatch(e, NQueries))
       val probeDf = spark.createDataFrame(
         spark.sparkContext.parallelize(qs.toSeq.flatMap { case (qid, qv) =>
           probeCells(qv, supers, groups, NProbe).map(c =>
@@ -248,8 +246,7 @@ object AnnBuildSoak {
       val qAll = e.filter(col("vec_id") < maxB)
         .select(col("vec_id"), col("embedding")).collect()
         .map(r => (r.getLong(0), Similarity.collectVector(r, 1)))
-      val qfeatAll = e.filter(col("vec_id") < maxB)
-        .select(col("vec_id").as("query_id"), qsc.as("q_scale"), qq.as("qq"))
+      val qfeatAll = Similarity.int8Queries(Similarity.queryBatch(e, maxB))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       qfeatAll.count()
       var single4096P50 = Double.NaN
@@ -367,14 +364,9 @@ object AnnBuildSoak {
       // next to the steady serve — the consistency contract's price.
       // Open pins the latest snapshot (readAt + persist + count);
       // a maintain commit lands underneath; refresh() re-pins.
-      def sessQcells(q: DataFrame): DataFrame = {
-        val (sc, sq) = Similarity.quantizeCols(col("embedding"))
-        q.select(col("query_id"),
-          graft.functions.ImiCell2.cell(col("embedding"), supers, groups)
-            .as("qcell"), sc.as("q_scale"), sq.as("qq"))
-      }
-      val sessQueries = e.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("query_id"), col("embedding"))
+      def sessQcells(q: DataFrame): DataFrame = Similarity.int8Queries(q,
+        Some(graft.functions.ImiCell2.cell(_, supers, groups)))
+      val sessQueries = Similarity.queryBatch(e, NQueries)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       sessQueries.count()
       val (sess, sessOpenS) = timed(

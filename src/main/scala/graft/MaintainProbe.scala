@@ -84,10 +84,7 @@ object MaintainProbe {
           Similarity.collectCentroidsOf(
             e.filter(!Retrieval.isArrival(col("vec_id")))))
         def rowsOf(df: DataFrame): DataFrame =
-          df.select(col("vec_id"),
-            graft.functions.ImiCell2.cell(col("embedding"), supers, groups).as("cell"),
-            Similarity.quantizeCols(col("embedding"))._1.as("c_scale"),
-            Similarity.quantizeCols(col("embedding"))._2.as("cq"))
+          Similarity.int8Rows(df, graft.functions.ImiCell2.cell(_, supers, groups))
         val baseV = rowsOf(e.filter(!Retrieval.isArrival(col("vec_id"))))
         val nbV = Similarity.derivedBuckets(spark, baseV.count(),
           "spark.graft.ann.maintain.buckets")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 
@@ -107,24 +106,19 @@ object Recall {
       else m.probes.toSeq
         .flatMap { case (qid, cells) => cells.map(c => (qid, c)) }
         .toDF("query_id", "qcell")
-    val joined = m.corpus.join(
-      broadcast(probeDf.join(qfeat, "query_id")),
-      col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
+    val joined = Similarity.probeJoin(m.corpus, probeDf.join(qfeat, "query_id"),
+      Some("cell" -> "qcell"))
     val score: Column =
       if (m.pq) round(col("qcdot") +
         Similarity.adcCol(col(m.lutCol), col("codes"), m.geom), 4)
       else if (m.int8) Similarity.cosQ(graft.functions.DotI8.dotI8(col("cq"), col("qq")))
       else round(Similarity.dot(col("qv"), col("embedding")), 4)
     val nCand = joined.count()
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sc").desc, col("vec_id").asc)
     // multi-assigned corpora can surface one vector through two probed
     // cells: the duplicate rows are REAL serve cost (counted above) but
     // must collapse to one scored candidate before ranking
-    val top = joined.select(col("query_id"), col("vec_id"), score.as("sc"))
-      .dropDuplicates("query_id", "vec_id")
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    val top = Similarity.topK(joined.select(col("query_id"), col("vec_id"), score.as("sc"))
+        .dropDuplicates("query_id", "vec_id"), "sc", k)
       .select(col("query_id"), col("vec_id"), col("rnk"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     (top, nCand)
@@ -177,13 +171,9 @@ object Recall {
       .cache()
 
     // ---- exact ground truth: brute-force float top-10 ----------------
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sc").desc, col("vec_id").asc)
-    val exact = e.join(broadcast(qfeat), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(Similarity.dot(col("qv"), col("embedding")), 4).as("sc"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 10)
+    val exact = Similarity.topK(Similarity.probeJoin(e, qfeat, None)
+        .select(col("query_id"), col("vec_id"),
+          round(Similarity.dot(col("qv"), col("embedding")), 4).as("sc")), "sc", 10)
       .select(col("query_id"), col("vec_id"), col("rnk"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     val exact5 = exact.filter(_._3 <= 5).map(t => (t._1, t._2)).toSet
@@ -363,16 +353,13 @@ object Recall {
         pq = true, qcdot = pqQcdot(np), k = Similarity.PqRerankR)
       val (short, nCand) = annTopk(s, m, qfeat, m.k)
       val shortDf = short.map(t => (t._1, t._2)).toSeq.toDF("query_id", "vec_id")
-      val wR = Window.partitionBy(col("query_id"))
-        .orderBy(col("sc").desc, col("vec_id").asc)
-      val top = shortDf
-        .join(cellsInt8.select(col("vec_id"), col("c_scale"), col("cq")), Seq("vec_id"))
-        .join(broadcast(qfeat.select(col("query_id"), col("q_scale"), col("qq"))),
-          Seq("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          Similarity.cosQ(graft.functions.DotI8.dotI8(col("cq"), col("qq"))).as("sc"))
-        .withColumn("rnk", row_number().over(wR))
-        .filter(col("rnk") <= 10)
+      val top = Similarity.topK(shortDf
+          .join(cellsInt8.select(col("vec_id"), col("c_scale"), col("cq")), Seq("vec_id"))
+          .join(broadcast(qfeat.select(col("query_id"), col("q_scale"), col("qq"))),
+            Seq("query_id"))
+          .select(col("query_id"), col("vec_id"),
+            Similarity.cosQ(graft.functions.DotI8.dotI8(col("cq"), col("qq"))).as("sc")),
+          "sc", 10)
         .select(col("query_id"), col("vec_id"), col("rnk"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
       val got5 = top.filter(_._3 <= 5).map(t => (t._1, t._2)).toSet

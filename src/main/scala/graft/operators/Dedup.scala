@@ -991,84 +991,52 @@ object Dedup {
     val docs = documents(s, d)
     val batchDocs = docs.filter(isBatchDoc(col("doc_id")))
       .withColumn("sub_batch", subBatchOf(col("doc_id")))
-    // stage one parquet file per sub-batch, mtime-ordered so the file
-    // stream delivers them as three ordered micro-batches
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_admit")
-    try {
-      (0 until 3).foreach { k =>
-        val side = streamDir.resolve(s"side$k")
-        batchDocs.filter(col("sub_batch") === k).coalesce(1)
-          .write.mode("overwrite").parquet(side.toString)
-        val part = java.nio.file.Files.list(side).filter(p =>
-          p.getFileName.toString.endsWith(".parquet")).findFirst().get()
-        val dst = streamDir.resolve(f"batch$k%04d.parquet")
-        java.nio.file.Files.move(part, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + k * 60000L))
-      }
-      val cbase = minhashBaseOf(docs.filter(!isBatchDoc(col("doc_id"))))
-      val baseBands = foldedBands(cbase).localCheckpoint(true)
-      val baseSets = cbase.select(col("doc_id"), col("shs")).localCheckpoint(true)
-      // per-sub-batch state keyed by sub_batch (not mutable unions):
-      // a replayed sub-batch k reads base ∪ admissions of STRICTLY
-      // earlier sub-batches — exactly the state it saw the first
-      // time — and its verdict/admission entries REPLACE, so the
-      // returned union is replay-idempotent like the index state
-      val admBands = new graft.streaming.SubBatchState[DataFrame]
-      val admSets = new graft.streaming.SubBatchState[DataFrame]
-      val results = new graft.streaming.SubBatchState[DataFrame]
-      val schema = batchDocs.schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(streamDir.toString + "/batch*.parquet")
-      val q = stream.writeStream
-        .foreachBatch { (mb: DataFrame, _: Long) =>
-          val subs = mb.select(col("sub_batch")).distinct()
-            .collect().map(_.getInt(0)).sorted
-          subs.foreach { k =>
-            val base = minhashBaseOf(mb.filter(col("sub_batch") === k))
-              .localCheckpoint(true)
-            val stateBands =
-              (baseBands +: admBands.earlier(k)).reduce(_ unionByName _)
-            val stateSets =
-              (baseSets +: admSets.earlier(k)).reduce(_ unionByName _)
-            val verdict = incrementalVerdict(
-              base.select(col("doc_id"), col("shs")), foldedBands(base),
-              stateBands, stateSets)
-              .withColumn("sub_batch", lit(k))
-              .select(col("batch_id"), col("sub_batch"),
-                col("n_cand"), col("n_dup"), col("admit"))
-              .localCheckpoint(true)
-            results.put(k, verdict)
-            val admitted = verdict.filter(col("admit"))
-              .select(col("batch_id").as("doc_id"))
-            admBands.put(k,
-              foldedBands(base).join(admitted, Seq("doc_id"), "left_semi")
-                .localCheckpoint(true))
-            admSets.put(k,
-              base.select(col("doc_id"), col("shs"))
-                .join(admitted, Seq("doc_id"), "left_semi")
-                .localCheckpoint(true))
-          }
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      if (results.isEmpty) // degenerate corpus: no batch docs at all
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("batch_id", LongType),
-            StructField("sub_batch", IntegerType),
-            StructField("n_cand", LongType), StructField("n_dup", LongType),
-            StructField("admit", BooleanType))))
-      else results.values.reduce(_ union _)
-    } finally {
-      val files = java.nio.file.Files.walk(streamDir)
-      try files.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally files.close()
+    val cbase = minhashBaseOf(docs.filter(!isBatchDoc(col("doc_id"))))
+    val baseBands = foldedBands(cbase).localCheckpoint(true)
+    val baseSets = cbase.select(col("doc_id"), col("shs")).localCheckpoint(true)
+    // per-sub-batch state keyed by sub_batch (not mutable unions):
+    // a replayed sub-batch k reads base ∪ admissions of STRICTLY
+    // earlier sub-batches — exactly the state it saw the first
+    // time — and its verdict/admission entries REPLACE, so the
+    // returned union is replay-idempotent like the index state
+    val admBands = new graft.streaming.SubBatchState[DataFrame]
+    val admSets = new graft.streaming.SubBatchState[DataFrame]
+    val results = new graft.streaming.SubBatchState[DataFrame]
+    graft.streaming.SubBatchState.streamSubBatches(s, batchDocs) { (k, batch) =>
+      val base = minhashBaseOf(batch).localCheckpoint(true)
+      val stateBands =
+        (baseBands +: admBands.earlier(k)).reduce(_ unionByName _)
+      val stateSets =
+        (baseSets +: admSets.earlier(k)).reduce(_ unionByName _)
+      val verdict = incrementalVerdict(
+        base.select(col("doc_id"), col("shs")), foldedBands(base),
+        stateBands, stateSets)
+        .withColumn("sub_batch", lit(k))
+        .select(col("batch_id"), col("sub_batch"),
+          col("n_cand"), col("n_dup"), col("admit"))
+        .localCheckpoint(true)
+      results.put(k, verdict)
+      val admitted = verdict.filter(col("admit"))
+        .select(col("batch_id").as("doc_id"))
+      admBands.put(k,
+        foldedBands(base).join(admitted, Seq("doc_id"), "left_semi")
+          .localCheckpoint(true))
+      admSets.put(k,
+        base.select(col("doc_id"), col("shs"))
+          .join(admitted, Seq("doc_id"), "left_semi")
+          .localCheckpoint(true))
     }
+    if (results.isEmpty) emptyVerdicts(s) // degenerate corpus: no batch docs at all
+    else results.values.reduce(_ union _)
   }
+
+  /** The admission loops' empty result (a corpus with no batch docs). */
+  private def emptyVerdicts(s: SparkSession): DataFrame =
+    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(Seq(StructField("batch_id", LongType),
+        StructField("sub_batch", IntegerType),
+        StructField("n_cand", LongType), StructField("n_dup", LongType),
+        StructField("admit", BooleanType))))
 
   /** The DURABLE form of the admission loop — `stream_dedup_admission`
     * with its growing state moved from in-session checkpointed unions
@@ -1089,19 +1057,6 @@ object Dedup {
       .withColumn("sub_batch", subBatchOf(col("doc_id")))
     val workDir = java.nio.file.Files.createTempDirectory("graft_dedupmaint")
     try {
-      val streamDir = workDir.resolve("stream")
-      java.nio.file.Files.createDirectories(streamDir)
-      (0 until 3).foreach { k =>
-        val side = streamDir.resolve(s"side$k")
-        batchDocs.filter(col("sub_batch") === k).coalesce(1)
-          .write.mode("overwrite").parquet(side.toString)
-        val part = java.nio.file.Files.list(side).filter(p =>
-          p.getFileName.toString.endsWith(".parquet")).findFirst().get()
-        val dst = streamDir.resolve(f"batch$k%04d.parquet")
-        java.nio.file.Files.move(part, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + k * 60000L))
-      }
       val cbase = minhashBaseOf(docs.filter(!isBatchDoc(col("doc_id"))))
       val cb = foldedBands(cbase)
       val nb = Similarity.derivedBuckets(s, cb.count(),
@@ -1127,8 +1082,8 @@ object Dedup {
       // strict-earlier filter also makes a replayed sub-batch see
       // exactly the state it saw the first time), and one deferred
       // fold + compaction lands them in the bucketed base.
-      val bSegDir = streamDir.resolveSibling("bsegs")
-      val sSegDir = streamDir.resolveSibling("ssegs")
+      val bSegDir = workDir.resolve("bsegs")
+      val sSegDir = workDir.resolve("ssegs")
       java.nio.file.Files.createDirectories(bSegDir)
       java.nio.file.Files.createDirectories(sSegDir)
       val bandSegs = new graft.streaming.SubBatchState[String]
@@ -1145,8 +1100,8 @@ object Dedup {
       // replay-safe structurally: LsmFold records sub-batch ids as txn
       // markers atomically with the commit and filters already-folded
       // ids (FoldReplaySpec).
-      val bRunDir = streamDir.resolveSibling("bruns")
-      val sRunDir = streamDir.resolveSibling("sruns")
+      val bRunDir = workDir.resolve("bruns")
+      val sRunDir = workDir.resolve("sruns")
       val bRuns = scala.collection.mutable.ArrayBuffer[(Seq[Int], java.nio.file.Path)]()
       val sRuns = scala.collection.mutable.ArrayBuffer[(Seq[Int], java.nio.file.Path)]()
       var runSeq = 0
@@ -1185,124 +1140,100 @@ object Dedup {
           graft.streaming.LsmFold.prune(bParts.map(_._2) ++ sParts.map(_._2))
           bRuns.clear(); sRuns.clear(); bandSegs.clear(); setSegs.clear()
         })
-      val stream = s.readStream.schema(batchDocs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(streamDir.toString + "/batch*.parquet")
-      val q = stream.writeStream
-        .foreachBatch { (mb: DataFrame, _: Long) =>
-          val allSubs = mb.select(col("sub_batch")).distinct()
-            .collect().map(_.getInt(0)).sorted
-          // a replay of a sub-batch a mid-epoch fold already landed
-          // (base markers or a live run) skips the VERDICT recompute:
-          // its admission verdict is already in `results` (first
-          // delivery — this holds for same-process retries; after a
-          // checkpoint-recovery RESTART the in-memory results store
-          // starts empty and the replayed sub-batch's verdict row is
-          // absent from the returned relation, a documented limit of
-          // this in-process harness), and recomputing it against a
-          // corpus that now CONTAINS its own admitted rows would
-          // mis-flag them as duplicates of themselves. The landing
-          // guard is PER TABLE (r16 ADVICE): the fold commits bands
-          // then sets, so a restart between the two commits leaves
-          // bands folded and sets not — the replay re-lands ONLY the
-          // missing table's segment, reconstructing the admitted set
-          // from the table that DID land (admitted docs are exactly
-          // the sub-batch docs present in it).
-          def bFreshOf(k: Int) =
-            bandsPt.lastTxn(s"admbands.seg$k").isEmpty &&
-              !bRuns.exists(_._1.contains(k))
-          def sFreshOf(k: Int) =
-            setsPt.lastTxn(s"admsets.seg$k").isEmpty &&
-              !sRuns.exists(_._1.contains(k))
-          allSubs.filter(k => bFreshOf(k) != sFreshOf(k)).foreach { k =>
-            val bFresh = bFreshOf(k)
-            locally {
-              val base = minhashBaseOf(mb.filter(col("sub_batch") === k))
-                .localCheckpoint(true)
-              val landed = if (bFresh) setsPt.read(s) else bandsPt.read(s)
-              val admitted = base.select(col("doc_id"))
-                .join(landed.select(col("doc_id")).distinct(),
-                  Seq("doc_id"), "left_semi")
-              val seg = if (bFresh) {
-                val bSeg = bSegDir.resolve(f"seg$k%04d")
-                foldedBands(base).join(admitted, Seq("doc_id"), "left_semi")
-                  .write.mode("overwrite").parquet(bSeg.toString)
-                bandSegs.put(k, bSeg.toString)
-                bSeg
-              } else {
-                val sSeg = sSegDir.resolve(f"seg$k%04d")
-                base.select(col("doc_id"), col("shs"))
-                  .join(admitted, Seq("doc_id"), "left_semi")
-                  .write.mode("overwrite").parquet(sSeg.toString)
-                setSegs.put(k, sSeg.toString)
-                sSeg
-              }
-              folder.onSegment(
-                math.max(1, graft.streaming.LsmFold.parquetFiles(seg)))
-            }
-          }
-          // fully fresh on BOTH tables: the normal verdict path (this
-          // includes a same-process replay whose segments are still
-          // loose — the strict-earlier corpus makes the recompute see
-          // exactly the state it saw the first time, and the segment
-          // overwrite is idempotent)
-          val subs = allSubs.filter(k => bFreshOf(k) && sFreshOf(k))
-          subs.foreach { k =>
-            val base = minhashBaseOf(mb.filter(col("sub_batch") === k))
-              .localCheckpoint(true)
-            // the admission corpus is base ∪ RUNS ∪ strictly-earlier
-            // loose segments: a mid-epoch run fold moves earlier
-            // sub-batches out of the segment store without landing
-            // them in the base, and they must stay visible (runs only
-            // ever hold earlier sub-batches — a fresh k is never in
-            // a run by the landing guard above)
-            val earlierB = bRuns.toSeq.map(_._2.toString) ++ bandSegs.earlier(k)
-            val earlierS = sRuns.toSeq.map(_._2.toString) ++ setSegs.earlier(k)
-            val corpusBands =
-              if (earlierB.isEmpty) bandsPt.read(s)
-              else bandsPt.read(s).unionByName(s.read.parquet(earlierB: _*))
-            val corpusSets =
-              if (earlierS.isEmpty) setsPt.read(s)
-              else setsPt.read(s).unionByName(s.read.parquet(earlierS: _*))
-            val verdict = incrementalVerdict(
-              base.select(col("doc_id"), col("shs")), foldedBands(base),
-              corpusBands, corpusSets)
-              .withColumn("sub_batch", lit(k))
-              .select(col("batch_id"), col("sub_batch"),
-                col("n_cand"), col("n_dup"), col("admit"))
-              .localCheckpoint(true)
-            results.put(k, verdict)
-            val admitted = verdict.filter(col("admit"))
-              .select(col("batch_id").as("doc_id"))
+      graft.streaming.SubBatchState.streamSubBatches(s, batchDocs) { (k, batch) =>
+        // a replay of a sub-batch a mid-epoch fold already landed
+        // (base markers or a live run) skips the VERDICT recompute:
+        // its admission verdict is already in `results` (first
+        // delivery — this holds for same-process retries; after a
+        // checkpoint-recovery RESTART the in-memory results store
+        // starts empty and the replayed sub-batch's verdict row is
+        // absent from the returned relation, a documented limit of
+        // this in-process harness), and recomputing it against a
+        // corpus that now CONTAINS its own admitted rows would
+        // mis-flag them as duplicates of themselves. The landing
+        // guard is PER TABLE (r16 ADVICE): the fold commits bands
+        // then sets, so a restart between the two commits leaves
+        // bands folded and sets not — the replay re-lands ONLY the
+        // missing table's segment, reconstructing the admitted set
+        // from the table that DID land (admitted docs are exactly
+        // the sub-batch docs present in it).
+        val bFresh = bandsPt.lastTxn(s"admbands.seg$k").isEmpty &&
+          !bRuns.exists(_._1.contains(k))
+        val sFresh = setsPt.lastTxn(s"admsets.seg$k").isEmpty &&
+          !sRuns.exists(_._1.contains(k))
+        if (bFresh != sFresh) {
+          val base = minhashBaseOf(batch).localCheckpoint(true)
+          val landed = if (bFresh) setsPt.read(s) else bandsPt.read(s)
+          val admitted = base.select(col("doc_id"))
+            .join(landed.select(col("doc_id")).distinct(),
+              Seq("doc_id"), "left_semi")
+          val seg = if (bFresh) {
             val bSeg = bSegDir.resolve(f"seg$k%04d")
             foldedBands(base).join(admitted, Seq("doc_id"), "left_semi")
               .write.mode("overwrite").parquet(bSeg.toString)
             bandSegs.put(k, bSeg.toString)
+            bSeg
+          } else {
             val sSeg = sSegDir.resolve(f"seg$k%04d")
             base.select(col("doc_id"), col("shs"))
               .join(admitted, Seq("doc_id"), "left_semi")
               .write.mode("overwrite").parquet(sSeg.toString)
             setSegs.put(k, sSeg.toString)
-            folder.onSegment(math.max(1,
-              graft.streaming.LsmFold.parquetFiles(bSeg) +
-                graft.streaming.LsmFold.parquetFiles(sSeg)))
+            sSeg
           }
-          ()
+          folder.onSegment(
+            math.max(1, graft.streaming.LsmFold.parquetFiles(seg)))
+        } else if (bFresh) {
+          // fully fresh on BOTH tables: the normal verdict path (this
+          // includes a same-process replay whose segments are still
+          // loose — the strict-earlier corpus makes the recompute see
+          // exactly the state it saw the first time, and the segment
+          // overwrite is idempotent)
+          val base = minhashBaseOf(batch).localCheckpoint(true)
+          // the admission corpus is base ∪ RUNS ∪ strictly-earlier
+          // loose segments: a mid-epoch run fold moves earlier
+          // sub-batches out of the segment store without landing
+          // them in the base, and they must stay visible (runs only
+          // ever hold earlier sub-batches — a fresh k is never in
+          // a run by the landing guard above)
+          val earlierB = bRuns.toSeq.map(_._2.toString) ++ bandSegs.earlier(k)
+          val earlierS = sRuns.toSeq.map(_._2.toString) ++ setSegs.earlier(k)
+          val corpusBands =
+            if (earlierB.isEmpty) bandsPt.read(s)
+            else bandsPt.read(s).unionByName(s.read.parquet(earlierB: _*))
+          val corpusSets =
+            if (earlierS.isEmpty) setsPt.read(s)
+            else setsPt.read(s).unionByName(s.read.parquet(earlierS: _*))
+          val verdict = incrementalVerdict(
+            base.select(col("doc_id"), col("shs")), foldedBands(base),
+            corpusBands, corpusSets)
+            .withColumn("sub_batch", lit(k))
+            .select(col("batch_id"), col("sub_batch"),
+              col("n_cand"), col("n_dup"), col("admit"))
+            .localCheckpoint(true)
+          results.put(k, verdict)
+          val admitted = verdict.filter(col("admit"))
+            .select(col("batch_id").as("doc_id"))
+          val bSeg = bSegDir.resolve(f"seg$k%04d")
+          foldedBands(base).join(admitted, Seq("doc_id"), "left_semi")
+            .write.mode("overwrite").parquet(bSeg.toString)
+          bandSegs.put(k, bSeg.toString)
+          val sSeg = sSegDir.resolve(f"seg$k%04d")
+          base.select(col("doc_id"), col("shs"))
+            .join(admitted, Seq("doc_id"), "left_semi")
+            .write.mode("overwrite").parquet(sSeg.toString)
+          setSegs.put(k, sSeg.toString)
+          folder.onSegment(math.max(1,
+            graft.streaming.LsmFold.parquetFiles(bSeg) +
+              graft.streaming.LsmFold.parquetFiles(sSeg)))
         }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      }
       // deferred OPTIMIZE: the policy's close fold lands the epoch's
       // admissions in the bucketed base in one commit per table
       folder.finish()
       bandsPt.compact(s)
       setsPt.compact(s)
-      if (results.isEmpty)
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("batch_id", LongType),
-            StructField("sub_batch", IntegerType),
-            StructField("n_cand", LongType), StructField("n_dup", LongType),
-            StructField("admit", BooleanType))))
+      if (results.isEmpty) emptyVerdicts(s)
       else results.values.reduce(_ union _)
       // fence cleared in finally so an exception mid-scope can't leave
       // it installed (Replication.catchUp's discipline)

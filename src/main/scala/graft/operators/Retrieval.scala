@@ -84,30 +84,6 @@ object Retrieval {
         .as("t_grams"))
   }
 
-  /** The same totals derived from the postings relation instead of a
-    * second corpus scan: every doc with ≥ GramK words appears in
-    * `postingsOf` with Σ tf = dl grams, so
-    *   n_docs  = count of distinct doc_id over postings
-    *   t_grams = Σ dl over those docs (= Σ tf over all postings).
-    * Exact equality with `totalsOf(docs)` for any corpus (docs below
-    * GramK words contribute 0 to both sides; RetrievalSpec pins it).
-    *
-    * EXAMINED AND NOT WIRED (r18, guide §1 measure-first): sharing the
-    * `postingsOf` subtree does make AQE reuse the postings exchange —
-    * the plan drops to ONE corpus pass and the bench's bytes-read
-    * halves (141 → 70 KB/run at sf0.1) — but the query got SLOWER
-    * (0.96 → 1.71 s median, non-overlapping 7-sample ranges), because
-    * the replaced totals scan was a ~free column-pruned row-local
-    * aggregate running in parallel, while this form re-reads and
-    * re-aggregates the postings shuffle a second time behind three
-    * extra sequential AQE stage barriers. At 100 TB the trade is no
-    * better: the postings exchange carries more bytes than the pruned
-    * text column. The narrow totals scan IS the optimal shape; kept
-    * here with its equality spec as the record of the examination. */
-  private[graft] def totalsFromPostings(postings: DataFrame): DataFrame =
-    postings.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl2"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl2")).as("t_grams"))
-
   /** Query-side term table (query_id, g), distinct — tiny: broadcasts. */
   private[graft] def queryGramsOf(docs: DataFrame,
       ids: Seq[Long] = QueryDocs): DataFrame =
@@ -181,11 +157,7 @@ object Retrieval {
 
   private[graft] def bm25Of(postings: DataFrame, totals: DataFrame,
       qterms: DataFrame, k: Int = 10): DataFrame =
-    bm25Scores(postings, totals, qterms)
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("score_x1000").desc, col("doc_id").asc)))
-      .filter(col("rnk") <= k)
+    Similarity.topK(bm25Scores(postings, totals, qterms), "score_x1000", k, id = "doc_id")
 
   /** BM25 top-10 per query over the documents corpus: postings built
     * in-query (the ad-hoc form; `text_bm25_bucketed` serves the same
@@ -209,7 +181,7 @@ object Retrieval {
       .select(col("doc_id").as("query_id"), col("g"))
     val inter = t.join(broadcast(q), Seq("g"))
       .groupBy(col("query_id"), col("doc_id")).agg(count(lit(1)).as("i"))
-    inter
+    val keyed = inter
       .join(sz.select(col("doc_id").as("query_id"), col("n").as("nq")),
         Seq("query_id"))
       .join(sz.select(col("doc_id"), col("n").as("nd")), Seq("doc_id"))
@@ -223,10 +195,7 @@ object Retrieval {
       // equal rationals floor to equal keys. i·U² ≤ 2^60 fits a long.
       .withColumn("jkey", expr(
         s"(i * ${1L << 40}L) div (nq + nd - i)"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("jkey").desc, col("doc_id").asc)))
-      .filter(col("rnk") <= k)
+    Similarity.topK(keyed, "jkey", k, id = "doc_id")
       .select(col("query_id"), col("doc_id"), col("rnk"))
   }
 
@@ -317,12 +286,8 @@ object Retrieval {
   private[graft] def sparseTopFor(s: SparkSession, d: String,
       ids: Seq[Long], k: Int = 10): DataFrame = {
     val docs = documents(s, d)
-    bm25Scores(postingsOf(docs), totalsOf(docs), queryGramsOf(docs, ids))
-      .filter(col("doc_id") =!= col("query_id"))
-      .withColumn("srnk", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("score_x1000").desc, col("doc_id").asc)))
-      .filter(col("srnk") <= k)
+    Similarity.topK(bm25Scores(postingsOf(docs), totalsOf(docs), queryGramsOf(docs, ids))
+        .filter(col("doc_id") =!= col("query_id")), "score_x1000", k, "srnk", "doc_id")
       .select(col("query_id"), col("doc_id"), col("srnk"))
   }
 
@@ -340,15 +305,11 @@ object Retrieval {
     * (Cormack et al. 2009, k=60): rrf_x1m = Σ 1e6 DIV (60 + rank). */
   private[graft] def fuseRrf(sparse: DataFrame, dense: DataFrame,
       k: Int = 10): DataFrame =
-    sparse.join(dense, Seq("query_id", "doc_id"), "full")
+    Similarity.topK(sparse.join(dense, Seq("query_id", "doc_id"), "full")
       .select(col("query_id"), col("doc_id"),
         (coalesce(expr("CAST(1000000 DIV (60 + srnk) AS BIGINT)"), lit(0L)) +
          coalesce(expr("CAST(1000000 DIV (60 + drnk) AS BIGINT)"), lit(0L)))
-          .as("rrf_x1m"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("rrf_x1m").desc, col("doc_id").asc)))
-      .filter(col("rnk") <= k)
+          .as("rrf_x1m")), "rrf_x1m", k, id = "doc_id")
 
   /** The hybrid at INDEX scale — `sim_hybrid_rrf` with the dense side
     * served from the ANN index instead of the exact scan: the exact
@@ -373,22 +334,14 @@ object Retrieval {
       ids: Seq[Long], k: Int = 10): DataFrame = {
     val e = graft.Tables.embeddings(s, d)
     val cellOf = Similarity.imiCellOf(s, d) _
-    val (csc, cq) = Similarity.quantizeCols(col("embedding"))
-    val cells = e.select(col("vec_id"), cellOf(col("embedding")).as("cell"),
-      csc.as("c_scale"), cq.as("cq"))
-    val qcells = e.filter(col("vec_id").isInCollection(ids))
-      .select(col("vec_id").as("query_id"), cellOf(col("embedding")).as("qcell"),
-        Similarity.quantizeCols(col("embedding"))._1.as("q_scale"),
-        Similarity.quantizeCols(col("embedding"))._2.as("qq"))
+    val qcells = Similarity.int8Queries(e.filter(col("vec_id").isInCollection(ids))
+      .select(col("vec_id").as("query_id"), col("embedding")), Some(cellOf))
     val qdot = graft.functions.DotI8.dotI8(col("cq"), col("qq"))
-    cells.join(broadcast(qcells),
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("doc_id"),
-        Similarity.cosQ(qdot).as("cos_q"))
-      .withColumn("drnk", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_q").desc, col("doc_id").asc)))
-      .filter(col("drnk") <= k)
+    Similarity.topK(
+      Similarity.probeJoin(Similarity.int8Rows(e, cellOf), qcells, Some("cell" -> "qcell"))
+        .select(col("query_id"), col("vec_id").as("doc_id"),
+          Similarity.cosQ(qdot).as("cos_q")),
+      "cos_q", k, "drnk", "doc_id")
       .select(col("query_id"), col("doc_id"), col("drnk"))
   }
 
@@ -412,57 +365,25 @@ object Retrieval {
     val qs = documents(s, d).filter(col("doc_id").isInCollection(queryIds))
       .select(col("doc_id"), col("text"),
         (col("doc_id") % 3).cast(IntegerType).as("sub_batch"))
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_bm25serve")
-    try {
-      (0 until 3).foreach { k =>
-        val side = streamDir.resolve(s"side$k")
-        qs.filter(col("sub_batch") === k).coalesce(1)
-          .write.mode("overwrite").parquet(side.toString)
-        val part = java.nio.file.Files.list(side).filter(p =>
-          p.getFileName.toString.endsWith(".parquet")).findFirst().get()
-        val dst = streamDir.resolve(f"queries$k%04d.parquet")
-        java.nio.file.Files.move(part, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + k * 60000L))
-      }
-      val (pIdx, tIdx) = bucketedPostings(s, d) // write-once ETL, pre-stream
-      val results = new graft.streaming.SubBatchState[DataFrame]
-      val stream = s.readStream.schema(qs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(streamDir.toString + "/queries*.parquet")
-      val q = stream.writeStream
-        .foreachBatch { (mb: DataFrame, _: Long) =>
-          val subs = mb.select(col("sub_batch")).distinct()
-            .collect().map(_.getInt(0)).sorted
-          subs.foreach { k =>
-            val batch = mb.filter(col("sub_batch") === k)
-            val qterms = batch
-              .select(col("doc_id").as("query_id"), explode(gramArr).as("g"))
-              .distinct()
-            results.put(k, bm25Of(pIdx, tIdx, qterms)
-              .withColumn("sub_batch", lit(k))
-              .localCheckpoint(true))
-          }
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      if (results.isEmpty)
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("query_id", LongType),
-            org.apache.spark.sql.types.StructField("doc_id", LongType),
-            org.apache.spark.sql.types.StructField("score_x1000", LongType),
-            org.apache.spark.sql.types.StructField("rnk", IntegerType),
-            org.apache.spark.sql.types.StructField("sub_batch", IntegerType))))
-      else results.values.reduce(_ union _)
-    } finally {
-      val files = java.nio.file.Files.walk(streamDir)
-      try files.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally files.close()
+    val (pIdx, tIdx) = bucketedPostings(s, d) // write-once ETL, pre-stream
+    val results = new graft.streaming.SubBatchState[DataFrame]
+    graft.streaming.SubBatchState.streamSubBatches(s, qs) { (k, batch) =>
+      val qterms = batch
+        .select(col("doc_id").as("query_id"), explode(gramArr).as("g"))
+        .distinct()
+      results.put(k, bm25Of(pIdx, tIdx, qterms)
+        .withColumn("sub_batch", lit(k))
+        .localCheckpoint(true))
     }
+    if (results.isEmpty)
+      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("query_id", LongType),
+          org.apache.spark.sql.types.StructField("doc_id", LongType),
+          org.apache.spark.sql.types.StructField("score_x1000", LongType),
+          org.apache.spark.sql.types.StructField("rnk", IntegerType),
+          org.apache.spark.sql.types.StructField("sub_batch", IntegerType))))
+    else results.values.reduce(_ union _)
   }
 
   // ---- incremental index MAINTENANCE ---------------------------------
@@ -680,19 +601,6 @@ object Retrieval {
       .withColumn("sub_batch", arrivalSubBatch(col("doc_id")))
     val workDir = java.nio.file.Files.createTempDirectory("graft_bm25maint")
     try {
-      val streamDir = workDir.resolve("stream")
-      java.nio.file.Files.createDirectories(streamDir)
-      (0 until 3).foreach { k =>
-        val side = streamDir.resolve(s"side$k")
-        arrivals.filter(col("sub_batch") === k).coalesce(1)
-          .write.mode("overwrite").parquet(side.toString)
-        val part = java.nio.file.Files.list(side).filter(p =>
-          p.getFileName.toString.endsWith(".parquet")).findFirst().get()
-        val dst = streamDir.resolve(f"arrive$k%04d.parquet")
-        java.nio.file.Files.move(part, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + k * 60000L))
-      }
       // single-writer lease over the whole index-mutation scope (r11
       // VERDICT item 8): the build, the per-epoch fold, and the
       // OPTIMIZE commits are all fenced on the lease nonce + monotonic
@@ -764,53 +672,40 @@ object Retrieval {
           pruneSegments(pParts.map(_._2) ++ dParts.map(_._2))
           pRuns.clear(); dRuns.clear(); pSegs.clear(); dSegs.clear()
         })
-      val stream = s.readStream.schema(arrivals.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(streamDir.toString + "/arrive*.parquet")
-      val q = stream.writeStream
-        .foreachBatch { (mb: DataFrame, _: Long) =>
-          // per-trigger work is an O(batch) SEGMENT write (gram keys
-          // are uniform — a bucketed merge here would rewrite the
-          // whole standing index every trigger, the measured flaw in
-          // MAINTAIN_r10.json); a re-delivered micro-batch overwrites
-          // its own segment, so replays are idempotent
-          val subs = mb.select(col("sub_batch")).distinct()
-            .collect().map(_.getInt(0)).sorted
-          subs.foreach { k =>
-            // a replay of a sub-batch a mid-epoch fold already landed
-            // (to base — structural txn markers — or into a live run)
-            // must NOT re-enter the segment store. Guarded PER TABLE
-            // (r16 ADVICE): a restart between a fold's two commits
-            // leaves one table folded and the other not — the
-            // replayed sub-batch then re-lands ONLY the missing
-            // table's segment (the folded table's foldToBase would
-            // refuse a re-land anyway; not re-entering it also keeps
-            // runs pure, the LsmFold mixed-part invariant)
-            val pFresh = idx.postings.lastTxn(s"bm25idx.seg$k").isEmpty &&
-              !pRuns.exists(_._1.contains(k))
-            val dFresh = idx.doclens.lastTxn(s"bm25dl.seg$k").isEmpty &&
-              !dRuns.exists(_._1.contains(k))
-            if (pFresh || dFresh) {
-              val batch = mb.filter(col("sub_batch") === k)
-              var segFiles = 0
-              if (pFresh) {
-                val sp = writeSegment(pSegDir, k.toLong, postingsOf(batch))
-                pSegs.put(k, sp)
-                segFiles += graft.streaming.LsmFold.parquetFiles(sp)
-              }
-              if (dFresh) {
-                val sd = writeSegment(dSegDir, k.toLong, doclensOf(batch))
-                dSegs.put(k, sd)
-                segFiles += graft.streaming.LsmFold.parquetFiles(sd)
-              }
-              folder.onSegment(math.max(1, segFiles))
-            }
+      // per-trigger work is an O(batch) SEGMENT write (gram keys are
+      // uniform — a bucketed merge here would rewrite the whole
+      // standing index every trigger, the measured flaw in
+      // MAINTAIN_r10.json); a re-delivered micro-batch overwrites its
+      // own segment, so replays are idempotent
+      graft.streaming.SubBatchState.streamSubBatches(s, arrivals) { (k, batch) =>
+        // a replay of a sub-batch a mid-epoch fold already landed
+        // (to base — structural txn markers — or into a live run)
+        // must NOT re-enter the segment store. Guarded PER TABLE
+        // (r16 ADVICE): a restart between a fold's two commits
+        // leaves one table folded and the other not — the
+        // replayed sub-batch then re-lands ONLY the missing
+        // table's segment (the folded table's foldToBase would
+        // refuse a re-land anyway; not re-entering it also keeps
+        // runs pure, the LsmFold mixed-part invariant)
+        val pFresh = idx.postings.lastTxn(s"bm25idx.seg$k").isEmpty &&
+          !pRuns.exists(_._1.contains(k))
+        val dFresh = idx.doclens.lastTxn(s"bm25dl.seg$k").isEmpty &&
+          !dRuns.exists(_._1.contains(k))
+        if (pFresh || dFresh) {
+          var segFiles = 0
+          if (pFresh) {
+            val sp = writeSegment(pSegDir, k.toLong, postingsOf(batch))
+            pSegs.put(k, sp)
+            segFiles += graft.streaming.LsmFold.parquetFiles(sp)
           }
-          ()
+          if (dFresh) {
+            val sd = writeSegment(dSegDir, k.toLong, doclensOf(batch))
+            dSegs.put(k, sd)
+            segFiles += graft.streaming.LsmFold.parquetFiles(sd)
+          }
+          folder.onSegment(math.max(1, segFiles))
         }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      }
       // the deferred OPTIMIZE: the policy's close fold lands all
       // remaining segments in the bucketed base (the per-epoch
       // O(standing) rewrite, amortized over every batch the epoch

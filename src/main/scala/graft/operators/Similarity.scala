@@ -55,6 +55,110 @@ object Similarity {
     embeddings(s, d).filter(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("embedding").as("q"))
 
+  // ---- the shared probe kernels --------------------------------------
+  // Every query form below is a route (LSH bucket, IVF/IMI cell, PQ
+  // cell, or none = the exact scan) × a score (float cosine, int8
+  // cosQ, ADC) × a top-k shape (rank window, or bounded heap + window).
+  // A form builds its corpus and query sides and names its route and
+  // score; probeJoin/probeTopK/topK or heapTopK do the rest, and
+  // int8Queries/int8Rows build every int8 side.
+
+  /** The broadcast probe: each (tiny) query row meets the corpus rows
+    * whose `key._1` equals its `key._2` (`None`: every corpus row —
+    * the exact scan). `excludeSelf` is the CORPUS-QUERY convention
+    * (query ids ARE corpus vec_ids, so a vector must not match
+    * itself). An AD-HOC query batch must pass false: its query_id
+    * namespace is the caller's, and a collision with a corpus vec_id
+    * would silently drop that vector from the candidate set (r15
+    * ADVICE; ServeSessionSpec pins the colliding-id case). */
+  private[graft] def probeJoin(corpus: DataFrame, queries: DataFrame,
+      key: Option[(String, String)], excludeSelf: Boolean = true): DataFrame = {
+    val on = key.map { case (ck, qk) => col(ck) === col(qk) }
+    val self = Option.when(excludeSelf)(col("vec_id") =!= col("query_id"))
+    corpus.join(broadcast(queries), (on ++ self).reduce(_ && _))
+  }
+
+  /** Each query's top `k` rows of `scored` by (`scoreName` desc, `id`
+    * asc) — a total order, so ties on the score break identically in
+    * every form and in the oracles' windows. */
+  private[graft] def topK(scored: DataFrame, scoreName: String, k: Int,
+      rank: String = "rnk", id: String = "vec_id"): DataFrame =
+    scored.withColumn(rank, row_number().over(Window.partitionBy(col("query_id"))
+        .orderBy(col(scoreName).desc, col(id).asc)))
+      .filter(col(rank) <= k)
+
+  /** Cell-probe top-k: probe on `corpusKey === queryKey`, project
+    * (query_id, vec_id, <corpusKey>, score AS scoreName), keep each
+    * query's top `k`. */
+  private[graft] def probeTopK(corpus: DataFrame, queries: DataFrame,
+      corpusKey: String, queryKey: String, score: Column, scoreName: String,
+      k: Int, excludeSelf: Boolean = true): DataFrame =
+    topK(probeJoin(corpus, queries, Some(corpusKey -> queryKey), excludeSelf)
+      .select(col("query_id"), col("vec_id"), col(corpusKey), score.as(scoreName)),
+      scoreName, k)
+
+  /** Bounded-heap top-k — the same relation as `topK`, a different
+    * physical shape for scans whose candidate set is far larger than
+    * k·queries: each task keeps at most k rows per query in a heap
+    * (mapPartitions — no shuffle), so only k·partitions·queries rows
+    * reach the final rank window instead of a candidate-sized shuffle
+    * into #queries reducers. `T` is the row tuple of `scored`, whose
+    * columns are (query_id, vec_id, …, score). The heap orders on the
+    * window's total order (score desc, vec_id asc), so heap and window
+    * agree on every row including ties. */
+  private[graft] def heapTopK[T <: Product : scala.reflect.runtime.universe.TypeTag](
+      scored: DataFrame, k: Int, scoreCol: String): DataFrame = {
+    implicit val enc: org.apache.spark.sql.Encoder[T] =
+      org.apache.spark.sql.Encoders.product[T]
+    def qid(t: T): Long = t.productElement(0).asInstanceOf[Long]
+    // worst-first: the heap head is the row that falls out
+    val worstFirst: Ordering[T] = Ordering.by[T, (Double, Long)](t =>
+      (t.productElement(t.productArity - 1).asInstanceOf[Double],
+        t.productElement(1).asInstanceOf[Long]))(
+      Ordering.Tuple2(Ordering.Double.TotalOrdering.reverse, Ordering.Long))
+    val partial = scored.as[T].mapPartitions { it =>
+      val heaps = scala.collection.mutable.Map
+        .empty[Long, scala.collection.mutable.PriorityQueue[T]]
+      it.foreach { t =>
+        val h = heaps.getOrElseUpdate(qid(t),
+          scala.collection.mutable.PriorityQueue.empty(worstFirst))
+        if (h.size < k) h.enqueue(t)
+        else if (worstFirst.gt(h.head, t)) { h.dequeue(); h.enqueue(t) }
+      }
+      heaps.valuesIterator.flatMap(_.iterator)
+    }.toDF(scored.columns.toSeq: _*)
+    topK(partial, scoreCol, k)
+  }
+
+  /** The int8 query side (query_id, [qcell], q_scale, qq) of a
+    * (query_id, embedding) batch, routed by `cellOf` when given. The
+    * quantizer is bound ONCE: two quantizeCols calls would build the
+    * expression twice and lean on codegen subexpression elimination
+    * to dodge double per-row work (r15 VERDICT minor 4a). */
+  private[graft] def int8Queries(qset: DataFrame,
+      cellOf: Option[Column => Column] = None): DataFrame = {
+    val (qScale, qq) = quantizeCols(col("embedding"))
+    qset.select(Seq(col("query_id")) ++ cellOf.map(_(col("embedding")).as("qcell")) ++
+      Seq(qScale.as("q_scale"), qq.as("qq")): _*)
+  }
+
+  /** The int8 corpus side (vec_id, cell, c_scale, cq) — the index row
+    * shape every int8 serve path reads, computed on the fly. */
+  private[graft] def int8Rows(e: DataFrame, cellOf: Column => Column): DataFrame = {
+    val (sc, q) = quantizeCols(col("embedding"))
+    e.select(col("vec_id"), cellOf(col("embedding")).as("cell"),
+      sc.as("c_scale"), q.as("cq"))
+  }
+
+  /** The corpus-id query batch (query_id, embedding): vectors below
+    * `bound` — query ids ARE corpus vec_ids, so probes self-exclude. */
+  private[graft] def queryBatch(e: DataFrame, bound: Int = 3): DataFrame =
+    e.filter(col("vec_id") < bound).select(col("vec_id").as("query_id"), col("embedding"))
+
+  /** Exact-dot cosine rounded to 4 places — the float score of every
+    * form (the DuckDB oracles' `round(dot, 4)`). */
+  private def cos4(q: Column, v: Column): Column = round(dot(q, v), 4)
+
   /** Coarse-quantizer sizing. What matters for scale is bounded CELL
     * population, not just a bounded broadcast: the SemDeDup verify
     * self-join does O(cell²) work per cell and an IVF probe scans one
@@ -263,34 +367,11 @@ object Similarity {
     * the same two-level bounded-heap shape; Retrieval's hybrid
     * fusion reuses it for its own query ids. */
   private[graft] def simTopkFor(s: SparkSession, d: String,
-      qs: DataFrame): DataFrame = {
-    import s.implicits._
-    val k = 10
-    val corpus = embeddings(s, d)
-    val scored = corpus.join(broadcast(qs),
-        col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(dot(col("q"), col("embedding")), 4).as("cos_r"))
-    // worst-first ordering: the heap head is the row that falls out
-    val worstFirst: Ordering[(Double, Long)] =
-      Ordering.Tuple2(Ordering.Double.TotalOrdering.reverse, Ordering.Long)
-    val partial = scored.as[(Long, Long, Double)].mapPartitions { it =>
-      val heaps = scala.collection.mutable.Map
-        .empty[Long, scala.collection.mutable.PriorityQueue[(Double, Long)]]
-      it.foreach { case (q, v, c) =>
-        val h = heaps.getOrElseUpdate(q,
-          scala.collection.mutable.PriorityQueue.empty(worstFirst))
-        if (h.size < k) h.enqueue((c, v))
-        else if (worstFirst.gt(h.head, (c, v))) { h.dequeue(); h.enqueue((c, v)) }
-      }
-      heaps.iterator.flatMap { case (q, h) =>
-        h.iterator.map { case (c, v) => (q, v, c) } }
-    }.toDF("query_id", "vec_id", "cos_r")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_r").desc, col("vec_id").asc)
-    partial.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-  }
+      qs: DataFrame): DataFrame =
+    heapTopK[(Long, Long, Double)](
+      probeJoin(embeddings(s, d), qs, None)
+        .select(col("query_id"), col("vec_id"), cos4(col("q"), col("embedding")).as("cos_r")),
+      10, "cos_r")
 
   /** Random-hyperplane LSH: 8 data-derived hyperplanes (vectors
     * 100..107) → 8 sign bits → bucket id; queries search only their
@@ -333,14 +414,8 @@ object Similarity {
     val corpusB = e.withColumn("bucket", bucket(col("embedding")))
     val queriesB = queryVectors(s, d).withColumnRenamed("q", "qv")
       .withColumn("qbucket", bucket(col("qv")))
-    val cand = corpusB.join(broadcast(queriesB),
-      col("bucket") === col("qbucket") && col("vec_id") =!= col("query_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_r").desc, col("vec_id").asc)
-    cand.select(col("query_id"), col("vec_id"), col("bucket"),
-        round(dot(col("qv"), col("embedding")), 4).as("cos_r"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
+    probeTopK(corpusB, queriesB, "bucket", "qbucket",
+      cos4(col("qv"), col("embedding")), "cos_r", 5)
   }
 
   /** IVF coarse quantizer: a dynamic-k deterministic centroid sample
@@ -359,14 +434,7 @@ object Similarity {
       cellOf(col("embedding")).as("cell"), col("embedding"))
     val qcells = queryVectors(s, d).withColumnRenamed("q", "qv")
       .select(col("query_id"), cellOf(col("qv")).as("qcell"), col("qv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_r").desc, col("vec_id").asc)
-    cells.join(broadcast(qcells),
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        round(dot(col("qv"), col("embedding")), 4).as("cos_r"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
+    probeTopK(cells, qcells, "cell", "qcell", cos4(col("qv"), col("embedding")), "cos_r", 5)
   }
 
   /** Multi-probe hyperplane LSH: each query searches its own bucket
@@ -387,14 +455,8 @@ object Similarity {
       .withColumn("qbucket", bucket(col("qv")))
       .withColumn("probe_bucket", explode(array(
         col("qbucket") +: (0 until 8).map(i => expr(s"qbucket ^ ${1L << i}")): _*)))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_r").desc, col("vec_id").asc)
-    corpusB.join(broadcast(probes),
-        col("bucket") === col("probe_bucket") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("bucket"),
-        round(dot(col("qv"), col("embedding")), 4).as("cos_r"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
+    probeTopK(corpusB, probes, "bucket", "probe_bucket",
+      cos4(col("qv"), col("embedding")), "cos_r", 5)
   }
 
   /** IVF with multi-probe (nprobe=2): each query searches its 2
@@ -412,27 +474,17 @@ object Similarity {
     val cells = e.select(col("vec_id"),
       graft.functions.NearestCentroid.nearest(col("embedding"), cents).as("cell"),
       col("embedding"))
-    val pw = Window.partitionBy(col("query_id"))
-      .orderBy(col("pcos").desc, col("cent_id").asc)
     // probe ranking reuses the collected set — a local relation, not
     // another corpus orderBy+limit scan
     val centDf = cents.toSeq.map { case (id, v) => (id, v.toSeq) }
       .toDF("cent_id", "cv")
-    val qprobes = queryVectors(s, d).withColumnRenamed("q", "qv")
-      .crossJoin(broadcast(centDf))
-      .select(col("query_id"), col("qv"), col("cent_id"),
-        round(dot(col("qv"), col("cv")), 4).as("pcos"))
-      .withColumn("probe_rank", row_number().over(pw))
-      .filter(col("probe_rank") <= nprobe)
+    val qprobes = topK(queryVectors(s, d).withColumnRenamed("q", "qv")
+        .crossJoin(broadcast(centDf))
+        .select(col("query_id"), col("qv"), col("cent_id"),
+          cos4(col("qv"), col("cv")).as("pcos")),
+        "pcos", nprobe, "probe_rank", "cent_id")
       .select(col("query_id"), col("qv"), col("cent_id").as("qcell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_r").desc, col("vec_id").asc)
-    cells.join(broadcast(qprobes),
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        round(dot(col("qv"), col("embedding")), 4).as("cos_r"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
+    probeTopK(cells, qprobes, "cell", "qcell", cos4(col("qv"), col("embedding")), "cos_r", 5)
   }
 
   /** Lowercase-hex MD5 — the driver-side twin of Spark/DuckDB `md5()`
@@ -536,14 +588,7 @@ object Similarity {
       cellOf(col("embedding")).as("cell"), col("embedding"))
     val qcells = queryVectors(s, d).withColumnRenamed("q", "qv")
       .select(col("query_id"), cellOf(col("qv")).as("qcell"), col("qv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_r").desc, col("vec_id").asc)
-    cells.join(broadcast(qcells),
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        round(dot(col("qv"), col("embedding")), 4).as("cos_r"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
+    probeTopK(cells, qcells, "cell", "qcell", cos4(col("qv"), col("embedding")), "cos_r", 5)
   }
 
   /** MULTI-ASSIGNMENT IVF-IMI (Jégou et al., RR-7020 §5): every CORPUS
@@ -569,14 +614,7 @@ object Similarity {
     val cellOf = imiCellOf(s, d) _
     val qcells = queryVectors(s, d).withColumnRenamed("q", "qv")
       .select(col("query_id"), cellOf(col("qv")).as("qcell"), col("qv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_r").desc, col("vec_id").asc)
-    cells.join(broadcast(qcells),
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        round(dot(col("qv"), col("embedding")), 4).as("cos_r"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
+    probeTopK(cells, qcells, "cell", "qcell", cos4(col("qv"), col("embedding")), "cos_r", 5)
   }
 
   /** Per-vector symmetric int8 scalar quantization: scale = 127/max|v|,
@@ -643,42 +681,16 @@ object Similarity {
       .otherwise(round(qdot.cast(DoubleType) / (col("c_scale") * col("q_scale")), 4))
 
   def simTopkInt8(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val k = 10
     val e = embeddings(s, d)
     val (qsc, qq) = quantizeCols(col("embedding"))
     val corpus = e.select(col("vec_id"), qsc.as("c_scale"), qq.as("cq"))
-    val queries = e.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"),
-        quantizeCols(col("embedding"))._1.as("q_scale"),
-        quantizeCols(col("embedding"))._2.as("qq"))
+    val queries = int8Queries(queryBatch(e))
     // native codegen integer dot (functions/DotI8Expr.scala) — the
     // interpreted HOF fold was 3.4x the float path's native kernel
     val qdot = graft.functions.DotI8.dotI8(col("cq"), col("qq"))
-    val scored = corpus.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), qdot.as("qdot"),
-        cosQ(qdot).as("cos_q"))
-    // same two-level top-k as simTopk: per-partition bounded heaps, so
-    // only k·partitions·queries rows reach the final rank window — no
-    // corpus-sized shuffle into #queries reducers
-    val worstFirst: Ordering[(Double, Long, Long)] =
-      Ordering.Tuple3(Ordering.Double.TotalOrdering.reverse, Ordering.Long, Ordering.Long)
-    val partial = scored.as[(Long, Long, Long, Double)].mapPartitions { it =>
-      val heaps = scala.collection.mutable.Map
-        .empty[Long, scala.collection.mutable.PriorityQueue[(Double, Long, Long)]]
-      it.foreach { case (q, v, dq, c) =>
-        val h = heaps.getOrElseUpdate(q,
-          scala.collection.mutable.PriorityQueue.empty(worstFirst))
-        if (h.size < k) h.enqueue((c, v, dq))
-        else if (worstFirst.gt(h.head, (c, v, dq))) { h.dequeue(); h.enqueue((c, v, dq)) }
-      }
-      heaps.iterator.flatMap { case (q, h) =>
-        h.iterator.map { case (c, v, dq) => (q, v, dq, c) } }
-    }.toDF("query_id", "vec_id", "qdot", "cos_q")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_q").desc, col("vec_id").asc)
-    partial.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    heapTopK[(Long, Long, Long, Double)](probeJoin(corpus, queries, None)
+      .select(col("query_id"), col("vec_id"), qdot.as("qdot"), cosQ(qdot).as("cos_q")),
+      10, "cos_q")
   }
 
   /** IVF + int8 — the production ANN layout at 100 TB: the coarse
@@ -695,22 +707,7 @@ object Similarity {
   def simIvfInt8(s: SparkSession, d: String): DataFrame = {
     val e = embeddings(s, d)
     val cellOf = imiCellOf(s, d) _
-    val (csc, cq) = quantizeCols(col("embedding"))
-    val cells = e.select(col("vec_id"), cellOf(col("embedding")).as("cell"),
-      csc.as("c_scale"), cq.as("cq"))
-    val qcells = e.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"), cellOf(col("embedding")).as("qcell"),
-        quantizeCols(col("embedding"))._1.as("q_scale"),
-        quantizeCols(col("embedding"))._2.as("qq"))
-    val qdot = graft.functions.DotI8.dotI8(col("cq"), col("qq"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_q").desc, col("vec_id").asc)
-    cells.join(broadcast(qcells),
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        cosQ(qdot).as("cos_q"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
+    frozenInt8Serve(int8Rows(e, cellOf), int8Queries(queryBatch(e), Some(cellOf)))
   }
 
   // ---- product quantization (IVF-PQ) ---------------------------------
@@ -894,33 +891,20 @@ object Similarity {
     * + cell only, 16× less I/O than the float corpus and 4× less than
     * int8, which is what the byte budget of a 10B-vector serve tier
     * actually buys. Ranking uses the rounded ADC score (tie: vec_id),
-    * mirrored bit-for-bit by the oracle's chained-CTE replay. */
-  def simIvfPq(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_r").desc, col("vec_id").asc)
-    simIvfPqAdcScored(s, d)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-  }
+    * mirrored bit-for-bit by the oracle's chained-CTE replay.
+    *
+    * `sim_ivf_pq16` is this form at the FINER 16×4×16 geometry
+    * (`GeomPq16`) — identical pipeline (same routing, same residuals,
+    * same Lloyd training discipline per subspace, same ADC serve
+    * shape) with twice the code entropy at the same 8-byte packed
+    * budget. This is the r12 pure-ADC quality lever: narrower
+    * subspaces quantize an isotropic residual strictly better than any
+    * rotation can (rotation only redistributes variance the subspaces
+    * already share equally), and RECALL_r12 measures the lift at equal
+    * probe budget. */
+  def simIvfPq(s: SparkSession, d: String, g: PqGeom = GeomPq8): DataFrame =
+    topK(simIvfPqAdcScored(s, d, g), "adc_r", 5)
 
-  /** IVF-PQ at the FINER 16×4×16 geometry (`GeomPq16`) — identical
-    * pipeline (same routing, same residuals, same Lloyd training
-    * discipline per subspace, same ADC serve shape) with twice the
-    * code entropy at the same 8-byte packed budget. This is the r12
-    * pure-ADC quality lever: narrower subspaces quantize an isotropic
-    * residual strictly better than any rotation can (rotation only
-    * redistributes variance the subspaces already share equally), and
-    * RECALL_r12 measures the lift at equal probe budget. */
-  def simIvfPq16(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_r").desc, col("vec_id").asc)
-    simIvfPqAdcScored(s, d, GeomPq16)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-  }
-
-  /** The shared ADC-scored candidate relation (query_id, vec_id,
-    * cell, adc_r) both PQ forms rank. */
   /** Query-side PQ serve table: cell via the shipped expression, LUT
     * + the query-to-centroid dot (the constant term of the residual
     * decomposition dot(q,x) = dot(q,c) + dot(q,res)) on the driver —
@@ -945,10 +929,11 @@ object Similarity {
         StructField("qcdot", DoubleType))))
   }
 
+  /** The shared ADC-scored candidate relation (query_id, vec_id,
+    * cell, adc_r) every PQ form ranks. */
   private def pqAdcScoredOver(codes: DataFrame, qcells: DataFrame,
       g: PqGeom = GeomPq8): DataFrame =
-    codes.join(broadcast(qcells),
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
+    probeJoin(codes, qcells, Some("cell" -> "qcell"))
       .select(col("query_id"), col("vec_id"), col("cell"),
         round(col("qcdot") + adcCol(col("lut"), col("codes"), g), 4).as("adc_r"))
 
@@ -978,11 +963,7 @@ object Similarity {
     * choice, not a semantic one. */
   def simIvfPqBucketed(s: SparkSession, d: String): DataFrame = {
     val idx = bucketedIndexTable(s, d).select(col("vec_id"), col("cell"), col("codes"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_r").desc, col("vec_id").asc)
-    pqAdcScoredOver(idx, pqQueryTable(s, d))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
+    topK(pqAdcScoredOver(idx, pqQueryTable(s, d)), "adc_r", 5)
   }
 
   /** ADC shortlist size before the exact re-rank (10× the served k —
@@ -1001,23 +982,9 @@ object Similarity {
     * for only R rows per query (R/cell_size of the I/O, 80× under a
     * 4096-member cell). Recall vs exact is then routing-bounded
     * (measured in RECALL: rerank ≈ the IMI ceiling). */
-  def simIvfPqRerank(s: SparkSession, d: String): DataFrame = {
-    val e = embeddings(s, d)
-    val adcW = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_r").desc, col("vec_id").asc)
-    val short = simIvfPqAdcScored(s, d)
-      .withColumn("arnk", row_number().over(adcW))
-      .filter(col("arnk") <= PqRerankR)
-    val qv = queryVectors(s, d)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_r").desc, col("vec_id").asc)
-    short.join(e, Seq("vec_id"))
-      .join(broadcast(qv), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        round(dot(col("q"), col("embedding")), 4).as("cos_r"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-  }
+  def simIvfPqRerank(s: SparkSession, d: String): DataFrame =
+    pqRerank(s, d, embeddings(s, d), queryVectors(s, d),
+      cos4(col("q"), col("embedding")), "cos_r")
 
   /** IVF-PQ with INT8 re-rank (r11, VERDICT item 6) — the
     * byte-budget-COMPLETE two-stage serve: the ADC top-`PqRerankR`
@@ -1033,27 +1000,22 @@ object Similarity {
     * `sim_ivf_int8` kernel verbatim (exact integer dot, cosQ). */
   def simIvfPqRerankInt8(s: SparkSession, d: String): DataFrame = {
     val e = embeddings(s, d)
-    val adcW = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_r").desc, col("vec_id").asc)
-    val short = simIvfPqAdcScored(s, d)
-      .withColumn("arnk", row_number().over(adcW))
-      .filter(col("arnk") <= PqRerankR)
     val (csc, cq) = quantizeCols(col("embedding"))
     val corpus8 = e.select(col("vec_id"), csc.as("c_scale"), cq.as("cq"))
-    val q8 = e.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"),
-        quantizeCols(col("embedding"))._1.as("q_scale"),
-        quantizeCols(col("embedding"))._2.as("qq"))
-    val qdot = graft.functions.DotI8.dotI8(col("cq"), col("qq"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_q").desc, col("vec_id").asc)
-    short.join(corpus8, Seq("vec_id"))
-      .join(broadcast(q8), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"), col("cell"), cosQ(qdot).as("cos_q"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
+    pqRerank(s, d, corpus8, int8Queries(queryBatch(e)),
+      cosQ(graft.functions.DotI8.dotI8(col("cq"), col("qq"))), "cos_q")
   }
 
+  /** The shared two-stage tail: the ADC top-`PqRerankR` shortlist
+    * fetches its `corpus` rows and the query side by id, and the
+    * re-rank `score` picks the top-5. */
+  private def pqRerank(s: SparkSession, d: String, corpus: DataFrame,
+      queries: DataFrame, score: Column, scoreName: String): DataFrame =
+    topK(topK(simIvfPqAdcScored(s, d), "adc_r", PqRerankR, "arnk")
+        .join(corpus, Seq("vec_id"))
+        .join(broadcast(queries), Seq("query_id"))
+        .select(col("query_id"), col("vec_id"), col("cell"), score.as(scoreName)),
+      scoreName, 5)
 
   // One persisted ANN index per (session, dataset dir): assignment +
   // quantization are write-once ETL (the "index build" phase), so
@@ -1157,8 +1119,7 @@ object Similarity {
 
   private[graft] def simIvfInt8BucketedFor(s: SparkSession, d: String,
       qBound: Int): DataFrame =
-    int8BucketedProbe(s, d, embeddings(s, d).filter(col("vec_id") < qBound)
-      .select(col("vec_id").as("query_id"), col("embedding")))
+    int8BucketedProbe(s, d, queryBatch(embeddings(s, d), qBound))
 
   /** One serve probe of a query set against the persisted index: the
     * QUERY side runs the quantizer expressions, broadcasts into the
@@ -1166,23 +1127,9 @@ object Similarity {
     * by the batch entry and the streaming serve loop — the loop is
     * semantically this probe applied per micro-batch. */
   private def int8BucketedProbe(s: SparkSession, d: String,
-      qset: DataFrame): DataFrame = {
-    val idx = bucketedIndexTable(s, d)
-    val cellOf = imiCellOf(s, d) _
-    val qcells = qset
-      .select(col("query_id"), cellOf(col("embedding")).as("qcell"),
-        quantizeCols(col("embedding"))._1.as("q_scale"),
-        quantizeCols(col("embedding"))._2.as("qq"))
-    val qdot = graft.functions.DotI8.dotI8(col("cq"), col("qq"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_q").desc, col("vec_id").asc)
-    idx.join(broadcast(qcells),
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        cosQ(qdot).as("cos_q"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-  }
+      qset: DataFrame): DataFrame =
+    frozenInt8Serve(bucketedIndexTable(s, d),
+      int8Queries(qset, Some(imiCellOf(s, d) _)))
 
   /** ONLINE retrieval — the batch ANN serve run as the production
     * CONTINUOUS loop: query vectors ARRIVE as a stream (three
@@ -1201,53 +1148,21 @@ object Similarity {
     val qs = embeddings(s, d).filter(col("vec_id") < 12)
       .select(col("vec_id"), col("embedding"),
         (col("vec_id") % 3).cast(IntegerType).as("sub_batch"))
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_annserve")
-    try {
-      (0 until 3).foreach { k =>
-        val side = streamDir.resolve(s"side$k")
-        qs.filter(col("sub_batch") === k).coalesce(1)
-          .write.mode("overwrite").parquet(side.toString)
-        val part = java.nio.file.Files.list(side).filter(p =>
-          p.getFileName.toString.endsWith(".parquet")).findFirst().get()
-        val dst = streamDir.resolve(f"queries$k%04d.parquet")
-        java.nio.file.Files.move(part, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + k * 60000L))
-      }
-      bucketedIndexTable(s, d) // index is write-once ETL, built before the stream
-      val results = new graft.streaming.SubBatchState[DataFrame]
-      val stream = s.readStream.schema(qs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(streamDir.toString + "/queries*.parquet")
-      val q = stream.writeStream
-        .foreachBatch { (mb: DataFrame, _: Long) =>
-          val subs = mb.select(col("sub_batch")).distinct()
-            .collect().map(_.getInt(0)).sorted
-          subs.foreach { k =>
-            val qset = mb.filter(col("sub_batch") === k)
-              .select(col("vec_id").as("query_id"), col("embedding"))
-            results.put(k, int8BucketedProbe(s, d, qset)
-              .withColumn("sub_batch", lit(k))
-              .localCheckpoint(true))
-          }
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      if (results.isEmpty)
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("query_id", LongType),
-            StructField("vec_id", LongType), StructField("cell", LongType),
-            StructField("cos_q", DoubleType), StructField("rnk", IntegerType),
-            StructField("sub_batch", IntegerType))))
-      else results.values.reduce(_ union _)
-    } finally {
-      val files = java.nio.file.Files.walk(streamDir)
-      try files.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally files.close()
+    bucketedIndexTable(s, d) // index is write-once ETL, built before the stream
+    val results = new graft.streaming.SubBatchState[DataFrame]
+    graft.streaming.SubBatchState.streamSubBatches(s, qs) { (k, batch) =>
+      val qset = batch.select(col("vec_id").as("query_id"), col("embedding"))
+      results.put(k, int8BucketedProbe(s, d, qset)
+        .withColumn("sub_batch", lit(k))
+        .localCheckpoint(true))
     }
+    if (results.isEmpty)
+      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType(Seq(StructField("query_id", LongType),
+          StructField("vec_id", LongType), StructField("cell", LongType),
+          StructField("cos_q", DoubleType), StructField("rnk", IntegerType),
+          StructField("sub_batch", IntegerType))))
+    else results.values.reduce(_ union _)
   }
 
   // ---- incremental index MAINTENANCE (frozen quantizer) --------------
@@ -1259,26 +1174,9 @@ object Similarity {
     * the maintained table and the spec's direct projection provably
     * serve the same relation. */
   private[graft] def frozenInt8Serve(indexRows: DataFrame,
-      qcells: DataFrame, excludeSelf: Boolean = true): DataFrame = {
-    val qdot = graft.functions.DotI8.dotI8(col("cq"), col("qq"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_q").desc, col("vec_id").asc)
-    // excludeSelf is the CORPUS-QUERY convention (query ids ARE corpus
-    // vec_ids, so a vector must not match itself). An AD-HOC query
-    // batch must pass false: its query_id namespace is the caller's,
-    // and a collision with a corpus vec_id would silently drop that
-    // vector from the candidate set (r15 ADVICE; ServeSessionSpec
-    // pins the colliding-id case).
-    val joinCond =
-      if (excludeSelf)
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id")
-      else col("cell") === col("qcell")
-    indexRows.join(broadcast(qcells), joinCond)
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        cosQ(qdot).as("cos_q"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-  }
+      qcells: DataFrame, excludeSelf: Boolean = true): DataFrame =
+    probeTopK(indexRows, qcells, "cell", "qcell",
+      cosQ(graft.functions.DotI8.dotI8(col("cq"), col("qq"))), "cos_q", 5, excludeSelf)
 
   /** Batched form of [[frozenInt8Serve]] for LARGE query batches —
     * identical relation, different physical top-k (r15 VERDICT
@@ -1297,39 +1195,12 @@ object Similarity {
     * every row including ties — semantics pinned against the window
     * kernel in ServeSessionSpec. */
   private[graft] def frozenInt8ServeBatched(indexRows: DataFrame,
-      qcells: DataFrame, excludeSelf: Boolean = true): DataFrame = {
-    val spark = indexRows.sparkSession
-    import spark.implicits._
-    val k = 5
-    val qdot = graft.functions.DotI8.dotI8(col("cq"), col("qq"))
-    val joinCond =
-      if (excludeSelf)
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id")
-      else col("cell") === col("qcell")
-    val scored = indexRows.join(broadcast(qcells), joinCond)
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        cosQ(qdot).as("cos_q"))
-    // worst-first heap ordering on the SAME total order as the window
-    // (cos_q desc, vec_id asc): the head is the row that falls out
-    val worstFirst: Ordering[(Double, Long, Long)] =
-      Ordering.by[(Double, Long, Long), (Double, Long)](t => (t._1, t._2))(
-        Ordering.Tuple2(Ordering.Double.TotalOrdering.reverse, Ordering.Long))
-    val partial = scored.as[(Long, Long, Long, Double)].mapPartitions { it =>
-      val heaps = scala.collection.mutable.Map
-        .empty[Long, scala.collection.mutable.PriorityQueue[(Double, Long, Long)]]
-      it.foreach { case (q, v, c, s) =>
-        val h = heaps.getOrElseUpdate(q,
-          scala.collection.mutable.PriorityQueue.empty(worstFirst))
-        if (h.size < k) h.enqueue((s, v, c))
-        else if (worstFirst.gt(h.head, (s, v, c))) { h.dequeue(); h.enqueue((s, v, c)) }
-      }
-      heaps.iterator.flatMap { case (q, h) =>
-        h.iterator.map { case (s, v, c) => (q, v, c, s) } }
-    }.toDF("query_id", "vec_id", "cell", "cos_q")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_q").desc, col("vec_id").asc)
-    partial.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-  }
+      qcells: DataFrame, excludeSelf: Boolean = true): DataFrame =
+    heapTopK[(Long, Long, Long, Double)](
+      probeJoin(indexRows, qcells, Some("cell" -> "qcell"), excludeSelf)
+        .select(col("query_id"), col("vec_id"), col("cell"),
+          cosQ(graft.functions.DotI8.dotI8(col("cq"), col("qq"))).as("cos_q")),
+      5, "cos_q")
 
   /** CONTINUOUS ANN-index maintenance — the dense sibling of
     * `stream_bm25_maintain` and the write path `stream_ann_serve`
@@ -1365,29 +1236,11 @@ object Similarity {
     // FROZEN: trained on the standing base (k from the base size)
     val (supers, groups) = twoLevelIndexOf(collectCentroidsOf(e.filter(!isArr)))
     def cellOf(v: Column): Column = graft.functions.ImiCell2.cell(v, supers, groups)
-    def rowsOf(df: DataFrame): DataFrame = {
-      val (sc, q) = quantizeCols(col("embedding"))
-      df.select(col("vec_id"), cellOf(col("embedding")).as("cell"),
-        sc.as("c_scale"), q.as("cq"))
-    }
     val workDir = java.nio.file.Files.createTempDirectory("graft_annmaint")
     try {
-      val streamDir = workDir.resolve("stream")
-      java.nio.file.Files.createDirectories(streamDir)
       val arrivals = e.filter(isArr)
         .withColumn("sub_batch", Retrieval.arrivalSubBatch(col("vec_id")))
-      (0 until 3).foreach { k =>
-        val side = streamDir.resolve(s"side$k")
-        arrivals.filter(col("sub_batch") === k).coalesce(1)
-          .write.mode("overwrite").parquet(side.toString)
-        val part = java.nio.file.Files.list(side).filter(p =>
-          p.getFileName.toString.endsWith(".parquet")).findFirst().get()
-        val dst = streamDir.resolve(f"arrive$k%04d.parquet")
-        java.nio.file.Files.move(part, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + k * 60000L))
-      }
-      val p0 = rowsOf(e.filter(!isArr))
+      val p0 = int8Rows(e.filter(!isArr), cellOf)
       val nb = derivedBuckets(s, p0.count(), "spark.graft.ann.maintain.buckets")
       val pt = new graft.streaming.PartitionedTable(
         workDir.resolve("idx"), "cell", nb)
@@ -1445,40 +1298,24 @@ object Similarity {
           }
           runs.clear(); segs.clear()
         })
-      val stream = s.readStream.schema(arrivals.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(streamDir.toString + "/arrive*.parquet")
-      val q = stream.writeStream
-        .foreachBatch { (mb: DataFrame, _: Long) =>
-          val subs = mb.select(col("sub_batch")).distinct()
-            .collect().map(_.getInt(0)).sorted
-          subs.foreach { k =>
-            // an already-FOLDED sub-batch replay (base markers or a
-            // live run) skips the segment write (LsmFold's marker
-            // filter is the structural guard)
-            if (pt.lastTxn(s"annidx.seg$k").isEmpty &&
-                !runs.exists(_._1.contains(k))) {
-              val seg = segDir.resolve(f"seg$k%04d")
-              rowsOf(mb.filter(col("sub_batch") === k).drop("sub_batch"))
-                .write.mode("overwrite").parquet(seg.toString)
-              segs.put(k, seg.toString)
-              folder.onSegment(
-                math.max(1, graft.streaming.LsmFold.parquetFiles(seg)))
-            }
-          }
-          ()
+      graft.streaming.SubBatchState.streamSubBatches(s, arrivals) { (k, batch) =>
+        // an already-FOLDED sub-batch replay (base markers or a
+        // live run) skips the segment write (LsmFold's marker
+        // filter is the structural guard)
+        if (pt.lastTxn(s"annidx.seg$k").isEmpty &&
+            !runs.exists(_._1.contains(k))) {
+          val seg = segDir.resolve(f"seg$k%04d")
+          int8Rows(batch.drop("sub_batch"), cellOf)
+            .write.mode("overwrite").parquet(seg.toString)
+          segs.put(k, seg.toString)
+          folder.onSegment(
+            math.max(1, graft.streaming.LsmFold.parquetFiles(seg)))
         }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      }
       folder.finish()
       pt.compact(s)
-      val qcells = e.filter(col("vec_id") < 3)
-        .select(col("vec_id").as("query_id"),
-          cellOf(col("embedding")).as("qcell"),
-          quantizeCols(col("embedding"))._1.as("q_scale"),
-          quantizeCols(col("embedding"))._2.as("qq"))
-      frozenInt8Serve(pt.read(s), qcells).localCheckpoint(true)
+      frozenInt8Serve(pt.read(s), int8Queries(queryBatch(e), Some(cellOf _)))
+        .localCheckpoint(true)
       // fence cleared in finally so an exception mid-scope can't leave
       // it installed (Replication.catchUp's discipline)
       } finally { pt.clearFence() }
@@ -1502,25 +1339,19 @@ object Similarity {
     val e = embeddings(s, d)
     val q = e.filter(col("vec_id") < nq)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sc").desc, col("vec_id").asc)
-    val exact = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(dot(col("qv"), col("embedding")), 4).as("sc"))
-      .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 10)
-      .select(col("query_id"), col("vec_id"), col("rnk").as("true_rnk"))
+    // both halves score and rank identically; only the route differs
+    def top10(probe: DataFrame, rank: String): DataFrame =
+      topK(probe.select(col("query_id"), col("vec_id"),
+          cos4(col("qv"), col("embedding")).as("sc")), "sc", 10)
+        .select(col("query_id"), col("vec_id"), col("rnk").as(rank))
+    val exact = top10(probeJoin(e, q, None), "true_rnk")
     val cellOf = imiCellOf(s, d) _
     val cells = e.select(col("vec_id"), cellOf(col("embedding")).as("cell"),
       col("embedding"))
     val qc = e.filter(col("vec_id") < nq)
       .select(col("vec_id").as("query_id"), cellOf(col("embedding")).as("qcell"),
         col("embedding").as("qv"))
-    val ann = cells.join(broadcast(qc),
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(dot(col("qv"), col("embedding")), 4).as("sc"))
-      .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 10)
-      .select(col("query_id"), col("vec_id"), col("rnk").as("ann_rnk"))
+    val ann = top10(probeJoin(cells, qc, Some("cell" -> "qcell")), "ann_rnk")
     // coalesce: on a degenerate corpus the exact∩ANN join is empty and a
     // bare sum yields NULL where the oracle's coalesce(sum(..), 0) yields
     // 0 — a representation-only hash mismatch (r9 ADVICE).
@@ -1553,8 +1384,8 @@ object Similarity {
     "sim_ivf" -> simIvf _,
     "sim_ivf_imi" -> simIvfImi _,
     "sim_ivf_imi_ma" -> simIvfImiMa _,
-    "sim_ivf_pq" -> simIvfPq _,
-    "sim_ivf_pq16" -> simIvfPq16 _,
+    "sim_ivf_pq" -> ((s: SparkSession, d: String) => simIvfPq(s, d)),
+    "sim_ivf_pq16" -> ((s: SparkSession, d: String) => simIvfPq(s, d, GeomPq16)),
     "sim_ivf_pq_bucketed" -> simIvfPqBucketed _,
     "sim_ivf_pq_rerank" -> simIvfPqRerank _,
     "sim_ivf_pq_rerank_int8" -> simIvfPqRerankInt8 _,

@@ -293,9 +293,10 @@ object Spatial {
     * dedup predicate stays exactly equivalent to floor assignment. */
   val GridCandidates: Seq[Double] = Seq(0.5, 1.0, 2.0, 4.0, 8.0, 16.0)
 
-  /** Measured cost ratio (SpatialProbe, sf1): producing one exploded
-    * cell row (project + exchange + sort) costs ~8× evaluating one
-    * candidate pair (a handful of codegen'd compares). */
+  /** Measured cost ratio (sf1; SCALING.md, spatial "Measured (rounds
+    * 5-7)"): producing one exploded cell row (project + exchange +
+    * sort) costs ~8× evaluating one candidate pair (a handful of
+    * codegen'd compares). */
   val ExplodeCostRatio = 8.0
 
   /** Data-adaptive grid size. Modeled cost =
@@ -305,8 +306,9 @@ object Spatial {
     *   E[candidates] = n_a·n_b · Σ_cells P[both cover the cell]
     *                 = n_a·n_b · (w_a+g)(w_b+g)(h_a+g)(h_b+g)/(g²·W·H)
     * (a width-w box covers a fixed cell iff its min falls in a length
-    * w+g window; W/g · H/g cells). Verified against SpatialProbe at
-    * sf1: predicts 1.0e9 candidates at g=4 vs 1.02e9 measured. The
+    * w+g window; W/g · H/g cells). Verified against the measured sf1
+    * candidates (SCALING.md, spatial item 1): predicts 1.0e9
+    * candidates at g=4 vs 1.02e9 measured. The
     * g² denominator vs (w+g)⁴ numerator puts the optimum near the
     * geometric mean of the box dimensions INDEPENDENT of density —
     * finer cells re-emit an overlapping pair across more shared cells
@@ -539,7 +541,7 @@ object Spatial {
     * (cell, sa, sb) task and no task loops more than ~L² pairs.
     * Replication cost is the classic fragment-replicate √ bound: each
     * row duplicates ⌈n_other/L⌉ times only inside over-populated
-    * cells. Measured (SpatialProbe cluster, 100k×4k one-cell
+    * cells. Measured (SCALING.md, spatial item 4: 100k×4k one-cell
     * fixture): unsplit = one 3.2 s task; tiled = max task 1.1 s,
     * identical output. */
   def joinBboxGridLocalG(s: SparkSession, d: String, g: Double): DataFrame = {

@@ -358,43 +358,16 @@ object EventStreams {
     val ev = graft.Tables.events(s, d)
       .withColumn("sub_batch", (c("event_id") % 3).cast("int"))
       .select(c("sub_batch"), c("user_id"), c("event_id"), c("ts"))
-    // stage one parquet file per sub-batch, mtime-ordered, so the
-    // file stream delivers three ordered micro-batches
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_cdfstream")
-    (0 until 3).foreach { k =>
-      val side = streamDir.resolve(s"side$k")
-      ev.filter(c("sub_batch") === k).coalesce(1)
-        .write.mode("overwrite").parquet(side.toString)
-      val part = java.nio.file.Files.list(side).filter(p =>
-        p.getFileName.toString.endsWith(".parquet")).findFirst().get()
-      val dst = streamDir.resolve(f"batch$k%04d.parquet")
-      java.nio.file.Files.move(part, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + k * 60000L))
-    }
+    // the sink table dir outlives the call: the returned feed reads it
     val table = new PartitionedTable(
       java.nio.file.Files.createTempDirectory("graft_cdfsink").resolve("users"),
       "user_id", nBuckets = 8)
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir.toString + "/batch*.parquet")
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (mb: DataFrame, _: Long) =>
-        val subs = mb.select(c("sub_batch")).distinct()
-          .collect().map(_.getInt(0)).sorted
-        subs.foreach { k =>
-          val compacted = graft.operators.Upsert.lastWins(
-            mb.filter(c("sub_batch") === k),
-            Seq("user_id"), Seq(c("ts"), c("event_id")))
-            .select(c("user_id"), c("event_id"))
-          table.mergeInto(mb.sparkSession, compacted)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    SubBatchState.streamSubBatches(s, ev) { (_, batch) =>
+      val compacted = graft.operators.Upsert.lastWins(batch,
+          Seq("user_id"), Seq(c("ts"), c("event_id")))
+        .select(c("user_id"), c("event_id"))
+      table.mergeInto(batch.sparkSession, compacted)
+    }
     val snaps = table.snapshots
     (1 until snaps.length).map { i =>
       table.changesBetween(s, snaps(i - 1), snaps(i))

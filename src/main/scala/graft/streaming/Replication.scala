@@ -331,9 +331,14 @@ object Replication {
         !alive || now - parts(1).toLong > StaleAfterMillis
       } catch { case _: Exception => now - mtime > StaleAfterMillis }
     }
+    // write, THEN trim — LOCK is never empty: a `WriterLease.check`
+    // reading an empty file finds no nonce and refuses the holder's own
+    // commit as stolen. A beat rewrites the same nonce at the same
+    // offset, so every concurrent read sees it.
     def refresh(ch: FileChannel): Unit = {
-      ch.truncate(0L)
-      ch.write(java.nio.ByteBuffer.wrap(payload), 0L)
+      val bytes = payload
+      ch.write(java.nio.ByteBuffer.wrap(bytes), 0L)
+      ch.truncate(bytes.length.toLong)
       ch.force(true)
     }
     def acquire(): FileChannel = {

@@ -127,6 +127,20 @@ class LockSpec extends AnyFunSuite {
     assert(Replication.lockReleased(dir))
   }
 
+  test("a holder's own fencing check never reads a torn LOCK at a 1 ms heartbeat") {
+    // the heartbeat rewrites LOCK every beat; a check reading it mid-beat
+    // must still find the holder's nonce, or the holder's own commit is
+    // refused as stolen. Forked: the period is read once per JVM.
+    val dir = lockDir()
+    val javaBin = java.nio.file.Paths.get(
+      System.getProperty("java.home"), "bin", "java").toString
+    val p = new ProcessBuilder(javaBin, "-Dgraft.lease.heartbeat.ms=1",
+      "-cp", System.getProperty("java.class.path"),
+      "graft.LeaseChecks", dir.toString, "3000").redirectErrorStream(true).start()
+    val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
+    assert(p.waitFor() === 0, out)
+  }
+
   test("release is idempotent against a successor: a finished run never deletes the next holder's lock") {
     val dir = lockDir()
     assert(Replication.withWriterLock(dir) { true })
@@ -186,6 +200,25 @@ object LeaseCycles {
       catch { case _: IllegalStateException => true }
     }
     println(s"$refused of ${args(1)} acquisitions refused")
+    sys.exit(if (refused == 0) 0 else 1)
+  }
+}
+
+object LeaseChecks {
+  def main(args: Array[String]): Unit = {
+    val dir = java.nio.file.Paths.get(args(0))
+    // hold one lease and run the commit-point check for `args(1)` ms
+    val deadline = System.currentTimeMillis + args(1).toLong
+    val (checks, refused) = Replication.withWriterLease(dir) { lease =>
+      var n = 0L; var bad = 0L
+      while (System.currentTimeMillis < deadline) {
+        try lease.check()
+        catch { case _: graft.streaming.PartitionedTable.FencedCommitException => bad += 1 }
+        n += 1
+      }
+      (n, bad)
+    }
+    println(s"$refused of $checks checks refused")
     sys.exit(if (refused == 0) 0 else 1)
   }
 }

@@ -37,27 +37,6 @@ class RetrievalSpec extends AnyFunSuite {
     assert(edge === 0)
   }
 
-  test("totalsFromPostings equals totalsOf (r18: totals derived from the postings pass)") {
-    // real corpus
-    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.01")
-    val a = Retrieval.totalsOf(docs).as[(Long, Long)].collect().head
-    val b = Retrieval.totalsFromPostings(Retrieval.postingsOf(docs))
-      .as[(Long, Long)].collect().head
-    assert(a === b)
-    // boundary shapes: under-gram docs (0 grams), exactly-k, repeats
-    // (tf > 1 must still sum to dl), null text
-    val edge = Seq(
-      (1L, "a b", "en", "s", 3L),          // 2 words < GramK: 0 grams
-      (2L, "a b c", "en", "s", 5L),        // exactly k: 1 gram
-      (3L, "a b a b a b a b", "en", "s", 15L), // repeated grams, tf>1
-      (4L, null: String, "en", "s", 0L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val ea = Retrieval.totalsOf(edge).as[(Long, Long)].collect().head
-    val eb = Retrieval.totalsFromPostings(Retrieval.postingsOf(edge))
-      .as[(Long, Long)].collect().head
-    assert(ea === eb)
-  }
-
   test("bm25: hand-built corpus ranks by shared-gram weight, misses drop out") {
     // query doc 1 = "a b c d e"; doc 2 shares 2 grams with higher-idf
     // overlap than doc 3's 1 gram; doc 4 shares nothing

@@ -172,6 +172,41 @@ class SimilaritySpec extends AnyFunSuite {
     assert(twoLevel === direct)
   }
 
+  test("sim_topk_int8 two-level top-k equals the direct single-window form") {
+    // the int8 twin of the float case above: quantized cosines tie far
+    // more often than float ones, so this pins the heap's (cos_q desc,
+    // vec_id asc) total order against the window's on the int8 shape
+    val d = "/root/testdata/sf0.001"
+    val cols = Seq("query_id", "vec_id", "qdot", "cos_q", "rnk").map(col)
+    val twoLevel = Similarity.simTopkInt8(spark, d).select(cols: _*)
+      .orderBy("query_id", "rnk").as[(Long, Long, Long, Double, Int)].collect().toSeq
+    val e = Tables.embeddings(spark, d)
+    val (sc, q) = Similarity.quantizeCols(col("embedding"))
+    val corpus = e.select(col("vec_id"), sc.as("c_scale"), q.as("cq"))
+    val queries = e.filter(col("vec_id") < 3)
+      .select(col("vec_id").as("query_id"), sc.as("q_scale"), q.as("qq"))
+    val qdot = graft.functions.DotI8.dotI8(col("cq"), col("qq"))
+    val scored = corpus.join(broadcast(queries), col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id"), qdot.as("qdot"),
+        Similarity.cosQ(qdot).as("cos_q"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("query_id")).orderBy(col("cos_q").desc, col("vec_id").asc)
+    val direct = scored.withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= 10).select(cols: _*)
+      .orderBy("query_id", "rnk").as[(Long, Long, Long, Double, Int)].collect().toSeq
+    assert(direct.length === 30)
+    assert(twoLevel === direct)
+    // the kernel on a tie-heavy relation of the same shape: 5 distinct
+    // scores over 200 rows per query, so every k-cut lands inside a
+    // tie; rows arrive in DESCENDING vec_id, so a heap that broke ties
+    // by arrival instead of vec_id asc would keep the wrong ones
+    val ties = (0L until 3L).flatMap(q => (199L to 0L by -1).map(v =>
+        (q, v, v % 13, ((v * 7919 + q) % 5).toDouble)))
+      .toDF("query_id", "vec_id", "qdot", "cos_q").repartition(4)
+    assert(Similarity.heapTopK[(Long, Long, Long, Double)](ties, 10, "cos_q")
+      .collect().toSet === Similarity.topK(ties, "cos_q", 10).collect().toSet)
+  }
+
   test("nearest_centroid expression equals the crossJoin+max_by argmax form") {
     val d = "/root/testdata/sf0.001"
     val e = Tables.embeddings(spark, d)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 /** Watermark / late-data semantics (SURVEY.md §2h stream_late_data):
   * append-mode windowed agg emits a window only once its watermark
@@ -19,6 +20,28 @@ class StreamingSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.session
 
   private def ts(s: String) = Timestamp.valueOf(s)
+
+  test("sub-batch stream harness: sub-batches 0, 1, 2 once each in order, own rows only, staging deleted") {
+    import spark.implicits._
+    val rows = (0L until 30L).map(i => (i, (i % 3).toInt)).toDF("id", "sub_batch")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Seq[Int], Seq[String])]()
+    graft.streaming.SubBatchState.streamSubBatches(spark, rows) { (k, frame) =>
+      val rows = frame.select(col("sub_batch"), input_file_name()).as[(Int, String)]
+        .collect().toSeq
+      seen.add((k, rows.map(_._1), rows.map(_._2).distinct))
+      ()
+    }
+    val calls = seen.asScala.toSeq
+    assert(calls.map(_._1) === Seq(0, 1, 2))
+    calls.foreach { case (k, subs, files) =>
+      assert(subs.length === 10 && subs.forall(_ == k), s"sub-batch $k read $subs")
+      assert(files.length === 1, s"sub-batch $k read $files")
+    }
+    val staging = calls.flatMap(_._3)
+      .map(f => java.nio.file.Paths.get(new java.net.URI(f)).getParent).distinct
+    assert(staging.length === 1)
+    assert(!Files.exists(staging.head), s"staging dir ${staging.head} left behind")
+  }
 
   test("osm-replication V2 source: sequence offsets checkpoint; restart reads only new diffs") {
     import spark.implicits._
