@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.operators.Similarity
+import graft.operators.{LayoutRegistry, Similarity}
 import graft.streaming.PartitionedTable
 
 /** ANN index-build soak, one decade past the gate tiers (r12 VERDICT
@@ -118,7 +118,7 @@ object AnnBuildSoak {
       }
 
       // ---- bulk build into the cell-bucketed serve layout ----------
-      val nb = Similarity.derivedBuckets(spark, nBase, "spark.graft.ann.buckets")
+      val nb = LayoutRegistry.derivedBuckets(spark, nBase)
       val pt = new PartitionedTable(work.resolve("idx"), "cell", nb)
       val (_, buildS) = timed {
         pt.appendInto(spark, indexRows(base), Some("annsoak" -> 0L))

@@ -42,7 +42,7 @@ object MaintainProbe {
     // the standing corpus for the O(bucket) touched-rewrite bound
     spark.conf.set("spark.graft.bucket.targetRows", (1 << 16).toString)
     spark.sparkContext.setLogLevel("ERROR")
-    import graft.operators.{Retrieval, Similarity}
+    import graft.operators.{LayoutRegistry, Retrieval, Similarity}
 
     def fixedBatch(df: DataFrame, key: String): DataFrame = {
       val b = df.filter(Retrieval.isArrival(col(key)))
@@ -86,8 +86,7 @@ object MaintainProbe {
         def rowsOf(df: DataFrame): DataFrame =
           Similarity.int8Rows(df, graft.functions.ImiCell2.cell(_, supers, groups))
         val baseV = rowsOf(e.filter(!Retrieval.isArrival(col("vec_id"))))
-        val nbV = Similarity.derivedBuckets(spark, baseV.count(),
-          "spark.graft.ann.maintain.buckets")
+        val nbV = LayoutRegistry.derivedBuckets(spark, baseV.count())
         val pt = new graft.streaming.PartitionedTable(
           wd.resolve("ann"), "cell", nbV)
         pt.appendInto(spark, baseV, Some("p" -> 0L))

@@ -11,14 +11,10 @@ import org.apache.spark.sql.SparkSession
   */
 object Cleanup {
   def dropAll(s: SparkSession): Unit = {
-    Similarity.dropIndexTables(s) // persisted bucketBy(cell) ANN index + temp dirs
+    LayoutRegistry.drop(s)        // every persisted layout: catalog tables + temp dirs
     Similarity.dropCentroidCaches(s) // memoized refined centroids + two-level IMI
-    Dedup.dropBandTables(s)       // persisted bucketBy(band_key) LSH layout + temp dirs
-    Dedup.dropGramTables(s)       // persisted bucketBy(g) substring gram index + temp dirs
-    Retrieval.dropPostingsTables(s) // persisted bucketBy(g) BM25 postings index + temp dirs
     Spatial.dropStatsCache(s)     // memoized two-sided box stats
     TextAnalysis.dropModelCaches(s) // memoized vocab gate + surprisal bits map
-    Layout.dropLayouts(s)         // persisted z-ordered events copies
   }
 
   /** Number of live memo entries held for this session across every
@@ -31,10 +27,8 @@ object Cleanup {
       m.forEach((k, _) => if (k.productElement(0).asInstanceOf[AnyRef] eq s) n += 1)
       n
     }
-    c(Similarity.indexTables) + c(Similarity.centroidCache) + c(Similarity.twoLevelCache) +
-      c(Similarity.pqCbCache) +
-      c(Dedup.bandTables) + c(Dedup.gramTables) + c(Retrieval.postingsTables) +
-      c(Layout.layoutDirs) +
+    c(LayoutRegistry.entries) +
+      c(Similarity.centroidCache) + c(Similarity.twoLevelCache) + c(Similarity.pqCbCache) +
       c(Spatial.statsCache) + c(TextAnalysis.vocabCache) + c(TextAnalysis.bitsCache)
   }
 }

@@ -176,23 +176,39 @@ object Dedup {
     g.join(dup, Seq("g"), "left_semi")
   }
 
+  /** Every token position under a K-run starting at a hit `p`, as
+    * (doc_id, `as`) — the union of [p, p+K) intervals, exploded. */
+  private def coveredPositions(hits: DataFrame, as: String): DataFrame =
+    hits.select(col("doc_id"), explode(sequence(col("p"), col("p") + (SubstrK - 1))).as(as))
+
+  /** Per-document covered-token count: distinct exploded positions
+    * (group size bounded by document length, never by corpus
+    * hotness). */
+  private def dupTokens(hits: DataFrame): DataFrame =
+    coveredPositions(hits, "cp")
+      .groupBy(col("doc_id")).agg(countDistinct(col("cp")).as("dup_tokens"))
+
+  /** 2 × covered tokens, 0 for a document no hit reached. */
+  private val dupTwice: Column = coalesce(col("dup_tokens"), lit(0L)) * 2
+  private val dupTokensOut: Column =
+    coalesce(col("dup_tokens"), lit(0L)).cast(IntegerType).as("dup_tokens")
+
+  /** The substring family's per-document tail: every document in
+    * `docs` (a left join, so one `stats` has no row for still comes
+    * back) with its token count and the `out` columns over both. */
+  private def perDocTokens(docs: DataFrame, stats: DataFrame, out: Column*): DataFrame =
+    docs.select(col("doc_id"), size(split(col("text"), " ")).as("n_tokens"))
+      .join(stats, Seq("doc_id"), "left")
+      .select(col("doc_id") +: col("n_tokens") +: out: _*)
+
   /** Substring-level (span) dedup STATS — per document, how many of
-    * its tokens sit under some duplicated K-run. Coverage is the
-    * union of [p, p+K) intervals, counted as distinct exploded
-    * positions (group size bounded by document length, never by
-    * corpus hotness). drop_flag marks majority-duplicated documents —
-    * the ExactSubstr removal decision as a verdict column. */
+    * its tokens sit under some duplicated K-run. drop_flag marks
+    * majority-duplicated documents — the ExactSubstr removal decision
+    * as a verdict column. */
   def dedupSubstring(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
-    val cov = dupGramHits(docs)
-      .select(col("doc_id"), explode(sequence(col("p"), col("p") + (SubstrK - 1))).as("cp"))
-      .groupBy(col("doc_id")).agg(countDistinct(col("cp")).as("dup_tokens"))
-    docs.select(col("doc_id"), size(split(col("text"), " ")).as("n_tokens"))
-      .join(cov, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_tokens"),
-        coalesce(col("dup_tokens"), lit(0L)).cast(IntegerType).as("dup_tokens"),
-        when(coalesce(col("dup_tokens"), lit(0L)) * 2 >= col("n_tokens"), 1)
-          .otherwise(0).as("drop_flag"))
+    perDocTokens(docs, dupTokens(dupGramHits(docs)), dupTokensOut,
+      when(dupTwice >= col("n_tokens"), 1).otherwise(0).as("drop_flag"))
   }
 
   /** Substring-level dedup REMOVAL — the cleaned corpus: every token
@@ -203,9 +219,7 @@ object Dedup {
     * identical shape to dedupLines, bounded by document length. */
   def dedupSubstringClean(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
-    val covered = dupGramHits(docs)
-      .select(col("doc_id"), explode(sequence(col("p"), col("p") + (SubstrK - 1))).as("p"))
-      .distinct()
+    val covered = coveredPositions(dupGramHits(docs), "p").distinct()
     val toks = graft.Tables.spread(docs)
       .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("p", "tok")))
     val kept = toks.join(covered, Seq("doc_id", "p"), "left_anti")
@@ -214,11 +228,8 @@ object Dedup {
         array_join(transform(
           sort_array(collect_list(struct(col("p"), col("tok")))),
           x => x.getField("tok")), " ").as("txt"))
-    docs.select(col("doc_id"), size(split(col("text"), " ")).as("n_tokens"))
-      .join(kept, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_tokens"),
-        coalesce(col("kept_tokens"), lit(0)).as("kept_tokens"),
-        coalesce(col("txt"), lit("")).as("clean_text"))
+    perDocTokens(docs, kept, coalesce(col("kept_tokens"), lit(0)).as("kept_tokens"),
+      coalesce(col("txt"), lit("")).as("clean_text"))
   }
 
   /** Positional K-grams tagged with the deterministic batch/corpus
@@ -229,22 +240,17 @@ object Dedup {
       .select(col("doc_id"), col("is_batch"),
         posexplode(posGramArr(SubstrK)).as(Seq("p", "g")))
 
-  /** Shared admission back half: batch positions flagged against a
-    * corpus gram set (left-semi on the 64-bit gram key), coverage per
-    * batch document, verdict row for every batch doc (no-hit docs
-    * admit with zero coverage). */
-  private def substrAdmission(docs: DataFrame, batchGrams: DataFrame,
-      corpusGrams: DataFrame): DataFrame = {
-    val cov = batchGrams.join(corpusGrams, Seq("g"), "left_semi")
-      .select(col("doc_id"), explode(sequence(col("p"), col("p") + (SubstrK - 1))).as("cp"))
-      .groupBy(col("doc_id")).agg(countDistinct(col("cp")).as("dup_tokens"))
-    docs.filter(isBatchDoc(col("doc_id")))
-      .select(col("doc_id"), size(split(col("text"), " ")).as("n_tokens"))
-      .join(cov, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_tokens"),
-        coalesce(col("dup_tokens"), lit(0L)).cast(IntegerType).as("dup_tokens"),
-        (coalesce(col("dup_tokens"), lit(0L)) * 2 < col("n_tokens")).as("admit"))
-  }
+  /** Batch positions whose gram the corpus holds: a left-semi on the
+    * 64-bit gram key against the corpus gram set. */
+  private def batchHits(tagged: DataFrame, corpusGrams: DataFrame): DataFrame =
+    tagged.filter(col("is_batch")).join(corpusGrams, Seq("g"), "left_semi")
+
+  /** Shared admission back half: coverage per batch document from its
+    * hits, verdict row for every batch doc (no-hit docs admit with
+    * zero coverage). */
+  private def substrAdmission(docs: DataFrame, hits: DataFrame): DataFrame =
+    perDocTokens(docs.filter(isBatchDoc(col("doc_id"))), dupTokens(hits), dupTokensOut,
+      (dupTwice < col("n_tokens")).as("admit"))
 
   /** Substring-level batch-vs-corpus ADMISSION — the ingest-path form
     * of `dedupSubstring`: the corpus is the admitted reference, so a
@@ -253,52 +259,24 @@ object Dedup {
     * count ≥ 2). Grams never meet batch×batch or corpus×corpus; the
     * verdict mirrors `dedup_incremental`'s shape (n_tokens coverage +
     * admit = less than half covered). */
-  def dedupSubstringIncremental(s: SparkSession, d: String): DataFrame = {
+  def dedupSubstringIncremental(s: SparkSession, d: String): DataFrame = eager { cache =>
     val docs = documents(s, d)
-    val g = substrPosGramsTagged(docs).cache()
-    try {
-      val corpusGrams = g.filter(!col("is_batch")).select(col("g")).distinct()
-      substrAdmission(docs, g.filter(col("is_batch")), corpusGrams)
-        .localCheckpoint(true)
-    } finally g.unpersist()
+    val g = cache(substrPosGramsTagged(docs))
+    substrAdmission(docs, batchHits(g, g.filter(!col("is_batch")).select(col("g")).distinct()))
   }
 
   /** Memoized corpus gram index: the distinct corpus-side K-gram
     * hashes written once as a bucketBy(g) table — what the corpus
     * snapshot ETL would maintain so daily admission never re-shuffles
     * the corpus. Bucket count derived from the gram row count. */
-  private[graft] val gramTables =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, java.nio.file.Path)]()
-
   private[graft] def bucketedGramTable(s: SparkSession, d: String): DataFrame = {
-    val (gt, _) = gramTables.computeIfAbsent((s, d), _ => {
-      val wh = java.nio.file.Files.createTempDirectory("graft_substrbkt")
-      val name = "substr_grams_" + wh.getFileName.toString.replaceAll("[^a-zA-Z0-9]", "_")
+    val idx = LayoutRegistry.getOrBuild(s, "substrbkt", d) { wh =>
       val grams = substrPosGramsTagged(documents(s, d))
         .filter(!col("is_batch")).select(col("g")).distinct()
-      val nb = Similarity.derivedBuckets(s, grams.count(), "spark.graft.substr.buckets")
-      grams.write.mode("overwrite").bucketBy(nb, "g").sortBy("g")
-        .option("path", wh.resolve("grams").toString).saveAsTable(name)
-      (name, wh)
-    })
-    s.table(gt)
-  }
-
-  /** Drop this session's memoized gram index tables + files. */
-  def dropGramTables(s: SparkSession): Unit = {
-    val it = gramTables.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        val (gt, wh) = e.getValue
-        s.sql(s"DROP TABLE IF EXISTS $gt")
-        val files = java.nio.file.Files.walk(wh)
-        try files.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally files.close()
-        it.remove()
-      }
+      val nb = LayoutRegistry.derivedBuckets(s, grams.count())
+      Seq(LayoutRegistry.saveBucketed(grams, nb, "g", wh, "grams", "substr_grams"))
     }
+    s.table(idx.tables.head)
   }
 
   /** The serve form: corpus grams come from the persisted bucketBy(g)
@@ -308,17 +286,33 @@ object Dedup {
     * `dedup_substring_incremental`: the index is a layout choice. */
   def dedupSubstringBucketed(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
-    val g = substrPosGramsTagged(docs)
-    substrAdmission(docs, g.filter(col("is_batch")), bucketedGramTable(s, d))
+    substrAdmission(docs, batchHits(substrPosGramsTagged(docs), bucketedGramTable(s, d)))
       .localCheckpoint(true)
   }
 
   /** Lazy-plan variant for PlanAudit: the admission semi-join against
     * the bucketed gram index without the eager verdict. */
   private[graft] def dedupSubstringBucketedPlan(s: SparkSession, d: String): DataFrame =
-    substrPosGramsTagged(documents(s, d)).filter(col("is_batch"))
-      .join(bucketedGramTable(s, d), Seq("g"), "left_semi")
+    batchHits(substrPosGramsTagged(documents(s, d)), bucketedGramTable(s, d))
       .select(col("doc_id"), col("p"))
+
+  /** `body` with every DataFrame it passes to `cache` cached for the
+    * call only: the caches are released in a finally (the error path
+    * too), last-taken first. */
+  private def cached[T](body: (DataFrame => DataFrame) => T): T = {
+    val held = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    try body { df => held += df.cache(); df }
+    finally held.reverseIterator.foreach(_.unpersist())
+  }
+
+  /** The eager forms' one materialization step: the plan `body` builds
+    * over its invocation-scoped caches (typically the signature base —
+    * without it projection collapse inlines the signature kernel into
+    * both join sides) is materialized with `localCheckpoint` before
+    * the caches are released, so nothing leaks for the session's
+    * lifetime. The lazy `*Plan` twins are the same plans uncached. */
+  private def eager(body: (DataFrame => DataFrame) => DataFrame): DataFrame =
+    cached(cache => body(cache).localCheckpoint(true))
 
   /** MinHash(16) + LSH(4 bands × 4 rows) near-dup candidate pairs,
     * verified by exact shingle Jaccard ≥ 0.5. */
@@ -331,17 +325,23 @@ object Dedup {
       .withColumn("sig", graft.functions.MinHashSig.minhashSig(col("shs"), 16))
       .withColumn("bands", bandKeys(col("sig"), 4, 4))
 
-  private def minhashPairs(base: DataFrame): DataFrame = {
-    val bands = base.select(col("doc_id"),
-      posexplode(col("bands")).as(Seq("band_id", "band_key")))
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.band_id") === col("b.band_id") &&
-        col("a.band_key") === col("b.band_key") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .dropDuplicates("doc_a", "doc_b")
-    verifyPairs(cand, base)
-  }
+  /** (band_id, band_key) rows of every doc's band list. */
+  private def explodedBands(base: DataFrame): DataFrame =
+    base.select(col("doc_id"), posexplode(col("bands")).as(Seq("band_id", "band_key")))
+
+  /** The blocking self-join every candidate generator shares: rows
+    * equal on all of `keys` meet, each unordered pair once (a.id <
+    * b.id), projected to (doc_a, doc_b). Equi-join shaped, so pair
+    * work is O(bucket²) per key, never O(n²). */
+  private[graft] def blockPairs(df: DataFrame, keys: Seq[String], id: String): DataFrame =
+    df.as("a").join(df.as("b"),
+        keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+        col(s"a.$id") < col(s"b.$id"))
+      .select(col(s"a.$id").as("doc_a"), col(s"b.$id").as("doc_b"))
+
+  private def minhashPairs(base: DataFrame): DataFrame =
+    verifyPairs(blockPairs(explodedBands(base), Seq("band_id", "band_key"), "doc_id")
+      .dropDuplicates("doc_a", "doc_b"), base)
 
   /** Shared exact-Jaccard verification tail: fetch both shingle sets
     * per candidate pair, keep J >= 0.5 (integer cross-multiply). */
@@ -359,18 +359,11 @@ object Dedup {
   def dedupMinhashLsh(s: SparkSession, d: String): DataFrame =
     dedupMinhashLshOn(documents(s, d))
 
-  /** The LSH pair operator over an already-staged corpus.
-    * Materializes the signature table before the self-join: without
-    * this, projection collapse inlines the shingle construction into
-    * both join sides. At cluster scale this table is persisted/
-    * bucketed by band key; cache() is the local analog — scoped to
-    * this invocation: the result is materialized eagerly
-    * (localCheckpoint) so the signature cache is released on return
-    * instead of leaking for the session's lifetime. */
-  def dedupMinhashLshOn(docs: DataFrame): DataFrame = {
-    val base = minhashBaseOf(docs).cache()
-    try minhashPairs(base).localCheckpoint(true) finally base.unpersist()
-  }
+  /** The LSH pair operator over an already-staged corpus, with the
+    * signature table cached for the call (at cluster scale this table
+    * is persisted/bucketed by band key — `dedupMinhashLshBucketed`). */
+  def dedupMinhashLshOn(docs: DataFrame): DataFrame =
+    eager(cache => minhashPairs(cache(minhashBaseOf(docs))))
 
   /** The lazy plan inside dedupMinhashLsh's eager materialization
     * (minus the signature cache) — what PlanAudit asserts the native
@@ -393,10 +386,11 @@ object Dedup {
   }
 
   /** Gate-scale hot-band cap: LOW so the sf0.01 corpus (bucket sizes
-    * 1–3) exercises BOTH branches under the oracle; production sets
-    * `spark.graft.lsh.hotBandCap` to ~1000 (pairs-per-bucket work cap
-    * of ~500k). The oracle mirrors whatever value the query ran with,
-    * so the gate stays value-exact at any setting. */
+    * 1–3) exercises BOTH branches under the oracle. No conf key reads
+    * a cap: a production corpus passes its own (~1000, a
+    * pairs-per-bucket work cap of ~500k) to `dedupMinhashLshCappedOn`.
+    * The oracle interpolates this constant, so the gate stays
+    * value-exact. */
   val HotBandCap = 2
 
   /** Hot-band-capped LSH candidate generation — the all-pairs band
@@ -425,8 +419,7 @@ object Dedup {
     * template's copy count instead of quadratic (spec: 200 identical
     * docs → 199 star pairs vs 19,900 uncapped). */
   private[graft] def cappedPairs(base: DataFrame, cap: Int): DataFrame = {
-    val bands = base.select(col("doc_id"),
-      posexplode(col("bands")).as(Seq("band_id", "band_key")))
+    val bands = explodedBands(base)
     val hot = bands.groupBy(col("band_id"), col("band_key"))
       .agg(count(lit(1)).as("bn"), min(col("doc_id")).as("rep"))
       .filter(col("bn") > cap)
@@ -434,11 +427,7 @@ object Dedup {
       col("band_key"), col("rep"))), Seq("band_id", "band_key"), "left")
     val cold = flagged.filter(col("rep").isNull)
       .select(col("doc_id"), col("band_id"), col("band_key"))
-    val coldPairs = cold.as("a").join(cold.as("b"),
-        col("a.band_id") === col("b.band_id") &&
-        col("a.band_key") === col("b.band_key") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+    val coldPairs = blockPairs(cold, Seq("band_id", "band_key"), "doc_id")
     // rep = bucket min, so doc_a < doc_b holds by construction
     val hotPairs = flagged
       .filter(col("rep").isNotNull && col("doc_id") =!= col("rep"))
@@ -447,21 +436,16 @@ object Dedup {
       coldPairs.union(hotPairs).dropDuplicates("doc_a", "doc_b"), base)
   }
 
-  def dedupMinhashLshCapped(s: SparkSession, d: String): DataFrame = {
-    val base = minhashBase(s, d).cache()
-    try cappedPairs(base, HotBandCap).localCheckpoint(true)
-    finally base.unpersist()
-  }
+  def dedupMinhashLshCapped(s: SparkSession, d: String): DataFrame =
+    dedupMinhashLshCappedOn(documents(s, d), HotBandCap)
 
   /** Lazy-plan variant for PlanAudit (broadcast hot-list assert). */
   private[graft] def dedupMinhashLshCappedPlan(s: SparkSession, d: String): DataFrame =
     cappedPairs(minhashBase(s, d), HotBandCap)
 
-  /** Spec entry point: capped pairs over an arbitrary corpus/cap. */
-  private[graft] def dedupMinhashLshCappedOn(docs: DataFrame, cap: Int): DataFrame = {
-    val base = minhashBaseOf(docs).cache()
-    try cappedPairs(base, cap).localCheckpoint(true) finally base.unpersist()
-  }
+  /** Capped pairs over an arbitrary corpus/cap. */
+  private[graft] def dedupMinhashLshCappedOn(docs: DataFrame, cap: Int): DataFrame =
+    eager(cache => cappedPairs(cache(minhashBaseOf(docs)), cap))
 
   /** The 100 TB layout of the same operator: the exploded band table
     * persisted `bucketBy(band_key)` with band_id FOLDED into the key
@@ -472,93 +456,42 @@ object Dedup {
     * incremental form) can align to the same layout with one shuffle.
     * Same result and oracle as dedup_minhash_lsh: bucketing is a
     * layout choice, not a semantic one. */
-  def dedupMinhashLshBucketed(s: SparkSession, d: String): DataFrame = {
-    val base = minhashBase(s, d).cache()
-    try {
-      val bands = bucketedBandTable(s, d, base)
-      val cand = bands.as("a").join(bands.as("b"),
-          col("a.band_key") === col("b.band_key") && // band_id folded in
-          col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .dropDuplicates("doc_a", "doc_b")
-      val sets = base.select(col("doc_id"), col("shs"))
-      cand
-        .join(sets.as("x"), col("doc_a") === col("x.doc_id"))
-        .join(sets.as("y"), col("doc_b") === col("y.doc_id"))
-        .select(col("doc_a"), col("doc_b"),
-          size(array_intersect(col("x.shs"), col("y.shs"))).as("inter"),
-          size(array_distinct(concat(col("x.shs"), col("y.shs")))).as("uni"))
-        .filter(col("inter") * 2 >= col("uni"))
-        .localCheckpoint(true)
-    } finally base.unpersist()
-  }
+  def dedupMinhashLshBucketed(s: SparkSession, d: String): DataFrame =
+    eager { cache =>
+      val base = cache(minhashBase(s, d))
+      verifyPairs(bucketedCandidates(s, d, base), base)
+    }
 
-  // One persisted band table per (session, dataset dir): the write is
-  // once-per-corpus ETL, so repeat invocations in the same session
-  // (the gate runs the operator, then PlanAudit re-plans it twice
-  // under conf scopes) must REUSE the layout, not rebuild and leak a
-  // new temp dir + catalog table each time (ADVICE r4).
-  private[graft] val bandTables =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, java.nio.file.Path)]()
+  /** The candidate self-join over the persisted band table (band_id
+    * folded into the single key). */
+  private def bucketedCandidates(s: SparkSession, d: String, base: DataFrame): DataFrame =
+    blockPairs(bucketedBandTable(s, d, base), Seq("band_key"), "doc_id")
+      .dropDuplicates("doc_a", "doc_b")
 
   /** Return the persisted band table for `d`, building it on first use
-    * in this session (temp-dir-unique name, `bucketBy(band_key)`). */
+    * in this session (once-per-corpus ETL, kept in LayoutRegistry). */
   private[graft] def bucketedBandTable(s: SparkSession, d: String,
       base: DataFrame): DataFrame = {
-    val (bt, _) = bandTables.computeIfAbsent((s, d), _ => {
-      val wh = java.nio.file.Files.createTempDirectory("graft_lshbkt")
-      val name = "lsh_bands_" + wh.getFileName.toString.replaceAll("[^a-zA-Z0-9]", "_")
+    val idx = LayoutRegistry.getOrBuild(s, "lshbkt", d) { wh =>
       // band_id is FOLDED into the stored key (single-key layout): a
       // one-key equi-join lets a NON-bucketed side align to the
       // bucketing (the incremental batch join); a (band_id, band_key)
       // two-key join over a band_key-bucketed table makes the planner
       // shuffle BOTH sides — co-partition checks need the partitioning
       // to cover every join key
-      val bands = base.select(col("doc_id"),
-        posexplode(col("bands")).as(Seq("band_id", "bk")))
-        .select(col("doc_id"),
-          concat(col("band_id").cast("string"), lit(":"), col("bk")).as("band_key"))
+      val bands = foldedBands(base)
       // bucket count derived from the exploded row count (4 bands/doc),
-      // not a demo constant — see Similarity.derivedBuckets
-      val nb = Similarity.derivedBuckets(s, bands.count(), "spark.graft.bands.buckets")
-      bands
-        .write.mode("overwrite")
-        .bucketBy(nb, "band_key").sortBy("band_key")
-        .option("path", wh.resolve("bands").toString).saveAsTable(name)
-      (name, wh)
-    })
-    s.table(bt)
-  }
-
-  /** Drop this session's memoized band tables and delete their files
-    * (Bench/Verify call this when their run is over). */
-  def dropBandTables(s: SparkSession): Unit = {
-    val it = bandTables.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        val (bt, wh) = e.getValue
-        s.sql(s"DROP TABLE IF EXISTS $bt")
-        val files = java.nio.file.Files.walk(wh)
-        try files.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally files.close()
-        it.remove()
-      }
+      // not a demo constant — see LayoutRegistry.derivedBuckets
+      val nb = LayoutRegistry.derivedBuckets(s, bands.count())
+      Seq(LayoutRegistry.saveBucketed(bands, nb, "band_key", wh, "bands", "lsh_bands"))
     }
+    s.table(idx.tables.head)
   }
 
   /** Lazy-plan variant for PlanAudit: builds the bucketed table, then
     * returns the un-checkpointed candidate join over it. */
-  private[graft] def dedupMinhashLshBucketedPlan(s: SparkSession, d: String): DataFrame = {
-    val base = minhashBase(s, d)
-    val bands = bucketedBandTable(s, d, base)
-    bands.as("a").join(bands.as("b"),
-        col("a.band_key") === col("b.band_key") && // band_id folded in
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .dropDuplicates("doc_a", "doc_b")
-  }
+  private[graft] def dedupMinhashLshBucketedPlan(s: SparkSession, d: String): DataFrame =
+    bucketedCandidates(s, d, minhashBase(s, d))
 
   /** SimHash near-dup pairs: 32-bit signatures, Hamming ≤ 6 within a
     * `source` block. Candidate generation is multi-index banding
@@ -587,12 +520,7 @@ object Dedup {
     }: _*)
     val chunks = sigs.select(col("doc_id"), col("source"),
       posexplode(chunkArr).as(Seq("chunk_id", "chunk_val")))
-    val cand = chunks.as("a").join(chunks.as("b"),
-        col("a.source") === col("b.source") &&
-        col("a.chunk_id") === col("b.chunk_id") &&
-        col("a.chunk_val") === col("b.chunk_val") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+    val cand = blockPairs(chunks, Seq("source", "chunk_id", "chunk_val"), "doc_id")
       .dropDuplicates("doc_a", "doc_b")
     cand
       .join(sigs.select(col("doc_id").as("doc_a"), col("sim").as("sim_a")), "doc_a")
@@ -602,10 +530,8 @@ object Dedup {
       .filter(col("hamming") <= 6)
   }
 
-  def dedupSimhash(s: SparkSession, d: String): DataFrame = {
-    val sigs = simhashSigs(s, d).cache() // invocation-scoped, like dedupMinhashLsh
-    try simhashPairs(sigs).localCheckpoint(true) finally sigs.unpersist()
-  }
+  def dedupSimhash(s: SparkSession, d: String): DataFrame =
+    eager(cache => simhashPairs(cache(simhashSigs(s, d))))
 
   /** The lazy plan that executes inside dedupSimhash's eager
     * materialization (minus the signature cache) — what PlanAudit
@@ -668,11 +594,10 @@ object Dedup {
     * bounding every join key's bucket, and every step is a plain hash
     * shuffle/aggregate that scales horizontally (38 s → ~3 s at sf0.1
     * vs the pairwise array_intersect form). */
-  def dedupNgramJaccard(s: SparkSession, d: String): DataFrame = {
-    val grams = graft.Tables.spread(documents(s, d))
+  def dedupNgramJaccard(s: SparkSession, d: String): DataFrame = eager { cache =>
+    val grams = cache(graft.Tables.spread(documents(s, d))
       .select(col("doc_id"), col("source"),
-        explode(graft.functions.WordShingles.shingles(col("text"), 2)).as("g"))
-      .cache() // invocation-scoped, like dedupMinhashLsh
+        explode(graft.functions.WordShingles.shingles(col("text"), 2)).as("g")))
     val dfs = grams.groupBy(col("source"), col("g"))
       .agg(count(lit(1)).as("df"))
     val cap = deriveGramDfCap(dfs)
@@ -680,23 +605,31 @@ object Dedup {
       s"[graft] dedup_ngram_jaccard: derived df cap = $cap (budget ${GramJoinWorkBudget}x)")
     // hot-gram set is tiny -> the anti-join auto-broadcasts
     val hot = dfs.filter(col("df") > cap).select(col("source"), col("g"))
-    val rare = grams.join(hot, Seq("source", "g"), "left_anti").cache()
-    try {
-      val sizes = rare.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val inter = rare.as("a").join(rare.as("b"),
-          col("a.source") === col("b.source") && col("a.g") === col("b.g") &&
-          col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .agg(count(lit(1)).as("inter"))
-      inter
-        .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"), "doc_b")
-        .select(col("doc_a"), col("doc_b"), col("inter").cast(IntegerType).as("inter"),
-          (col("na") + col("nb") - col("inter")).cast(IntegerType).as("uni"))
-        .filter(col("inter") * 2 >= col("uni"))
-        .localCheckpoint(true)
-    } finally { rare.unpersist(); grams.unpersist() }
+    val rare = cache(grams.join(hot, Seq("source", "g"), "left_anti"))
+    val sizes = rare.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    val inter = rare.as("a").join(rare.as("b"),
+        col("a.source") === col("b.source") && col("a.g") === col("b.g") &&
+        col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .agg(count(lit(1)).as("inter"))
+    inter
+      .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"), "doc_a")
+      .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"), "doc_b")
+      .select(col("doc_a"), col("doc_b"), col("inter").cast(IntegerType).as("inter"),
+        (col("na") + col("nb") - col("inter")).cast(IntegerType).as("uni"))
+      .filter(col("inter") * 2 >= col("uni"))
   }
+
+  /** Every vector with its (label, IMI cell) cluster — the embedding
+    * family's blocking key. */
+  private def imiCells(s: SparkSession, d: String): DataFrame =
+    embeddings(s, d).select(col("vec_id"), col("label"), col("embedding"),
+      Similarity.imiCellOf(s, d)(col("embedding")).as("cell"))
+
+  /** Co-cluster pairs of `imiCells` rows a/b, each unordered pair once. */
+  private val sameCell: Column =
+    col("a.label") === col("b.label") && col("a.cell") === col("b.cell") &&
+      col("a.vec_id") < col("b.vec_id")
 
   /** Embedding near-dup, cluster-then-verify (the SemDeDup shape —
     * Abbas et al., "SemDeDup: Data-efficient learning at web-scale
@@ -722,12 +655,8 @@ object Dedup {
     * exhaustive pair set. Dot products are explicit left-to-right
     * double folds for cross-engine determinism. */
   def dedupEmbedCosine(s: SparkSession, d: String): DataFrame = {
-    val e = embeddings(s, d)
-    val cells = e.select(col("vec_id"), col("label"), col("embedding"),
-      Similarity.imiCellOf(s, d)(col("embedding")).as("cell"))
-    cells.as("a").join(cells.as("b"),
-        col("a.label") === col("b.label") && col("a.cell") === col("b.cell") &&
-        col("a.vec_id") < col("b.vec_id"))
+    val cells = imiCells(s, d)
+    cells.as("a").join(cells.as("b"), sameCell)
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
         col("a.label").as("label"),
         Similarity.dot(col("a.embedding"), col("b.embedding")).as("cos"))
@@ -752,13 +681,9 @@ object Dedup {
     * TargetCellSize); the keep set falls out of one left_anti on
     * vec_id. No driver state beyond the memoized centroids. */
   def dedupSemantic(s: SparkSession, d: String): DataFrame = {
-    val e = embeddings(s, d)
-    val cells = e.select(col("vec_id"), col("label"), col("embedding"),
-      Similarity.imiCellOf(s, d)(col("embedding")).as("cell"))
+    val cells = imiCells(s, d)
     val pruned = cells.as("a").join(cells.as("b"),
-        col("a.label") === col("b.label") && col("a.cell") === col("b.cell") &&
-        col("a.vec_id") < col("b.vec_id") &&
-        Similarity.dot(col("a.embedding"), col("b.embedding")) >= 0.35)
+        sameCell && Similarity.dot(col("a.embedding"), col("b.embedding")) >= 0.35)
       .select(col("b.vec_id").as("vec_id")).distinct()
     cells.join(pruned, Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("label"))
@@ -787,11 +712,10 @@ object Dedup {
     * round — graft.ComponentsProbe uses it to measure the
     * rounds-to-converge × per-round-cost curve per tier. */
   def dedupComponentsOf(pairsIn: DataFrame,
-      onRound: (Int, Long, Double) => Unit = (_, _, _) => ()): DataFrame = {
-    val pairs = pairsIn.select(col("doc_a"), col("doc_b")).cache()
-    val sym = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionAll(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .cache()
+      onRound: (Int, Long, Double) => Unit = (_, _, _) => ()): DataFrame = cached { cache =>
+    val pairs = cache(pairsIn.select(col("doc_a"), col("doc_b")))
+    val sym = cache(pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .unionAll(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
     // Initialization FUSED with propagation round 1 (r18, guide §1.2
     // "remove passes"): starting labels are min(v, min neighbor) — the
     // exact state the old comp=v seeding reached after its first
@@ -820,10 +744,8 @@ object Dedup {
       round += 1
       onRound(round, changed, (System.nanoTime() - t0) / 1e9)
     }
-    // the loop ran eagerly and labels is checkpointed — release the
-    // working caches instead of holding them for the session's lifetime
-    sym.unpersist()
-    pairs.unpersist()
+    // the loop ran eagerly and labels is checkpointed, so the working
+    // caches are released on return instead of held for the session
     labels.select(col("v").as("doc_id"), col("comp").as("component"))
   }
 
@@ -852,6 +774,14 @@ object Dedup {
   private def isBatchDoc(id: Column): Column =
     substring(md5(id.cast("string")), 1, 2) < "20"
 
+  /** Explode + fold the band list to the single-key form the persisted
+    * index stores: band_key = "<band_id>:<key>". */
+  private def foldedBands(withBands: DataFrame): DataFrame =
+    withBands.select(col("doc_id"),
+        posexplode(col("bands")).as(Seq("band_id", "bk")))
+      .select(col("doc_id"),
+        concat(col("band_id").cast("string"), lit(":"), col("bk")).as("band_key"))
+
   /** Incremental near-dup admission — the actual 100 TB ingest path.
     * Full-corpus dedup is a once-per-snapshot job; what runs daily is
     * "does this new batch duplicate anything already admitted?". For
@@ -866,25 +796,14 @@ object Dedup {
     * bucketed index (see `dedupIncrementalBucketed`), so the candidate
     * join shuffles only the batch. Verification fetches corpus shingle
     * sets only for candidate ids (semi-join–shaped), not the corpus. */
-  /** Explode + fold the band list to the single-key form the persisted
-    * index stores: band_key = "<band_id>:<key>". */
-  private def foldedBands(withBands: DataFrame): DataFrame =
-    withBands.select(col("doc_id"),
-        posexplode(col("bands")).as(Seq("band_id", "bk")))
-      .select(col("doc_id"),
-        concat(col("band_id").cast("string"), lit(":"), col("bk")).as("band_key"))
-
-  def dedupIncremental(s: SparkSession, d: String): DataFrame = {
-    val base = minhashBaseOf(documents(s, d))
-      .withColumn("is_batch", isBatchDoc(col("doc_id"))).cache()
-    try {
-      incrementalVerdict(
-        base.filter(col("is_batch")).select(col("doc_id"), col("shs")),
-        foldedBands(base.filter(col("is_batch"))),
-        foldedBands(base.filter(!col("is_batch"))),
-        base.filter(!col("is_batch")).select(col("doc_id"), col("shs")))
-        .localCheckpoint(true)
-    } finally base.unpersist()
+  def dedupIncremental(s: SparkSession, d: String): DataFrame = eager { cache =>
+    val base = cache(minhashBaseOf(documents(s, d))
+      .withColumn("is_batch", isBatchDoc(col("doc_id"))))
+    incrementalVerdict(
+      base.filter(col("is_batch")).select(col("doc_id"), col("shs")),
+      foldedBands(base.filter(col("is_batch"))),
+      foldedBands(base.filter(!col("is_batch"))),
+      base.filter(!col("is_batch")).select(col("doc_id"), col("shs")))
   }
 
   /** The serve form: corpus bands come from the persisted
@@ -896,23 +815,17 @@ object Dedup {
     * verification are recomputed on demand for candidate ids only.
     * Same relation and oracle as `dedup_incremental`: the index is a
     * layout choice, not a semantic one. */
-  def dedupIncrementalBucketed(s: SparkSession, d: String): DataFrame = {
-    val docs = documents(s, d)
-    val base = minhashBaseOf(docs).cache()
-    try {
-      val corpusBands = bucketedBandTable(s, d, base)
-        .filter(!isBatchDoc(col("doc_id")))
-      val batch = base.filter(isBatchDoc(col("doc_id"))).cache()
-      try {
-        incrementalVerdict(
-          batch.select(col("doc_id"), col("shs")),
-          foldedBands(batch),
-          corpusBands,
-          base.filter(!isBatchDoc(col("doc_id")))
-            .select(col("doc_id"), col("shs")))
-          .localCheckpoint(true)
-      } finally batch.unpersist()
-    } finally base.unpersist()
+  def dedupIncrementalBucketed(s: SparkSession, d: String): DataFrame = eager { cache =>
+    val base = cache(minhashBaseOf(documents(s, d)))
+    val corpusBands = bucketedBandTable(s, d, base)
+      .filter(!isBatchDoc(col("doc_id")))
+    val batch = cache(base.filter(isBatchDoc(col("doc_id"))))
+    incrementalVerdict(
+      batch.select(col("doc_id"), col("shs")),
+      foldedBands(batch),
+      corpusBands,
+      base.filter(!isBatchDoc(col("doc_id")))
+        .select(col("doc_id"), col("shs")))
   }
 
   /** Lazy-plan variant for PlanAudit: the candidate join of the
@@ -922,23 +835,23 @@ object Dedup {
     val base = minhashBaseOf(documents(s, d))
     val corpusBands = bucketedBandTable(s, d, base)
       .filter(!isBatchDoc(col("doc_id")))
-    foldedBands(base.filter(isBatchDoc(col("doc_id")))).as("a")
-      .join(corpusBands.as("b"), col("a.band_key") === col("b.band_key"))
-      .select(col("a.doc_id").as("batch_id"), col("b.doc_id").as("corpus_id"))
-      .dropDuplicates("batch_id", "corpus_id")
+    admissionCandidates(foldedBands(base.filter(isBatchDoc(col("doc_id")))), corpusBands)
   }
 
-  /** Shared verdict kernel: band-collision candidates (batch × corpus
-    * single-key equi-join on the folded band key), exact-Jaccard
+  /** Band-collision candidates, batch × corpus: a single-key
+    * equi-join on the folded band key, each (batch_id, corpus_id)
+    * once. */
+  private def admissionCandidates(batchBands: DataFrame, corpusBands: DataFrame): DataFrame =
+    batchBands.as("a").join(corpusBands.as("b"), col("a.band_key") === col("b.band_key"))
+      .select(col("a.doc_id").as("batch_id"), col("b.doc_id").as("corpus_id"))
+      .dropDuplicates("batch_id", "corpus_id")
+
+  /** Shared verdict kernel: admission candidates, exact-Jaccard
     * verify, then a left join back to the batch so no-candidate
     * documents still get an admit row. */
   private def incrementalVerdict(batchSets: DataFrame, batchBands: DataFrame,
       corpusBands: DataFrame, corpusSets: DataFrame): DataFrame = {
-    val cand = batchBands.as("a").join(corpusBands.as("b"),
-        col("a.band_key") === col("b.band_key"))
-      .select(col("a.doc_id").as("batch_id"), col("b.doc_id").as("corpus_id"))
-      .dropDuplicates("batch_id", "corpus_id")
-    val ver = cand
+    val ver = admissionCandidates(batchBands, corpusBands)
       .join(batchSets.as("x"), col("batch_id") === col("x.doc_id"))
       .join(corpusSets.as("y"), col("corpus_id") === col("y.doc_id"))
       .select(col("batch_id"),
@@ -1004,35 +917,45 @@ object Dedup {
     val results = new graft.streaming.SubBatchState[DataFrame]
     graft.streaming.SubBatchState.streamSubBatches(s, batchDocs) { (k, batch) =>
       val base = minhashBaseOf(batch).localCheckpoint(true)
-      val stateBands =
-        (baseBands +: admBands.earlier(k)).reduce(_ unionByName _)
-      val stateSets =
-        (baseSets +: admSets.earlier(k)).reduce(_ unionByName _)
-      val verdict = incrementalVerdict(
-        base.select(col("doc_id"), col("shs")), foldedBands(base),
-        stateBands, stateSets)
-        .withColumn("sub_batch", lit(k))
-        .select(col("batch_id"), col("sub_batch"),
-          col("n_cand"), col("n_dup"), col("admit"))
-        .localCheckpoint(true)
-      results.put(k, verdict)
-      val admitted = verdict.filter(col("admit"))
-        .select(col("batch_id").as("doc_id"))
-      admBands.put(k,
-        foldedBands(base).join(admitted, Seq("doc_id"), "left_semi")
-          .localCheckpoint(true))
-      admSets.put(k,
-        base.select(col("doc_id"), col("shs"))
-          .join(admitted, Seq("doc_id"), "left_semi")
-          .localCheckpoint(true))
+      val admitted = admitSubBatch(k, base,
+        (baseBands +: admBands.earlier(k)).reduce(_ unionByName _),
+        (baseSets +: admSets.earlier(k)).reduce(_ unionByName _), results)
+      val (bands, sets) = admittedRows(base, admitted)
+      admBands.put(k, bands.localCheckpoint(true))
+      admSets.put(k, sets.localCheckpoint(true))
     }
-    if (results.isEmpty) emptyVerdicts(s) // degenerate corpus: no batch docs at all
-    else results.values.reduce(_ union _)
+    verdicts(s, results)
   }
 
-  /** The admission loops' empty result (a corpus with no batch docs). */
-  private def emptyVerdicts(s: SparkSession): DataFrame =
-    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+  /** The admission loops' one step: sub-batch k's signature `base`
+    * through the verdict kernel against the admission corpus; the
+    * checkpointed verdict rows (tagged `sub_batch` = k) go to
+    * `results` under k, and the admitted doc ids come back. */
+  private def admitSubBatch(k: Int, base: DataFrame, corpusBands: DataFrame,
+      corpusSets: DataFrame, results: graft.streaming.SubBatchState[DataFrame]): DataFrame = {
+    val verdict = incrementalVerdict(
+      base.select(col("doc_id"), col("shs")), foldedBands(base),
+      corpusBands, corpusSets)
+      .withColumn("sub_batch", lit(k))
+      .select(col("batch_id"), col("sub_batch"),
+        col("n_cand"), col("n_dup"), col("admit"))
+      .localCheckpoint(true)
+    results.put(k, verdict)
+    verdict.filter(col("admit")).select(col("batch_id").as("doc_id"))
+  }
+
+  /** What the admitted docs add to the admission state: their folded
+    * band rows and their shingle sets. */
+  private def admittedRows(base: DataFrame, admitted: DataFrame): (DataFrame, DataFrame) =
+    (foldedBands(base).join(admitted, Seq("doc_id"), "left_semi"),
+      base.select(col("doc_id"), col("shs")).join(admitted, Seq("doc_id"), "left_semi"))
+
+  /** The admission loops' result: every sub-batch's verdict rows, or
+    * the empty relation for a corpus with no batch docs at all. */
+  private def verdicts(s: SparkSession,
+      results: graft.streaming.SubBatchState[DataFrame]): DataFrame =
+    if (results.nonEmpty) results.values.reduce(_ union _)
+    else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField("batch_id", LongType),
         StructField("sub_batch", IntegerType),
         StructField("n_cand", LongType), StructField("n_dup", LongType),
@@ -1059,8 +982,7 @@ object Dedup {
     try {
       val cbase = minhashBaseOf(docs.filter(!isBatchDoc(col("doc_id"))))
       val cb = foldedBands(cbase)
-      val nb = Similarity.derivedBuckets(s, cb.count(),
-        "spark.graft.dedup.maintain.buckets")
+      val nb = LayoutRegistry.derivedBuckets(s, cb.count())
       val bandsPt = new graft.streaming.PartitionedTable(
         workDir.resolve("bands"), "band_key", nb)
       val setsPt = new graft.streaming.PartitionedTable(
@@ -1161,71 +1083,42 @@ object Dedup {
           !bRuns.exists(_._1.contains(k))
         val sFresh = setsPt.lastTxn(s"admsets.seg$k").isEmpty &&
           !sRuns.exists(_._1.contains(k))
-        if (bFresh != sFresh) {
+        if (bFresh || sFresh) {
           val base = minhashBaseOf(batch).localCheckpoint(true)
-          val landed = if (bFresh) setsPt.read(s) else bandsPt.read(s)
-          val admitted = base.select(col("doc_id"))
-            .join(landed.select(col("doc_id")).distinct(),
-              Seq("doc_id"), "left_semi")
-          val seg = if (bFresh) {
-            val bSeg = bSegDir.resolve(f"seg$k%04d")
-            foldedBands(base).join(admitted, Seq("doc_id"), "left_semi")
-              .write.mode("overwrite").parquet(bSeg.toString)
-            bandSegs.put(k, bSeg.toString)
-            bSeg
+          val admitted = if (bFresh && sFresh) {
+            // fully fresh on BOTH tables: the normal verdict path (this
+            // includes a same-process replay whose segments are still
+            // loose — the strict-earlier corpus makes the recompute see
+            // exactly the state it saw the first time, and the segment
+            // overwrite is idempotent). The admission corpus is base ∪
+            // RUNS ∪ strictly-earlier loose segments: a mid-epoch run
+            // fold moves earlier sub-batches out of the segment store
+            // without landing them in the base, and they must stay
+            // visible (runs only ever hold earlier sub-batches — a
+            // fresh k is never in a run by the landing guard above)
+            def corpus(pt: graft.streaming.PartitionedTable, earlier: Seq[String]) =
+              if (earlier.isEmpty) pt.read(s)
+              else pt.read(s).unionByName(s.read.parquet(earlier: _*))
+            admitSubBatch(k, base,
+              corpus(bandsPt, bRuns.toSeq.map(_._2.toString) ++ bandSegs.earlier(k)),
+              corpus(setsPt, sRuns.toSeq.map(_._2.toString) ++ setSegs.earlier(k)),
+              results)
           } else {
-            val sSeg = sSegDir.resolve(f"seg$k%04d")
-            base.select(col("doc_id"), col("shs"))
-              .join(admitted, Seq("doc_id"), "left_semi")
-              .write.mode("overwrite").parquet(sSeg.toString)
-            setSegs.put(k, sSeg.toString)
-            sSeg
+            val landed = if (bFresh) setsPt.read(s) else bandsPt.read(s)
+            base.select(col("doc_id"))
+              .join(landed.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
           }
-          folder.onSegment(
-            math.max(1, graft.streaming.LsmFold.parquetFiles(seg)))
-        } else if (bFresh) {
-          // fully fresh on BOTH tables: the normal verdict path (this
-          // includes a same-process replay whose segments are still
-          // loose — the strict-earlier corpus makes the recompute see
-          // exactly the state it saw the first time, and the segment
-          // overwrite is idempotent)
-          val base = minhashBaseOf(batch).localCheckpoint(true)
-          // the admission corpus is base ∪ RUNS ∪ strictly-earlier
-          // loose segments: a mid-epoch run fold moves earlier
-          // sub-batches out of the segment store without landing
-          // them in the base, and they must stay visible (runs only
-          // ever hold earlier sub-batches — a fresh k is never in
-          // a run by the landing guard above)
-          val earlierB = bRuns.toSeq.map(_._2.toString) ++ bandSegs.earlier(k)
-          val earlierS = sRuns.toSeq.map(_._2.toString) ++ setSegs.earlier(k)
-          val corpusBands =
-            if (earlierB.isEmpty) bandsPt.read(s)
-            else bandsPt.read(s).unionByName(s.read.parquet(earlierB: _*))
-          val corpusSets =
-            if (earlierS.isEmpty) setsPt.read(s)
-            else setsPt.read(s).unionByName(s.read.parquet(earlierS: _*))
-          val verdict = incrementalVerdict(
-            base.select(col("doc_id"), col("shs")), foldedBands(base),
-            corpusBands, corpusSets)
-            .withColumn("sub_batch", lit(k))
-            .select(col("batch_id"), col("sub_batch"),
-              col("n_cand"), col("n_dup"), col("admit"))
-            .localCheckpoint(true)
-          results.put(k, verdict)
-          val admitted = verdict.filter(col("admit"))
-            .select(col("batch_id").as("doc_id"))
-          val bSeg = bSegDir.resolve(f"seg$k%04d")
-          foldedBands(base).join(admitted, Seq("doc_id"), "left_semi")
-            .write.mode("overwrite").parquet(bSeg.toString)
-          bandSegs.put(k, bSeg.toString)
-          val sSeg = sSegDir.resolve(f"seg$k%04d")
-          base.select(col("doc_id"), col("shs"))
-            .join(admitted, Seq("doc_id"), "left_semi")
-            .write.mode("overwrite").parquet(sSeg.toString)
-          setSegs.put(k, sSeg.toString)
-          folder.onSegment(math.max(1,
-            graft.streaming.LsmFold.parquetFiles(bSeg) +
-              graft.streaming.LsmFold.parquetFiles(sSeg)))
+          val (bands, sets) = admittedRows(base, admitted)
+          def land(rows: DataFrame, dir: java.nio.file.Path,
+              segs: graft.streaming.SubBatchState[String]): Int = {
+            val seg = dir.resolve(f"seg$k%04d")
+            rows.write.mode("overwrite").parquet(seg.toString)
+            segs.put(k, seg.toString)
+            graft.streaming.LsmFold.parquetFiles(seg)
+          }
+          val files = (if (bFresh) land(bands, bSegDir, bandSegs) else 0) +
+            (if (sFresh) land(sets, sSegDir, setSegs) else 0)
+          folder.onSegment(math.max(1, files))
         }
       }
       // deferred OPTIMIZE: the policy's close fold lands the epoch's
@@ -1233,8 +1126,7 @@ object Dedup {
       folder.finish()
       bandsPt.compact(s)
       setsPt.compact(s)
-      if (results.isEmpty) emptyVerdicts(s)
-      else results.values.reduce(_ union _)
+      verdicts(s, results)
       // fence cleared in finally so an exception mid-scope can't leave
       // it installed (Replication.catchUp's discipline)
       } finally { bandsPt.clearFence(); setsPt.clearFence() }

@@ -45,12 +45,6 @@ object Layout {
   def zorder32(x: Column, y: Column): Column =
     spreadBits(x).bitwiseOR(shiftleft(spreadBits(y), 1))
 
-  // One z-ordered events copy per (session, dataset): the write is
-  // once-per-corpus ETL; repeat invocations reuse the files (same
-  // registry contract as Dedup.bandTables / Similarity.indexTables).
-  private[graft] val layoutDirs =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.nio.file.Path]()
-
   private val ZFiles = 64
 
   /** Spark's default parquet timestamp encoding is legacy INT96, which
@@ -75,10 +69,12 @@ object Layout {
     * (`zorder32` or `hilbert32` — both single codegen'd projections),
     * range-partition + sort by the curve key, write `ZFiles` parquet
     * files. The two driver-side stats rows are layout ETL (like the
-    * derived bucket counts), not query work. */
+    * derived bucket counts), not query work. One copy per (session,
+    * dataset, curve), kept in LayoutRegistry as a layout with no
+    * catalog table; repeat invocations reuse the files. */
   private[graft] def curveEventsDir(
       s: SparkSession, d: String, curve: String): java.nio.file.Path =
-    layoutDirs.computeIfAbsent((s, s"$d#$curve"), _ => {
+    LayoutRegistry.getOrBuild(s, curve, d) { out =>
       val ev = events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
@@ -90,7 +86,6 @@ object Layout {
       def b16(v: String, lo: Long, hi: Long): Column = // integer-exact
         if (hi <= lo) lit(0L)
         else expr(s"(($v - ${lo}L) * 65535L) DIV ${hi - lo}L")
-      val out = java.nio.file.Files.createTempDirectory(s"graft_$curve")
       val key: (Column, Column) => Column = curve match {
         case "zorder" => zorder32
         case "hilbert" => graft.functions.HilbertIndex32.hilbert32
@@ -106,23 +101,8 @@ object Layout {
           .drop("z")
           .write.mode("overwrite").parquet(out.resolve("events").toString)
       }
-      out
-    })
-
-  /** Drop this session's persisted z-layouts (Cleanup.dropAll). */
-  def dropLayouts(s: SparkSession): Unit = {
-    val it = layoutDirs.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        val files = java.nio.file.Files.walk(e.getValue)
-        try files.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally files.close()
-        it.remove()
-      }
-    }
-  }
+      Nil
+    }.dir
 
   /** Back-compat alias used by LayoutProbe and the gate query. */
   private[graft] def zorderedEventsDir(s: SparkSession, d: String): java.nio.file.Path =

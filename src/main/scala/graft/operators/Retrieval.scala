@@ -45,7 +45,7 @@ object Retrieval {
 
   /** Per-doc gram-hash stream WITH multiplicity (tf matters for BM25:
     * WordShingles.shingles dedups, so build positionally like
-    * Dedup.posGrams and keep repeats). 16-hex md5 prefix = the
+    * Dedup.posGramArr and keep repeats). 16-hex md5 prefix = the
     * fixed-width 64-bit term key the index shuffles on. Native
     * one-pass expression — the interpreted HOF twin below cost ~4 s
     * of the sf0.1 postings build on its own. */
@@ -204,48 +204,22 @@ object Retrieval {
   /** Memoized bucketBy(g) postings index + 1-row totals table — what
     * the corpus ETL would maintain so every retrieval run reads
     * postings already clustered by term. Bucket count derived from the
-    * postings row count (Similarity.derivedBuckets). */
-  private[graft] val postingsTables =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      ((String, String), java.nio.file.Path)]()
-
+    * postings row count (LayoutRegistry.derivedBuckets). */
   private[graft] def bucketedPostings(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val ((pt, tt), _) = postingsTables.computeIfAbsent((s, d), _ => {
-      val wh = java.nio.file.Files.createTempDirectory("graft_bm25idx")
-      val stem = wh.getFileName.toString.replaceAll("[^a-zA-Z0-9]", "_")
-      val pName = "bm25_postings_" + stem
-      val tName = "bm25_totals_" + stem
+    val idx = LayoutRegistry.getOrBuild(s, "bm25idx", d) { wh =>
       // denormalize df into the postings at write time (the dictionary
       // lives in the index): the per-gram count window rides the same
       // g-clustering the bucketBy write needs anyway
       val p = postingsOf(documents(s, d))
         .withColumn("df", count(lit(1)).over(Window.partitionBy(col("g"))))
-      val nb = Similarity.derivedBuckets(s, p.count(), "spark.graft.bm25.buckets")
-      p.write.mode("overwrite").bucketBy(nb, "g").sortBy("g")
-        .option("path", wh.resolve("postings").toString).saveAsTable(pName)
+      val nb = LayoutRegistry.derivedBuckets(s, p.count())
+      val pName = LayoutRegistry.saveBucketed(p, nb, "g", wh, "postings", "bm25_postings")
+      val tName = LayoutRegistry.tableName("bm25_totals", wh)
       totalsOf(documents(s, d)).write.mode("overwrite")
         .option("path", wh.resolve("totals").toString).saveAsTable(tName)
-      ((pName, tName), wh)
-    })
-    (s.table(pt), s.table(tt))
-  }
-
-  /** Drop this session's memoized postings index tables + files. */
-  def dropPostingsTables(s: SparkSession): Unit = {
-    val it = postingsTables.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        val ((pt, tt), wh) = e.getValue
-        s.sql(s"DROP TABLE IF EXISTS $pt")
-        s.sql(s"DROP TABLE IF EXISTS $tt")
-        val files = java.nio.file.Files.walk(wh)
-        try files.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally files.close()
-        it.remove()
-      }
+      Seq(pName, tName)
     }
+    (s.table(idx.tables(0)), s.table(idx.tables(1)))
   }
 
   /** The serve form: postings (with df baked in) come from the
@@ -440,7 +414,7 @@ object Retrieval {
       dir: java.nio.file.Path, base: DataFrame,
       installFence: MaintainedIndex => Unit = _ => ()): MaintainedIndex = {
     val p = postingsOf(base)
-    val nb = Similarity.derivedBuckets(s, p.count(), "spark.graft.bm25.buckets")
+    val nb = LayoutRegistry.derivedBuckets(s, p.count())
     val idx = MaintainedIndex(
       new graft.streaming.PartitionedTable(dir.resolve("postings"), "g", nb),
       new graft.streaming.PartitionedTable(dir.resolve("doclens"), "doc_id",

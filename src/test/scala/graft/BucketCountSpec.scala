@@ -3,12 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Cleanup, Similarity}
+import graft.operators.{Cleanup, LayoutRegistry, Similarity}
 
-/** Persisted-layout bucket counts are data/conf-derived, not demo
+/** Persisted-layout bucket counts are derived from rows (with
+  * `spark.graft.bucket.targetRows` the one override), not demo
   * constants (r8 VERDICT finding 2), and every reader property —
   * exchange-free serve, identical result relation — holds at ANY
-  * count: asserted here at two explicit counts plus the derivation
+  * count: asserted here at two derived counts plus the derivation
   * itself. */
 class BucketCountSpec extends AnyFunSuite {
 
@@ -16,18 +17,20 @@ class BucketCountSpec extends AnyFunSuite {
   private val d = "/root/testdata/sf0.001"
 
   test("bucket-count derivation: conf override wins, else rows/targetRows clamped to [4,4096]") {
-    assert(Similarity.derivedBuckets(spark, 500L, "spark.graft.x") === 4)
-    assert(Similarity.derivedBuckets(spark, 6L << 20, "spark.graft.x") === 6)
-    assert(Similarity.derivedBuckets(spark, 1L << 40, "spark.graft.x") === 4096)
-    spark.conf.set("spark.graft.x", "17")
-    try assert(Similarity.derivedBuckets(spark, 500L, "spark.graft.x") === 17)
-    finally spark.conf.unset("spark.graft.x")
+    assert(LayoutRegistry.derivedBuckets(spark, 500L) === 4)
+    assert(LayoutRegistry.derivedBuckets(spark, 6L << 20) === 6)
+    assert(LayoutRegistry.derivedBuckets(spark, 1L << 40) === 4096)
+    spark.conf.set("spark.graft.bucket.targetRows", "30")
+    try assert(LayoutRegistry.derivedBuckets(spark, 500L) === 17)
+    finally spark.conf.unset("spark.graft.bucket.targetRows")
   }
 
   test("serve layout: exchange-free probe and identical rows at two bucket counts") {
-    def serveAt(buckets: Int): (Set[(Long, Long, Int)], String, Int) = {
+    // the 500-vector corpus derives 4 buckets at 125 rows/bucket, 16 at 32
+    val n = Tables.embeddings(spark, d).count()
+    def serveAt(targetRows: Int): (Set[(Long, Long, Int)], String, Int) = {
       Cleanup.dropAll(spark) // force an index rebuild under the new conf
-      spark.conf.set("spark.graft.index.buckets", buckets.toString)
+      spark.conf.set("spark.graft.bucket.targetRows", targetRows.toString)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       try {
         val df = Similarity.simIvfInt8Bucketed(spark, d)
@@ -36,20 +39,20 @@ class BucketCountSpec extends AnyFunSuite {
         val rows = df.collect().map(r => (
           r.getLong(r.fieldIndex("query_id")), r.getLong(r.fieldIndex("vec_id")),
           r.getInt(r.fieldIndex("rnk")))).toSet
-        val tableName = {
-          var n = ""; Similarity.indexTables.forEach((k, v) => if (k._1 eq spark) n = v._1); n
-        }
+        val tableName = LayoutRegistry.entries.get((spark, "ivfidx", d)).tables.head
         val nb = spark.sessionState.catalog
           .getTableMetadata(TableIdentifier(tableName)).bucketSpec.get.numBuckets
+        assert(nb === LayoutRegistry.derivedBuckets(spark, n),
+          "the written layout must carry the derived count")
         (rows, plan, nb)
       } finally {
-        spark.conf.unset("spark.graft.index.buckets")
+        spark.conf.unset("spark.graft.bucket.targetRows")
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       }
     }
-    val (rows4, plan4, nb4) = serveAt(4)
-    val (rows16, plan16, nb16) = serveAt(16)
-    assert(nb4 === 4 && nb16 === 16, "conf override must reach the written layout")
+    val (rows4, plan4, nb4) = serveAt(125)
+    val (rows16, plan16, nb16) = serveAt(32)
+    assert(nb4 === 4 && nb16 === 16, "targetRows must reach the written layout")
     // the corpus side of the probe join never exchanges on cell at either count
     val exch = "Exchange hashpartitioning\\(cell".r
     assert(exch.findFirstIn(plan4).isEmpty, "4-bucket serve plan exchanges on cell")

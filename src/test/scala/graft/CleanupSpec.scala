@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Cleanup, Dedup, Similarity, Spatial, TextAnalysis}
+import graft.operators.{Cleanup, Dedup, LayoutRegistry, Similarity, Spatial, TextAnalysis}
 
 /** The unified memo teardown (r8 verdict finding 1): every
   * per-(session, dataset) registry — persisted index/band layouts,
@@ -45,5 +45,15 @@ class CleanupSpec extends AnyFunSuite {
     TextAnalysis.bitsCache.forEach((k, _) => if (k._1 eq spark) live += 1)
     assert(live === 1)
     Cleanup.dropAll(spark)
+  }
+
+  test("dropAll survives a layout dir already deleted and forgets every layout") {
+    Dedup.dedupMinhashLshBucketedPlan(spark, d).head() // persisted band layout
+    Dedup.dedupSubstringBucketedPlan(spark, d).head() // persisted gram index
+    // a temp reaper deletes the band layout's files under the session
+    graft.streaming.PartitionedTable.deleteRecursively(
+      LayoutRegistry.entries.get((spark, "lshbkt", d)).dir)
+    Cleanup.dropAll(spark)
+    assert(Cleanup.liveEntries(spark) === 0)
   }
 }

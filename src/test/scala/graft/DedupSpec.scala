@@ -514,4 +514,37 @@ class DedupSpec extends AnyFunSuite {
     assert(bkt === inc)                    // the index is a layout choice, not a semantic one
     graft.operators.Cleanup.dropAll(spark)
   }
+
+  test("durable admission: stream_dedup_maintain equals stream_dedup_admission row for row") {
+    // the "earlier admission refuses its later twin" fixture: `late`
+    // (sub-batch 2) twins `early` (sub-batch 0); `lone` (sub-batch 1)
+    // and the corpus doc are unrelated to both
+    def md5hex(t: String): String =
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(t.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    def isBatch(id: Long) = md5hex(id.toString).substring(0, 2) < "20"
+    def sub(id: Long) = md5hex(id.toString).charAt(2).toInt % 3
+    val ids = (1L to 20000L)
+    val early = ids.find(i => isBatch(i) && sub(i) == 0).get
+    val late = ids.find(i => isBatch(i) && sub(i) == 2 && i != early).get
+    val lone = ids.find(i => isBatch(i) && sub(i) == 1 && i != early && i != late).get
+    val corpusId = ids.find(i => !isBatch(i)).get
+    val tmp = java.nio.file.Files.createTempDirectory("graft_maintain_spec")
+    Seq((early, base, "s0"), (late, base, "s0"),
+      (lone, "columnar engines vectorize scan filters while shuffle exchanges hash partition rows between stages", "s0"),
+      (corpusId, unrelated, "s0"))
+      .toDF("doc_id", "text", "source")
+      .write.mode("overwrite").parquet(tmp.resolve("documents.parquet").toString)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(x => (x.getLong(0), x.getInt(1), x.getLong(2), x.getLong(3), x.getBoolean(4)))
+      .sortBy(_._1).toSeq
+    val fixture = rows(Dedup.streamDedupMaintain(spark, tmp.toString))
+    assert(fixture === rows(Dedup.streamDedupAdmission(spark, tmp.toString)))
+    assert(fixture.map(_._1).toSet === Set(early, late, lone))
+    assert(fixture.find(_._1 == late).get === ((late, 2, 1L, 1L, false))) // refused by the stage-0 ADMISSION
+    val sf = "/root/testdata/sf0.001"
+    val maintained = rows(Dedup.streamDedupMaintain(spark, sf))
+    assert(maintained.nonEmpty)
+    assert(maintained === rows(Dedup.streamDedupAdmission(spark, sf)))
+  }
 }

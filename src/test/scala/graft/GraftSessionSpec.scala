@@ -43,6 +43,13 @@ class GraftSessionSpec extends AnyFunSuite {
     }
   }
 
+  test("every persisted-layout drop goes through LayoutRegistry: no file walk in the operators") {
+    // LayoutRegistry.drop deletes through PartitionedTable.deleteRecursively;
+    // a Files.walk in an operator is a private layout memo coming back
+    val hits = codeHits(sources("src/main/scala/graft/operators"), "Files\\.walk")
+    assert(hits.isEmpty, hits.mkString("Files.walk in an operator: ", ", ", ""))
+  }
+
   test("the test session carries every pinned key at the factory's value") {
     val s = TestSpark.session
     val pinned = GraftSession.conf(8)

@@ -68,7 +68,7 @@ class RetrievalSpec extends AnyFunSuite {
       val served = Retrieval.textBm25Bucketed(spark, sf)
         .as[(Long, Long, Long, Int)].collect().toSet
       assert(adhoc.nonEmpty && adhoc === served)
-    } finally Retrieval.dropPostingsTables(spark)
+    } finally graft.operators.LayoutRegistry.drop(spark)
   }
 
   test("bm25 ranking tracks exact gram-set Jaccard: mean overlap@10 floor") {
@@ -89,7 +89,7 @@ class RetrievalSpec extends AnyFunSuite {
           Retrieval.queryGramsOf(graft.Tables.documents(spark, sf), 0L until 9L))
         .as[(Long, Long, Long, Int)].collect().toSet
       assert(streamed.nonEmpty && streamed === batch)
-    } finally Retrieval.dropPostingsTables(spark)
+    } finally graft.operators.LayoutRegistry.drop(spark)
   }
 
   test("bm25 maintained index: arrival re-ranks, replay no-ops, serve equals one-shot build") {

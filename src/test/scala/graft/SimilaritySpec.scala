@@ -133,7 +133,7 @@ class SimilaritySpec extends AnyFunSuite {
       .as[(Long, Long, Long, Double, Int)].collect().toSet
     assert(served.nonEmpty)
     assert(served === direct)
-    Similarity.dropIndexTables(spark)
+    graft.operators.LayoutRegistry.drop(spark)
   }
 
   test("native dot_f32 is bit-equal to the higher-order-function fold on the corpus") {
