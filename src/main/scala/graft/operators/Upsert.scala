@@ -19,10 +19,11 @@ import graft.Tables._
   * batch diffs; we can — one merge per catch-up run instead of one
   * round-trip per row, the central scale inversion of this project).
   *
-  * At 100 TB the anti-join must not rewrite the whole table: partition
-  * the table by a key prefix (e.g. bucket(id) or created_at month),
-  * semi-join the update keys to find touched partitions, and merge
-  * only those (see VersionedTable.mergeInto).
+  * `graft.streaming.PartitionedTable.mergeInto` runs this merge over
+  * only the hash buckets that hold update keys. Ids hash uniformly, so
+  * a replication batch of more than a few dozen ids touches every
+  * bucket and rewrites the whole table; a merge whose cost tracks the
+  * diff needs a merge-on-read layout (ROADMAP direction 3).
   */
 object Upsert {
 

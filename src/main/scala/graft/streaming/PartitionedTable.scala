@@ -18,21 +18,40 @@ import graft.operators.Upsert
   *      bounded by nBuckets, not data),
   *   2. anti-join+unions ONLY those buckets' current data with the
   *      updates — one distributed merge plan over all touched buckets,
-  *   3. writes every touched bucket in ONE Spark job
-  *      (`partitionBy("__b")` into a fresh commit directory — the
-  *      dynamic-partition-overwrite shape; no serial per-bucket driver
-  *      loop), then atomically swaps one manifest.
+  *   3. writes every touched bucket in one write (`partitionBy("__b")`
+  *      into a fresh commit directory — the dynamic-partition-overwrite
+  *      shape; no serial per-bucket driver loop), each bucket from the
+  *      one task that holds all its rows (`writeAligned`), then
+  *      atomically swaps one manifest.
   *
   * Untouched buckets are untouched files: merge cost is
-  * O(touched buckets), not O(table). Crash before the manifest swap
-  * leaves the old manifest → old complete state (idempotent re-apply,
-  * same contract UpsertSpec property-tests for the simple table).
+  * O(touched buckets), not O(table) — but uniformly hashed keys put a
+  * batch of more than a few dozen keys in every bucket. Crash before
+  * the manifest swap leaves the old manifest → old complete state
+  * (idempotent re-apply, same contract UpsertSpec property-tests for
+  * the simple merge).
   */
 class PartitionedTable(val dir: Path, val keyCol: String, val nBuckets: Int) {
 
   private def manifestFile = dir.resolve("MANIFEST")
 
   private def bucketExpr = pmod(hash(col(keyCol)), lit(nBuckets))
+
+  /** Key-aligned bucket write: `repartition(nBuckets, key)` is Spark's
+    * HashPartitioning, `pmod(murmur3(key, 42), nBuckets)` — the same
+    * expression as `bucketExpr` — so every row of bucket b lands in
+    * task b and each written bucket dir holds exactly ONE parquet file.
+    * A merge written from the upstream tasks instead leaves up to one
+    * file per task in every bucket, and the next merge reads them all
+    * back. `partitionBy("__b")` still routes the rows, so correctness
+    * never rests on that equality; only the file count does
+    * (PartitionedTableSpec pins the Spark property). */
+  private def writeAligned(rows: DataFrame, commitRel: String): Unit =
+    rows.repartition(nBuckets, col(keyCol))
+      .withColumn("__b", bucketExpr)
+      .write.mode(SaveMode.Overwrite)
+      .partitionBy("__b")
+      .parquet(dir.resolve(commitRel).toString)
 
   def exists: Boolean = Files.exists(manifestFile)
 
@@ -347,19 +366,26 @@ class PartitionedTable(val dir: Path, val keyCol: String, val nBuckets: Int) {
     readBuckets(spark, manifest.keys.toSeq.sorted)
 
   /** Point lookup — the PK-index analog: the key's bucket id is
-    * recomputed from the key itself (hash-stable, one 1-row driver
-    * job), so the read opens exactly ONE bucket's files and the
-    * filter prunes inside them via footer stats. O(1 bucket) however
-    * large the table. A key whose bucket was never written (or was
-    * emptied by deleteKeys) answers with zero rows, not an error. */
+    * recomputed on the driver from the key itself by evaluating the
+    * bucket expression (`pmod(murmur3(key, 42), nBuckets)`) over the
+    * literal — no Spark job — so the read opens exactly ONE bucket's
+    * files and the filter prunes inside them via footer stats. O(1
+    * bucket) however large the table. The key is first cast to the
+    * key column's recorded type: murmur3 hashes an Int and a Long of
+    * the same value differently, so `lookup(spark, 123)` on a Long key
+    * would otherwise open the wrong bucket. A key whose bucket was
+    * never written (or was emptied by deleteKeys) answers with zero
+    * rows, not an error. */
   def lookup(spark: SparkSession, key: Any): DataFrame = {
-    val b = spark.range(1)
-      .select(pmod(hash(lit(key)), lit(nBuckets)).cast("int"))
-      .head().getInt(0)
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Murmur3Hash, Pmod}
+    val raw = Literal(key)
+    val t = storedSchema.fold(raw.dataType)(_(keyCol).dataType)
+    val typed = Literal(Cast(raw, t, Some(spark.sessionState.conf.sessionLocalTimeZone)).eval(), t)
+    val b = Pmod(Murmur3Hash(Seq(typed), 42), Literal(nBuckets)).eval().asInstanceOf[Int]
     manifest.get(b) match {
       case Some(v) =>
         readPaths(spark, Seq(dir.resolve(v).toString), storedSchema)
-          .filter(col(keyCol) === lit(key))
+          .filter(col(keyCol) === lit(key).cast(t))
       case None => read(spark).limit(0)
     }
   }
@@ -417,9 +443,10 @@ class PartitionedTable(val dir: Path, val keyCol: String, val nBuckets: Int) {
   }
 
   /** Merge `updates` (last-wins-compacted by caller) into the table,
-    * rewriting only the buckets that hold update keys — in a single
-    * Spark write job. Returns the touched bucket ids (empty input →
-    * no-op, no jobs beyond the bucket probe).
+    * rewriting only the buckets that hold update keys — in one
+    * key-aligned write, one file per touched bucket. Returns the
+    * touched bucket ids (empty input → no-op, no jobs beyond the
+    * bucket probe).
     *
     * `txn = Some(appId -> version)` makes the write IDEMPOTENT per
     * writer: a version ≤ the recorded one for `appId` is a replay
@@ -490,10 +517,7 @@ class PartitionedTable(val dir: Path, val keyCol: String, val nBuckets: Int) {
     }
     val commit = nextCommit(m)
     val commitRel = attemptDir(commit)
-    merged.withColumn("__b", bucketExpr)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("__b")
-      .parquet(dir.resolve(commitRel).toString)
+    writeAligned(merged, commitRel)
     withBucket.unpersist()
     // partitionBy writes one __b=<n> dir per touched bucket under the
     // commit dir; repoint only those buckets, one atomic manifest swap
@@ -539,16 +563,16 @@ class PartitionedTable(val dir: Path, val keyCol: String, val nBuckets: Int) {
   }
 
   /** OPTIMIZE: coalesce fragmented buckets into one file each.
-    * `mergeInto` writes a touched bucket from whatever tasks hold its
-    * rows, so a bucket rewritten under `spark.sql.shuffle.partitions`
-    * = P can land as up to P small part-files — and a minutely feed
-    * re-fragments its hot buckets on every merge. At 100 TB that is
-    * the small-files problem that kills scan throughput (per-file
-    * open/footer cost) and pushes the file listing itself into the
-    * driver's time budget. Compaction is the standard lakehouse
+    * `freshWrite`, `appendInto` and `deleteKeys` write a touched
+    * bucket from whatever tasks hold its rows, so a bucket written
+    * under `spark.sql.shuffle.partitions` = P can land as up to P
+    * small part-files (`mergeInto` writes key-aligned and leaves one).
+    * At 100 TB that is the small-files problem that kills scan
+    * throughput (per-file open/footer cost) and pushes the file
+    * listing itself into the driver's time budget. Compaction is the standard lakehouse
     * answer (Delta/Iceberg OPTIMIZE): rewrite each bucket whose dir
     * holds more than `maxFilesPerBucket` files into a single file —
-    * one hash repartition on the bucket id puts each bucket's rows in
+    * the key-aligned write (`writeAligned`) puts each bucket's rows in
     * exactly one task, so `partitionBy` emits exactly one file per
     * bucket dir — then repoint ONLY those buckets in one atomic
     * manifest swap. Readers are never blocked (they resolve through
@@ -567,11 +591,7 @@ class PartitionedTable(val dir: Path, val keyCol: String, val nBuckets: Int) {
     val commit = nextCommit(m)
     val commitRel = attemptDir(commit)
     val full = readBuckets(spark, frag)
-    full.withColumn("__b", bucketExpr)
-      .repartition(frag.size, col("__b")) // all of a bucket -> one task
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("__b")
-      .parquet(dir.resolve(commitRel).toString)
+    writeAligned(full, commitRel)
     writeManifest(m ++ frag.map(b => b -> s"$commitRel/__b=$b"), commit,
       txns ++ alsoRecord, Some(commitRel), schemaToRecord(spark, full.schema))
     frag

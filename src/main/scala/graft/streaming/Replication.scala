@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
@@ -150,61 +150,6 @@ object Replication {
           catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
         }
       } finally pool.shutdownNow()
-    }
-  }
-
-  // ---- versioned parquet table (atomic-swap sink) --------------------
-
-  /** Immutable versioned table: each merge commits a new `v<N>`
-    * directory and atomically repoints CURRENT — the parquet analog of
-    * the reference's transactional per-diff commit
-    * (changesetmd.py:184-185). Readers never see a half-written
-    * version; crash mid-write leaves CURRENT on the old version
-    * (restart re-applies the diff — idempotent, README.md:59). */
-  object VersionedTable {
-    private def currentFile(dir: Path) = dir.resolve("CURRENT")
-
-    def exists(dir: Path): Boolean = Files.exists(currentFile(dir))
-
-    def read(spark: SparkSession, dir: Path): DataFrame =
-      spark.read.parquet(dir.resolve(Files.readString(currentFile(dir)).trim).toString)
-
-    def commit(df: DataFrame, dir: Path): Unit = {
-      Files.createDirectories(dir)
-      val next = if (exists(dir))
-        "v" + (Files.readString(currentFile(dir)).trim.drop(1).toLong + 1) else "v0"
-      df.write.mode(SaveMode.Overwrite).parquet(dir.resolve(next).toString)
-      val tmp = dir.resolve("CURRENT.tmp")
-      Files.writeString(tmp, next)
-      Files.move(tmp, currentFile(dir), java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      // GC superseded versions AFTER the swap (the write job above has
-      // already finished reading the old version): the reference
-      // reclaims by delete+insert construction; without this a
-      // minutely feed accumulates one full table copy per merge
-      vacuum(dir)
-    }
-
-    /** Delete every version dir CURRENT does not reference. Safe only
-      * after the swap (which `commit` guarantees); crash mid-sweep
-      * leaves garbage the next commit's sweep removes. */
-    def vacuum(dir: Path): Int = {
-      if (!exists(dir)) return 0
-      val cur = Files.readString(currentFile(dir)).trim
-      val dead = PartitionedTable.listDir(dir).filter { p =>
-        Files.isDirectory(p) && p.getFileName.toString.matches("v\\d+") &&
-          p.getFileName.toString != cur
-      }
-      dead.foreach(PartitionedTable.deleteRecursively)
-      dead.size
-    }
-
-    /** Merge updates into the table (create if absent). At 100 TB this
-      * is where partition-pruned merge applies: restrict the anti-join
-      * to partitions holding update keys instead of rewriting all. */
-    def mergeInto(spark: SparkSession, dir: Path, updates: DataFrame, key: Seq[String]): Unit = {
-      val merged = if (exists(dir)) Upsert.merge(read(spark, dir), updates, key) else updates
-      commit(merged, dir)
     }
   }
 
@@ -471,11 +416,12 @@ object Replication {
 
   // ---- bounded catch-up loop (changesetmd.py:179-186) ----------------
 
-  /** Replication table handles: changesets + comments as
-    * partition-pruned bucket tables (a minutely diff rewrites
-    * O(buckets-hit), never O(table) — the scale contract SURVEY §7
-    * demands; VersionedTable remains the whole-table snapshot sink for
-    * bulk loads and demos). */
+  /** Replication table handles: changesets + comments as hash-bucketed
+    * PartitionedTables. A diff rewrites only the buckets its ids hash
+    * into, but ids hash uniformly, so any diff of more than a few dozen
+    * ids hits every bucket and a tick rewrites the whole table — its
+    * cost tracks the table, not the diff (ROADMAP direction 3). Each
+    * rewritten bucket is written as one file. */
   def changesetTable(tableDir: Path, nBuckets: Int = 8): PartitionedTable =
     new PartitionedTable(tableDir, "id", nBuckets)
 
@@ -491,10 +437,12 @@ object Replication {
   /** While local < server: fetch diff, parse, last-wins compact, merge
     * both relations, commit offset. `batchSize` > 1 compacts several
     * diffs into one merge — a capability the reference lacks.
-    * Merges go through PartitionedTable: each batch rewrites only the
-    * buckets its keys hash into (one Spark write job per batch), and
-    * an empty comments batch is a no-op without a separate isEmpty
-    * probe job. Returns the number of diffs applied. */
+    * Merges go through PartitionedTable: each batch rewrites the
+    * buckets its keys hash into — 7 Spark jobs per table per batch
+    * (the bucket probe, the merge's adaptive stages and the
+    * key-aligned write) — and an empty comments batch is a no-op
+    * without a separate isEmpty probe job.
+    * Returns the number of diffs applied. */
   def catchUp(spark: SparkSession, baseDir: Path, tableDir: Path,
       statePath: Path, batchSize: Int = 8, nBuckets: Int = 8): Int = {
     StateDoc.init(statePath)

@@ -524,4 +524,69 @@ class PartitionedTableSpec extends AnyFunSuite {
     assert(t.read(spark).count() === 1)
     assert(t.read(spark).select("v").head().getString(0) === "x")
   }
+
+  test("lookup casts the key to the key column's type: Int, Long and String keys find every row") {
+    // murmur3 hashes an Int and a Long of the same value differently;
+    // hashing the literal as typed opened the wrong bucket and
+    // answered empty for lookup(spark, 123) on a Long-keyed table
+    def allFound[K](t: PartitionedTable, keys: Seq[K]): Long =
+      keys.map(k => t.lookup(spark, k)).reduce(_ union _).count()
+    val longT = new PartitionedTable(Files.createTempDirectory("graft_pt_lul"), "id", 8)
+    longT.mergeInto(spark, (1L to 24L).map(k => (k, s"v$k")).toDF("id", "v"))
+    assert(allFound(longT, (1L to 24L)) === 24)
+    assert(allFound(longT, (1 to 24)) === 24, "Int key on a Long-keyed table")
+    val intT = new PartitionedTable(Files.createTempDirectory("graft_pt_lui"), "id", 8)
+    intT.mergeInto(spark, (1 to 24).map(k => (k, s"v$k")).toDF("id", "v"))
+    assert(allFound(intT, (1 to 24)) === 24)
+    assert(allFound(intT, (1L to 24L)) === 24, "Long key on an Int-keyed table")
+    val strT = new PartitionedTable(Files.createTempDirectory("graft_pt_lus"), "id", 8)
+    strT.mergeInto(spark, (1 to 24).map(k => (s"k$k", k)).toDF("id", "v"))
+    assert(allFound(strT, (1 to 24).map(k => s"k$k")) === 24)
+    assert(longT.lookup(spark, 7).select("v").head().getString(0) === "v7")
+  }
+
+  test("a merge into a non-empty table writes exactly one file per touched bucket") {
+    val dir = Files.createTempDirectory("graft_pt_onefile")
+    val t = new PartitionedTable(dir, "id", nBuckets = 8)
+    val base = (1L to 2000L).map(i => (i, s"v$i")).toDF("id", "v").repartition(16)
+    t.mergeInto(spark, base)
+    val before = t.manifest
+    // updates and inserts whose keys hash into buckets 0-4 only, spread
+    // over many input partitions: each bucket's rows arrive from many
+    // upstream tasks
+    val upd = spark.range(1L, 2600L).toDF("id")
+      .filter(pmod(hash(col("id")), lit(8)) < 5 && col("id") % 3 === 0)
+      .select(col("id"), concat(lit("u"), col("id").cast("string")).as("v"))
+      .repartition(16)
+    val touched = t.mergeInto(spark, upd)
+    assert(touched === Seq(0, 1, 2, 3, 4))
+    val after = t.manifest
+    def parquetFiles(rel: String): Long = PartitionedTable.listDir(dir.resolve(rel))
+      .count(_.getFileName.toString.endsWith(".parquet")).toLong
+    touched.foreach { b =>
+      assert(after(b) !== before(b))
+      assert(parquetFiles(after(b)) === 1, s"bucket $b holds ${parquetFiles(after(b))} files")
+    }
+    (before.keySet -- touched).foreach(b => assert(after(b) === before(b)))
+    val expected = Upsert.merge(base, upd, Seq("id"))
+    val got = t.read(spark)
+    assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
+  }
+
+  test("repartition(n, key) places each row in task pmod(hash(key), n): the key-aligned write's premise") {
+    // PartitionedTable's one-file-per-bucket write relies on Spark's
+    // HashPartitioning being pmod(murmur3(key, 42), n), the bucket
+    // expression; a Spark upgrade that changes it fails here
+    val rows = spark.range(0, 500).select(
+      col("id").as("l"), col("id").cast("int").as("i"),
+      concat(lit("k"), col("id").cast("string")).as("s"))
+    Seq("l", "i", "s").foreach { k =>
+      Seq(5, 8).foreach { n =>
+        val placed = rows.repartition(n, col(k))
+          .select(spark_partition_id().as("p"), pmod(hash(col(k)), lit(n)).as("b"))
+        assert(placed.filter(col("p") =!= col("b")).count() === 0, s"key $k, n=$n")
+        assert(placed.select("p").distinct().count() === n, s"key $k, n=$n")
+      }
+    }
+  }
 }

@@ -232,4 +232,39 @@ class StreamingSpec extends AnyFunSuite {
         .filter(col("win_start") === ts("2024-01-01 00:00:00")).head().getLong(1) === 2L)
     } finally q.stop()
   }
+
+  test("catchUp leaves one parquet file in every bucket dir of both replication tables") {
+    import graft.streaming.Replication
+    val root = Files.createTempDirectory("graft_repl_files")
+    val feed = root.resolve("feed")
+    val tableDir = root.resolve("tables/cs")
+    val state = root.resolve("state.txt")
+    Replication.writeFixtureWorld(feed, 6)
+    // widen every diff to 40 changesets with one comment each, so each
+    // merge after the first batch touches every bucket of both tables
+    (1 to 6).foreach { seq =>
+      val cs = (0 until 40).map { i =>
+        val id = (seq * 7 + i) % 60 + 1
+        s"""  <changeset id="$id" created_at="2015-11-15T23:00:00Z" open="false" num_changes="$seq" user="u$i" uid="$i">
+           |    <discussion><comment uid="$i" user="u$i" date="2015-11-16T0$seq:00:00Z"><text>c$seq</text></comment></discussion>
+           |  </changeset>""".stripMargin
+      }
+      graft.sources.OsmXml.writeFixture(feed.resolve(Replication.sequencePath(seq.toLong)),
+        cs.mkString("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<osm version=\"0.6\">\n",
+          "\n", "\n</osm>"))
+    }
+    Replication.StateDoc.write(state,
+      Replication.ReplState(0L, None, updateInProgress = false))
+    assert(Replication.catchUp(spark, feed, tableDir, state, batchSize = 2) === 6)
+    Seq(Replication.changesetTable(tableDir), Replication.commentsTable(tableDir)).foreach { t =>
+      val m = t.manifest
+      assert(m.size === 8, s"${t.dir}: ${m.keys}")
+      m.foreach { case (b, rel) =>
+        val files = graft.streaming.PartitionedTable.listDir(t.dir.resolve(rel))
+          .count(_.getFileName.toString.endsWith(".parquet"))
+        assert(files === 1, s"${t.dir} bucket $b holds $files files")
+      }
+    }
+    assert(Replication.readTable(spark, tableDir).count() === 60)
+  }
 }

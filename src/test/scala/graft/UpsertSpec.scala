@@ -9,7 +9,6 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 import graft.operators.Upsert
 import graft.streaming.Replication
-import graft.streaming.Replication.VersionedTable
 
 /** Upsert/merge + replication invariants. The central safety property
   * is the reference's own (README.md:59): re-applying a diff "will
@@ -73,21 +72,6 @@ class UpsertSpec extends AnyFunSuite {
     val got = Upsert.lastWins(df, Seq("id"), Seq(col("seq")))
       .orderBy("id").select("v").collect().map(_.getString(0)).toSeq
     assert(got === Seq("c", "x"))
-  }
-
-  test("VersionedTable.commit GCs superseded versions; CURRENT always readable") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vt_gc")
-    (1 to 4).foreach { i =>
-      VersionedTable.mergeInto(spark,
-        dir, Seq((1L, s"r$i"), (i.toLong + 10, "x")).toDF("id", "v"), Seq("id"))
-    }
-    val versions = graft.streaming.PartitionedTable.listDir(dir)
-      .filter(p => p.getFileName.toString.matches("v\\d+"))
-    assert(versions.map(_.getFileName.toString) === Seq("v3")) // only CURRENT survives
-    val got = VersionedTable.read(spark, dir)
-    assert(got.count() === 5) // id 1 + ids 11..14
-    assert(got.filter($"id" === 1L).select("v").head().getString(0) === "r4")
-    assert(VersionedTable.vacuum(dir) === 0) // idempotent
   }
 
   test("sequencePath matches the nnn/nnn/nnn addressing (changesetmd.py:127-135)") {
