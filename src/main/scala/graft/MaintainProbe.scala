@@ -159,11 +159,21 @@ object MaintainProbe {
         println(f"[maintain] $tag run-vs-segments: base=$serveBase3%.2f " +
           f"run1(32)=$serveRun3%.2f loose32=$serveLoose3%.2f " +
           s"run_files=$runFiles")
+        // the tiered loop's seeds, from this curve: tax = least-squares
+        // slope of serve-vs-segments per SEGMENT; the policy prices per
+        // FILE and these segments are multi-file, so its per-file seed
+        // divides by their average files-per-segment (r17 ADVICE; the
+        // EWMA recalibrates from the first observed serve either way)
+        val taxSeed = math.max(1e-3,
+          graft.streaming.TieredFoldPolicy.estimateTaxPerSegment(serveBySeg))
+        val filesPerSeg = math.max(1.0,
+          (pSegs ++ dSegs).map(graft.streaming.LsmFold.parquetFiles).sum.toDouble /
+            (pSegs.size + dSegs.size))
         val (_, secFoldServe) = timeIt(Retrieval.foldSegments(spark, idxS,
           pSegs.zipWithIndex.map(_.swap), dSegs.zipWithIndex.map(_.swap), 9L))
         idxS.postings.compact(spark)
         idxS.doclens.compact(spark)
-        Retrieval.pruneSegments(pSegs ++ dSegs)
+        graft.streaming.LsmFold.prune(pSegs ++ dSegs)
         val servePost = serveSec(0)
         val maxFiles = idxS.postings.manifest.values.map { rel =>
           graft.streaming.PartitionedTable.listDir(
@@ -219,168 +229,51 @@ object MaintainProbe {
         println(f"[maintain] $tag fold-shape-ab: " +
           s"loose=${foldLoose.map(s3).mkString(",")} " +
           s"runs=${foldRuns.map(s3).mkString(",")}")
-        // ---- POLICY-DRIVEN maintain loop (r15: FoldPolicy wired) ----
-        // the serve-interleaved cadence the gate entries never see:
-        // one serve per landed segment, the rent-or-buy policy seeded
-        // from THIS tier's just-measured curve (tax = least-squares
-        // slope of serve-vs-segments, fold cost = the measured epoch
-        // fold), folds going through the loops' real machinery
-        // (PolicyFolder → foldSegments). The first fold lands NEAR the
-        // analytic steadyStateTrigger — not exactly at it: onServe
-        // EWMA-updates the tax from the very first observed serve (and
-        // base0 ages as folds grow the base), so the realized trigger
-        // legitimately drifts from the frozen-estimate analytic k (the
-        // exact pin with frozen estimates lives in FoldPolicySpec).
-        val idxP = Retrieval.buildMaintained(spark, wd.resolve("bm25pol"),
-          docs.filter(!Retrieval.isArrival(col("doc_id"))))
-        val polSegDir = wd.resolve("bm25polsegs")
-        java.nio.file.Files.createDirectories(polSegDir)
-        val pPol = (0 until segN).map { k =>
-          Retrieval.writeSegment(polSegDir.resolve("p"), k.toLong,
-            Retrieval.postingsOf(arrSeg.filter(col("__seg") === k).drop("__seg")))
-        }
-        val dPol = (0 until segN).map { k =>
-          Retrieval.writeSegment(polSegDir.resolve("d"), k.toLong,
-            Retrieval.doclensOf(arrSeg.filter(col("__seg") === k).drop("__seg")))
-        }
-        val taxSeed = math.max(1e-3,
-          graft.streaming.FoldPolicy.estimateTaxPerSegment(serveBySeg))
-        val policy = new graft.streaming.FoldPolicy(
-          initialFoldCostSec = secFoldServe, initialTaxPerSegmentSec = taxSeed)
-        val analyticK = graft.streaming.FoldPolicy
-          .steadyStateTrigger(secFoldServe, taxSeed)
-        val pUnfolded = scala.collection.mutable.ArrayBuffer[(Int, java.nio.file.Path)]()
-        val dUnfolded = scala.collection.mutable.ArrayBuffer[(Int, java.nio.file.Path)]()
-        val foldAt = scala.collection.mutable.ArrayBuffer[Int]()
-        val foldSecs = scala.collection.mutable.ArrayBuffer[Double]()
-        var polTxn = 20L
-        var curSeg = 0
-        val folder = new graft.streaming.PolicyFolder(policy, () => {
-          val (_, fs) = timeIt(Retrieval.foldSegments(spark, idxP,
-            pUnfolded.toSeq, dUnfolded.toSeq, polTxn))
-          polTxn += 1
-          pUnfolded.clear(); dUnfolded.clear()
-          foldAt += curSeg
-          foldSecs += fs
-        })
-        def serveP(): Double = timeIt(
-          Retrieval.serveWithSegments(spark, idxP, pUnfolded.toSeq.map(_._2),
-            dUnfolded.toSeq.map(_._2), qterms)
-            .write.mode("overwrite").format("noop").save())._2
-        val base0 = serveP() // zero-segment baseline on THIS index
-        val polServeSecs = (0 until segN).map { k =>
-          curSeg = k + 1
-          pUnfolded += (k -> pPol(k)); dUnfolded += (k -> dPol(k))
-          folder.onSegment()
-          val sec = serveP()
-          folder.onServe(Some(sec), base0)
-          sec
-        }
-        folder.finish()
-        println(f"[maintain] $tag policy-loop: analytic_k=$analyticK " +
-          s"fold_at=${foldAt.mkString(",")} " +
-          f"realized=${folder.realizedFolds} seed_fold=$secFoldServe%.2f " +
-          f"seed_tax=$taxSeed%.3f")
-        // ---- TIERED policy loop (r16): same serve-interleaved cadence
-        // through the two-level policy — mid-epoch folds go to flat-
-        // priced RUNS (O(segments since last run fold)), the
+        // ---- TIERED policy loop (r16): the serve-interleaved cadence
+        // the gate entries never see — one serve per landed segment, on
+        // the same Epoch the maintain loops run: mid-epoch folds go to
+        // flat-priced RUNS (O(segments since last run fold)), the
         // O(standing) base rewrite is paid only when the run tax has
         // accrued to it or at epoch close. The artifact claim: per-fold
-        // mid-epoch cost stays FLAT across the epoch, vs the
-        // single-level loop's fold cost growing with every fold
-        // (MAINTAIN_r15 sf1: 8.2 → 27.6 s within one epoch).
-        val idxT = Retrieval.buildMaintained(spark, wd.resolve("bm25tier"),
-          docs.filter(!Retrieval.isArrival(col("doc_id"))))
-        val tierSegDir = wd.resolve("bm25tiersegs")
-        java.nio.file.Files.createDirectories(tierSegDir)
-        val pTier = (0 until segN).map { k =>
-          Retrieval.writeSegment(tierSegDir.resolve("p"), k.toLong,
-            Retrieval.postingsOf(arrSeg.filter(col("__seg") === k).drop("__seg")))
-        }
-        val dTier = (0 until segN).map { k =>
-          Retrieval.writeSegment(tierSegDir.resolve("d"), k.toLong,
-            Retrieval.doclensOf(arrSeg.filter(col("__seg") === k).drop("__seg")))
-        }
-        val pRuns = scala.collection.mutable.ArrayBuffer[(Seq[Int], java.nio.file.Path)]()
-        val dRuns = scala.collection.mutable.ArrayBuffer[(Seq[Int], java.nio.file.Path)]()
-        val pLoose = scala.collection.mutable.ArrayBuffer[(Int, java.nio.file.Path)]()
-        val dLoose = scala.collection.mutable.ArrayBuffer[(Int, java.nio.file.Path)]()
-        val tFoldLevel = scala.collection.mutable.ArrayBuffer[String]()
-        val tFoldAt = scala.collection.mutable.ArrayBuffer[Int]()
-        val tFoldSecs = scala.collection.mutable.ArrayBuffer[Double]()
-        var runSeqT = 0
-        var tierTxn = 40L
-        var curSegT = 0
-        // taxSeed is a per-SEGMENT serve slope, but the tiered policy
-        // prices per FILE and this loop's segments are multi-file:
-        // divide by the tier segments' average files-per-segment so the
-        // seed is in the right unit (r17 ADVICE; the EWMA recalibrates
-        // from the first observed serve either way)
-        val tierSegFiles = (pTier ++ dTier)
-          .map(graft.streaming.LsmFold.parquetFiles).sum
-        val filesPerSeg = math.max(1.0,
-          tierSegFiles.toDouble / math.max(1, pTier.size + dTier.size))
+        // mid-epoch cost stays FLAT across the epoch (the single-level
+        // loop's fold cost grew with every fold — MAINTAIN_r15 sf1:
+        // 8.2 → 27.6 s within one epoch).
         val tPolicy = new graft.streaming.TieredFoldPolicy(
           initialRunFoldCostSec = math.max(0.05, secSeg),
           initialBaseFoldCostSec = secFoldServe,
           initialTaxPerFileSec = taxSeed / filesPerSeg)
-        val tFolder = new graft.streaming.TieredPolicyFolder(tPolicy,
-          () => {
-            var newFiles = 0
-            val (_, fs) = timeIt {
-              if (pLoose.nonEmpty) {
-                val r = graft.streaming.LsmFold.mergeRun(spark,
-                  wd.resolve("bm25tierruns/p"), runSeqT, pLoose.toSeq)
-                pRuns += r
-                newFiles += graft.streaming.LsmFold.parquetFiles(r._2)
-              }
-              if (dLoose.nonEmpty) {
-                val r = graft.streaming.LsmFold.mergeRun(spark,
-                  wd.resolve("bm25tierruns/d"), runSeqT, dLoose.toSeq)
-                dRuns += r
-                newFiles += graft.streaming.LsmFold.parquetFiles(r._2)
-              }
-              runSeqT += 1
-              pLoose.clear(); dLoose.clear()
-            }
-            tFoldLevel += "run"; tFoldAt += curSegT; tFoldSecs += fs
-            newFiles
-          },
-          () => {
-            val (_, fs) = timeIt {
-              val pParts = pRuns.toSeq ++ pLoose.toSeq.map { case (k, p) => (Seq(k), p) }
-              val dParts = dRuns.toSeq ++ dLoose.toSeq.map { case (k, p) => (Seq(k), p) }
-              graft.streaming.LsmFold.foldToBase(spark, idxT.postings,
-                "bm25idx", pParts, tierTxn, merge = false)
-              graft.streaming.LsmFold.foldToBase(spark, idxT.doclens,
-                "bm25dl", dParts, tierTxn, merge = true)
-              tierTxn += 1
-              pRuns.clear(); dRuns.clear(); pLoose.clear(); dLoose.clear()
-            }
-            tFoldLevel += "base"; tFoldAt += curSegT; tFoldSecs += fs
-          })
-        def serveT(): Double = timeIt(
-          Retrieval.serveWithSegments(spark, idxT,
-            (pRuns.map(_._2) ++ pLoose.map(_._2)).toSeq,
-            (dRuns.map(_._2) ++ dLoose.map(_._2)).toSeq, qterms)
-            .write.mode("overwrite").format("noop").save())._2
-        val base0T = serveT()
-        val tServeSecs = (0 until segN).map { k =>
-          curSegT = k + 1
-          pLoose += (k -> pTier(k)); dLoose += (k -> dTier(k))
-          tFolder.onSegment(math.max(1,
-            graft.streaming.LsmFold.parquetFiles(pTier(k)) +
-              graft.streaming.LsmFold.parquetFiles(dTier(k))))
-          val sec = serveT()
-          tFolder.onServe(Some(sec), base0T)
-          sec
+        val (tServeSecs, tFolds) = graft.streaming.Epoch.run(spark,
+            "graft_maintprobe_tier", tPolicy) { ep =>
+          val base = docs.filter(!Retrieval.isArrival(col("doc_id")))
+          val idxT = Retrieval.maintainedIndex(spark, ep.dir.resolve("idx"), base)
+          val dl = ep.table(idxT.doclens, "bm25dl", merge = true)
+          val post = ep.table(idxT.postings, "bm25idx", merge = false,
+            Retrieval.pairMarkerOf(idxT))
+          Retrieval.seedMaintained(spark, idxT, base)
+          def serveT(): Double = timeIt(
+            Retrieval.serveWithSegments(spark, idxT, ep.leaves(post),
+              ep.leaves(dl), qterms)
+              .write.mode("overwrite").format("noop").save())._2
+          val base0T = serveT()
+          val secs = (0 until segN).map { k =>
+            val batch = arrSeg.filter(col("__seg") === k).drop("__seg")
+            ep.land(post, k, Retrieval.postingsOf(batch))
+            ep.land(dl, k, Retrieval.doclensOf(batch))
+            val sec = serveT()
+            ep.onServe(Some(sec), base0T)
+            sec
+          }
+          ep.finish()
+          (secs, ep.folds)
         }
-        tFolder.finish()
-        val runSecs = tFoldLevel.zip(tFoldSecs).filter(_._1 == "run").map(_._2)
-        println(f"[maintain] $tag tiered-loop: run_folds=${tFolder.realizedRunFolds} " +
-          f"base_folds=${tFolder.realizedBaseFolds} " +
-          s"fold_at=${tFoldAt.mkString(",")} levels=${tFoldLevel.mkString(",")} " +
-          s"fold_secs=${tFoldSecs.map(s3).mkString(",")}" +
+        val runSecs = tFolds.filter(_.level == "run").map(_.sec)
+        val tRunFolds = runSecs.size
+        val tBaseFolds = tFolds.size - tRunFolds
+        println(f"[maintain] $tag tiered-loop: run_folds=$tRunFolds " +
+          f"base_folds=$tBaseFolds " +
+          s"fold_at=${tFolds.map(_.atSegment).mkString(",")} " +
+          s"levels=${tFolds.map(_.level).mkString(",")} " +
+          s"fold_secs=${tFolds.map(f => s3(f.sec)).mkString(",")}" +
           (if (runSecs.nonEmpty)
             f" run_fold_max=${runSecs.max}%.2f run_fold_min=${runSecs.min}%.2f"
           else ""))
@@ -405,23 +298,15 @@ object MaintainProbe {
            |"serve_sec_post_fold":${s3(servePost)},
            |"postings_files_per_bucket_max_post_optimize":$maxFiles,
            |"segments_after_prune":$segsLeft,
-           |"policy_loop":{"seed_fold_cost_sec":${s3(secFoldServe)},
-           |"seed_tax_sec_per_segment":${s3(taxSeed)},
-           |"analytic_trigger":$analyticK,
-           |"fold_at_segments":[${foldAt.mkString(",")}],
-           |"fold_secs":[${foldSecs.map(s3).mkString(",")}],
-           |"total_fold_secs":${s3(foldSecs.sum)},
-           |"realized_folds":${folder.realizedFolds},
-           |"serve_secs":[${polServeSecs.map(s3).mkString(",")}]},
            |"policy_loop_tiered":{"seed_run_fold_sec":${s3(math.max(0.05, secSeg))},
            |"seed_base_fold_sec":${s3(secFoldServe)},
            |"seed_tax_sec_per_file":${s3(taxSeed)},
-           |"fold_at_segments":[${tFoldAt.mkString(",")}],
-           |"fold_levels":[${tFoldLevel.map(l => s""""$l"""").mkString(",")}],
-           |"fold_secs":[${tFoldSecs.map(s3).mkString(",")}],
-           |"total_fold_secs":${s3(tFoldSecs.sum)},
-           |"realized_run_folds":${tFolder.realizedRunFolds},
-           |"realized_base_folds":${tFolder.realizedBaseFolds},
+           |"fold_at_segments":[${tFolds.map(_.atSegment).mkString(",")}],
+           |"fold_levels":[${tFolds.map(f => s""""${f.level}"""").mkString(",")}],
+           |"fold_secs":[${tFolds.map(f => s3(f.sec)).mkString(",")}],
+           |"total_fold_secs":${s3(tFolds.map(_.sec).sum)},
+           |"realized_run_folds":$tRunFolds,
+           |"realized_base_folds":$tBaseFolds,
            |"serve_secs":[${tServeSecs.map(s3).mkString(",")}]}},
            |"ann":{"standing_rows":$standingV,"batch_rows":$batchVRows,
            |"buckets":$nbV,"touched_buckets":${touchedV.size},

@@ -978,90 +978,20 @@ object Dedup {
     val docs = documents(s, d)
     val batchDocs = docs.filter(isBatchDoc(col("doc_id")))
       .withColumn("sub_batch", subBatchOf(col("doc_id")))
-    val workDir = java.nio.file.Files.createTempDirectory("graft_dedupmaint")
-    try {
-      val cbase = minhashBaseOf(docs.filter(!isBatchDoc(col("doc_id"))))
-      val cb = foldedBands(cbase)
-      val nb = LayoutRegistry.derivedBuckets(s, cb.count())
-      val bandsPt = new graft.streaming.PartitionedTable(
-        workDir.resolve("bands"), "band_key", nb)
-      val setsPt = new graft.streaming.PartitionedTable(
-        workDir.resolve("sets"), "doc_id", math.max(4, nb / 4))
-      // fenced single-writer lease over build + fold + OPTIMIZE (r11
-      // VERDICT item 8) — a stolen lease is refused at the commit point
-      graft.streaming.Replication.withWriterLease(workDir) { lease =>
-      bandsPt.withFence(() => lease.check(), Some(lease.generation))
-      setsPt.withFence(() => lease.check(), Some(lease.generation))
-      try {
-      bandsPt.appendInto(s, cb, Some("admbands" -> 0L))
-      setsPt.mergeInto(s, cbase.select(col("doc_id"), col("shs")),
+    val cbase = minhashBaseOf(docs.filter(!isBatchDoc(col("doc_id"))))
+    val cb = foldedBands(cbase)
+    val nb = LayoutRegistry.derivedBuckets(s, cb.count())
+    // admissions land as per-trigger O(batch) segments (band keys are
+    // uniform — MAINTAIN_r10.json) that the NEXT sub-batches read
+    graft.streaming.Epoch.run(s, "graft_dedupmaint") { ep =>
+      val bands = ep.table(new graft.streaming.PartitionedTable(
+        ep.dir.resolve("bands"), "band_key", nb), "admbands", merge = false)
+      val sets = ep.table(new graft.streaming.PartitionedTable(
+        ep.dir.resolve("sets"), "doc_id", math.max(4, nb / 4)), "admsets", merge = true)
+      bands.pt.appendInto(s, cb, Some("admbands" -> 0L))
+      sets.pt.mergeInto(s, cbase.select(col("doc_id"), col("shs")),
         Some("admsets" -> 0L))
-      // per-trigger O(batch) SEGMENT writes: band keys are uniform, so
-      // merging every admission into the bucketed table per trigger
-      // would rewrite the standing index per trigger (the measured
-      // flaw in MAINTAIN_r10.json). Admissions land as segments the
-      // NEXT sub-batches read (base ∪ segments with id < k — the
-      // strict-earlier filter also makes a replayed sub-batch see
-      // exactly the state it saw the first time), and one deferred
-      // fold + compaction lands them in the bucketed base.
-      val bSegDir = workDir.resolve("bsegs")
-      val sSegDir = workDir.resolve("ssegs")
-      java.nio.file.Files.createDirectories(bSegDir)
-      java.nio.file.Files.createDirectories(sSegDir)
-      val bandSegs = new graft.streaming.SubBatchState[String]
-      val setSegs = new graft.streaming.SubBatchState[String]
       val results = new graft.streaming.SubBatchState[DataFrame]
-      // fold cadence through the rent-or-buy policy (r15): this
-      // write-only admission epoch accrues no serve tax, so the only
-      // fold is the close fold — same cadence as pre-r15, now the
-      // policy's call; a serve-interleaved deployment folds mid-epoch
-      var foldTxn = 1L
-      // TIERED fold (r16): mid-epoch folds merge loose segments into
-      // flat-priced RUNS; the O(standing) base rewrite happens once at
-      // epoch close (or when run tax accrues to it). Base folds are
-      // replay-safe structurally: LsmFold records sub-batch ids as txn
-      // markers atomically with the commit and filters already-folded
-      // ids (FoldReplaySpec).
-      val bRunDir = workDir.resolve("bruns")
-      val sRunDir = workDir.resolve("sruns")
-      val bRuns = scala.collection.mutable.ArrayBuffer[(Seq[Int], java.nio.file.Path)]()
-      val sRuns = scala.collection.mutable.ArrayBuffer[(Seq[Int], java.nio.file.Path)]()
-      var runSeq = 0
-      def partsOf(st: graft.streaming.SubBatchState[String]): Seq[(Int, java.nio.file.Path)] =
-        st.entries.map { case (k, p) => k -> java.nio.file.Paths.get(p) }
-      val folder = new graft.streaming.TieredPolicyFolder(
-        graft.streaming.TieredPolicyFolder.defaultPolicy(),
-        () => { // fold-to-RUN; returns the new runs' file count (the
-          // policy's per-file leaf pricing, r17)
-          val be = partsOf(bandSegs); val se = partsOf(setSegs)
-          var newFiles = 0
-          if (be.nonEmpty) {
-            val r = graft.streaming.LsmFold.mergeRun(s, bRunDir, runSeq, be)
-            bRuns += r
-            newFiles += graft.streaming.LsmFold.parquetFiles(r._2)
-            graft.streaming.LsmFold.prune(be.map(_._2))
-          }
-          if (se.nonEmpty) {
-            val r = graft.streaming.LsmFold.mergeRun(s, sRunDir, runSeq, se)
-            sRuns += r
-            newFiles += graft.streaming.LsmFold.parquetFiles(r._2)
-            graft.streaming.LsmFold.prune(se.map(_._2))
-          }
-          runSeq += 1
-          bandSegs.clear(); setSegs.clear()
-          newFiles
-        },
-        () => { // fold-to-BASE
-          val bParts = bRuns.toSeq ++ partsOf(bandSegs).map { case (k, p) => (Seq(k), p) }
-          val sParts = sRuns.toSeq ++ partsOf(setSegs).map { case (k, p) => (Seq(k), p) }
-          graft.streaming.LsmFold.foldToBase(s, bandsPt, "admbands",
-            bParts, foldTxn, merge = false)
-          graft.streaming.LsmFold.foldToBase(s, setsPt, "admsets",
-            sParts, foldTxn, merge = true)
-          foldTxn += 1
-          graft.streaming.LsmFold.prune(bParts.map(_._2) ++ sParts.map(_._2))
-          bRuns.clear(); sRuns.clear(); bandSegs.clear(); setSegs.clear()
-        })
       graft.streaming.SubBatchState.streamSubBatches(s, batchDocs) { (k, batch) =>
         // a replay of a sub-batch a mid-epoch fold already landed
         // (base markers or a live run) skips the VERDICT recompute:
@@ -1073,66 +1003,31 @@ object Dedup {
         // this in-process harness), and recomputing it against a
         // corpus that now CONTAINS its own admitted rows would
         // mis-flag them as duplicates of themselves. The landing
-        // guard is PER TABLE (r16 ADVICE): the fold commits bands
-        // then sets, so a restart between the two commits leaves
-        // bands folded and sets not — the replay re-lands ONLY the
-        // missing table's segment, reconstructing the admitted set
-        // from the table that DID land (admitted docs are exactly
-        // the sub-batch docs present in it).
-        val bFresh = bandsPt.lastTxn(s"admbands.seg$k").isEmpty &&
-          !bRuns.exists(_._1.contains(k))
-        val sFresh = setsPt.lastTxn(s"admsets.seg$k").isEmpty &&
-          !sRuns.exists(_._1.contains(k))
+        // guard is per table: a restart between the close fold's two
+        // commits leaves bands folded and sets not — the replay
+        // re-lands ONLY the missing table's segment, reconstructing
+        // the admitted set from the table that DID land (admitted
+        // docs are exactly the sub-batch docs present in it).
+        val bFresh = ep.fresh(bands, k)
+        val sFresh = ep.fresh(sets, k)
         if (bFresh || sFresh) {
           val base = minhashBaseOf(batch).localCheckpoint(true)
-          val admitted = if (bFresh && sFresh) {
-            // fully fresh on BOTH tables: the normal verdict path (this
-            // includes a same-process replay whose segments are still
-            // loose — the strict-earlier corpus makes the recompute see
-            // exactly the state it saw the first time, and the segment
-            // overwrite is idempotent). The admission corpus is base ∪
-            // RUNS ∪ strictly-earlier loose segments: a mid-epoch run
-            // fold moves earlier sub-batches out of the segment store
-            // without landing them in the base, and they must stay
-            // visible (runs only ever hold earlier sub-batches — a
-            // fresh k is never in a run by the landing guard above)
-            def corpus(pt: graft.streaming.PartitionedTable, earlier: Seq[String]) =
-              if (earlier.isEmpty) pt.read(s)
-              else pt.read(s).unionByName(s.read.parquet(earlier: _*))
-            admitSubBatch(k, base,
-              corpus(bandsPt, bRuns.toSeq.map(_._2.toString) ++ bandSegs.earlier(k)),
-              corpus(setsPt, sRuns.toSeq.map(_._2.toString) ++ setSegs.earlier(k)),
-              results)
-          } else {
-            val landed = if (bFresh) setsPt.read(s) else bandsPt.read(s)
-            base.select(col("doc_id"))
-              .join(landed.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-          }
-          val (bands, sets) = admittedRows(base, admitted)
-          def land(rows: DataFrame, dir: java.nio.file.Path,
-              segs: graft.streaming.SubBatchState[String]): Int = {
-            val seg = dir.resolve(f"seg$k%04d")
-            rows.write.mode("overwrite").parquet(seg.toString)
-            segs.put(k, seg.toString)
-            graft.streaming.LsmFold.parquetFiles(seg)
-          }
-          val files = (if (bFresh) land(bands, bSegDir, bandSegs) else 0) +
-            (if (sFresh) land(sets, sSegDir, setSegs) else 0)
-          folder.onSegment(math.max(1, files))
+          val admitted =
+            // fully fresh on both tables: the normal verdict path against
+            // base ∪ runs ∪ strictly-earlier segments — exactly the state
+            // a same-process replay saw the first time
+            if (bFresh && sFresh) admitSubBatch(k, base,
+              ep.unfolded(bands, before = k), ep.unfolded(sets, before = k), results)
+            else base.select(col("doc_id")).join(
+              (if (bFresh) sets else bands).pt.read(s).select(col("doc_id")).distinct(),
+              Seq("doc_id"), "left_semi")
+          val (bandRows, setRows) = admittedRows(base, admitted)
+          if (bFresh) ep.land(bands, k, bandRows)
+          if (sFresh) ep.land(sets, k, setRows)
         }
       }
-      // deferred OPTIMIZE: the policy's close fold lands the epoch's
-      // admissions in the bucketed base in one commit per table
-      folder.finish()
-      bandsPt.compact(s)
-      setsPt.compact(s)
+      ep.finish()
       verdicts(s, results)
-      // fence cleared in finally so an exception mid-scope can't leave
-      // it installed (Replication.catchUp's discipline)
-      } finally { bandsPt.clearFence(); setsPt.clearFence() }
-      }
-    } finally {
-      graft.streaming.PartitionedTable.deleteRecursively(workDir)
     }
   }
 

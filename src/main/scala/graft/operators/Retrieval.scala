@@ -410,24 +410,32 @@ object Retrieval {
   private[graft] def pairMarkerOf(idx: MaintainedIndex): Map[String, Long] =
     idx.doclens.snapshots.lastOption.map(PairMarker -> _).toMap
 
-  private[graft] def buildMaintained(s: SparkSession,
-      dir: java.nio.file.Path, base: DataFrame,
-      installFence: MaintainedIndex => Unit = _ => ()): MaintainedIndex = {
-    val p = postingsOf(base)
-    val nb = LayoutRegistry.derivedBuckets(s, p.count())
-    val idx = MaintainedIndex(
+  /** The empty maintained pair for `base`: postings bucketed by gram at
+    * a bucket count derived from the base's postings rows, doc lengths
+    * by doc_id. `seedMaintained` commits the base into it. */
+  private[graft] def maintainedIndex(s: SparkSession,
+      dir: java.nio.file.Path, base: DataFrame): MaintainedIndex = {
+    val nb = LayoutRegistry.derivedBuckets(s, postingsOf(base).count())
+    MaintainedIndex(
       new graft.streaming.PartitionedTable(dir.resolve("postings"), "g", nb),
       new graft.streaming.PartitionedTable(dir.resolve("doclens"), "doc_id",
         math.max(4, nb / 4)))
-    // fence BEFORE the seed commits: a lease stolen during the build
-    // window must refuse the build's own publishes too, not just the
-    // later fold/OPTIMIZE (the Similarity/Dedup maintain ordering)
-    installFence(idx)
-    // doclens first, postings second with the pair marker — every
-    // write to the two-table index follows this order (PairMarker)
+  }
+
+  /** Commit `base` as the pair's version 0: doclens first, postings
+    * second with the pair marker — every write to the two-table index
+    * follows this order (PairMarker). */
+  private[graft] def seedMaintained(s: SparkSession, idx: MaintainedIndex,
+      base: DataFrame): Unit = {
     idx.doclens.mergeInto(s, doclensOf(base), Some("bm25dl" -> 0L))
-    idx.postings.appendInto(s, p, Some("bm25idx" -> 0L),
+    idx.postings.appendInto(s, postingsOf(base), Some("bm25idx" -> 0L),
       alsoRecord = pairMarkerOf(idx))
+  }
+
+  private[graft] def buildMaintained(s: SparkSession,
+      dir: java.nio.file.Path, base: DataFrame): MaintainedIndex = {
+    val idx = maintainedIndex(s, dir, base)
+    seedMaintained(s, idx, base)
     idx
   }
 
@@ -539,17 +547,6 @@ object Retrieval {
     bm25Of(postings, totals, qterms)
   }
 
-  /** Age-out: delete segment dirs the epoch fold has landed in the
-    * bucketed base. The steady-state segment count is ZERO after each
-    * fold — segments exist only between folds, so the union read
-    * path's leaf count is bounded by one epoch's trigger count, never
-    * by table age. */
-  private[graft] def pruneSegments(segs: Seq[java.nio.file.Path]): Unit =
-    segs.distinct.foreach { p =>
-      if (java.nio.file.Files.exists(p))
-        graft.streaming.PartitionedTable.deleteRecursively(p)
-    }
-
   /** CONTINUOUS inverted-index maintenance — the write path
     * `stream_bm25_serve` takes as given: documents ARRIVE as a stream
     * of three sub-batches (one file per micro-batch — the §2h
@@ -573,131 +570,23 @@ object Retrieval {
     val docs = documents(s, d)
     val arrivals = docs.filter(isArrival(col("doc_id")))
       .withColumn("sub_batch", arrivalSubBatch(col("doc_id")))
-    val workDir = java.nio.file.Files.createTempDirectory("graft_bm25maint")
-    try {
-      // single-writer lease over the whole index-mutation scope (r11
-      // VERDICT item 8): the build, the per-epoch fold, and the
-      // OPTIMIZE commits are all fenced on the lease nonce + monotonic
-      // generation, so a maintainer whose lease is stolen mid-epoch is
-      // refused at the PUBLISH point (steal test: RetrievalSpec).
-      // buildMaintained installs the fence BEFORE its seed commits.
-      graft.streaming.Replication.withWriterLease(workDir) { lease =>
-      val idx = buildMaintained(s, workDir.resolve("idx"),
-        docs.filter(!isArrival(col("doc_id"))),
-        ix => {
-          ix.postings.withFence(() => lease.check(), Some(lease.generation))
-          ix.doclens.withFence(() => lease.check(), Some(lease.generation))
-          ()
-        })
-      try {
-      val pSegDir = workDir.resolve("psegs")
-      val dSegDir = workDir.resolve("dsegs")
-      java.nio.file.Files.createDirectories(pSegDir)
-      java.nio.file.Files.createDirectories(dSegDir)
-      val pSegs = new graft.streaming.SubBatchState[java.nio.file.Path]
-      val dSegs = new graft.streaming.SubBatchState[java.nio.file.Path]
-      // fold cadence is the TIERED rent-or-buy policy's call (r16):
-      // this write-only epoch accrues no serve tax, so the policy's
-      // only fold is the close fold straight to base — the
-      // pre-r15 once-per-epoch cadence as the policy's degenerate
-      // case. A serve-interleaved deployment of this same loop folds
-      // mid-epoch to flat-priced RUNS and pays the O(standing) base
-      // rewrite once per epoch (graft.MaintainProbe's tiered policy
-      // loop measures both levels).
-      val pRunDir = workDir.resolve("pruns")
-      val dRunDir = workDir.resolve("druns")
-      val pRuns = scala.collection.mutable.ArrayBuffer[(Seq[Int], java.nio.file.Path)]()
-      val dRuns = scala.collection.mutable.ArrayBuffer[(Seq[Int], java.nio.file.Path)]()
-      var runSeq = 0
-      var foldTxn = 1L
-      val folder = new graft.streaming.TieredPolicyFolder(
-        graft.streaming.TieredPolicyFolder.defaultPolicy(),
-        () => { // fold-to-RUN: merge loose segments, O(these rows);
-          // returns the new runs' file count — their serve-path
-          // weight under the policy's per-file pricing (r17)
-          val pe = pSegs.entries; val de = dSegs.entries
-          var newFiles = 0
-          if (pe.nonEmpty) {
-            val r = graft.streaming.LsmFold.mergeRun(s, pRunDir, runSeq, pe)
-            pRuns += r
-            newFiles += graft.streaming.LsmFold.parquetFiles(r._2)
-          }
-          if (de.nonEmpty) {
-            val r = graft.streaming.LsmFold.mergeRun(s, dRunDir, runSeq, de)
-            dRuns += r
-            newFiles += graft.streaming.LsmFold.parquetFiles(r._2)
-          }
-          runSeq += 1
-          pruneSegments(pe.map(_._2) ++ de.map(_._2))
-          pSegs.clear(); dSegs.clear()
-          newFiles
-        },
-        () => { // fold-to-BASE: runs + loose segments, one commit/table,
-          // in paired order (doclens first, postings + PairMarker)
-          val pParts = pRuns.toSeq ++
-            pSegs.entries.map { case (k, p) => (Seq(k), p) }
-          val dParts = dRuns.toSeq ++
-            dSegs.entries.map { case (k, p) => (Seq(k), p) }
-          foldPaired(s, idx, pParts, dParts, foldTxn)
-          foldTxn += 1
-          // age-out: folded parts are dead — the stores only ever
-          // hold UNFOLDED parts, so the union read path shrinks
-          // back to the bucketed base after every base fold
-          pruneSegments(pParts.map(_._2) ++ dParts.map(_._2))
-          pRuns.clear(); dRuns.clear(); pSegs.clear(); dSegs.clear()
-        })
-      // per-trigger work is an O(batch) SEGMENT write (gram keys are
-      // uniform — a bucketed merge here would rewrite the whole
-      // standing index every trigger, the measured flaw in
-      // MAINTAIN_r10.json); a re-delivered micro-batch overwrites its
-      // own segment, so replays are idempotent
+    val base = docs.filter(!isArrival(col("doc_id")))
+    graft.streaming.Epoch.run(s, "graft_bm25maint") { ep =>
+      val idx = maintainedIndex(s, ep.dir.resolve("idx"), base)
+      // registered (and so folded and compacted) doclens first, postings
+      // second re-stamping PairMarker; fenced before the seed commits
+      val dl = ep.table(idx.doclens, "bm25dl", merge = true)
+      val post = ep.table(idx.postings, "bm25idx", merge = false, pairMarkerOf(idx))
+      seedMaintained(s, idx, base)
+      // per-trigger O(batch) segment writes (gram keys are uniform — a
+      // bucketed merge here would rewrite the whole standing index
+      // every trigger, the measured flaw in MAINTAIN_r10.json)
       graft.streaming.SubBatchState.streamSubBatches(s, arrivals) { (k, batch) =>
-        // a replay of a sub-batch a mid-epoch fold already landed
-        // (to base — structural txn markers — or into a live run)
-        // must NOT re-enter the segment store. Guarded PER TABLE
-        // (r16 ADVICE): a restart between a fold's two commits
-        // leaves one table folded and the other not — the
-        // replayed sub-batch then re-lands ONLY the missing
-        // table's segment (the folded table's foldToBase would
-        // refuse a re-land anyway; not re-entering it also keeps
-        // runs pure, the LsmFold mixed-part invariant)
-        val pFresh = idx.postings.lastTxn(s"bm25idx.seg$k").isEmpty &&
-          !pRuns.exists(_._1.contains(k))
-        val dFresh = idx.doclens.lastTxn(s"bm25dl.seg$k").isEmpty &&
-          !dRuns.exists(_._1.contains(k))
-        if (pFresh || dFresh) {
-          var segFiles = 0
-          if (pFresh) {
-            val sp = writeSegment(pSegDir, k.toLong, postingsOf(batch))
-            pSegs.put(k, sp)
-            segFiles += graft.streaming.LsmFold.parquetFiles(sp)
-          }
-          if (dFresh) {
-            val sd = writeSegment(dSegDir, k.toLong, doclensOf(batch))
-            dSegs.put(k, sd)
-            segFiles += graft.streaming.LsmFold.parquetFiles(sd)
-          }
-          folder.onSegment(math.max(1, segFiles))
-        }
+        if (ep.fresh(post, k)) ep.land(post, k, postingsOf(batch))
+        if (ep.fresh(dl, k)) ep.land(dl, k, doclensOf(batch))
       }
-      // the deferred OPTIMIZE: the policy's close fold lands all
-      // remaining segments in the bucketed base (the per-epoch
-      // O(standing) rewrite, amortized over every batch the epoch
-      // delivered), then file compaction
-      folder.finish()
-      // compaction in the same paired order: the doclens compact makes
-      // a new (physically identical) snapshot, and the postings
-      // compact re-stamps PairMarker to it — keeping the pair a
-      // session resolves inside the vacuum horizon's youngest commits
-      idx.doclens.compact(s)
-      idx.postings.compact(s, alsoRecord = pairMarkerOf(idx))
+      ep.finish()
       serveMaintained(s, idx, queryGramsOf(docs)).localCheckpoint(true)
-      // the fence dies with the lease scope, exception or not — the
-      // finally matches Replication.catchUp's discipline
-      } finally { idx.postings.clearFence(); idx.doclens.clearFence() }
-      }
-    } finally {
-      graft.streaming.PartitionedTable.deleteRecursively(workDir)
     }
   }
 

@@ -255,13 +255,12 @@ final class MaintainedAnnServeSession private[operators] (
 
   /** Poll-style refresh trigger: re-pin only if the head moved.
     * Returns true when a refresh happened. A maintain loop that
-    * exposes its fold commits (e.g. TieredPolicyFolder's fold
-    * closures) calls this right after each commit — the
-    * fold-notification hook; a decoupled serve fleet polls it between
-    * batches instead. Either way the spec'd bound holds: a session
-    * that triggers this on every fold signal never serves more than
-    * one fold behind the head, and never ages past the vacuum
-    * horizon (ServeSessionSpec). */
+    * exposes its fold commits (e.g. an Epoch's folds) calls this right
+    * after each commit — the fold-notification hook; a decoupled serve
+    * fleet polls it between batches instead. Either way the spec'd
+    * bound holds: a session that triggers this on every fold signal
+    * never serves more than one fold behind the head, and never ages
+    * past the vacuum horizon (ServeSessionSpec). */
   def refreshIfStale(): Boolean = {
     val before = snap
     refresh() != before

@@ -1191,92 +1191,25 @@ object Similarity {
     // FROZEN: trained on the standing base (k from the base size)
     val (supers, groups) = twoLevelIndexOf(collectCentroidsOf(e.filter(!isArr)))
     def cellOf(v: Column): Column = graft.functions.ImiCell2.cell(v, supers, groups)
-    val workDir = java.nio.file.Files.createTempDirectory("graft_annmaint")
-    try {
-      val arrivals = e.filter(isArr)
-        .withColumn("sub_batch", Retrieval.arrivalSubBatch(col("vec_id")))
-      val p0 = int8Rows(e.filter(!isArr), cellOf)
-      val nb = LayoutRegistry.derivedBuckets(s, p0.count())
-      val pt = new graft.streaming.PartitionedTable(
-        workDir.resolve("idx"), "cell", nb)
-      // fenced single-writer lease over build + fold + OPTIMIZE (r11
-      // VERDICT item 8) — a stolen lease is refused at the commit point
-      graft.streaming.Replication.withWriterLease(workDir) { lease =>
-      pt.withFence(() => lease.check(), Some(lease.generation))
-      try {
-      pt.appendInto(s, p0, Some("annidx" -> 0L))
-      // per-trigger O(batch) segment writes (a batch's cells span most
-      // buckets, so a bucketed merge per trigger would rewrite the
-      // standing index every trigger — MAINTAIN_r10.json); deferred
-      // fold + compaction after catch-up. Segment named by sub-batch ⇒
-      // replays overwrite in place, idempotent.
-      val segDir = workDir.resolve("segs")
-      java.nio.file.Files.createDirectories(segDir)
-      val segs = new graft.streaming.SubBatchState[String]
-      // fold cadence through the TIERED rent-or-buy policy (r16):
-      // write-only epoch ⇒ the close fold (straight to base) is the
-      // only one, same cadence as pre-r15; a serve-interleaved
-      // deployment folds mid-epoch to flat-priced RUNS and pays the
-      // O(standing) base rewrite once per epoch. Folds are
-      // replay-safe structurally: LsmFold records sub-batch ids as
-      // txn markers atomically with the base commit and filters
-      // already-folded ids (FoldReplaySpec).
-      val runDir = workDir.resolve("runs")
-      val runs = scala.collection.mutable.ArrayBuffer[(Seq[Int], java.nio.file.Path)]()
-      var runSeq = 0
-      var foldTxn = 1L
-      def segParts: Seq[(Int, java.nio.file.Path)] =
-        segs.entries.map { case (k, p) => k -> java.nio.file.Paths.get(p) }
-      val folder = new graft.streaming.TieredPolicyFolder(
-        graft.streaming.TieredPolicyFolder.defaultPolicy(),
-        () => { // fold-to-RUN; returns the new run's file count (the
-          // policy's per-file leaf pricing, r17)
-          val se = segParts
-          var newFiles = 0
-          if (se.nonEmpty) {
-            val r = graft.streaming.LsmFold.mergeRun(s, runDir, runSeq, se)
-            runs += r
-            newFiles = graft.streaming.LsmFold.parquetFiles(r._2)
-            runSeq += 1
-            graft.streaming.LsmFold.prune(se.map(_._2))
-          }
-          segs.clear()
-          newFiles
-        },
-        () => { // fold-to-BASE
-          val parts = runs.toSeq ++ segParts.map { case (k, p) => (Seq(k), p) }
-          if (parts.nonEmpty) {
-            graft.streaming.LsmFold.foldToBase(s, pt, "annidx", parts,
-              foldTxn, merge = false)
-            foldTxn += 1
-            graft.streaming.LsmFold.prune(parts.map(_._2))
-          }
-          runs.clear(); segs.clear()
-        })
+    val arrivals = e.filter(isArr)
+      .withColumn("sub_batch", Retrieval.arrivalSubBatch(col("vec_id")))
+    val p0 = int8Rows(e.filter(!isArr), cellOf)
+    val nb = LayoutRegistry.derivedBuckets(s, p0.count())
+    // per-trigger O(batch) segment writes (a batch's cells span most
+    // buckets, so a bucketed merge per trigger would rewrite the
+    // standing index every trigger — MAINTAIN_r10.json); the epoch's
+    // close fold + compaction lands them in the base
+    graft.streaming.Epoch.run(s, "graft_annmaint") { ep =>
+      val idx = ep.table(new graft.streaming.PartitionedTable(
+        ep.dir.resolve("idx"), "cell", nb), "annidx", merge = false)
+      idx.pt.appendInto(s, p0, Some("annidx" -> 0L))
       graft.streaming.SubBatchState.streamSubBatches(s, arrivals) { (k, batch) =>
-        // an already-FOLDED sub-batch replay (base markers or a
-        // live run) skips the segment write (LsmFold's marker
-        // filter is the structural guard)
-        if (pt.lastTxn(s"annidx.seg$k").isEmpty &&
-            !runs.exists(_._1.contains(k))) {
-          val seg = segDir.resolve(f"seg$k%04d")
-          int8Rows(batch.drop("sub_batch"), cellOf)
-            .write.mode("overwrite").parquet(seg.toString)
-          segs.put(k, seg.toString)
-          folder.onSegment(
-            math.max(1, graft.streaming.LsmFold.parquetFiles(seg)))
-        }
+        if (ep.fresh(idx, k))
+          ep.land(idx, k, int8Rows(batch.drop("sub_batch"), cellOf))
       }
-      folder.finish()
-      pt.compact(s)
-      frozenInt8Serve(pt.read(s), int8Queries(queryBatch(e), Some(cellOf _)))
+      ep.finish()
+      frozenInt8Serve(idx.pt.read(s), int8Queries(queryBatch(e), Some(cellOf _)))
         .localCheckpoint(true)
-      // fence cleared in finally so an exception mid-scope can't leave
-      // it installed (Replication.catchUp's discipline)
-      } finally { pt.clearFence() }
-      }
-    } finally {
-      graft.streaming.PartitionedTable.deleteRecursively(workDir)
     }
   }
 

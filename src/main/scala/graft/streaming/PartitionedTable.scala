@@ -459,7 +459,7 @@ class PartitionedTable(val dir: Path, val keyCol: String, val nBuckets: Int) {
     * `<app>.seg<k>` marker per folded sub-batch, so "this sub-batch's
     * rows are in the base" and "the rows are in the base" can never
     * be observed apart, and a replayed already-folded sub-batch is
-    * refused STRUCTURALLY (Retrieval.foldSegments filters on the
+    * refused STRUCTURALLY (LsmFold.foldToBase filters on the
     * markers) instead of by loop discipline. */
   def mergeInto(spark: SparkSession, updates: DataFrame,
                 txn: Option[(String, Long)] = None,

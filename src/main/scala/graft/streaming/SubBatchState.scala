@@ -43,9 +43,8 @@ final class SubBatchState[V] {
   def earlier(k: Int): Seq[V] =
     m.asScala.toSeq.filter(_._1 < k).sortBy(_._1).map(_._2)
 
-  /** Drop all entries — called when a policy-triggered fold lands the
-    * tracked segments in the bucketed base, so the store only ever
-    * holds UNFOLDED segments (r15: FoldPolicy wiring). */
+  /** Drop all entries — called when an Epoch fold consumes the
+    * tracked segments, so the store only ever holds UNFOLDED ones. */
   def clear(): Unit = m.clear()
 }
 

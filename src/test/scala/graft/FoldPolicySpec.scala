@@ -1,11 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.FoldPolicy
+import graft.streaming.TieredFoldPolicy
 
-/** Pins the fold-cadence policy to the MAINTAIN_r13.json measurements:
-  * the rent-or-buy trigger lands where the measured serve-tax curve
-  * and fold cost say it should. */
+/** Pins the tiered fold-cadence policy: its seed estimate recovers the
+  * MAINTAIN_r13.json serve-tax slope, and its rent-or-buy triggers land
+  * where the frozen estimates say they should. The policy driven
+  * through a real epoch is EpochSpec. */
 class FoldPolicySpec extends AnyFunSuite {
 
   // MAINTAIN_r13.json sf0.1 bm25: serve 0.77 s @0 segs, 2.313 @8, 5.661 @32
@@ -14,129 +15,20 @@ class FoldPolicySpec extends AnyFunSuite {
   val curveSf1 = Seq(0 -> 1.123, 8 -> 2.793, 32 -> 5.715)
 
   test("tax estimate recovers the measured near-linear slope") {
-    val t01 = FoldPolicy.estimateTaxPerSegment(curveSf01)
+    val t01 = TieredFoldPolicy.estimateTaxPerSegment(curveSf01)
     assert(t01 > 0.13 && t01 < 0.17, s"sf0.1 slope $t01")
-    val t1 = FoldPolicy.estimateTaxPerSegment(curveSf1)
+    val t1 = TieredFoldPolicy.estimateTaxPerSegment(curveSf1)
     assert(t1 > 0.12 && t1 < 0.16, s"sf1 slope $t1")
-  }
-
-  test("steady-state trigger on the measured sf0.1 curve: fold at ~6 segments") {
-    // fold cost 2.563 s (epoch_fold_sec), tax ~0.150 s/segment/serve:
-    // accrued tax k(k+1)/2 * 0.150 crosses 2.563 at k=6 (3.15 s >= 2.563)
-    val tax = FoldPolicy.estimateTaxPerSegment(curveSf01)
-    val k = FoldPolicy.steadyStateTrigger(2.563, tax)
-    assert(k === 6, s"trigger $k")
-    // sf1: fold cost 7.75 s, tax ~0.138 -> trigger at k=11
-    val k1 = FoldPolicy.steadyStateTrigger(7.75,
-      FoldPolicy.estimateTaxPerSegment(curveSf1))
-    assert(k1 === 11, s"sf1 trigger $k1")
-  }
-
-  test("policy accrues tax only when serves happen (write-only epochs never fold)") {
-    val p = new FoldPolicy(2.563, 0.15)
-    (1 to 100).foreach(_ => p.onSegment())
-    assert(!p.shouldFold) // 100 segments, zero serves: no one paid a tax
-    assert(p.unfoldedSegments === 100)
-  }
-
-  test("serve-heavy epoch folds exactly at the rent-or-buy point") {
-    val p = new FoldPolicy(2.563, 0.15)
-    var folds = 0
-    for (_ <- 1 to 6) {
-      p.onSegment()
-      p.onServe() // one serve per segment interval
-      if (p.shouldFold) { folds += 1; p.onFold() }
-    }
-    assert(folds === 1)
-    assert(p.unfoldedSegments === 0) // reset after the fold
-  }
-
-  test("online estimates converge toward observed timings") {
-    val p = new FoldPolicy(2.563, 0.15, alpha = 0.5)
-    // observed serves imply a steeper tax (0.30 s/segment)
-    p.onSegment(); p.onSegment()
-    p.onServe(observedServeSec = Some(0.77 + 2 * 0.30), baselineServeSec = 0.77)
-    assert(p.estimatedTaxPerSegment > 0.15 && p.estimatedTaxPerSegment <= 0.30)
-    // observed folds imply a cheaper fold (1.0 s)
-    p.onFold(observedFoldSec = Some(1.0))
-    assert(p.estimatedFoldCost < 2.563 && p.estimatedFoldCost >= 1.0)
-    // steeper tax + cheaper fold => earlier trigger than the seed's 6
-    val k = FoldPolicy.steadyStateTrigger(
-      p.estimatedFoldCost, p.estimatedTaxPerSegment)
-    assert(k < 6, s"trigger $k")
-  }
-
-  test("PolicyFolder: write-only epoch through the wired folder = exactly one close fold (the gate loops' shape)") {
-    var folds = 0
-    val f = new graft.streaming.PolicyFolder(
-      graft.streaming.PolicyFolder.defaultPolicy(), () => folds += 1)
-    (1 to 32).foreach(_ => f.onSegment())
-    assert(folds === 0, "no serve paid a tax; nothing to amortize")
-    f.finish()
-    assert(folds === 1, "the close fold lands the epoch's segments")
-    assert(f.policy.unfoldedSegments === 0)
-    f.finish()
-    assert(folds === 1, "finish is idempotent when nothing is unfolded")
-  }
-
-  test("PolicyFolder: 1-serve-per-segment epoch first folds exactly at the analytic trigger") {
-    // the MAINTAIN-curve seed (fold 2.6 s, tax 0.15): the realized
-    // loop's FIRST fold must land at steadyStateTrigger — the pin the
-    // r14 verdict asked for; later folds use EWMA-updated estimates
-    val p = graft.streaming.PolicyFolder.defaultPolicy()
-    val expected = FoldPolicy.steadyStateTrigger(
-      p.estimatedFoldCost, p.estimatedTaxPerSegment)
-    assert(expected === 6)
-    var cur = 0
-    val foldAt = scala.collection.mutable.ArrayBuffer[Int]()
-    val f = new graft.streaming.PolicyFolder(p, () => foldAt += cur)
-    (1 to 32).foreach { k =>
-      cur = k
-      f.onSegment()
-      f.onServe() // unobserved serve: estimates stay at the seed
-    }
-    f.finish()
-    assert(foldAt.head === expected,
-      s"first realized fold at ${foldAt.head}, analytic $expected")
-    assert(f.realizedFolds === foldAt.size)
-    assert(f.realizedFolds >= 2, "a 32-segment serve-heavy epoch folds more than once")
-  }
-
-  test("raw policy under a fixed seed folds on the repeating analytic schedule") {
-    val p = new FoldPolicy(2.6, 0.15)
-    val foldAt = scala.collection.mutable.ArrayBuffer[Int]()
-    (1 to 32).foreach { k =>
-      p.onSegment(); p.onServe()
-      if (p.shouldFold) { foldAt += k; p.onFold(None) } // None: seed stays
-    }
-    assert(foldAt.toSeq === Seq(6, 12, 18, 24, 30))
   }
 
   test("tax estimate refuses a degenerate curve (all points at one segment count)") {
     // den=0 would otherwise yield NaN/Infinity silently (r14 ADVICE)
     intercept[IllegalArgumentException] {
-      FoldPolicy.estimateTaxPerSegment(Seq(8 -> 1.0, 8 -> 2.0))
+      TieredFoldPolicy.estimateTaxPerSegment(Seq(8 -> 1.0, 8 -> 2.0))
     }
   }
 
   // ---- TIERED policy (r16): run folds flat, base fold priced apart --
-
-  test("tiered: write-only epoch = exactly one close fold, straight to base (gate loops unchanged)") {
-    var runFolds = 0
-    var baseFolds = 0
-    val f = new graft.streaming.TieredPolicyFolder(
-      graft.streaming.TieredPolicyFolder.defaultPolicy(),
-      () => { runFolds += 1; 1 }, () => baseFolds += 1)
-    (1 to 32).foreach(_ => f.onSegment())
-    assert(runFolds === 0 && baseFolds === 0,
-      "no serve paid a tax; nothing to amortize at either level")
-    f.finish()
-    assert(runFolds === 0 && baseFolds === 1,
-      "the close fold lands everything in the base in one commit")
-    assert(f.policy.unfoldedLeaves === 0)
-    f.finish()
-    assert(baseFolds === 1, "finish is idempotent when nothing is unfolded")
-  }
 
   test("tiered: serve-interleaved epoch folds to cheap RUNS mid-epoch; the base fold waits for the RUN tax") {
     // frozen estimates (unobserved serves/folds would still EWMA — pass

@@ -43,6 +43,19 @@ class GraftSessionSpec extends AnyFunSuite {
     }
   }
 
+  test("the LSM epoch loop exists once: run lists and policy segments only in streaming.Epoch") {
+    // Epoch owns the per-table run lists and reports landed segments to
+    // the fold policy; either one anywhere else is a copy of the
+    // maintain loop coming back
+    val files = sources("src/main")
+    Seq("ArrayBuffer\\[\\(Seq\\[Int\\], (java\\.nio\\.file\\.)?Path\\)\\]",
+        "\\.onSegment\\(").foreach { p =>
+      val hits = codeHits(files, p)
+      assert(hits.nonEmpty && hits.forall(_.contains("streaming/Epoch.scala:")),
+        hits.mkString(s"$p: ", ", ", ""))
+    }
+  }
+
   test("every persisted-layout drop goes through LayoutRegistry: no file walk in the operators") {
     // LayoutRegistry.drop deletes through PartitionedTable.deleteRecursively;
     // a Files.walk in an operator is a private layout memo coming back

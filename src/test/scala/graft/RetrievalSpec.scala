@@ -202,7 +202,7 @@ class RetrievalSpec extends AnyFunSuite {
         dSegs.zipWithIndex.map(_.swap), 1L)
       idx.postings.compact(spark)
       idx.doclens.compact(spark)
-      Retrieval.pruneSegments(pSegs ++ dSegs)
+      graft.streaming.LsmFold.prune(pSegs ++ dSegs)
       // (b) steady state: the folded base alone answers identically…
       assert(served(Nil, Nil) === oneShot)
       // …with a bounded physical layout: ≤ 1 file per bucket…
