@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.Files
+import org.apache.spark.sql.SparkSession
+import org.json4s._
+import org.json4s.JsonDSL._
 
 /** Benchmark main (driver contract): runs the headline operator set on
   * `SPARK_GRAFT_SF_DIR` and prints exactly ONE JSON line
@@ -84,42 +86,20 @@ object Bench {
   private def maxRuns: Int =
     sys.env.getOrElse("SPARK_GRAFT_MAX_RUNS", "7").toInt
 
-  private def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
-
-  /** Median absolute deviation — the robust spread the medians ride. */
-  private def mad(xs: Seq[Double]): Double = {
-    val m = median(xs); median(xs.map(x => math.abs(x - m)))
-  }
-
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Probe.run() { h =>
+    val spark = h.spark
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession()
-    spark.sparkContext.setLogLevel("ERROR")
 
     // spill accounting (r11 VERDICT item 4 — the memory-pressure
-    // proof): stage-level memory/disk spill bytes, snapshotted around
-    // each query so a constrained-heap run documents WHERE the
-    // operators spill instead of asserting they don't. Listener events
-    // are async, so the bus is DRAINED before every snapshot
-    // (ListenerFlush) — per-query attribution is exact, not
-    // one-trailing-stage fuzzy.
-    val spillMem = new java.util.concurrent.atomic.AtomicLong
-    val spillDisk = new java.util.concurrent.atomic.AtomicLong
-    // scan-side accounting (r12 VERDICT item 6): bytes/records read
-    // from storage per query, so an I/O-bound step change (e.g. the
-    // join_bucketed sf5 ratio) is confirmed from the metrics instead
-    // of asserted from the plan
-    val inputBytes = new java.util.concurrent.atomic.AtomicLong
-    val inputRecs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        spillMem.addAndGet(sc.stageInfo.taskMetrics.memoryBytesSpilled)
-        spillDisk.addAndGet(sc.stageInfo.taskMetrics.diskBytesSpilled)
-        inputBytes.addAndGet(sc.stageInfo.taskMetrics.inputMetrics.bytesRead)
-        inputRecs.addAndGet(sc.stageInfo.taskMetrics.inputMetrics.recordsRead)
-      }
-    })
+    // proof): stage-level memory/disk spill bytes, read around each
+    // query so a constrained-heap run documents WHERE the operators
+    // spill instead of asserting they don't; scan-side accounting (r12
+    // VERDICT item 6): bytes/records read from storage per query, so an
+    // I/O-bound step change (e.g. the join_bucketed sf5 ratio) is
+    // confirmed from the metrics instead of asserted from the plan. The
+    // meter drains the listener bus before every reading, so per-query
+    // attribution is exact, not one-trailing-stage fuzzy.
+    val meter = new Probe.StageMeter(spark)
 
     // SPARK_GRAFT_ONLY (r16): resolved before the warmups so a
     // targeted single-query invocation skips the bucketed-table ETL
@@ -155,18 +135,18 @@ object Bench {
             df
           }))
 
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
-
     val runs = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
     val ablRuns = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
     val warmups = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val spills = scala.collection.mutable.LinkedHashMap[String, (Long, Long)]()
-    val inputs = scala.collection.mutable.LinkedHashMap[String, (Long, Long, Int)]()
+    val stages = scala.collection.mutable.LinkedHashMap[String, Probe.Stages]()
     def benchInto(out: scala.collection.mutable.LinkedHashMap[String, Seq[Double]])(
         name: String): Unit = {
       val fn = benchFns(name)
+      def sample(): Double = {
+        val t = Probe.timed(fn(spark, sfDir).write.mode("overwrite").format("noop").save())._2
+        cleanups.remove(name).foreach(_.apply())
+        t
+      }
       try {
         // one DISCARDED warmup run per query: the first execution pays
         // codegen compilation, class loading, and memoized-index
@@ -175,27 +155,15 @@ object Bench {
         // median. The warmup is recorded in BENCH_DETAIL (visible,
         // never silently dropped) but excluded from the median, so
         // the artifact reports steady-state.
-        warmups += name ->
-          time(fn(spark, sfDir).write.mode("overwrite").format("noop").save())
-        cleanups.remove(name).foreach(_.apply())
-        def sample(): Double = {
-          val t = time(fn(spark, sfDir).write.mode("overwrite").format("noop").save())
-          cleanups.remove(name).foreach(_.apply())
-          t
-        }
-        org.apache.spark.graftbridge.ListenerFlush.waitUntilEmpty(spark.sparkContext)
-        val (m0, d0) = (spillMem.get(), spillDisk.get())
-        val (b0, r0) = (inputBytes.get(), inputRecs.get())
+        warmups += name -> sample()
+        val before = meter.read()
         val base = (1 to runsPerQuery).map(_ => sample())
         // adaptive widening: a noisy query earns extra samples so its
         // median can actually resolve a cross-round delta
-        val spread = (base.max - base.min) / math.max(median(base), 1e-9)
+        val spread = (base.max - base.min) / math.max(Probe.median(base), 1e-9)
         out += name -> (if (spread <= SpreadThreshold || base.size >= maxRuns) base
           else base ++ (base.size until maxRuns).map(_ => sample()))
-        org.apache.spark.graftbridge.ListenerFlush.waitUntilEmpty(spark.sparkContext)
-        spills += name -> (spillMem.get() - m0, spillDisk.get() - d0)
-        inputs += name -> (inputBytes.get() - b0, inputRecs.get() - r0,
-          out(name).length)
+        stages += name -> (meter.read() - before)
       } catch { case _: Throwable =>
         cleanups.remove(name).foreach(_.apply())
         out += name -> Seq(-1.0)
@@ -223,52 +191,43 @@ object Bench {
     // uses the MEDIAN run.
     val ingestSamples =
       if (only.forall(_.contains("ingest_bulk")))
-        (1 to 3).map(_ => xmlIngestBench(spark))
+        (1 to 3).map(_ => xmlIngestBench(h))
       else Seq((0L, 0.0))
     val ingestRows = ingestSamples.head._1
-    val ingestSec = median(ingestSamples.map(_._2))
+    val ingestSec = Probe.median(ingestSamples.map(_._2))
     if (only.forall(_.contains("ingest_bulk")))
       runs += "ingest_bulk" -> ingestSamples.map(_._2)
-    val medians = runs.map { case (k, v) =>
-      k -> (if (v.exists(_ < 0)) -1.0 else median(v)) }
-
-    // Locale.ROOT pins the decimal separator: the default-locale f"%"
-    // interpolator would emit "1,234" on comma-decimal locales,
-    // breaking the contract line's JSON (r6 ADVICE).
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val ablMedians = ablRuns.map { case (k, v) =>
-      k -> (if (v.exists(_ < 0)) -1.0 else median(v)) }
-    val qs = medians.map { case (k, v) => s""""$k":${fmt(v)}""" }.mkString("{", ",", "}")
-    val as = ablMedians.map { case (k, v) => s""""$k":${fmt(v)}""" }.mkString("{", ",", "}")
-    val rs = (runs ++ ablRuns).map { case (k, v) =>
-      s""""$k":${v.map(fmt).mkString("[", ",", "]")}""" }.mkString("{", ",", "}")
-    val mads = (runs ++ ablRuns).collect { case (k, v) if !v.exists(_ < 0) =>
-      s""""$k":${fmt(mad(v))}""" }.mkString("{", ",", "}")
-    val ws = warmups.map { case (k, v) => s""""$k":${fmt(v)}""" }.mkString("{", ",", "}")
-    val total = medians.collect {
+    def medians(rs: Iterable[(String, Seq[Double])]): Seq[(String, Double)] =
+      rs.map { case (k, v) => k -> (if (v.exists(_ < 0)) -1.0 else Probe.median(v)) }.toSeq
+    def obj(kvs: Iterable[(String, JValue)]): JValue = JObject(kvs.toList)
+    val total = medians(runs).collect {
       case (k, v) if v >= 0 && k != "ingest_bulk" => v }.sum
     val rate = if (ingestSec > 0) (ingestRows / ingestSec).round else 0L
-    graft.operators.Cleanup.dropAll(spark)
-    val sp = spills.map { case (k, (m, dk)) =>
-      s""""$k":{"mem_spill_mb":${m / (1024 * 1024)},"disk_spill_mb":${dk / (1024 * 1024)}}""" }
-      .mkString("{", ",", "}")
+    val mb = 1024 * 1024
+    val spill = meter.read()
     // per-sample averages: the accumulated window covers the timed
-    // samples only (warmup excluded by the snapshot placement)
-    // divide bytes by run count BEFORE flooring to KB (flooring first
-    // zeroed any query reading < nRuns MB total — r13 ADVICE); KB
-    // resolution keeps small-tier I/O visible
-    val inp = inputs.map { case (k, (b, r, nRuns)) =>
-      s""""$k":{"read_kb_per_run":${b / math.max(1, nRuns) / 1024},""" +
-        s""""records_per_run":${r / math.max(1, nRuns)}}""" }
-      .mkString("{", ",", "}")
-    val heapMax = Runtime.getRuntime.maxMemory() / (1024 * 1024)
-    val detail = s"""{"runs":$rs,"mad":$mads,"warmup":$ws,""" +
-      s""""spread_threshold":$SpreadThreshold,"spills":$sp,"inputs":$inp,""" +
-      s""""total_mem_spill_mb":${spillMem.get() / (1024 * 1024)},""" +
-      s""""total_disk_spill_mb":${spillDisk.get() / (1024 * 1024)},""" +
-      s""""heap_max_mb":$heapMax,"ingest_rows":$ingestRows,"sf":"$sfDir"}"""
-    Files.writeString(java.nio.file.Paths.get("BENCH_DETAIL.json"), detail + "\n")
+    // samples only (warmup excluded by the reading placement); divide
+    // bytes by run count BEFORE flooring to KB (flooring first zeroed
+    // any query reading < nRuns MB total — r13 ADVICE); KB resolution
+    // keeps small-tier I/O visible
+    def perRun(k: String, st: Probe.Stages): (String, JValue) = {
+      val n = math.max(1, (runs ++ ablRuns)(k).length)
+      k -> (("read_kb_per_run" -> st.inputBytes / n / 1024) ~
+        ("records_per_run" -> st.inputRecords / n))
+    }
+    Probe.save("BENCH_DETAIL.json",
+      ("runs" -> obj((runs ++ ablRuns).map { case (k, v) => k -> JArray(v.map(Probe.num(_)).toList) })) ~
+      ("mad" -> obj((runs ++ ablRuns).collect {
+        case (k, v) if !v.exists(_ < 0) => k -> Probe.num(Probe.mad(v)) })) ~
+      ("warmup" -> obj(warmups.map { case (k, v) => k -> Probe.num(v) })) ~
+      ("spread_threshold" -> SpreadThreshold) ~
+      ("spills" -> obj(stages.map { case (k, st) =>
+        k -> (("mem_spill_mb" -> st.memSpillBytes / mb) ~ ("disk_spill_mb" -> st.diskSpillBytes / mb)) })) ~
+      ("inputs" -> obj(stages.map { case (k, st) => perRun(k, st) })) ~
+      ("total_mem_spill_mb" -> spill.memSpillBytes / mb) ~
+      ("total_disk_spill_mb" -> spill.diskSpillBytes / mb) ~
+      ("heap_max_mb" -> Runtime.getRuntime.maxMemory() / mb) ~
+      ("ingest_rows" -> ingestRows) ~ ("sf" -> sfDir))
     // headline error bar (r16 VERDICT item 7): the first number anyone
     // reads carries its own spread — `total_mad` is the sum of
     // per-query MADs (conservative: MADs are not additive, the sum
@@ -276,27 +235,24 @@ object Bench {
     // total delta inside ~3× the larger round's total_mad is run
     // noise, not a regression. Full per-sample detail: BENCH_DETAIL.
     val totalMad = runs.collect {
-      case (k, v) if !v.exists(_ < 0) && k != "ingest_bulk" => mad(v) }.sum
-    val headlineLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,""" +
-        s""""ablations":$as,"total_mad":${fmt(totalMad)},""" +
-        s""""ingest_rows_per_sec":$rate,"sf":"$sfDir"}"""
-    // the println goes through sbt's logger, which prefixes "[info] "
-    // and appends a "[success]" line — the driver's extractor missed it
-    // in BOTH r16 and r17 ("parsed": null). Write the exact same line
-    // to a file next to BENCH_DETAIL.json so the contract survives any
-    // log decoration (r17 VERDICT item 1).
-    Files.writeString(java.nio.file.Paths.get("BENCH_HEADLINE.json"),
-      headlineLine + "\n")
-    println(headlineLine)
-    spark.stop()
+      case (k, v) if !v.exists(_ < 0) && k != "ingest_bulk" => Probe.mad(v) }.sum
+    // the headline is the last stdout line (sbt's `run` forwards the
+    // fork's stdout undecorated); the same line goes to
+    // BENCH_HEADLINE.json next to BENCH_DETAIL.json
+    Probe.emit(
+      ("metric" -> "total") ~ ("value" -> Probe.num(total)) ~ ("unit" -> "sec") ~
+        ("queries" -> obj(medians(runs).map { case (k, v) => k -> Probe.num(v) })) ~
+        ("ablations" -> obj(medians(ablRuns).map { case (k, v) => k -> Probe.num(v) })) ~
+        ("total_mad" -> Probe.num(totalMad)) ~
+        ("ingest_rows_per_sec" -> rate) ~ ("sf" -> sfDir),
+      Some("BENCH_HEADLINE.json"))
   }
 
   /** Generate an OSM-shaped XML dump and measure scan→cast→tag-fold→
     * parquet-write wall time (the reference's whole EP1 pipeline). */
-  private def xmlIngestBench(spark: SparkSession, n: Int = 120000,
+  private def xmlIngestBench(h: Probe.Harness, n: Int = 120000,
       nFiles: Int = 8): (Long, Double) = {
-    val dir = Files.createTempDirectory("graft_bench_xml")
+    val dir = h.tempDir("graft_bench_xml")
     val per = n / nFiles
     (0 until nFiles).foreach { f =>
       val sb = new StringBuilder(per * 260)
@@ -317,11 +273,8 @@ object Bench {
       sb.append("</osm>\n")
       Files.writeString(dir.resolve(f"part$f%02d.osm.xml"), sb.toString)
     }
-    val out = dir.resolve("out").toString
-    val t0 = System.nanoTime()
-    val (rows, _) = graft.sources.BulkLoad.run(
-      spark, dir.toString + "/part*.osm.xml", out)
-    val sec = (System.nanoTime() - t0) / 1e9
+    val ((rows, _), sec) = Probe.timed(graft.sources.BulkLoad.run(
+      h.spark, dir.toString + "/part*.osm.xml", dir.resolve("out").toString))
     // 3 samples per bench run now (r15): don't accumulate temp trees
     graft.streaming.PartitionedTable.deleteRecursively(dir)
     (rows, sec)

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.JsonDSL._
+import graft.Probe.{median, num, timed}
 import graft.operators.BloomJoin
 import graft.functions.BloomMightContain
 
@@ -21,24 +23,15 @@ object BloomProbe {
       .filter(col("o_orderpriority") === "1-URGENT" && col("o_totalprice") > 150000.0)
       .select(col("o_orderkey"))
 
-  private def timed(f: => Unit): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
-
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted; s(s.length / 2)
-  }
-
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Probe.run() { h =>
+    val spark = h.spark
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val runs = args.lift(2).map(_.toInt).getOrElse(3)
-    val spark = GraftSession()
     // pin the shuffled shape the operator targets: at probe scale AQE
     // would broadcast the build side and there would be no probe-side
     // Exchange to cut — at 100 TB there is
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    spark.sparkContext.setLogLevel("ERROR")
 
     val probe = Tables.lineitem(spark, d)
     val build = sel(spark, d)
@@ -74,23 +67,18 @@ object BloomProbe {
     }
     // warm both paths once, then alternate
     plainAgg(); bloomAgg()
-    val tPlain = median((1 to runs).map(_ => timed(plainAgg())))
-    val tBloom = median((1 to runs).map(_ => timed(bloomAgg())))
-    val tBuild = median((1 to runs).map(_ =>
-      timed(BloomJoin.buildBloom(build, "o_orderkey", 0.01))))
+    def sec(f: => Any): Double = median((1 to runs).map(_ => timed(f)._2))
+    val tPlain = sec(plainAgg())
+    val tBloom = sec(bloomAgg())
+    val tBuild = sec(BloomJoin.buildBloom(build, "o_orderkey", 0.01))
 
-    val doc =
-      s"""{"metric":"bloom_prefilter","sf_dir":"$d",""" +
-        s""""probe_rows":$probeRows,"build_keys":$buildKeys,""" +
-        s""""rows_into_exchange_plain":$probeRows,"rows_into_exchange_bloom":$passBloom,""" +
-        s""""true_semi_rows":$trueMatch,""" +
-        f""""measured_fpr":$fpr%.5f,"shuffle_cut_x":${probeRows.toDouble / math.max(passBloom, 1)}%.2f,""" +
-        s""""bloom_bytes":${bits.length},"exact_keyset_bytes":${buildKeys * 8},""" +
-        f""""sec_plain":$tPlain%.3f,"sec_bloom":$tBloom%.3f,""" +
-        f""""sec_bloom_build":$tBuild%.3f,"runs":$runs}"""
-    println(doc)
-    args.lift(1).foreach(f =>
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(f), doc + "\n"))
-    spark.stop()
+    Probe.emit(("metric" -> "bloom_prefilter") ~ ("sf_dir" -> d) ~
+      ("probe_rows" -> probeRows) ~ ("build_keys" -> buildKeys) ~
+      ("rows_into_exchange_plain" -> probeRows) ~ ("rows_into_exchange_bloom" -> passBloom) ~
+      ("true_semi_rows" -> trueMatch) ~ ("measured_fpr" -> num(fpr, 5)) ~
+      ("shuffle_cut_x" -> num(probeRows.toDouble / math.max(passBloom, 1), 2)) ~
+      ("bloom_bytes" -> bits.length) ~ ("exact_keyset_bytes" -> buildKeys * 8) ~
+      ("sec_plain" -> num(tPlain)) ~ ("sec_bloom" -> num(tBloom)) ~
+      ("sec_bloom_build" -> num(tBuild)) ~ ("runs" -> runs), args.lift(1))
   }
 }

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.JsonDSL._
+import graft.Probe.{num, timed}
 
 /** Measures the ONE iterative operator's scale story with numbers
   * instead of the pattern argument (r11 VERDICT item 5):
@@ -18,16 +21,12 @@ import org.apache.spark.sql.functions._
   */
 object ComponentsProbe {
 
-  private def s3(x: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
-
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Probe.run() { h =>
+    val spark = h.spark
     val out = args.headOption.getOrElse("COMPONENTS_r12.json")
     val tiers = if (args.length > 1) args.drop(1).toSeq
       else Seq("/root/testdata/sf0.1", "/root/repo/testdata-local/sf1",
         "/root/repo/testdata-local5/sf5")
-    val spark = GraftSession()
-    spark.sparkContext.setLogLevel("ERROR")
     import graft.operators.Dedup
 
     val rows = tiers.map { d =>
@@ -38,25 +37,22 @@ object ComponentsProbe {
         .select(col("doc_a"), col("doc_b")).localCheckpoint(true)
       val nEdges = pairs.count()
       val rounds = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Double)]
-      val t0 = System.nanoTime()
-      val comps = Dedup.dedupComponentsOf(pairs,
+      val (comps, totalSec) = timed(Dedup.dedupComponentsOf(pairs,
         (r, changed, sec) => rounds += ((r, changed, sec)))
-        .localCheckpoint(true)
-      val totalSec = (System.nanoTime() - t0) / 1e9
+        .localCheckpoint(true))
       val nV = comps.count()
       val census = comps.groupBy(col("component")).agg(count(lit(1)).as("sz"))
         .agg(count(lit(1)).as("n_comp"), max(col("sz")).as("max_sz"))
         .head()
       println(f"[components] $tag V=$nV%,d E=$nEdges%,d rounds=${rounds.size} " +
         f"total=$totalSec%.2f s comps=${census.getLong(0)}%,d max=${census.getLong(1)} " +
-        s"changed=${rounds.map(_._2).mkString(",")} " +
-        s"sec=${rounds.map(t => s3(t._3)).mkString(",")}")
-      s""""$tag":{"vertices":$nV,"edges":$nEdges,"rounds":${rounds.size},
-         |"total_sec":${s3(totalSec)},
-         |"changed_by_round":[${rounds.map(_._2).mkString(",")}],
-         |"sec_by_round":[${rounds.map(t => s3(t._3)).mkString(",")}],
-         |"n_components":${census.getLong(0)},
-         |"max_component_size":${census.getLong(1)}}""".stripMargin.replace("\n", "")
+        s"changed=${rounds.map(_._2).mkString(",")}")
+      tag -> (("vertices" -> nV) ~ ("edges" -> nEdges) ~ ("rounds" -> rounds.size) ~
+        ("total_sec" -> num(totalSec)) ~
+        ("changed_by_round" -> rounds.map(_._2)) ~
+        ("sec_by_round" -> rounds.map(t => num(t._3))) ~
+        ("n_components" -> census.getLong(0)) ~
+        ("max_component_size" -> census.getLong(1)))
     }
     // ---- planted-chain stress: the lineage-cut evidence --------------
     // The production graph's components are shallow (diameter <= 2 at
@@ -77,18 +73,15 @@ object ComponentsProbe {
     println(f"[components] chain L=$chainL rounds=${chainRounds.size} " +
       f"first=${secs.head}%.3f last=${secs.last}%.3f " +
       f"max/min=${secs.max / secs.min}%.2f")
-    val chainJson = s""""planted_chain":{"length":$chainL,
-       |"rounds":${chainRounds.size},
-       |"sec_by_round":[${secs.map(s3).mkString(",")}],
-       |"sec_first":${s3(secs.head)},"sec_last":${s3(secs.last)}}""".stripMargin
-      .replace("\n", "")
-    val json = s"""{"metric":"components_convergence",
-       |"note":"hash-min label propagation over the verified LSH pair graph: rounds bounded by component diameter (changed-label counts decay to 0), per-round seconds flat because localCheckpoint cuts lineage each round - round N never replans rounds 1..N-1; the planted chain forces diameter-many rounds to show the flatness over a long loop",
-       |$chainJson,
-       |"tiers":{${rows.mkString(",")}}}""".stripMargin.replace("\n", "")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
-    println(json)
-    graft.operators.Cleanup.dropAll(spark)
-    spark.stop()
+    Probe.emit(("metric" -> "components_convergence") ~
+      ("note" -> ("hash-min label propagation over the verified LSH pair graph: rounds " +
+        "bounded by component diameter (changed-label counts decay to 0), per-round " +
+        "seconds flat because localCheckpoint cuts lineage each round - round N never " +
+        "replans rounds 1..N-1; the planted chain forces diameter-many rounds to show " +
+        "the flatness over a long loop")) ~
+      ("planted_chain" -> (("length" -> chainL) ~ ("rounds" -> chainRounds.size) ~
+        ("sec_by_round" -> secs.map(num(_))) ~
+        ("sec_first" -> num(secs.head)) ~ ("sec_last" -> num(secs.last)))) ~
+      ("tiers" -> JObject(rows.toList)), Some(out))
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import org.json4s.JsonDSL._
+import graft.Probe.{num, timed}
 
 /** GB-scale ingest soak (round-8 VERDICT item 6): generates a
   * reference-shaped multi-file, multi-stream `.osm.bz2` changeset dump
@@ -119,86 +121,61 @@ object IngestSoak {
 
   def main(args: Array[String]): Unit = {
     startHeapSampler()
-    val n = args.headOption.map(_.toLong).getOrElse(4000000L)
-    val spark = GraftSession()
-    // pin splits below the per-file compressed size so the bz2
-    // BYBLOCK splittable path engages inside each file too — on a
-    // real multi-GB dump the 128 MB default does this by itself
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "2m")
-    spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
+    Probe.run() { h =>
+      val spark = h.spark
+      val n = args.headOption.map(_.toLong).getOrElse(4000000L)
+      // pin splits below the per-file compressed size so the bz2
+      // BYBLOCK splittable path engages inside each file too — on a
+      // real multi-GB dump the 128 MB default does this by itself
+      spark.conf.set("spark.sql.files.maxPartitionBytes", "2m")
+      import spark.implicits._
 
-    val root = Files.createTempDirectory("graft_soak")
-    val dumpDir = root.resolve("dump")
-    val db = root.resolve("db")
+      // the dump + warehouse are multi-GB: deleted at teardown
+      val root = h.tempDir("graft_soak")
+      val dumpDir = root.resolve("dump")
+      val db = root.resolve("db")
 
-    // -- generate the dump (parallel, not timed as ingest) -------------
-    val per = n / NFiles
-    val dumpDirStr = dumpDir.toString // Path is not serializable
-    val tGen0 = System.nanoTime()
-    val sizes = spark.range(0, NFiles, 1, NFiles).map { f =>
-      val lo = f * per
-      val hi = if (f == NFiles - 1) n else lo + per
-      writeDumpFile(
-        java.nio.file.Paths.get(dumpDirStr, f"part$f%02d.osm.bz2"), lo, hi)
-    }.collect()
-    val genSec = (System.nanoTime() - tGen0) / 1e9
-    val rawBytes = sizes.map(_._1).sum
-    val bz2Bytes = sizes.map(_._2).sum
+      // -- generate the dump (parallel, not timed as ingest) -----------
+      val per = n / NFiles
+      val dumpDirStr = dumpDir.toString // Path is not serializable
+      val (sizes, genSec) = timed(spark.range(0, NFiles, 1, NFiles).map { f =>
+        val lo = f * per
+        val hi = if (f == NFiles - 1) n else lo + per
+        writeDumpFile(
+          java.nio.file.Paths.get(dumpDirStr, f"part$f%02d.osm.bz2"), lo, hi)
+      }.collect())
 
-    def timed(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
+      def cli(flags: String*): Double =
+        timed(Main.run(spark, Main.parse(("-d" +: db.toString +: flags).toList)))._2
+
+      // -- phase 1: create + bulk load (the EP1 analog) ----------------
+      val bulkSec = cli("-c", "-f", dumpDir.toString + "/part*.osm.bz2")
+      val csDir = db.resolve("tables/changesets")
+      val rows = graft.streaming.Replication.readTable(spark, csDir).count()
+      val cmRows = graft.streaming.Replication.commentsTable(csDir).read(spark).count()
+
+      // -- phase 2: geometry backfill ----------------------------------
+      val geomSec = cli("-g")
+
+      // -- phase 3: replication catch-up over a 32-diff feed -----------
+      val feed = root.resolve("feed")
+      graft.streaming.Replication.writeFixtureWorld(feed, 32)
+      val replSec = cli("--init-sequence", "0", "-r", feed.toString)
+
+      Probe.emit(("metric" -> "ingest_soak") ~ ("rows" -> rows) ~ ("comment_rows" -> cmRows) ~
+        ("uncompressed_bytes" -> sizes.map(_._1).sum) ~ ("bz2_bytes" -> sizes.map(_._2).sum) ~
+        ("dump_files" -> NFiles) ~ ("streams_per_file" -> StreamsPerFile) ~
+        ("gen_sec" -> num(genSec)) ~ ("bulk_sec" -> num(bulkSec)) ~
+        ("rows_per_sec" -> (rows / bulkSec).round) ~ ("geom_sec" -> num(geomSec)) ~
+        ("replicate_sec" -> num(replSec)) ~ ("replicate_diffs" -> 32) ~
+        ("peak_heap_mb" -> peakSampled.get() / (1024 * 1024)) ~
+        ("heap_cap_mb" -> Runtime.getRuntime.maxMemory() / (1024 * 1024)) ~
+        ("config_note" -> ("rows/s series is only comparable at equal heap_cap_mb: " +
+          "r12's 532k rows/s ran unconstrained (~31 GB default heap), r13+ runs " +
+          "under a hard 8 GiB cap - the ~15% lower rate is the deliberately " +
+          "harder configuration, not a regression")) ~
+        ("baseline_rows_per_sec" -> "3000-4600 (README.md:74, single thread)"),
+        Some(sys.env.getOrElse("SPARK_GRAFT_INGEST_OUT", "BENCH_r10_ingest.json")))
     }
-
-    // -- phase 1: create + bulk load (the EP1 analog) ------------------
-    val bulkSec = timed {
-      Main.run(spark, Main.parse(List(
-        "-d", db.toString, "-c", "-f", dumpDir.toString + "/part*.osm.bz2")))
-    }
-    val csDir = db.resolve("tables/changesets")
-    val rows = graft.streaming.Replication.readTable(spark, csDir).count()
-    val cmRows = graft.streaming.Replication.commentsTable(csDir).read(spark).count()
-
-    // -- phase 2: geometry backfill ------------------------------------
-    val geomSec = timed {
-      Main.run(spark, Main.parse(List("-d", db.toString, "-g")))
-    }
-
-    // -- phase 3: replication catch-up over a 32-diff feed -------------
-    val feed = root.resolve("feed")
-    graft.streaming.Replication.writeFixtureWorld(feed, 32)
-    val replSec = timed {
-      Main.run(spark, Main.parse(List(
-        "-d", db.toString, "--init-sequence", "0", "-r", feed.toString)))
-    }
-
-    val rate = (rows / bulkSec).round
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val json =
-      s"""{"metric":"ingest_soak","rows":$rows,"comment_rows":$cmRows,""" +
-      s""""uncompressed_bytes":$rawBytes,"bz2_bytes":$bz2Bytes,""" +
-      s""""dump_files":$NFiles,"streams_per_file":$StreamsPerFile,""" +
-      s""""gen_sec":${fmt(genSec)},"bulk_sec":${fmt(bulkSec)},""" +
-      s""""rows_per_sec":$rate,"geom_sec":${fmt(geomSec)},""" +
-      s""""replicate_sec":${fmt(replSec)},"replicate_diffs":32,""" +
-      s""""peak_heap_mb":${peakSampled.get() / (1024 * 1024)},""" +
-      s""""heap_cap_mb":${Runtime.getRuntime.maxMemory() / (1024 * 1024)},""" +
-      s""""config_note":"rows/s series is only comparable at equal heap_cap_mb: """ +
-      s"""r12's 532k rows/s ran unconstrained (~31 GB default heap), r13+ runs """ +
-      s"""under a hard 8 GiB cap - the ~15% lower rate is the deliberately """ +
-      s"""harder configuration, not a regression",""" +
-      s""""baseline_rows_per_sec":"3000-4600 (README.md:74, single thread)"}"""
-    Files.writeString(java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_INGEST_OUT", "BENCH_r10_ingest.json")), json + "\n")
-    println(json)
-
-    // scratch cleanup: the dump + warehouse are multi-GB
-    val walk = Files.walk(root)
-    try {
-      val it = walk.sorted(java.util.Comparator.reverseOrder[Path]()).iterator()
-      while (it.hasNext) Files.delete(it.next())
-    } finally walk.close()
-    spark.stop()
   }
 }

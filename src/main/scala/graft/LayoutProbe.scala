@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.JsonDSL._
 import scala.jdk.CollectionConverters._
 
 /** Measures what the Z-order layout actually buys: per-row-group
@@ -95,18 +96,16 @@ object LayoutProbe {
     out
   }
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Probe.run() { h =>
+    val spark = h.spark
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = GraftSession()
-    spark.sparkContext.setLogLevel("ERROR")
 
     val (uBand, tBand) = bands(spark, d)
     val zDir = graft.operators.Layout.curveEventsDir(spark, d, "zorder")
       .resolve("events").toString
     val hDir = graft.operators.Layout.curveEventsDir(spark, d, "hilbert")
       .resolve("events").toString
-    val linRoot = linearEventsDir(spark, d, 64)
-    val linDir = linRoot.resolve("events").toString
+    val linDir = h.own(linearEventsDir(spark, d, 64)).resolve("events").toString
 
     val layouts = Seq("linear_ts" -> linDir, "zorder" -> zDir, "hilbert" -> hDir)
     val queries = Seq(
@@ -120,27 +119,11 @@ object LayoutProbe {
       (qname, ub, tb) <- queries
     } yield {
       val (rgHit, rowsHit) = matching(stats, ub, tb)
-      Map("layout" -> lname, "query" -> qname,
-        "rg_total" -> stats.size, "rg_match" -> rgHit,
-        "rows_total" -> stats.map(_._3).sum, "rows_scan" -> rowsHit)
+      ("layout" -> lname) ~ ("query" -> qname) ~
+        ("rg_total" -> stats.size) ~ ("rg_match" -> rgHit) ~
+        ("rows_total" -> stats.map(_._3).sum) ~ ("rows_scan" -> rowsHit)
     }
-
-    def j(v: Any): String = v match {
-      case s: String => "\"" + s + "\""
-      case x => x.toString
-    }
-    val lines = results.map(m => m.map { case (k, v) => s"${j(k)}:${j(v)}" }
-      .mkString("{", ",", "}"))
-    val doc = s"""{"metric":"layout_skipping","sf_dir":"$d","probes":[${lines.mkString(",")}]}"""
-    println(doc)
-    args.lift(1).foreach(f =>
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(f), doc + "\n"))
-
-    graft.operators.Cleanup.dropAll(spark)
-    val files = java.nio.file.Files.walk(linRoot)
-    try files.sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => java.nio.file.Files.deleteIfExists(p))
-    finally files.close()
-    spark.stop()
+    Probe.emit(("metric" -> "layout_skipping") ~ ("sf_dir" -> d) ~ ("probes" -> results),
+      args.lift(1))
   }
 }

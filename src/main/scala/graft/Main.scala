@@ -177,8 +177,6 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     val cfg = parse(args.toList)
-    val spark = GraftSession()
-    spark.sparkContext.setLogLevel("WARN")
-    run(spark, cfg).foreach(println)
+    run(Probe.session("WARN"), cfg).foreach(println)
   }
 }

@@ -2,6 +2,9 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.JsonDSL._
+import graft.Probe.{mad, median, num, timed}
 
 /** Measures the index-maintenance trilogy's scale contract: merging a
   * FIXED-SIZE arriving batch into a standing index costs about the
@@ -23,25 +26,19 @@ import org.apache.spark.sql.functions._
   */
 object MaintainProbe {
 
-  private def timeIt[T](f: => T): (T, Double) = {
-    val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-  }
+  /** Runs of the tiered loop per tier: its fold schedule follows an
+    * EWMA of wall-clock serve times, so one run cannot tell a cadence
+    * change from noise. */
+  private val TieredRuns = 3
 
-  /** Locale-pinned seconds formatting for the JSON artifact — the
-    * f"%.3f" interpolator uses the JVM default locale, which on a
-    * comma-decimal locale would emit malformed JSON (0,412). */
-  private def s3(x: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
-
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Probe.run() { h =>
+    val spark = h.spark
     val out = args.headOption.getOrElse("MAINTAIN_r12.json")
     val tiers = if (args.length > 1) args.drop(1).toSeq
       else Seq("/root/testdata/sf0.1", "/root/repo/testdata-local/sf1")
-    val spark = GraftSession()
     // bounded bucket size: the derived bucket count must grow with
     // the standing corpus for the O(bucket) touched-rewrite bound
     spark.conf.set("spark.graft.bucket.targetRows", (1 << 16).toString)
-    spark.sparkContext.setLogLevel("ERROR")
     import graft.operators.{LayoutRegistry, Retrieval, Similarity}
 
     def fixedBatch(df: DataFrame, key: String): DataFrame = {
@@ -65,17 +62,17 @@ object MaintainProbe {
         // the streaming loop's per-trigger path: O(batch) segment write
         val segDir = wd.resolve("bm25segs")
         java.nio.file.Files.createDirectories(segDir)
-        val (seg, secSeg) = timeIt(Retrieval.writeSegment(segDir, 0L, batchP))
+        val (seg, secSeg) = timed(Retrieval.writeSegment(segDir, 0L, batchP))
         // the deferred per-epoch fold (one bucketed-base rewrite)
-        val (_, secFold) = timeIt(Retrieval.foldSegments(spark, idx,
+        val (_, secFold) = timed(Retrieval.foldSegments(spark, idx,
           Seq(0 -> seg), Seq.empty, 1L))
         // ablation: the DIRECT bucketed merge per batch — gram keys
         // are uniform, so this touches ~every bucket and its cost
         // tracks the STANDING index, which is why the streaming loop
         // does not do this per trigger
-        val (touchedP, secP) = timeIt(
+        val (touchedP, secP) = timed(
           idx.postings.appendInto(spark, batchP, Some("probe" -> 2L)))
-        val (_, secDl) = timeIt(idx.doclens.mergeInto(spark,
+        val (_, secDl) = timed(idx.doclens.mergeInto(spark,
           Retrieval.doclensOf(arrD), Some("probedl" -> 2L)))
         // ---- frozen-quantizer ANN family -------------------------
         val e = Tables.embeddings(spark, d)
@@ -95,14 +92,14 @@ object MaintainProbe {
         val batchVRows = batchV.count()
         val vSegDir = wd.resolve("annsegs")
         java.nio.file.Files.createDirectories(vSegDir)
-        val (vSeg, secVSeg) = timeIt {
+        val (vSeg, secVSeg) = timed {
           val p = vSegDir.resolve("seg0000")
           batchV.write.mode("overwrite").parquet(p.toString); p
         }
-        val (_, secVFold) = timeIt(
+        val (_, secVFold) = timed(
           pt.appendInto(spark, spark.read.parquet(vSeg.toString),
             Some("p" -> 1L)))
-        val (touchedV, secV) = timeIt(
+        val (touchedV, secV) = timed(
           pt.appendInto(spark, batchV, Some("p" -> 2L)))
         // ---- serve latency vs UNFOLDED segment count (r11 age-out) --
         // the LSM read path between folds is base ∪ segments: each
@@ -131,7 +128,7 @@ object MaintainProbe {
             Retrieval.doclensOf(arrSeg.filter(col("__seg") === k).drop("__seg")))
         }
         val qterms = Retrieval.queryGramsOf(docs)
-        def serveSec(n: Int): Double = timeIt(
+        def serveSec(n: Int): Double = timed(
           Retrieval.serveWithSegments(spark, idxS, pSegs.take(n), dSegs.take(n),
             qterms).write.mode("overwrite").format("noop").save())._2
         serveSec(0) // warm the serve path (codegen) outside the samples
@@ -152,7 +149,7 @@ object MaintainProbe {
         val runFiles = graft.streaming.PartitionedTable
           .listDir(pRunAll._2).count(_.getFileName.toString.endsWith(".parquet"))
         val serveBase3 = med3(serveSec(0))
-        val serveRun3 = med3(timeIt(Retrieval.serveWithSegments(spark, idxS,
+        val serveRun3 = med3(timed(Retrieval.serveWithSegments(spark, idxS,
           Seq(pRunAll._2), Seq(dRunAll._2), qterms)
           .write.mode("overwrite").format("noop").save())._2)
         val serveLoose3 = med3(serveSec(32))
@@ -169,7 +166,7 @@ object MaintainProbe {
         val filesPerSeg = math.max(1.0,
           (pSegs ++ dSegs).map(graft.streaming.LsmFold.parquetFiles).sum.toDouble /
             (pSegs.size + dSegs.size))
-        val (_, secFoldServe) = timeIt(Retrieval.foldSegments(spark, idxS,
+        val (_, secFoldServe) = timed(Retrieval.foldSegments(spark, idxS,
           pSegs.zipWithIndex.map(_.swap), dSegs.zipWithIndex.map(_.swap), 9L))
         idxS.postings.compact(spark)
         idxS.doclens.compact(spark)
@@ -214,7 +211,7 @@ object MaintainProbe {
         val foldRuns = scala.collection.mutable.ArrayBuffer[Double]()
         (0 until 3).foreach { i =>
           val (psL, dsL) = mkAbSegs(100 * (2 * i + 1), s"L$i")
-          foldLoose += timeIt(Retrieval.foldSegments(spark, idxS, psL, dsL, abVer))._2
+          foldLoose += timed(Retrieval.foldSegments(spark, idxS, psL, dsL, abVer))._2
           abVer += 1
           val (psR, dsR) = mkAbSegs(100 * (2 * i + 2), s"R$i")
           val rd = wd.resolve(s"abruns$i")
@@ -222,13 +219,13 @@ object MaintainProbe {
             spark, rd.resolve("p"), j, psR.slice(j * 8, j * 8 + 8)))
           val dRunParts = (0 until 4).map(j => graft.streaming.LsmFold.mergeRun(
             spark, rd.resolve("d"), j, dsR.slice(j * 8, j * 8 + 8)))
-          foldRuns += timeIt(Retrieval.foldPaired(spark, idxS,
+          foldRuns += timed(Retrieval.foldPaired(spark, idxS,
             pRunParts, dRunParts, abVer))._2
           abVer += 1
         }
         println(f"[maintain] $tag fold-shape-ab: " +
-          s"loose=${foldLoose.map(s3).mkString(",")} " +
-          s"runs=${foldRuns.map(s3).mkString(",")}")
+          s"loose=${foldLoose.map(x => f"$x%.3f").mkString(",")} " +
+          s"runs=${foldRuns.map(x => f"$x%.3f").mkString(",")}")
         // ---- TIERED policy loop (r16): the serve-interleaved cadence
         // the gate entries never see — one serve per landed segment, on
         // the same Epoch the maintain loops run: mid-epoch folds go to
@@ -238,89 +235,100 @@ object MaintainProbe {
         // mid-epoch cost stays FLAT across the epoch (the single-level
         // loop's fold cost grew with every fold — MAINTAIN_r15 sf1:
         // 8.2 → 27.6 s within one epoch).
-        val tPolicy = new graft.streaming.TieredFoldPolicy(
-          initialRunFoldCostSec = math.max(0.05, secSeg),
-          initialBaseFoldCostSec = secFoldServe,
-          initialTaxPerFileSec = taxSeed / filesPerSeg)
-        val (tServeSecs, tFolds) = graft.streaming.Epoch.run(spark,
-            "graft_maintprobe_tier", tPolicy) { ep =>
-          val base = docs.filter(!Retrieval.isArrival(col("doc_id")))
-          val idxT = Retrieval.maintainedIndex(spark, ep.dir.resolve("idx"), base)
-          val dl = ep.table(idxT.doclens, "bm25dl", merge = true)
-          val post = ep.table(idxT.postings, "bm25idx", merge = false,
-            Retrieval.pairMarkerOf(idxT))
-          Retrieval.seedMaintained(spark, idxT, base)
-          def serveT(): Double = timeIt(
-            Retrieval.serveWithSegments(spark, idxT, ep.leaves(post),
-              ep.leaves(dl), qterms)
-              .write.mode("overwrite").format("noop").save())._2
-          val base0T = serveT()
-          val secs = (0 until segN).map { k =>
-            val batch = arrSeg.filter(col("__seg") === k).drop("__seg")
-            ep.land(post, k, Retrieval.postingsOf(batch))
-            ep.land(dl, k, Retrieval.doclensOf(batch))
-            val sec = serveT()
-            ep.onServe(Some(sec), base0T)
-            sec
+        def tieredRun(): (Seq[Double], Seq[graft.streaming.Epoch.Fold]) = {
+          val tPolicy = new graft.streaming.TieredFoldPolicy(
+            initialRunFoldCostSec = math.max(0.05, secSeg),
+            initialBaseFoldCostSec = secFoldServe,
+            initialTaxPerFileSec = taxSeed / filesPerSeg)
+          graft.streaming.Epoch.run(spark, "graft_maintprobe_tier", tPolicy) { ep =>
+            val base = docs.filter(!Retrieval.isArrival(col("doc_id")))
+            val idxT = Retrieval.maintainedIndex(spark, ep.dir.resolve("idx"), base)
+            val dl = ep.table(idxT.doclens, "bm25dl", merge = true)
+            val post = ep.table(idxT.postings, "bm25idx", merge = false,
+              Retrieval.pairMarkerOf(idxT))
+            Retrieval.seedMaintained(spark, idxT, base)
+            def serveT(): Double = timed(
+              Retrieval.serveWithSegments(spark, idxT, ep.leaves(post),
+                ep.leaves(dl), qterms)
+                .write.mode("overwrite").format("noop").save())._2
+            val base0T = serveT()
+            val secs = (0 until segN).map { k =>
+              val batch = arrSeg.filter(col("__seg") === k).drop("__seg")
+              ep.land(post, k, Retrieval.postingsOf(batch))
+              ep.land(dl, k, Retrieval.doclensOf(batch))
+              val sec = serveT()
+              ep.onServe(Some(sec), base0T)
+              sec
+            }
+            ep.finish()
+            (secs, ep.folds)
           }
-          ep.finish()
-          (secs, ep.folds)
         }
-        val runSecs = tFolds.filter(_.level == "run").map(_.sec)
-        val tRunFolds = runSecs.size
-        val tBaseFolds = tFolds.size - tRunFolds
-        println(f"[maintain] $tag tiered-loop: run_folds=$tRunFolds " +
-          f"base_folds=$tBaseFolds " +
-          s"fold_at=${tFolds.map(_.atSegment).mkString(",")} " +
-          s"levels=${tFolds.map(_.level).mkString(",")} " +
-          s"fold_secs=${tFolds.map(f => s3(f.sec)).mkString(",")}" +
-          (if (runSecs.nonEmpty)
-            f" run_fold_max=${runSecs.max}%.2f run_fold_min=${runSecs.min}%.2f"
-          else ""))
+        def schedule(serveSecs: Seq[Double], folds: Seq[graft.streaming.Epoch.Fold]): JObject = {
+          val runFolds = folds.count(_.level == "run")
+          ("fold_at_segments" -> folds.map(_.atSegment)) ~
+            ("fold_levels" -> folds.map(_.level)) ~
+            ("fold_secs" -> folds.map(f => num(f.sec))) ~
+            ("total_fold_secs" -> num(folds.map(_.sec).sum)) ~
+            ("realized_run_folds" -> runFolds) ~
+            ("realized_base_folds" -> (folds.size - runFolds)) ~
+            ("serve_secs" -> serveSecs.map(num(_)))
+        }
+        val tiered = (1 to TieredRuns).map(_ => tieredRun())
+        val bills = tiered.map(_._2.map(_.sec).sum)
+        tiered.foreach { case (_, folds) =>
+          println(f"[maintain] $tag tiered-loop: " +
+            s"fold_at=${folds.map(_.atSegment).mkString(",")} " +
+            s"levels=${folds.map(_.level).mkString(",")} " +
+            s"fold_secs=${folds.map(f => f"${f.sec}%.3f").mkString(",")}")
+        }
+        // the top-level schedule is the run whose fold bill is the median
+        val (medServe, medFolds) = tiered(bills.indexOf(median(bills)))
         println(f"[maintain] $tag bm25: standing=$standingP%,d batch=$batchPRows%,d " +
           f"buckets=${idx.postings.nBuckets} touched=${touchedP.size} " +
           f"seg=$secSeg%.2f fold=$secFold%.2f direct=${secP + secDl}%.2f")
         println(f"[maintain] $tag ann:  standing=$standingV%,d batch=$batchVRows%,d " +
           f"buckets=$nbV touched=${touchedV.size} " +
           f"seg=$secVSeg%.2f fold=$secVFold%.2f direct=$secV%.2f")
-        s""""$tag":{"bm25":{"standing_rows":$standingP,"batch_rows":$batchPRows,
-           |"buckets":${idx.postings.nBuckets},"touched_buckets":${touchedP.size},
-           |"segment_write_sec":${s3(secSeg)},"fold_sec":${s3(secFold)},
-           |"direct_merge_sec":${s3(secP + secDl)},
-           |"serve_sec_by_unfolded_segments":{${
-             serveBySeg.map { case (n, t) => s""""$n":${s3(t)}""" }.mkString(",")}},
-           |"serve_run_vs_segments":{"base_med3":${s3(serveBase3)},
-           |"one_run_of_32_med3":${s3(serveRun3)},
-           |"loose_32_med3":${s3(serveLoose3)},"run_files":$runFiles},
-           |"fold_shape_ab":{"loose_secs":[${foldLoose.map(s3).mkString(",")}],
-           |"run_secs":[${foldRuns.map(s3).mkString(",")}]},
-           |"epoch_fold_sec":${s3(secFoldServe)},
-           |"serve_sec_post_fold":${s3(servePost)},
-           |"postings_files_per_bucket_max_post_optimize":$maxFiles,
-           |"segments_after_prune":$segsLeft,
-           |"policy_loop_tiered":{"seed_run_fold_sec":${s3(math.max(0.05, secSeg))},
-           |"seed_base_fold_sec":${s3(secFoldServe)},
-           |"seed_tax_sec_per_file":${s3(taxSeed)},
-           |"fold_at_segments":[${tFolds.map(_.atSegment).mkString(",")}],
-           |"fold_levels":[${tFolds.map(f => s""""${f.level}"""").mkString(",")}],
-           |"fold_secs":[${tFolds.map(f => s3(f.sec)).mkString(",")}],
-           |"total_fold_secs":${s3(tFolds.map(_.sec).sum)},
-           |"realized_run_folds":$tRunFolds,
-           |"realized_base_folds":$tBaseFolds,
-           |"serve_secs":[${tServeSecs.map(s3).mkString(",")}]}},
-           |"ann":{"standing_rows":$standingV,"batch_rows":$batchVRows,
-           |"buckets":$nbV,"touched_buckets":${touchedV.size},
-           |"segment_write_sec":${s3(secVSeg)},"fold_sec":${s3(secVFold)},
-           |"direct_merge_sec":${s3(secV)}}}""".stripMargin.replace("\n", "")
+        tag -> (
+          ("bm25" ->
+            ("standing_rows" -> standingP) ~ ("batch_rows" -> batchPRows) ~
+            ("buckets" -> idx.postings.nBuckets) ~ ("touched_buckets" -> touchedP.size) ~
+            ("segment_write_sec" -> num(secSeg)) ~ ("fold_sec" -> num(secFold)) ~
+            ("direct_merge_sec" -> num(secP + secDl)) ~
+            ("serve_sec_by_unfolded_segments" ->
+              JObject(serveBySeg.map { case (n, t) => n.toString -> num(t) }.toList)) ~
+            ("serve_run_vs_segments" ->
+              ("base_med3" -> num(serveBase3)) ~ ("one_run_of_32_med3" -> num(serveRun3)) ~
+              ("loose_32_med3" -> num(serveLoose3)) ~ ("run_files" -> runFiles)) ~
+            ("fold_shape_ab" ->
+              ("loose_secs" -> foldLoose.map(num(_))) ~ ("run_secs" -> foldRuns.map(num(_)))) ~
+            ("epoch_fold_sec" -> num(secFoldServe)) ~
+            ("serve_sec_post_fold" -> num(servePost)) ~
+            ("postings_files_per_bucket_max_post_optimize" -> maxFiles) ~
+            ("segments_after_prune" -> segsLeft) ~
+            ("policy_loop_tiered" -> (
+              ("seed_run_fold_sec" -> num(math.max(0.05, secSeg))) ~
+              ("seed_base_fold_sec" -> num(secFoldServe)) ~
+              ("seed_tax_sec_per_file" -> num(taxSeed)) ~
+              schedule(medServe, medFolds) ~
+              ("runs" -> tiered.map { case (sv, f) => schedule(sv, f) }) ~
+              ("total_fold_secs_median" -> num(median(bills))) ~
+              ("total_fold_secs_mad" -> num(mad(bills)))))) ~
+          ("ann" ->
+            ("standing_rows" -> standingV) ~ ("batch_rows" -> batchVRows) ~
+            ("buckets" -> nbV) ~ ("touched_buckets" -> touchedV.size) ~
+            ("segment_write_sec" -> num(secVSeg)) ~ ("fold_sec" -> num(secVFold)) ~
+            ("direct_merge_sec" -> num(secV))))
       } finally {
         graft.streaming.PartitionedTable.deleteRecursively(wd)
       }
     }
-    val json = s"""{"metric":"index_maintain","batch_docs":500,
-       |"note":"fixed-size batch into standing indexes 10x apart: the per-trigger segment write is O(batch) and stays flat; the direct bucketed merge is the ablation - uniform keys touch every bucket so its cost tracks the standing index, which is why the streaming loops fold segments once per epoch instead",
-       |"tiers":{${rows.mkString(",")}}}""".stripMargin.replace("\n", "")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
-    println(json)
-    spark.stop()
+    Probe.emit(("metric" -> "index_maintain") ~ ("batch_docs" -> 500) ~
+      ("note" -> ("fixed-size batch into standing indexes 10x apart: the per-trigger " +
+        "segment write is O(batch) and stays flat; the direct bucketed merge is the " +
+        "ablation - uniform keys touch every bucket so its cost tracks the standing " +
+        "index, which is why the streaming loops fold segments once per epoch instead")) ~
+      ("tiers" -> JObject(rows.toList)), Some(out))
   }
 }

@@ -242,9 +242,12 @@ object PlanAudit {
   private var lastPlan: String = ""
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = GraftSession()
-    spark.sparkContext.setLogLevel("ERROR")
+    val failed = Probe.run() { h => audit(h.spark, args.headOption.getOrElse("/root/testdata/sf0.01")) }
+    if (failed > 0) sys.exit(1)
+  }
+
+  /** Evaluate every check, write PLANS.md; returns the failure count. */
+  private def audit(spark: SparkSession, sfDir: String): Int = {
 
     def withConf[T](conf: Map[String, String])(body: => T): T = {
       val saved = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
@@ -343,11 +346,6 @@ object PlanAudit {
     }
     Files.writeString(Paths.get("PLANS.md"), md.toString)
     println(s"PLANS.md written; ${checks.size - failed}/${checks.size} plan properties hold")
-    // the audit executes the bucketed-index and band-layout queries,
-    // which materialize persisted temp layouts — same teardown Verify
-    // and the specs run, so audit runs don't leak warehouse dirs
-    graft.operators.Cleanup.dropAll(spark)
-    spark.stop()
-    if (failed > 0) sys.exit(1)
+    failed
   }
 }

@@ -31,15 +31,14 @@ object PlanDump {
     "agg_heavy_hitters", "stream_window_agg", "stream_source_v2",
     "pipeline_curate")
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Probe.run() { h =>
+    val spark = h.spark
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = if (args.length > 1) args(1) else "plans/r17"
     val suffix = if (args.length > 2) args(2) else "before"
     val names =
       if (args.length > 3) args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq
       else defaultQueries
-    val spark = GraftSession()
-    spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
 
     // the same substitutions Bench makes: time the operator, not
@@ -90,7 +89,5 @@ object PlanDump {
         println(s"[plandump] $name FAILED: ${e.getMessage}")
       }
     }
-    graft.operators.Cleanup.dropAll(spark)
-    spark.stop()
   }
 }

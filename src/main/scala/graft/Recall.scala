@@ -2,6 +2,9 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.JsonDSL._
+import graft.Probe.num
 import graft.operators.Similarity
 
 /** ANN retrieval-quality measurement (r8 VERDICT item 1): recall@5 and
@@ -373,18 +376,13 @@ object Recall {
     (results ++ rerankInt8, corpusN, imiParity, geom)
   }
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Probe.run(tempWarehouse = true) { h =>
     val out = args.headOption.getOrElse("RECALL_r12.json")
     val dirs = if (args.length > 1) args.drop(1).toSeq
       else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val spark =
-      GraftSession(warehouse = Some(java.nio.file.Files.createTempDirectory("graft_recall_wh")))
-    spark.sparkContext.setLogLevel("ERROR")
     val nq = 64
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
     val tiers = dirs.map { d =>
-      val (results, corpusN, imiParity, geom) = run(spark, d, nq)
+      val (results, corpusN, imiParity, geom) = run(h.spark, d, nq)
       val int8Np1 = results.find(_.name == "sim_ivf_int8@np1").get.topk
       val servedEq = results.find(_.name == "sim_ivf_int8_bucketed@np1").get.topk == int8Np1
       val servedPqEq = results.find(_.name == "sim_ivf_pq_bucketed@np1").get.topk ==
@@ -397,34 +395,33 @@ object Recall {
         // near-random 64-dim vectors, which bounds absolute recall for
         // ANY sublinear index; see RECALL notes in SCALING.md)
         val pf = r.avgCandidates / (corpusN - 1).toDouble
-        s""""${r.name}":{"recall_at_5":${fmt(r.recallAt5)},"recall_at_10":${fmt(r.recallAt10)},""" +
-          s""""avg_candidates":${fmt(r.avgCandidates)},"probe_fraction":${fmt(pf)},""" +
-          s""""lift_at_10":${fmt(if (pf > 0) r.recallAt10 / pf else 0.0)}}"""
-      }.mkString(",")
+        r.name -> (("recall_at_5" -> num(r.recallAt5, 4)) ~
+          ("recall_at_10" -> num(r.recallAt10, 4)) ~
+          ("avg_candidates" -> num(r.avgCandidates, 4)) ~ ("probe_fraction" -> num(pf, 4)) ~
+          ("lift_at_10" -> num(if (pf > 0) r.recallAt10 / pf else 0.0, 4)))
+      }
       val tier = d.replaceAll(".*/", "")
       results.foreach(r => println(
         f"[recall] $tier ${r.name}%-28s r@5=${r.recallAt5}%.3f r@10=${r.recallAt10}%.3f cand/q=${r.avgCandidates}%.1f lift=${r.recallAt10 / (r.avgCandidates / (corpusN - 1).toDouble)}%.1f"))
-      s""""$tier":{"corpus_n":$corpusN,"imi_np1_parity":$imiParity,""" +
-        s""""bucketed_matches_int8_np1":$servedEq,""" +
-        s""""bucketed_matches_pq_np1":$servedPqEq,""" +
-        s""""geometry":{"n_imi_cells":${geom.nImiCells},""" +
-        s""""gt_cells_spanned_mean":${fmt(geom.gtCellsSpannedMean)},""" +
-        s""""gt_in_np1_cell":${fmt(geom.gtInNp1Cell)},""" +
-        s""""gt_in_np4_cells":${fmt(geom.gtInNp4Cells)}},"methods":{$ms}}"""
-    }.mkString(",")
-    val json = s"""{"metric":"ann_recall","n_queries":$nq,"k_exact":10,""" +
-      s""""ground_truth":"exact float cosine top-10 (simTopk semantics)",""" +
-      s""""geometry_note":"per-tier exact-scoring ceilings are CORPUS """ +
-      s"""structure, not engine quality: gt_in_np4_cells is the share of """ +
-      s"""true top-10 neighbors inside the query's 4 probed IMI cells and """ +
-      s"""equals the np4 ceiling by construction. sf>=1 tiers are ScaleGen """ +
-      s"""nudged near-copies (ground truth concentrates in the query's own """ +
-      s"""cell, gt_in_np1_cell high); sf<=0.1 tiers are unique near-random """ +
-      s"""vectors (ground truth scatters, any fixed probe count bounds """ +
-      s"""recall low)","tiers":{$tiers}}"""
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
-    println(json)
-    graft.operators.Cleanup.dropAll(spark)
-    spark.stop()
+      tier -> (("corpus_n" -> corpusN) ~ ("imi_np1_parity" -> imiParity) ~
+        ("bucketed_matches_int8_np1" -> servedEq) ~
+        ("bucketed_matches_pq_np1" -> servedPqEq) ~
+        ("geometry" -> (("n_imi_cells" -> geom.nImiCells) ~
+          ("gt_cells_spanned_mean" -> num(geom.gtCellsSpannedMean, 4)) ~
+          ("gt_in_np1_cell" -> num(geom.gtInNp1Cell, 4)) ~
+          ("gt_in_np4_cells" -> num(geom.gtInNp4Cells, 4)))) ~
+        ("methods" -> JObject(ms.toList)))
+    }
+    Probe.emit(("metric" -> "ann_recall") ~ ("n_queries" -> nq) ~ ("k_exact" -> 10) ~
+      ("ground_truth" -> "exact float cosine top-10 (simTopk semantics)") ~
+      ("geometry_note" -> ("per-tier exact-scoring ceilings are CORPUS " +
+        "structure, not engine quality: gt_in_np4_cells is the share of " +
+        "true top-10 neighbors inside the query's 4 probed IMI cells and " +
+        "equals the np4 ceiling by construction. sf>=1 tiers are ScaleGen " +
+        "nudged near-copies (ground truth concentrates in the query's own " +
+        "cell, gt_in_np1_cell high); sf<=0.1 tiers are unique near-random " +
+        "vectors (ground truth scatters, any fixed probe count bounds " +
+        "recall low)")) ~
+      ("tiers" -> JObject(tiers.toList)), Some(out))
   }
 }

@@ -25,10 +25,9 @@ object RecallGen {
   private val Dim = 64
   private val ClusterSize = 10
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Probe.run() { h =>
+    val spark = h.spark
     val outBase = args.headOption.getOrElse("recall-local")
-    val spark = GraftSession()
-    spark.sparkContext.setLogLevel("ERROR")
     val tiers = Seq("u0.01" -> 500L, "u0.1" -> 2000L, "u1" -> 20000L)
     tiers.foreach { case (name, n) =>
       val k = math.max(2L, n / ClusterSize)
@@ -44,6 +43,5 @@ object RecallGen {
         .write.mode("overwrite").parquet(s"$outBase/$name/embeddings.parquet")
       println(s"[recallgen] $name: n=$n clusters=$k dim=$Dim")
     }
-    spark.stop()
   }
 }

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.json4s._
+import org.json4s.JsonDSL._
+import graft.Probe.num
 import graft.operators.Retrieval
 
 /** Sparse-retrieval quality measurement — the BM25 analog of
@@ -14,40 +17,34 @@ import graft.operators.Retrieval
   * Run: `sbt "runMain graft.RetrievalProbe RETRIEVAL_r10.json [sfDir ...]"`.
   */
 object RetrievalProbe {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Probe.run(tempWarehouse = true) { h =>
+    val spark = h.spark
     val out = args.headOption.getOrElse("RETRIEVAL_r11.json")
     val dirs = if (args.length > 1) args.drop(1).toSeq
       else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val spark =
-      GraftSession(warehouse = Some(java.nio.file.Files.createTempDirectory("graft_retprobe_wh")))
-    spark.sparkContext.setLogLevel("ERROR")
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
     val tiers = dirs.map { d =>
       val (per, mean) = overlapAt10(spark, d)
-      val perS = per.toSeq.sortBy(_._1)
-        .map { case (q, o) => s""""$q":$o""" }.mkString(",")
-      println(s"[retprobe] $d mean_overlap@10=${fmt(mean)} per-query={$perS}")
-      s""""$d":{"per_query":{$perS},"mean_overlap10":${fmt(mean)}}"""
+      val perQ = per.toSeq.sortBy(_._1)
+      println(s"[retprobe] $d mean_overlap@10=$mean per-query=${perQ.mkString(",")}")
+      d -> (("per_query" -> JObject(perQ.map { case (q, o) => q.toString -> JInt(o) }.toList)) ~
+        ("mean_overlap10" -> num(mean, 4)))
     }
     // hybrid fusion quality: planted blind-spot corpus, recall@10 of
     // BM25-only / dense-only / fused / fused-ANN (VERDICT r10 item 5)
     val (hd, hids, hrel) = plantHybridCorpus(spark)
+    h.own(java.nio.file.Paths.get(hd))
     val hq = hybridRecall(spark, hd, hids, hrel)
-    graft.operators.Cleanup.dropAll(spark)
-    println(s"[retprobe] hybrid planted: bm25=${fmt(hq.bm25Only)} " +
-      s"dense=${fmt(hq.denseOnly)} fused=${fmt(hq.fused)} fused_ann=${fmt(hq.fusedAnn)}")
-    val hybrid = s""""hybrid_planted":{"queries":${hids.size},""" +
-      s""""relevant_per_query":${hrel.head._2.size},""" +
-      s""""note":"each query has ${hrel.head._2.size / 2} lexical-only and ${hrel.head._2.size / 2} semantic-only relevant docs - each family is blind to half; fusion must recover both",""" +
-      s""""recall10":{"bm25_only":${fmt(hq.bm25Only)},"dense_only":${fmt(hq.denseOnly)},""" +
-      s""""fused_rrf":${fmt(hq.fused)},"fused_rrf_ann":${fmt(hq.fusedAnn)}}}"""
-    val json = s"""{"metric":"retrieval_quality","queries":${
-      Retrieval.QueryDocs.mkString("[", ",", "]")},"overlap_tiers":{${
-      tiers.mkString(",")}},$hybrid}"""
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
-    println(s"[retprobe] wrote $out")
-    spark.stop()
+    println(s"[retprobe] hybrid planted: $hq")
+    val nRel = hrel.head._2.size
+    Probe.emit(("metric" -> "retrieval_quality") ~ ("queries" -> Retrieval.QueryDocs) ~
+      ("overlap_tiers" -> JObject(tiers.toList)) ~
+      ("hybrid_planted" -> (("queries" -> hids.size) ~ ("relevant_per_query" -> nRel) ~
+        ("note" -> (s"each query has ${nRel / 2} lexical-only and ${nRel / 2} " +
+          "semantic-only relevant docs - each family is blind to half; fusion must " +
+          "recover both")) ~
+        ("recall10" -> (("bm25_only" -> num(hq.bm25Only, 4)) ~
+          ("dense_only" -> num(hq.denseOnly, 4)) ~ ("fused_rrf" -> num(hq.fused, 4)) ~
+          ("fused_rrf_ann" -> num(hq.fusedAnn, 4)))))), Some(out))
   }
 
   // ---- hybrid fusion quality on a PLANTED corpus ----------------------

@@ -45,12 +45,11 @@ object ScaleGen {
   private def replicate(df: DataFrame, copies: Int)(shift: (DataFrame, Int) => DataFrame): DataFrame =
     (0 until copies).map(i => shift(df, i)).reduce(_ unionByName _)
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Probe.run() { h =>
+    val spark = h.spark
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outRoot = args.lift(1).getOrElse("testdata-local")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = GraftSession()
-    spark.sparkContext.setLogLevel("ERROR")
 
     val sf1 = s"$outRoot/sf1"
     def write(name: String, df: DataFrame): Unit = {
@@ -121,6 +120,5 @@ object ScaleGen {
       .filter(col("l_orderkey") === hotKey).count()
     val total = spark.read.parquet(s"$skew/lineitem.parquet").count()
     println(s"[scalegen] sf1skew lineitem: $total rows, hot key $hotKey holds $hotShare (${100 * hotShare / total}%)")
-    spark.stop()
   }
 }

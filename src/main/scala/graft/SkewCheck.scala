@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.JsonDSL._
+import graft.Probe.timed
 
 /** Skew-join demonstration on the sf1skew tier (r4 VERDICT item 1:
   * SCALING.md claims AQE skew-split handles hot keys — this makes the
@@ -69,33 +71,28 @@ object SkewCheck {
         sum(col("l_extendedprice").cast("decimal(14,2)")).cast("double").as("sum_price"))
   }
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Probe.run() { h =>
+    val spark = h.spark
     val d = args.headOption.getOrElse("testdata-local/sf1skew")
-    val spark = GraftSession()
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     // the tier is ~100 MB; scale the byte thresholds down with it
     spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
     spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8m")
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def time[T](body: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = body; (r, (System.nanoTime() - t0) / 1e9)
-    }
 
     // warm the inputs (footers, codegen) outside the comparison
     spark.read.parquet(s"$d/lineitem.parquet").count()
     spark.read.parquet(s"$d/orders.parquet").count()
 
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-    val (baseRows, offSec) = time {
+    val (baseRows, offSec) = timed {
       val df = skewedJoin(spark, d); df.collect().toSeq
     }
 
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     val dfOn = skewedJoin(spark, d)
-    val (onRows, onSec) = time { dfOn.collect().toSeq }
+    val (onRows, onSec) = timed { dfOn.collect().toSeq }
     val plan = dfOn.queryExecution.executedPlan.toString
     val skewEngaged = plan.contains("skew=true")
     require(skewEngaged,
@@ -103,14 +100,13 @@ object SkewCheck {
     require(onRows.map(_.toString).sorted == baseRows.map(_.toString).sorted,
       "skew-split changed the result")
 
-    val (saltRows, saltSec) = time { saltedJoin(spark, d).collect().toSeq }
+    val (saltRows, saltSec) = timed { saltedJoin(spark, d).collect().toSeq }
     require(saltRows.map(_.toString).sorted == baseRows.map(_.toString).sorted,
       "salted fallback changed the result")
 
-    println(s"""{"metric":"skew_check","skew_dir":"$d",""" +
-      s""""skew_handling_off_sec":$offSec,"aqe_skew_split_sec":$onSec,""" +
-      s""""salted_sec":$saltSec,"skew_marker_in_executed_plan":$skewEngaged,""" +
-      s""""rows":${baseRows.size}}""")
-    spark.stop()
+    Probe.emit(("metric" -> "skew_check") ~ ("skew_dir" -> d) ~
+      ("skew_handling_off_sec" -> offSec) ~ ("aqe_skew_split_sec" -> onSec) ~
+      ("salted_sec" -> saltSec) ~ ("skew_marker_in_executed_plan" -> skewEngaged) ~
+      ("rows" -> baseRows.size))
   }
 }

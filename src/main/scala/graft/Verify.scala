@@ -1,40 +1,29 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.json4s.JString
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Probe.run(logLevel = "WARN") { h =>
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query names (fast local iteration)
     val only = args.lift(2).map(_.split(",").toSet)
-    val spark = GraftSession()
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+      try fn(h.spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // every key and SQL string is escaped by the harness's JSON writer
+    // (quote, backslash, every control char): a tab or CR in the SQL
+    // would otherwise make the driver's json.load fail
+    def q(s: String): String = Probe.render(JString(s))
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    graft.operators.Cleanup.dropAll(spark) // every per-session memo + persisted layout
-    spark.stop()
   }
 }

@@ -33,22 +33,9 @@ class FenceDuelSpec extends AnyFunSuite {
   private def javaBin =
     java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java").toString
 
-  private def addOpens: Seq[String] = {
-    val in = java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getInputArguments
-    val it = new scala.collection.mutable.ArrayBuffer[String]
-    val i = in.iterator()
-    while (i.hasNext) {
-      val a = i.next()
-      if (a == "--add-opens") { it += a; if (i.hasNext) it += i.next() }
-      else if (a.startsWith("--add-opens=")) it += a
-    }
-    it.toSeq
-  }
-
   private def launch(work: Path, role: String, tableDir: Path,
                      expect: String = ""): Process = {
-    val cmd = Seq(javaBin) ++ addOpens ++ Seq(
+    val cmd = Seq(javaBin) ++ TestSpark.addOpens ++ Seq(
       "-Xmx1g",
       s"-Dgraft.lease.heartbeat.ms=$HbMs",
       s"-Dgraft.lease.stale.ms=$StaleMs",

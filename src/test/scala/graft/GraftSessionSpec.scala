@@ -63,6 +63,25 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("Files.walk in an operator: ", ", ", ""))
   }
 
+  test("the probe harness exists once: no main but Probe times, formats, listens or tears down") {
+    // graft.Probe owns the session teardown, the timer, median/MAD, the
+    // locale-proof number rendering and the stage meter; any of them in
+    // another top-level main is a hand-rolled copy coming back
+    val mains = {
+      val s = Files.list(Paths.get("src/main/scala/graft"))
+      try s.iterator.asScala.filter(p => p.toString.endsWith(".scala") &&
+        !p.endsWith("Probe.scala")).toList finally s.close()
+    }
+    assert(mains.exists(_.endsWith("Bench.scala")),
+      s"sources not found under ${Paths.get("").toAbsolutePath}")
+    Seq("System\\.nanoTime", "setLogLevel", "spark\\.stop\\(\\)", "def (median|mad)\\b",
+        "Locale\\.ROOT", "(new|extends)\\s+(org\\.apache\\.spark\\.scheduler\\.)?SparkListener\\b")
+      .foreach { p =>
+        val hits = codeHits(mains, p)
+        assert(hits.isEmpty, hits.mkString(s"$p outside Probe: ", ", ", ""))
+      }
+  }
+
   test("the test session carries every pinned key at the factory's value") {
     val s = TestSpark.session
     val pinned = GraftSession.conf(8)

@@ -10,4 +10,19 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** This JVM's `--add-opens` flags: a forked child that starts Spark
+    * needs the ones sbt gave the test JVM. */
+  def addOpens: Seq[String] = {
+    val in = java.lang.management.ManagementFactory
+      .getRuntimeMXBean.getInputArguments
+    val it = new scala.collection.mutable.ArrayBuffer[String]
+    val i = in.iterator()
+    while (i.hasNext) {
+      val a = i.next()
+      if (a == "--add-opens") { it += a; if (i.hasNext) it += i.next() }
+      else if (a.startsWith("--add-opens=")) it += a
+    }
+    it.toSeq
+  }
 }

@@ -20,10 +20,8 @@ def load(path):
     rows = []
     with open(path) as f:
         for line in f:
-            # sbt prefixes runMain stdout with "[info] "
-            i = line.find("{")
-            if i >= 0:
-                rows.append(json.loads(line[i:]))
+            if line.startswith("{"):
+                rows.append(json.loads(line))
     return rows
 
 
