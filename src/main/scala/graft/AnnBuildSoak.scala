@@ -8,7 +8,7 @@ import org.json4s._
 import org.json4s.JsonDSL._
 import graft.Probe.{median, num, timed}
 import graft.operators.{LayoutRegistry, Similarity}
-import graft.streaming.PartitionedTable
+import graft.streaming.{Epoch, PartitionedTable}
 
 /** ANN index-build soak, one decade past the gate tiers (r12 VERDICT
   * item 5): the gate exercises the ANN family at ≤100k vectors; this
@@ -131,22 +131,18 @@ object AnnBuildSoak {
     }
 
     // ---- arrivals: O(batch) segments, one fold, OPTIMIZE ---------
-    val segDir = work.resolve("segs")
-    Files.createDirectories(segDir)
-    val (_, segS) = timed {
-      (0 until 4).foreach { k =>
-        indexRows(arrivals.filter(pmod(col("vec_id"), lit(4)) === k))
-          .write.mode("overwrite")
-          .parquet(segDir.resolve(f"seg$k%04d").toString)
+    val (segS, foldS, compactS) = Epoch.run(spark, "graft_annsoak_epoch") { ep =>
+      val t = ep.table(pt, "annsoak", merge = false)
+      val (_, segS) = timed {
+        (0 until 4).foreach { k =>
+          ep.land(t, k, indexRows(arrivals.filter(pmod(col("vec_id"), lit(4)) === k)))
+        }
       }
+      // finish() is the one close fold, then OPTIMIZE
+      val (_, finishS) = timed(ep.finish())
+      val foldS = ep.folds.map(_.sec).sum
+      (segS, foldS, finishS - foldS)
     }
-    val (_, foldS) = timed {
-      pt.appendInto(spark,
-        spark.read.parquet((0 until 4).map(k =>
-          segDir.resolve(f"seg$k%04d").toString): _*),
-        Some("annsoak" -> 1L))
-    }
-    val (_, compactS) = timed { pt.compact(spark) }
 
     // ---- serve p50 from the persisted layout ---------------------
     val qs = e.filter(col("vec_id") < NQueries)

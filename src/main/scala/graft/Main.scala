@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths}
-import graft.streaming.Replication
+import graft.streaming.{PartitionedTable, Replication}
 
 /** Operator-facing CLI — the `changesetmd.py` argparse surface
   * (`changesetmd.py:202-230`) mapped onto the engine:
@@ -67,15 +67,8 @@ object Main {
 
     if (cfg.truncate) {
       // drop contents, keep the layout (≙ TRUNCATE, queries.py:37-39)
-      Seq(csDir, Replication.commentsTable(csDir).dir).foreach { d =>
-        if (Files.exists(d)) {
-          val s = Files.walk(d)
-          try {
-            val it = s.sorted(java.util.Comparator.reverseOrder[Path]()).iterator()
-            while (it.hasNext) Files.delete(it.next())
-          } finally s.close()
-        }
-      }
+      Seq(csDir, Replication.commentsTable(csDir).dir).filter(Files.exists(_))
+        .foreach(PartitionedTable.deleteRecursively)
       log += "truncate: dropped table contents"
     }
 

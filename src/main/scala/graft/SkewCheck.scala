@@ -23,11 +23,11 @@ import graft.Probe.timed
   *    pattern applied to the hot key) — the engine-agnostic answer
   *    when a deployment can't rely on AQE.
   *
-  * Thresholds: the tier is ~100 MB, so the demonstration lowers
-  * `skewedPartitionThresholdInBytes`/`advisoryPartitionSizeInBytes`
-  * (defaults target 256 MB+ partitions); at production scale the
-  * DEFAULTS fire on the same shape — the mechanism, not the numbers,
-  * is what transfers.
+  * Thresholds: a ScaleGen tier is 10–100 MB, so the demonstration
+  * lowers `skewedPartitionThresholdInBytes`/`advisoryPartitionSizeInBytes`
+  * (defaults target 256 MB+ partitions) in proportion to the tier's
+  * lineitem bytes; at production scale the DEFAULTS fire on the same
+  * shape — the mechanism, not the numbers, is what transfers.
   */
 object SkewCheck {
 
@@ -75,10 +75,16 @@ object SkewCheck {
     val spark = h.spark
     val d = args.headOption.getOrElse("testdata-local/sf1skew")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    // the tier is ~100 MB; scale the byte thresholds down with it
+    // scale the byte thresholds with the tier: 1/12 and 1/24 of the
+    // lineitem bytes (8 MB and 4 MB on the 102 MB sf0.1-derived tier),
+    // so the hot key's partition crosses them at every ScaleGen tier
+    val lineitem = new org.apache.hadoop.fs.Path(s"$d/lineitem.parquet")
+    val liBytes = lineitem.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getContentSummary(lineitem).getLength
     spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8m")
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
+    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
+      (liBytes / 12).toString)
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", (liBytes / 24).toString)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 
     // warm the inputs (footers, codegen) outside the comparison

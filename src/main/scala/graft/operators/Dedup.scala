@@ -954,12 +954,10 @@ object Dedup {
     * the empty relation for a corpus with no batch docs at all. */
   private def verdicts(s: SparkSession,
       results: graft.streaming.SubBatchState[DataFrame]): DataFrame =
-    if (results.nonEmpty) results.values.reduce(_ union _)
-    else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("batch_id", LongType),
-        StructField("sub_batch", IntegerType),
-        StructField("n_cand", LongType), StructField("n_dup", LongType),
-        StructField("admit", BooleanType))))
+    results.union(s, StructType(Seq(StructField("batch_id", LongType),
+      StructField("sub_batch", IntegerType),
+      StructField("n_cand", LongType), StructField("n_dup", LongType),
+      StructField("admit", BooleanType))))
 
   /** The DURABLE form of the admission loop — `stream_dedup_admission`
     * with its growing state moved from in-session checkpointed unions

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructField, StructType}
 import graft.Tables._
 
 /** Sparse retrieval + trained text classification — the lexical half
@@ -349,15 +349,9 @@ object Retrieval {
         .withColumn("sub_batch", lit(k))
         .localCheckpoint(true))
     }
-    if (results.isEmpty)
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("query_id", LongType),
-          org.apache.spark.sql.types.StructField("doc_id", LongType),
-          org.apache.spark.sql.types.StructField("score_x1000", LongType),
-          org.apache.spark.sql.types.StructField("rnk", IntegerType),
-          org.apache.spark.sql.types.StructField("sub_batch", IntegerType))))
-    else results.values.reduce(_ union _)
+    results.union(s, StructType(Seq(StructField("query_id", LongType),
+      StructField("doc_id", LongType), StructField("score_x1000", LongType),
+      StructField("rnk", IntegerType), StructField("sub_batch", IntegerType))))
   }
 
   // ---- incremental index MAINTENANCE ---------------------------------
@@ -432,140 +426,58 @@ object Retrieval {
       alsoRecord = pairMarkerOf(idx))
   }
 
-  private[graft] def buildMaintained(s: SparkSession,
-      dir: java.nio.file.Path, base: DataFrame): MaintainedIndex = {
-    val idx = maintainedIndex(s, dir, base)
-    seedMaintained(s, idx, base)
-    idx
-  }
-
-  /** One DIRECT maintenance step: upsert the arriving docs' lengths,
-    * then append their postings rows through the commit protocol —
-    * doclens first so the postings commit can record its paired
-    * doclens snapshot (PairMarker). `ver` makes the step idempotent
-    * per table — a replayed micro-batch (checkpoint recovery) no-ops
-    * instead of double-counting tf. NOTE the cost bound: gram hashes
-    * are uniform, so even a small batch touches ~every postings
-    * bucket and the merge rewrites them all — O(standing index) per
-    * call (measured in MAINTAIN_r10.json). Right for occasional
-    * direct edits; the STREAMING loop uses O(batch) segment writes
-    * with one deferred fold instead (`writeSegment` / `foldSegments`). */
-  private[graft] def appendArrivals(s: SparkSession, idx: MaintainedIndex,
-      batch: DataFrame, ver: Long): Unit = {
-    idx.doclens.mergeInto(s, doclensOf(batch), Some("bm25dl" -> ver))
-    idx.postings.appendInto(s, postingsOf(batch), Some("bm25idx" -> ver),
-      alsoRecord = pairMarkerOf(idx))
-  }
-
-  /** LSM-style per-trigger ingestion: the batch's rows land as their
-    * OWN parquet segment — one O(batch) write job that rewrites
-    * nothing, whatever the key distribution. Replay-idempotent by
-    * construction: the segment is named by the sub-batch id, so a
-    * re-delivered micro-batch overwrites its own segment instead of
-    * duplicating rows. This is the standard lakehouse answer to
-    * uniform-key appends (an inverted index's grams, an LSH index's
-    * bands hit EVERY bucket, so a bucketed-table merge per trigger
-    * is a full-index rewrite per trigger — the measured flaw in
-    * MAINTAIN_r10.json): deltas accumulate as segments, readers
-    * union base + segments, and OPTIMIZE folds segments into the
-    * bucketed base once per epoch, amortizing the one O(standing)
-    * rewrite over the whole epoch's batches. */
-  private[graft] def writeSegment(segDir: java.nio.file.Path, k: Long,
-      rows: DataFrame): java.nio.file.Path = {
-    val seg = segDir.resolve(f"seg$k%04d")
-    rows.write.mode("overwrite").parquet(seg.toString)
-    seg
-  }
-
-  /** The deferred OPTIMIZE: fold accumulated segments into the
-    * bucketed base tables in ONE commit per table. Segments arrive
-    * keyed by SUB-BATCH id, and the fold is REPLAY-SAFE structurally
-    * (r15 VERDICT item 5): each fold commit records one
-    * `<app>.seg<k>` txn marker per folded sub-batch — atomically with
-    * the data, in the same manifest swap — and segments whose id the
-    * table has already folded are FILTERED OUT here. A replay of an
-    * already-folded sub-batch under AvailableNow (its segment file
-    * re-landed after the mid-epoch fold that consumed it) therefore
-    * no-ops at the next fold instead of re-landing rows, whatever the
-    * loop around this call does. */
-  private[graft] def foldSegments(s: SparkSession, idx: MaintainedIndex,
-      postingSegs: Seq[(Int, java.nio.file.Path)],
-      doclenSegs: Seq[(Int, java.nio.file.Path)],
-      ver: Long): Unit =
-    // distinctBy id: a replayed micro-batch re-registers its segment
-    // path; the segment itself was overwritten in place, so fold once
-    foldPaired(s, idx,
-      postingSegs.distinctBy(_._1).map { case (k, p) => (Seq(k), p) },
-      doclenSegs.distinctBy(_._1).map { case (k, p) => (Seq(k), p) }, ver)
-
-  /** The two-table fold, in PAIRED commit order: doclens lands first,
-    * then postings with the fresh doclens snapshot id recorded
-    * atomically in the postings commit (PairMarker — see its doc for
-    * why a reader resolving (postings latest, marker) can never
-    * observe a torn pair). `between` is a TEST SEAM: it runs in the
-    * window between the two commits — the exact instant the r16
-    * torn-pair hole lived in — so ServeSessionSpec can inject a
-    * `refresh()` there and assert the pinned pair stays consistent. */
-  private[graft] def foldPaired(s: SparkSession, idx: MaintainedIndex,
-      pParts: Seq[(Seq[Int], java.nio.file.Path)],
-      dParts: Seq[(Seq[Int], java.nio.file.Path)],
-      ver: Long, between: () => Unit = () => ()): Unit = {
-    graft.streaming.LsmFold.foldToBase(s, idx.doclens, "bm25dl",
-      dParts, ver, merge = true)
-    between()
-    graft.streaming.LsmFold.foldToBase(s, idx.postings, "bm25idx",
-      pParts, ver, merge = false, alsoRecord = pairMarkerOf(idx))
-  }
-
-  /** Serve from the maintained state: postings read through the
-    * manifest, corpus totals aggregated from the doc-length table
-    * (O(#docs), the smaller relation), df computed at serve by the
+  /** Corpus totals (n_docs, t_grams) of a maintained index — one
+    * aggregate over its doc-length rows (O(#docs), the smaller
+    * relation). With `bm25Of` this is the maintained serve kernel: the
+    * maintain loop serves base ∪ leaves (`Epoch.unfolded`), a serve
+    * session its pinned snapshot pair. df is computed at serve by the
     * ad-hoc kernel's count window over the candidate-pruned stream. */
-  private[graft] def serveMaintained(s: SparkSession, idx: MaintainedIndex,
-      qterms: DataFrame): DataFrame =
-    serveWithSegments(s, idx, Nil, Nil, qterms)
+  private[graft] def totalsOfDoclens(doclens: DataFrame): DataFrame =
+    doclens.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("t_grams"))
 
-  /** Serve from the maintained state BETWEEN folds: the bucketed base
-    * UNION the still-unfolded segments — what an online query reads
-    * while the epoch accumulates (the LSM read path: memtable +
-    * SSTables). Each unfolded segment adds one more leaf scan to the
-    * union (per-file open + footer + no gram clustering), which is
-    * exactly the degradation `graft.MaintainProbe` measures as serve
-    * latency vs segment count — the number that sets the epoch's fold
-    * cadence. Segment docs are new arrivals (disjoint doc_ids), so
-    * plain unions are the correct merge. */
-  private[graft] def serveWithSegments(s: SparkSession, idx: MaintainedIndex,
-      pSegs: Seq[java.nio.file.Path], dSegs: Seq[java.nio.file.Path],
-      qterms: DataFrame): DataFrame = {
-    val cols = Seq("g", "doc_id", "dl", "tf")
-    val postings = (idx.postings.read(s).select(cols.map(col): _*) +:
-      pSegs.map(p => s.read.parquet(p.toString).select(cols.map(col): _*)))
-      .reduce(_ unionByName _)
-    val dls = (idx.doclens.read(s) +:
-      dSegs.map(p => s.read.parquet(p.toString))).reduce(_ unionByName _)
-    val totals = dls.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("t_grams"))
-    bm25Of(postings, totals, qterms)
+  /** The maintained pair registered with epoch `ep`, in its commit
+    * order: doclens first, postings second, re-stamping PairMarker on
+    * every base commit and compaction (registration fences both tables,
+    * so it precedes their first commit). */
+  private[graft] final class Bm25Epoch(val ep: graft.streaming.Epoch,
+      idx: MaintainedIndex) {
+    val doclens: ep.Table = ep.table(idx.doclens, "bm25dl", merge = true)
+    val postings: ep.Table =
+      ep.table(idx.postings, "bm25idx", merge = false, pairMarkerOf(idx))
+
+    /** Land sub-batch k's docs in each table that does not hold them. */
+    def land(k: Int, docs: DataFrame): Unit = {
+      if (ep.fresh(postings, k)) ep.land(postings, k, postingsOf(docs))
+      if (ep.fresh(doclens, k)) ep.land(doclens, k, doclensOf(docs))
+    }
+
+    /** BM25 over base ∪ the leaves of sub-batches before `before` —
+      * the LSM read path between folds, the folded base after
+      * `finish()`. */
+    def serve(qterms: DataFrame, before: Int = Int.MaxValue): DataFrame =
+      bm25Of(ep.unfolded(postings, before),
+        totalsOfDoclens(ep.unfolded(doclens, before)), qterms)
   }
 
   /** CONTINUOUS inverted-index maintenance — the write path
     * `stream_bm25_serve` takes as given: documents ARRIVE as a stream
     * of three sub-batches (one file per micro-batch — the §2h
-    * bounded-catch-up harness) and each micro-batch is MERGED into
-    * the standing index through the PartitionedTable commit protocol
-    * (append postings, upsert doc lengths, txn-versioned so replays
-    * no-op), followed by a small-files OPTIMIZE pass. Serving the
-    * standard query set from the maintained state then equals the
-    * one-shot batch build over the full corpus — that equality IS the
-    * oracle (`text_bm25_topk`'s SQL verbatim), because an index is a
-    * layout, and maintenance must not change what it answers.
+    * bounded-catch-up harness) and each micro-batch lands as an
+    * O(batch) segment per table on one `streaming.Epoch`; the epoch
+    * closes with one fold into the bucketed base (append postings,
+    * upsert doc lengths, replay-safe by per-sub-batch markers) and a
+    * small-files OPTIMIZE pass. Serving the standard query set from
+    * the maintained state then equals the one-shot batch build over
+    * the full corpus — that equality IS the oracle (`text_bm25_topk`'s
+    * SQL verbatim), because an index is a layout, and maintenance must
+    * not change what it answers.
     *
     * Scale shape: per-trigger work is proportional to the ARRIVING
-    * docs (their postings rows shuffle to their gram buckets; only
-    * touched buckets rewrite), never to the standing index; the
-    * doc-length upsert touches only arriving keys; compaction bounds
-    * the file count however many batches have merged. A daily-ingest
-    * deployment runs exactly this loop against the previous
-    * snapshot — full rebuilds are the once-per-epoch job. */
+    * docs (a segment write rewrites nothing); the one O(standing)
+    * bucketed rewrite is the close fold, amortized over the epoch;
+    * compaction bounds the file count however many batches have
+    * landed. A daily-ingest deployment runs exactly this loop against
+    * the previous snapshot — full rebuilds are the once-per-epoch job. */
   def streamBm25Maintain(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
     val arrivals = docs.filter(isArrival(col("doc_id")))
@@ -573,20 +485,14 @@ object Retrieval {
     val base = docs.filter(!isArrival(col("doc_id")))
     graft.streaming.Epoch.run(s, "graft_bm25maint") { ep =>
       val idx = maintainedIndex(s, ep.dir.resolve("idx"), base)
-      // registered (and so folded and compacted) doclens first, postings
-      // second re-stamping PairMarker; fenced before the seed commits
-      val dl = ep.table(idx.doclens, "bm25dl", merge = true)
-      val post = ep.table(idx.postings, "bm25idx", merge = false, pairMarkerOf(idx))
+      val pair = new Bm25Epoch(ep, idx)
       seedMaintained(s, idx, base)
       // per-trigger O(batch) segment writes (gram keys are uniform — a
       // bucketed merge here would rewrite the whole standing index
       // every trigger, the measured flaw in MAINTAIN_r10.json)
-      graft.streaming.SubBatchState.streamSubBatches(s, arrivals) { (k, batch) =>
-        if (ep.fresh(post, k)) ep.land(post, k, postingsOf(batch))
-        if (ep.fresh(dl, k)) ep.land(dl, k, doclensOf(batch))
-      }
+      graft.streaming.SubBatchState.streamSubBatches(s, arrivals)(pair.land)
       ep.finish()
-      serveMaintained(s, idx, queryGramsOf(docs)).localCheckpoint(true)
+      pair.serve(queryGramsOf(docs)).localCheckpoint(true)
     }
   }
 

@@ -282,7 +282,9 @@ final class MaintainedAnnServeSession private[operators] (
   * still pre-fold and its marker names the pre-fold doclens, so the
   * session can never pin post-fold postings with pre-fold corpus
   * totals (the r16 torn-pair hole; adversarial refresh-mid-fold is
-  * pinned in ServeSessionSpec via `foldPaired`'s between-seam).
+  * pinned in ServeSessionSpec from the postings table's lazily
+  * evaluated `alsoRecord`, which an Epoch fold evaluates after the
+  * doclens commit and before the postings one).
   * Pre-marker tables (no PairMarker recorded) fall back to doclens
   * latest — the r16 behavior, flagged for what it is. Corpus totals
   * are collected once per pin (one tiny aggregate over the paired
@@ -311,9 +313,7 @@ final class MaintainedBm25ServeSession private[operators] (
       .select(col("g"), col("doc_id"), col("dl"), col("tf"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     postings.count()
-    val r = doclensTable.readAt(s, ds)
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("t_grams"))
-      .collect().head
+    val r = Retrieval.totalsOfDoclens(doclensTable.readAt(s, ds)).collect().head
     import s.implicits._
     val totals = Seq((r.getLong(0), r.getLong(1))).toDF("n_docs", "t_grams")
     (postings, totals)

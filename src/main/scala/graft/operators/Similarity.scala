@@ -1111,13 +1111,10 @@ object Similarity {
         .withColumn("sub_batch", lit(k))
         .localCheckpoint(true))
     }
-    if (results.isEmpty)
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("query_id", LongType),
-          StructField("vec_id", LongType), StructField("cell", LongType),
-          StructField("cos_q", DoubleType), StructField("rnk", IntegerType),
-          StructField("sub_batch", IntegerType))))
-    else results.values.reduce(_ union _)
+    results.union(s, StructType(Seq(StructField("query_id", LongType),
+      StructField("vec_id", LongType), StructField("cell", LongType),
+      StructField("cos_q", DoubleType), StructField("rnk", IntegerType),
+      StructField("sub_batch", IntegerType))))
   }
 
   // ---- incremental index MAINTENANCE (frozen quantizer) --------------

@@ -49,13 +49,8 @@ object BulkLoad {
       spark.read.parquet(s"$outDir/comments").count())
     // staging is scratch: drop it so the layout holds only the tables
     val stPath = java.nio.file.Paths.get(staging.stripPrefix("file:"))
-    if (java.nio.file.Files.exists(stPath)) {
-      val s = java.nio.file.Files.walk(stPath)
-      try {
-        val it = s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]()).iterator()
-        while (it.hasNext) java.nio.file.Files.delete(it.next())
-      } finally s.close()
-    }
+    if (java.nio.file.Files.exists(stPath))
+      graft.streaming.PartitionedTable.deleteRecursively(stPath)
     counts
   }
 }

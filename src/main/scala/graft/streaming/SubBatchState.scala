@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 /** Thread-safe, replay-idempotent per-sub-batch state for the
   * foreachBatch maintenance/serve loops (§2h): writes happen on the
@@ -42,6 +43,13 @@ final class SubBatchState[V] {
     * sub-batch `k` must see: exactly what it saw the first time. */
   def earlier(k: Int): Seq[V] =
     m.asScala.toSeq.filter(_._1 < k).sortBy(_._1).map(_._2)
+
+  /** The sub-batch result frames unioned in ascending id order, or
+    * the empty relation of `schema` when no sub-batch delivered one. */
+  def union(s: SparkSession, schema: StructType)(
+      implicit asFrame: V <:< DataFrame): DataFrame =
+    if (isEmpty) s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
+    else values.map(asFrame).reduce(_ union _)
 
   /** Drop all entries — called when an Epoch fold consumes the
     * tracked segments, so the store only ever holds UNFOLDED ones. */

@@ -1,9 +1,11 @@
 package graft
 
+import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Retrieval
-import graft.streaming.PartitionedTable
+import graft.streaming.{Epoch, LsmFold, PartitionedTable, TieredFoldPolicy}
 
 /** Mid-epoch fold REPLAY idempotence, structural form (r15 VERDICT
   * item 5): a fold commit records its sub-batch ids as txn markers
@@ -13,213 +15,182 @@ import graft.streaming.PartitionedTable
   * final state identical to the no-replay run, however the loop
   * around the fold behaves. Pre-r16 this property was documented as
   * configurational (FoldPolicy.scala caveat, now deleted); this spec
-  * makes it load-bearing. */
+  * makes it load-bearing. Every fold here runs the way the maintain
+  * loops run it, through `streaming.Epoch`, except the structural
+  * refusals, which call `LsmFold.foldToBase` directly. */
 class FoldReplaySpec extends AnyFunSuite {
+  import Bm25Maintained.{epoch, rows, seeded, served}
   private val spark = TestSpark.session
   private val d = "/root/testdata/sf0.001"
+  private lazy val docs = Tables.documents(spark, d)
+  private lazy val isArr = Retrieval.isArrival(col("doc_id"))
+  private lazy val arrivals = docs.filter(isArr)
+    .withColumn("sub_batch", Retrieval.arrivalSubBatch(col("doc_id")))
+  private def sub(k: Int): DataFrame =
+    arrivals.filter(col("sub_batch") === k).drop("sub_batch")
 
   test("replaying an already-folded sub-batch re-lands NOTHING (bm25 maintained index)") {
-    val docs = Tables.documents(spark, d)
-    val isArr = Retrieval.isArrival(col("doc_id"))
-    val wd = java.nio.file.Files.createTempDirectory("graft_foldreplay")
+    val wd = Files.createTempDirectory("graft_foldreplay")
     try {
-      val idx = Retrieval.buildMaintained(spark, wd.resolve("idx"),
-        docs.filter(!isArr))
-      val segDir = wd.resolve("segs")
-      java.nio.file.Files.createDirectories(segDir)
-      val arrivals = docs.filter(isArr)
-        .withColumn("sub_batch", Retrieval.arrivalSubBatch(col("doc_id")))
-      def landSeg(k: Int): (Int, java.nio.file.Path) = {
-        val batch = arrivals.filter(col("sub_batch") === k).drop("sub_batch")
-        k -> Retrieval.writeSegment(segDir, k.toLong, Retrieval.postingsOf(batch))
-      }
-      def landDl(k: Int): (Int, java.nio.file.Path) = {
-        val batch = arrivals.filter(col("sub_batch") === k).drop("sub_batch")
-        k -> Retrieval.writeSegment(segDir.resolve("d"), k.toLong,
-          Retrieval.doclensOf(batch))
-      }
-
-      // epoch: sub-batches 0 and 1 land, MID-EPOCH fold consumes them
-      Retrieval.foldSegments(spark, idx,
-        Seq(landSeg(0), landSeg(1)), Seq(landDl(0), landDl(1)), ver = 1L)
+      val idx = seeded(spark, wd.resolve("idx"), docs.filter(!isArr))
+      // epoch 1: sub-batches 0 and 1 land, the close fold consumes them
+      epoch(spark, idx, Seq(0 -> sub(0), 1 -> sub(1)))
       val pRows = idx.postings.read(spark).count()
-      val dRows = idx.doclens.read(spark).count()
       assert(idx.postings.lastTxn("bm25idx.seg0").contains(1L))
       assert(idx.postings.lastTxn("bm25idx.seg1").contains(1L))
 
-      // REPLAY: the engine re-delivers sub-batch 0 — the loop (or a
-      // buggy one) re-lands its segment and the close fold runs with
-      // it AND the genuinely-new sub-batch 2
-      Retrieval.foldSegments(spark, idx,
-        Seq(landSeg(0), landSeg(2)), Seq(landDl(0), landDl(2)), ver = 2L)
+      // REPLAY: a restart re-delivers sub-batch 0 beside the genuinely
+      // new sub-batch 2, and the loop re-lands it WITHOUT the landing
+      // guard — the fold itself must refuse it
+      epoch(spark, idx, Seq(0 -> sub(0), 2 -> sub(2)), guarded = false)
 
       // sub-batch 0's rows appear exactly ONCE: the second fold landed
       // only sub-batch 2 (postings are append-only, so a re-land would
       // inflate the row count by |seg0|)
-      val seg0Rows = Retrieval.postingsOf(
-        arrivals.filter(col("sub_batch") === 0).drop("sub_batch")).count()
-      val seg2Rows = Retrieval.postingsOf(
-        arrivals.filter(col("sub_batch") === 2).drop("sub_batch")).count()
+      val seg0Rows = Retrieval.postingsOf(sub(0)).count()
+      val seg2Rows = Retrieval.postingsOf(sub(2)).count()
       assert(seg0Rows > 0 && seg2Rows > 0, "fixture needs non-empty sub-batches")
       assert(idx.postings.read(spark).count() === pRows + seg2Rows,
         "replayed sub-batch 0 must not re-land into the append-only postings")
+      assert(idx.postings.lastTxn("bm25idx.seg0").contains(1L))
       assert(idx.postings.lastTxn("bm25idx.seg2").contains(2L))
 
-      // a PURE replay fold (every id already folded) commits nothing:
-      // no new snapshot, txn versions unchanged
-      val snapsBefore = idx.postings.snapshots
-      Retrieval.foldSegments(spark, idx,
-        Seq(landSeg(1), landSeg(2)), Seq(landDl(1), landDl(2)), ver = 3L)
-      assert(idx.postings.snapshots === snapsBefore,
+      // a PURE replay epoch (every id already folded) commits nothing:
+      // no new snapshot on either table, txn versions unchanged
+      val snapsBefore = (idx.postings.snapshots, idx.doclens.snapshots)
+      epoch(spark, idx, Seq(1 -> sub(1), 2 -> sub(2)), guarded = false)
+      assert((idx.postings.snapshots, idx.doclens.snapshots) === snapsBefore,
         "an all-replay fold must be a structural no-op")
       assert(idx.postings.lastTxn("bm25idx").contains(2L))
 
       // the maintained state equals the one-shot build over the same
       // docs (base + sub-batches 0..2, each exactly once)
-      val served = Retrieval.serveMaintained(spark, idx,
-        Retrieval.queryGramsOf(docs))
       val full = docs.filter(!isArr)
         .unionByName(arrivals.filter(col("sub_batch") <= 2).drop("sub_batch"))
-      val oneShot = Retrieval.bm25TopkOf(full, Retrieval.QueryDocs)
-      assert(served.collect().map(_.mkString("|")).toSet ===
-        oneShot.collect().map(_.mkString("|")).toSet)
-      val _ = dRows
+      assert(rows(served(spark, idx, Retrieval.queryGramsOf(docs))) ===
+        rows(Retrieval.bm25TopkOf(full, Retrieval.QueryDocs)))
     } finally PartitionedTable.deleteRecursively(wd)
   }
 
   test("tiered fold: serve equality holds at every level; the run carries its ids into the base markers") {
-    val docs = Tables.documents(spark, d)
-    val isArr = Retrieval.isArrival(col("doc_id"))
-    val wd = java.nio.file.Files.createTempDirectory("graft_tieredfold")
-    try {
-      val idx = Retrieval.buildMaintained(spark, wd.resolve("idx"),
-        docs.filter(!isArr))
-      val segDir = wd.resolve("segs")
-      java.nio.file.Files.createDirectories(segDir)
-      val arrivals = docs.filter(isArr)
-        .withColumn("sub_batch", Retrieval.arrivalSubBatch(col("doc_id")))
-      def seg(k: Int, of: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-          sub: String): (Int, java.nio.file.Path) =
-        k -> Retrieval.writeSegment(segDir.resolve(sub), k.toLong,
-          of(arrivals.filter(col("sub_batch") === k).drop("sub_batch")))
-      val qterms = Retrieval.queryGramsOf(docs)
-      def rowsOf(df: org.apache.spark.sql.DataFrame): Set[String] =
-        df.collect().map(_.mkString("|")).toSet
-      val oneShot = rowsOf(Retrieval.bm25TopkOf(
-        docs.filter(!isArr).unionByName(arrivals.drop("sub_batch")),
-        Retrieval.QueryDocs))
+    val base = docs.filter(!isArr)
+    val qterms = Retrieval.queryGramsOf(docs)
+    // the one-shot build over base + sub-batches `ks`, same query terms
+    def oneShot(ks: Int*) = {
+      val c = base.unionByName(arrivals.filter(col("sub_batch").isin(ks: _*)).drop("sub_batch"))
+      rows(Retrieval.bm25Of(Retrieval.postingsOf(c), Retrieval.totalsOf(c), qterms))
+    }
+    // a serve over >= 2 loose segments buys a run fold; the base fold
+    // is left to the close
+    val policy = new TieredFoldPolicy(initialRunFoldCostSec = 1e-3,
+      initialBaseFoldCostSec = 1e9, initialTaxPerFileSec = 1.0)
+    Epoch.run(spark, "graft_tieredfold", policy) { ep =>
+      val idx = Retrieval.maintainedIndex(spark, ep.dir.resolve("idx"), base)
+      val pair = new Retrieval.Bm25Epoch(ep, idx)
+      Retrieval.seedMaintained(spark, idx, base)
 
-      // level 0: base ∪ three loose segments
-      val p = (0 to 2).map(k => seg(k, Retrieval.postingsOf, "p"))
-      val dl = (0 to 2).map(k => seg(k, Retrieval.doclensOf, "d"))
-      assert(rowsOf(Retrieval.serveWithSegments(spark, idx,
-        p.map(_._2), dl.map(_._2), qterms)) === oneShot)
+      // level 0: base ∪ two loose segments
+      Seq(0, 1).foreach(k => pair.land(k, sub(k)))
+      assert(rows(pair.serve(qterms)) === oneShot(0, 1))
+      assert(rows(pair.serve(qterms, before = 1)) === oneShot(0))
 
-      // level 1: segments 0,1 fold to a RUN — serve base ∪ run ∪ seg2
-      val pRun = graft.streaming.LsmFold.mergeRun(spark, wd.resolve("pruns"), 0, p.take(2))
-      val dRun = graft.streaming.LsmFold.mergeRun(spark, wd.resolve("druns"), 0, dl.take(2))
-      assert(pRun._1.sorted === Seq(0, 1))
-      assert(rowsOf(Retrieval.serveWithSegments(spark, idx,
-        Seq(pRun._2, p(2)._2), Seq(dRun._2, dl(2)._2), qterms)) === oneShot)
+      // level 1: the serve folds segments 0,1 to a RUN — serve base ∪ run ∪ seg2
+      ep.onServe()
+      assert(ep.folds.map(_.level) === Seq("run"))
+      pair.land(2, sub(2))
+      assert(pair.ep.leaves(pair.postings).size === 2)
+      assert(rows(pair.serve(qterms)) === oneShot(0, 1, 2))
 
-      // level 2: run + loose seg2 fold to BASE in one commit; the
-      // run's CONSTITUENT ids land as markers (the replay guard)
-      graft.streaming.LsmFold.foldToBase(spark, idx.postings, "bm25idx",
-        Seq(pRun, (Seq(2), p(2)._2)), 1L, merge = false)
-      graft.streaming.LsmFold.foldToBase(spark, idx.doclens, "bm25dl",
-        Seq(dRun, (Seq(2), dl(2)._2)), 1L, merge = true)
+      // level 2: run + loose seg2 fold to BASE in one commit per table;
+      // the run's CONSTITUENT ids land as markers (the replay guard)
+      ep.finish()
+      assert(ep.folds.map(_.level) === Seq("run", "base"))
       (0 to 2).foreach { k =>
         assert(idx.postings.lastTxn(s"bm25idx.seg$k").contains(1L),
           s"run constituent $k must be marker-recorded at the base fold")
+        assert(idx.doclens.lastTxn(s"bm25dl.seg$k").contains(1L))
       }
-      assert(rowsOf(Retrieval.serveMaintained(spark, idx, qterms)) === oneShot)
+      assert(rows(pair.serve(qterms)) === oneShot(0, 1, 2))
 
       // a replayed constituent (seg 0, folded via the run) is refused
+      val replay = ep.dir.resolve("replay0")
+      Retrieval.postingsOf(sub(0)).write.parquet(replay.toString)
       val before = idx.postings.read(spark).count()
-      graft.streaming.LsmFold.foldToBase(spark, idx.postings, "bm25idx",
-        Seq((Seq(0), seg(0, Retrieval.postingsOf, "p")._2)), 2L, merge = false)
+      LsmFold.foldToBase(spark, idx.postings, "bm25idx",
+        Seq((Seq(0), replay)), 2L, merge = false)
       assert(idx.postings.read(spark).count() === before)
-    } finally PartitionedTable.deleteRecursively(wd)
+    }
   }
 
   test("a crash between a fold's two commits loses no rows: the per-table guard re-lands only the missing table (r16 ADVICE)") {
-    val docs = Tables.documents(spark, d)
-    val isArr = Retrieval.isArrival(col("doc_id"))
-    val wd = java.nio.file.Files.createTempDirectory("graft_halffold")
+    val wd = Files.createTempDirectory("graft_halffold")
     try {
-      val idx = Retrieval.buildMaintained(spark, wd.resolve("idx"),
-        docs.filter(!isArr))
-      val segDir = wd.resolve("segs")
-      java.nio.file.Files.createDirectories(segDir)
-      val arrivals = docs.filter(isArr)
-      val pSeg = Retrieval.writeSegment(segDir, 0L, Retrieval.postingsOf(arrivals))
-      val dSeg = Retrieval.writeSegment(segDir.resolve("d"), 0L,
-        Retrieval.doclensOf(arrivals))
+      val idx = seeded(spark, wd.resolve("idx"), docs.filter(!isArr))
+      val all = docs.filter(isArr)
+      val segRows = Retrieval.postingsOf(all).count()
       val pRows0 = idx.postings.read(spark).count()
       val dRows0 = idx.doclens.read(spark).count()
-
-      // the fold CRASHES in the window between its two commits:
-      // doclens has landed sub-batch 0, postings has not
-      intercept[RuntimeException] {
-        Retrieval.foldPaired(spark, idx,
-          Seq((Seq(0), pSeg)), Seq((Seq(0), dSeg)), ver = 1L,
-          between = () => throw new RuntimeException("crash between commits"))
+      var crash = true
+      def maintain(): Unit = Epoch.run(spark, "graft_halffold") { ep =>
+        val dl = ep.table(idx.doclens, "bm25dl", merge = true)
+        // the postings markers are evaluated after the doclens base
+        // commit and before the postings one: the fold crashes there
+        val post = ep.table(idx.postings, "bm25idx", merge = false, {
+          if (crash) throw new IllegalStateException("crash between commits")
+          Retrieval.pairMarkerOf(idx)
+        })
+        if (ep.fresh(post, 0)) ep.land(post, 0, Retrieval.postingsOf(all))
+        if (ep.fresh(dl, 0)) ep.land(dl, 0, Retrieval.doclensOf(all))
+        ep.finish()
       }
+
+      // doclens has landed sub-batch 0, postings has not
+      intercept[IllegalStateException](maintain())
       assert(idx.doclens.lastTxn("bm25dl.seg0").contains(1L))
       assert(idx.postings.lastTxn("bm25idx.seg0").isEmpty)
       val dRows1 = idx.doclens.read(spark).count()
       assert(dRows1 > dRows0, "fixture needs arrival docs")
 
       // RESTART + replay: the loop re-delivers sub-batch 0. The
-      // per-table landing guard re-admits it (postings marker absent);
-      // the next fold lands postings and REFUSES the already-folded
-      // doclens part on its own markers — no loss, no duplication
-      Retrieval.foldSegments(spark, idx,
-        Seq(0 -> pSeg), Seq(0 -> dSeg), ver = 2L)
-      assert(idx.postings.lastTxn("bm25idx.seg0").contains(2L))
-      val segRows = spark.read.parquet(pSeg.toString).count()
+      // per-table landing guard re-admits it for postings only (its
+      // marker is absent); the fold lands postings once and doclens
+      // not again — no loss, no duplication
+      crash = false
+      maintain()
+      assert(idx.postings.lastTxn("bm25idx.seg0").contains(1L))
       assert(idx.postings.read(spark).count() === pRows0 + segRows,
         "the recovery fold must land the postings exactly once")
       assert(idx.doclens.read(spark).count() === dRows1,
         "the already-folded doclens must not re-land (keyed merge would mask a dup; count pins it)")
-      // the recovery postings commit re-stamps the pair marker to the
-      // CURRENT doclens head — the pair a session resolves is whole
-      assert(idx.postings.txnsAt(idx.postings.snapshots.last)
-        .get(Retrieval.PairMarker).contains(idx.doclens.snapshots.last))
+      // the postings head names a doclens snapshot that holds sub-batch
+      // 0 — the pair a session resolves is whole
+      val paired = idx.postings.txnsAt(idx.postings.snapshots.last)(Retrieval.PairMarker)
+      assert(idx.doclens.txnsAt(paired).contains("bm25dl.seg0"))
 
       // the recovered state answers exactly the one-shot build
-      val served = Retrieval.serveMaintained(spark, idx,
-        Retrieval.queryGramsOf(docs))
-      val oneShot = Retrieval.bm25TopkOf(
-        docs.filter(!isArr).unionByName(arrivals), Retrieval.QueryDocs)
-      assert(served.collect().map(_.mkString("|")).toSet ===
-        oneShot.collect().map(_.mkString("|")).toSet)
+      assert(rows(served(spark, idx, Retrieval.queryGramsOf(docs))) ===
+        rows(Retrieval.bm25TopkOf(docs.filter(!isArr).unionByName(all),
+          Retrieval.QueryDocs)))
     } finally PartitionedTable.deleteRecursively(wd)
   }
 
   test("foldToBase refuses a MIXED part (some ids folded, some not) instead of silently duplicating the folded rows") {
-    val docs = Tables.documents(spark, d)
-    val isArr = Retrieval.isArrival(col("doc_id"))
-    val wd = java.nio.file.Files.createTempDirectory("graft_mixedpart")
+    val wd = Files.createTempDirectory("graft_mixedpart")
     try {
-      val idx = Retrieval.buildMaintained(spark, wd.resolve("idx"),
-        docs.filter(!isArr))
-      val segDir = wd.resolve("segs")
-      java.nio.file.Files.createDirectories(segDir)
-      val arrivals = docs.filter(isArr)
-        .withColumn("sub_batch", Retrieval.arrivalSubBatch(col("doc_id")))
-      def seg(k: Int): (Int, java.nio.file.Path) =
-        k -> Retrieval.writeSegment(segDir, k.toLong, Retrieval.postingsOf(
-          arrivals.filter(col("sub_batch") === k).drop("sub_batch")))
+      val idx = seeded(spark, wd.resolve("idx"), docs.filter(!isArr))
+      def seg(k: Int): (Int, java.nio.file.Path) = {
+        val p = wd.resolve("segs").resolve(k.toString)
+        Retrieval.postingsOf(sub(k)).write.mode("overwrite").parquet(p.toString)
+        k -> p
+      }
       // sub-batch 0 folds to base; a (buggy) run then forms from
       // segments 0 AND 1 — re-landing it would duplicate 0's rows
-      graft.streaming.LsmFold.foldToBase(spark, idx.postings, "bm25idx",
+      LsmFold.foldToBase(spark, idx.postings, "bm25idx",
         Seq((Seq(0), seg(0)._2)), 1L, merge = false)
-      val mixedRun = graft.streaming.LsmFold.mergeRun(spark,
-        wd.resolve("runs"), 0, Seq(seg(0), seg(1)))
+      val mixedRun = LsmFold.mergeRun(spark, wd.resolve("runs"), 0, Seq(seg(0), seg(1)))
       val before = idx.postings.read(spark).count()
       val ex = intercept[IllegalArgumentException] {
-        graft.streaming.LsmFold.foldToBase(spark, idx.postings, "bm25idx",
+        LsmFold.foldToBase(spark, idx.postings, "bm25idx",
           Seq(mixedRun), 2L, merge = false)
       }
       assert(ex.getMessage.contains("mixed part"))

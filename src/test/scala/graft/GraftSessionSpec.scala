@@ -34,10 +34,10 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("the bounded-heap top-k and the sub-batch stream staging each exist once") {
-    // Similarity.heapTopK and SubBatchState.streamSubBatches; a second
-    // hit is a copy of either coming back
+    // Similarity.heapTopK, SubBatchState.streamSubBatches and
+    // SubBatchState.union; a second hit is a copy of one coming back
     val files = sources("src/main")
-    Seq("PriorityQueue\\.empty", "setLastModifiedTime").foreach { p =>
+    Seq("PriorityQueue\\.empty", "setLastModifiedTime", "emptyRDD\\[").foreach { p =>
       val hits = codeHits(files, p)
       assert(hits.length === 1, hits.mkString(s"$p: ", ", ", ""))
     }
@@ -54,6 +54,28 @@ class GraftSessionSpec extends AnyFunSuite {
       assert(hits.nonEmpty && hits.forall(_.contains("streaming/Epoch.scala:")),
         hits.mkString(s"$p: ", ", ", ""))
     }
+  }
+
+  test("Epoch is the only LSM driver: no other main source folds, merges runs, prunes or names a segment dir") {
+    // streaming.Epoch lands segments and drives the LsmFold kernels; a
+    // call to a kernel or a segment dir name anywhere else is a second
+    // LSM path coming back
+    val files = sources("src/main").filterNot(p =>
+      p.endsWith("streaming/Epoch.scala") || p.endsWith("streaming/LsmFold.scala"))
+    assert(files.exists(_.endsWith("Retrieval.scala")),
+      s"sources not found under ${Paths.get("").toAbsolutePath}")
+    Seq("LsmFold\\.(foldToBase|mergeRun|prune)\\b", "seg\\S*%04d", "seg0000").foreach { p =>
+      val hits = codeHits(files, p)
+      assert(hits.isEmpty, hits.mkString(s"$p outside Epoch: ", ", ", ""))
+    }
+  }
+
+  test("one recursive delete: reverseOrder appears only in PartitionedTable") {
+    // PartitionedTable.deleteRecursively; a walk sorted in reverse
+    // anywhere else is a hand-rolled copy of it
+    val hits = codeHits(sources("src/main"), "reverseOrder")
+    assert(hits.nonEmpty && hits.forall(_.contains("streaming/PartitionedTable.scala:")),
+      hits.mkString("reverseOrder: ", ", ", ""))
   }
 
   test("every persisted-layout drop goes through LayoutRegistry: no file walk in the operators") {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Retrieval
+import graft.streaming.{Epoch, LsmFold}
 
 /** Sparse-retrieval + trained-classifier contracts: BM25 ranks
   * gram-overlap correctly on a hand-built corpus, each real query doc
@@ -102,24 +103,23 @@ class RetrievalSpec extends AnyFunSuite {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val dir = java.nio.file.Files.createTempDirectory("graft_maint_spec")
     try {
-      val idx = Retrieval.buildMaintained(spark, dir, base)
+      val idx = Bm25Maintained.seeded(spark, dir, base)
       val qterms = Retrieval.queryGramsOf(base, Seq(1L))
-      val before = Retrieval.serveMaintained(spark, idx, qterms)
+      def ranked = Bm25Maintained.served(spark, idx, qterms)
         .orderBy("rnk").select("doc_id").as[Long].collect().toSeq
-      assert(before === Seq(1L, 3L)) // twin not yet arrived; 4 shares nothing
-      Retrieval.appendArrivals(spark, idx, twin, 1L)
-      val after = Retrieval.serveMaintained(spark, idx, qterms)
-        .orderBy("rnk").select("doc_id").as[Long].collect().toSeq
+      assert(ranked === Seq(1L, 3L)) // twin not yet arrived; 4 shares nothing
+      Bm25Maintained.epoch(spark, idx, Seq(0 -> twin))
       // exact twin ties the self-match, doc_id breaks the tie
-      assert(after === Seq(1L, 9L, 3L))
-      // replayed txn version no-ops: no double-counted postings
+      assert(ranked === Seq(1L, 9L, 3L))
+      // a replayed sub-batch no-ops even when re-landed: no
+      // double-counted postings
       val n1 = idx.postings.read(spark).count()
-      Retrieval.appendArrivals(spark, idx, twin, 1L)
+      Bm25Maintained.epoch(spark, idx, Seq(0 -> twin), guarded = false)
       assert(idx.postings.read(spark).count() === n1)
       // maintenance must not change what the index answers: serve over
       // the maintained state == the one-shot build over the union
       val union = base.unionByName(twin)
-      val served = Retrieval.serveMaintained(spark, idx,
+      val served = Bm25Maintained.served(spark, idx,
           Retrieval.queryGramsOf(union, Seq(1L)))
         .select("query_id", "doc_id", "score_x1000", "rnk")
         .as[(Long, Long, Long, Int)].collect().toSet
@@ -137,23 +137,21 @@ class RetrievalSpec extends AnyFunSuite {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val batch = Seq((9L, "a b c d x", "en", "s", 9L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_seg_spec")
-    try {
-      val idx = Retrieval.buildMaintained(spark, dir.resolve("idx"), base)
-      val segDir = dir.resolve("segs")
-      java.nio.file.Files.createDirectories(segDir)
-      // a re-delivered micro-batch writes the SAME segment path again
-      val s1 = Retrieval.writeSegment(segDir, 0L, Retrieval.postingsOf(batch))
-      val s2 = Retrieval.writeSegment(segDir, 0L, Retrieval.postingsOf(batch))
-      assert(s1 === s2)
-      val segRows = spark.read.parquet(s1.toString).count()
+    Epoch.run(spark, "graft_seg_spec") { ep =>
+      val idx = Retrieval.maintainedIndex(spark, ep.dir.resolve("idx"), base)
+      val pair = new Retrieval.Bm25Epoch(ep, idx)
+      Retrieval.seedMaintained(spark, idx, base)
+      // a re-delivered micro-batch lands the SAME sub-batch again
+      (1 to 2).foreach(_ => pair.ep.land(pair.postings, 0, Retrieval.postingsOf(batch)))
+      val segs = pair.ep.leaves(pair.postings)
+      assert(segs.size === 1, s"one segment per sub-batch, got $segs")
+      val segRows = spark.read.parquet(segs.head.toString).count()
       assert(segRows === Retrieval.postingsOf(batch).count()) // overwritten, not doubled
-      // both registrations reach the fold; it must land the rows once
+      // both deliveries reach the fold; it must land the rows once
       val before = idx.postings.read(spark).count()
-      Retrieval.foldSegments(spark, idx, Seq(0 -> s1, 0 -> s2), Seq.empty, 1L)
+      ep.finish()
       assert(idx.postings.read(spark).count() === before + segRows)
-    } finally {
-      graft.streaming.PartitionedTable.deleteRecursively(dir)
+      assert(ep.folds.map(_.level) === Seq("base"))
     }
   }
 
@@ -173,52 +171,35 @@ class RetrievalSpec extends AnyFunSuite {
       (11L, "a b c q r", "en", "s", 9L),
       (12L, "m n o p q", "en", "s", 9L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ageout_spec")
-    try {
-      val idx = Retrieval.buildMaintained(spark, dir.resolve("idx"), base)
-      val segDir = dir.resolve("segs")
-      java.nio.file.Files.createDirectories(segDir)
-      val pSegs = Seq(9L, 11L, 12L).zipWithIndex.map { case (id, k) =>
-        Retrieval.writeSegment(segDir.resolve("p"), k.toLong,
-          Retrieval.postingsOf(arrivals.filter(col("doc_id") === id)))
-      }
-      val dSegs = Seq(9L, 11L, 12L).zipWithIndex.map { case (id, k) =>
-        Retrieval.writeSegment(segDir.resolve("d"), k.toLong,
-          Retrieval.doclensOf(arrivals.filter(col("doc_id") === id)))
-      }
-      val union = base.unionByName(arrivals)
-      val qterms = Retrieval.queryGramsOf(union, Seq(1L))
-      def served(p: Seq[java.nio.file.Path], d: Seq[java.nio.file.Path]) =
-        Retrieval.serveWithSegments(spark, idx, p, d, qterms)
-          .select("query_id", "doc_id", "score_x1000", "rnk")
-          .as[(Long, Long, Long, Int)].collect().toSet
-      val oneShot = Retrieval.bm25TopkOf(union, Seq(1L))
-        .select("query_id", "doc_id", "score_x1000", "rnk")
+    val union = base.unionByName(arrivals)
+    val qterms = Retrieval.queryGramsOf(union, Seq(1L))
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "doc_id", "score_x1000", "rnk")
         .as[(Long, Long, Long, Int)].collect().toSet
+    val oneShot = rowsOf(Retrieval.bm25TopkOf(union, Seq(1L)))
+    Epoch.run(spark, "graft_ageout_spec") { ep =>
+      val idx = Retrieval.maintainedIndex(spark, ep.dir.resolve("idx"), base)
+      val pair = new Retrieval.Bm25Epoch(ep, idx)
+      Retrieval.seedMaintained(spark, idx, base)
+      Seq(9L, 11L, 12L).zipWithIndex.foreach { case (id, k) =>
+        pair.land(k, arrivals.filter(col("doc_id") === id))
+      }
       // (a) between-folds read path answers the one-shot build
-      assert(served(pSegs, dSegs) === oneShot)
+      assert(pair.ep.leaves(pair.postings).size === 3)
+      assert(rowsOf(pair.serve(qterms)) === oneShot)
       // epoch fold + OPTIMIZE + age-out
-      Retrieval.foldSegments(spark, idx, pSegs.zipWithIndex.map(_.swap),
-        dSegs.zipWithIndex.map(_.swap), 1L)
-      idx.postings.compact(spark)
-      idx.doclens.compact(spark)
-      graft.streaming.LsmFold.prune(pSegs ++ dSegs)
+      ep.finish()
       // (b) steady state: the folded base alone answers identically…
-      assert(served(Nil, Nil) === oneShot)
+      assert(pair.ep.leaves(pair.postings).isEmpty && pair.ep.leaves(pair.doclens).isEmpty)
+      assert(rowsOf(pair.serve(qterms)) === oneShot)
       // …with a bounded physical layout: ≤ 1 file per bucket…
       val maxFiles = idx.postings.manifest.values.map { rel =>
-        graft.streaming.PartitionedTable.listDir(idx.postings.dir.resolve(rel))
-          .count(_.getFileName.toString.endsWith(".parquet"))
+        LsmFold.parquetFiles(idx.postings.dir.resolve(rel))
       }.max
       assert(maxFiles <= 1, s"post-OPTIMIZE bucket holds $maxFiles files")
       // …and zero segments left on disk
-      Seq("p", "d").map(segDir.resolve).foreach { p =>
-        assert(!java.nio.file.Files.exists(p) ||
-          graft.streaming.PartitionedTable.listDir(p).isEmpty,
-          s"segments not aged out under $p")
-      }
-    } finally {
-      graft.streaming.PartitionedTable.deleteRecursively(dir)
+      assert(LsmFold.parquetFiles(ep.dir.resolve("segs")) === 0,
+        "segments not aged out")
     }
   }
 
@@ -233,43 +214,37 @@ class RetrievalSpec extends AnyFunSuite {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val batch = Seq((9L, "a b c d x", "en", "s", 9L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_fold_fence_spec")
-    try {
-      graft.streaming.Replication.withWriterLease(dir) { lease =>
-        val idx = Retrieval.buildMaintained(spark, dir.resolve("idx"), base)
-        idx.postings.withFence(() => lease.check(), Some(lease.generation))
-        idx.doclens.withFence(() => lease.check(), Some(lease.generation))
-        val segDir = dir.resolve("segs")
-        java.nio.file.Files.createDirectories(segDir)
-        val seg = Retrieval.writeSegment(segDir, 0L, Retrieval.postingsOf(batch))
-        val before = idx.postings.read(spark).count()
-        val snapsBefore = idx.postings.snapshots
-        // cross-host steal while this maintainer is mid-epoch: last
-        // writer wins the lock PATH (the OS lock does not propagate)
-        java.nio.file.Files.write(dir.resolve("LOCK"),
-          (s"${ProcessHandle.current.pid} ${System.currentTimeMillis} " +
-            s"stolen-nonce ${lease.generation + 1}").getBytes("UTF-8"))
-        val refusal = intercept[java.util.ConcurrentModificationException] {
-          Retrieval.foldSegments(spark, idx, Seq(0 -> seg), Seq.empty, 1L)
+    Epoch.run(spark, "graft_fold_fence_spec") { ep =>
+      val idx = Retrieval.maintainedIndex(spark, ep.dir.resolve("idx"), base)
+      val pair = new Retrieval.Bm25Epoch(ep, idx)
+      Retrieval.seedMaintained(spark, idx, base)
+      pair.ep.land(pair.postings, 0, Retrieval.postingsOf(batch))
+      val before = idx.postings.read(spark).count()
+      val snapsBefore = idx.postings.snapshots
+      // cross-host steal while this maintainer is mid-epoch: last
+      // writer wins the lock PATH (the OS lock does not propagate)
+      val lock = ep.dir.resolve("LOCK")
+      val gen = new String(java.nio.file.Files.readAllBytes(lock), "UTF-8")
+        .trim.split("\\s+")(3).toLong
+      java.nio.file.Files.write(lock,
+        (s"${ProcessHandle.current.pid} ${System.currentTimeMillis} " +
+          s"stolen-nonce ${gen + 1}").getBytes("UTF-8"))
+      val refusal = intercept[java.util.ConcurrentModificationException](ep.finish())
+      // the refusal is the TERMINAL fence type — retryingCommit must
+      // rethrow it immediately, never rebase-and-retry a dead lease
+      assert(refusal.isInstanceOf[graft.streaming.PartitionedTable.FencedCommitException])
+      var retries = 0
+      intercept[graft.streaming.PartitionedTable.FencedCommitException] {
+        graft.streaming.PartitionedTable.retryingCommit() {
+          retries += 1
+          ep.finish()
         }
-        // the refusal is the TERMINAL fence type — retryingCommit must
-        // rethrow it immediately, never rebase-and-retry a dead lease
-        assert(refusal.isInstanceOf[graft.streaming.PartitionedTable.FencedCommitException])
-        var retries = 0
-        intercept[graft.streaming.PartitionedTable.FencedCommitException] {
-          graft.streaming.PartitionedTable.retryingCommit() {
-            retries += 1
-            Retrieval.foldSegments(spark, idx, Seq(0 -> seg), Seq.empty, 1L)
-          }
-        }
-        assert(retries === 1, s"fence refusal was retried $retries times")
-        // nothing published: same rows, same snapshots, no garbage
-        assert(idx.postings.read(spark).count() === before)
-        assert(idx.postings.snapshots === snapsBefore)
-        assert(idx.postings.vacuum() === 0)
       }
-    } finally {
-      graft.streaming.PartitionedTable.deleteRecursively(dir)
+      assert(retries === 1, s"fence refusal was retried $retries times")
+      // nothing published: same rows, same snapshots, no garbage
+      assert(idx.postings.read(spark).count() === before)
+      assert(idx.postings.snapshots === snapsBefore)
+      assert(idx.postings.vacuum() === 0)
     }
   }
 

@@ -145,23 +145,21 @@ class ServeSessionSpec extends AnyFunSuite {
     val isArr = Retrieval.isArrival(col("doc_id"))
     val wd = java.nio.file.Files.createTempDirectory("graft_srvbm25")
     try {
-      val idx = Retrieval.buildMaintained(spark, wd.resolve("idx"),
-        docs.filter(!isArr))
+      val idx = Bm25Maintained.seeded(spark, wd.resolve("idx"), docs.filter(!isArr))
       val queries = docs.filter(col("doc_id").isInCollection(Retrieval.QueryDocs))
         .select(col("doc_id").as("query_id"), col("text"))
       val sess = ServeSession.bm25Maintained(spark, idx.postings, idx.doclens)
       try {
         val p0 = sess.pinnedSnapshots
         val r0 = rowsOf(sess.serve(queries))
-        Retrieval.appendArrivals(spark, idx, docs.filter(isArr), 1L)
-        idx.postings.compact(spark)
-        idx.doclens.compact(spark)
+        // one maintain epoch: fold + compact on both tables
+        Bm25Maintained.epoch(spark, idx, Seq(0 -> docs.filter(isArr)))
         assert(sess.pinnedSnapshots === p0)
         assert(rowsOf(sess.serve(queries)) === r0,
           "a pinned session must keep serving exactly its snapshots across folds")
         val p1 = sess.refresh()
         assert(p1 !== p0)
-        val fresh = Retrieval.serveMaintained(spark, idx,
+        val fresh = Bm25Maintained.served(spark, idx,
           Retrieval.queryGramsOfRelation(queries))
         assert(rowsOf(sess.serve(queries)) === rowsOf(fresh))
       } finally sess.close()
@@ -169,21 +167,15 @@ class ServeSessionSpec extends AnyFunSuite {
   }
 
   test("BM25 maintained session: a refresh injected BETWEEN a fold's two commits never pins a torn pair (r16 VERDICT item 1)") {
-    import graft.streaming.PartitionedTable
+    import graft.streaming.{Epoch, PartitionedTable}
     val docs = Tables.documents(spark, d)
     val isArr = Retrieval.isArrival(col("doc_id"))
     val wd = java.nio.file.Files.createTempDirectory("graft_tornpair")
     try {
-      val idx = Retrieval.buildMaintained(spark, wd.resolve("idx"),
-        docs.filter(!isArr))
+      val idx = Bm25Maintained.seeded(spark, wd.resolve("idx"), docs.filter(!isArr))
       val queries = docs.filter(col("doc_id").isInCollection(Retrieval.QueryDocs))
         .select(col("doc_id").as("query_id"), col("text"))
-      val segDir = wd.resolve("segs")
-      java.nio.file.Files.createDirectories(segDir)
       val arrivals = docs.filter(isArr)
-      val pSeg = Retrieval.writeSegment(segDir, 0L, Retrieval.postingsOf(arrivals))
-      val dSeg = Retrieval.writeSegment(segDir.resolve("d"), 0L,
-        Retrieval.doclensOf(arrivals))
       val sess = ServeSession.bm25Maintained(spark, idx.postings, idx.doclens)
       try {
         val pre = sess.pinnedSnapshots
@@ -194,26 +186,40 @@ class ServeSessionSpec extends AnyFunSuite {
         // the old postings-first order, the reverse torn mix). The
         // paired resolution must keep serving the PRE-fold pair.
         var observedMidFold: (Long, Long) = null
-        Retrieval.foldPaired(spark, idx,
-          Seq((Seq(0), pSeg)), Seq((Seq(0), dSeg)), ver = 1L,
-          between = () => {
+        var midFold: () => Unit = () => ()
+        Epoch.run(spark, "graft_tornpair") { ep =>
+          val dl = ep.table(idx.doclens, "bm25dl", merge = true)
+          // an Epoch fold evaluates the postings markers after the
+          // doclens base commit and before the postings one
+          val post = ep.table(idx.postings, "bm25idx", merge = false, {
+            midFold()
+            Retrieval.pairMarkerOf(idx)
+          })
+          ep.land(post, 0, Retrieval.postingsOf(arrivals))
+          ep.land(dl, 0, Retrieval.doclensOf(arrivals))
+          midFold = () => {
+            midFold = () => ()
+            assert(idx.doclens.lastTxn("bm25dl.seg0").nonEmpty &&
+              idx.postings.lastTxn("bm25idx.seg0").isEmpty, "not between the two commits")
             assert(!sess.isStale,
               "mid-fold the head PAIR is unchanged - postings head still names the pre-fold doclens")
             sess.refresh()
             observedMidFold = sess.pinnedSnapshots
-          })
+          }
+          ep.finish()
+        }
         assert(observedMidFold === pre,
           "a refresh between the two commits must pin the PRE-fold pair, never a torn mix")
         assert(rowsOf(sess.serve(queries)) === preRows,
           "mid-fold refresh must leave the session serving the pre-fold state")
         // fold complete: refresh pins the post-fold pair, whose marker
-        // names exactly the doclens snapshot committed by this fold
+        // names exactly the doclens snapshot the postings head recorded
         val post = sess.refresh()
         assert(post._1 > pre._1 && post._2 > pre._2)
         assert(idx.postings.txnsAt(post._1).get(Retrieval.PairMarker)
           .contains(post._2),
           "the pinned doclens snapshot must be the one the postings commit recorded")
-        val fresh = Retrieval.serveMaintained(spark, idx,
+        val fresh = Bm25Maintained.served(spark, idx,
           Retrieval.queryGramsOfRelation(queries))
         assert(rowsOf(sess.serve(queries)) === rowsOf(fresh))
       } finally sess.close()
