@@ -59,12 +59,14 @@ object MaintainProbe {
       val (standingP, nbP, secSeg, secFold, touchedP, secDirect) =
         Epoch.run(spark, "graft_maintprobe_bm25") { ep =>
           val idx = Retrieval.maintainedIndex(spark, ep.dir.resolve("idx"), base)
-          val pair = new Retrieval.Bm25Epoch(ep, idx)
           Retrieval.seedMaintained(spark, idx, base)
+          // only postings is registered, so the fold timed is postings only
+          val post = ep.table(idx.postings, "bm25idx", merge = false)
           val standing = idx.postings.read(spark).count()
           // the streaming loop's per-trigger path: O(batch) segment write
-          val secSeg = timed(pair.ep.land(pair.postings, 0, batchP))._2
-          // the deferred per-epoch fold (one bucketed-base rewrite)
+          val secSeg = timed(ep.land(post, 0, batchP))._2
+          // the deferred per-epoch fold (one bucketed-base rewrite, then
+          // the prune of its one segment)
           ep.finish()
           // ablation: the DIRECT bucketed merge per batch — gram keys
           // are uniform, so this touches ~every bucket and its cost
@@ -102,10 +104,10 @@ object MaintainProbe {
           (standing, secSeg, ep.folds.head.sec, touched.size, secDirect)
         }
       // ---- serve latency vs UNFOLDED segment count (r11 age-out) --
-      // the LSM read path between folds is base ∪ segments: each
-      // unfolded segment adds leaf files to the scan, so serve degrades
-      // with segment count — the number that sets the fold cadence.
-      // Land the same fixed batch as 32 hash-split sub-batches on a
+      // the LSM read path between folds is base ∪ segments, read as
+      // ONE multi-path scan (`Epoch.unfolded`): the first unfolded leaf
+      // costs a step (the union), further leaves add little — the curve
+      // that sets the fold cadence. Land the same fixed batch as 32 hash-split sub-batches on a
       // fresh index over the non-arrival base, serve over base ∪ the
       // first S segments for S ∈ {0, 8, 32}, then the epoch's one close
       // fold + compact, the post-OPTIMIZE serve and worst-bucket file
@@ -133,8 +135,13 @@ object MaintainProbe {
           val maxFiles = idx.postings.manifest.values.map { rel =>
             graft.streaming.LsmFold.parquetFiles(idx.postings.dir.resolve(rel))
           }.max
+          // segment dirs the close fold left behind (pruning removes all)
+          val segsLeft = Seq(pair.postings, pair.doclens)
+            .map(t => ep.dir.resolve("segs").resolve(t.app))
+            .filter(java.nio.file.Files.exists(_))
+            .map(graft.streaming.PartitionedTable.listDir(_).size).sum
           (curve, filesPerSeg, ep.folds.head.sec, serveSec(pair.serve(qterms)),
-            maxFiles, graft.streaming.LsmFold.parquetFiles(ep.dir.resolve("segs")))
+            maxFiles, segsLeft)
         }
       println(f"[maintain] $tag serve-vs-segments: " +
         serveBySeg.map { case (n, t) => f"S$n=$t%.2f" }.mkString(" ") +
@@ -231,7 +238,10 @@ object MaintainProbe {
       ("note" -> ("fixed-size batch into standing indexes 10x apart: the per-trigger " +
         "segment write is O(batch) and stays flat; the direct bucketed merge is the " +
         "ablation - uniform keys touch every bucket so its cost tracks the standing " +
-        "index, which is why the streaming loops fold segments once per epoch instead")) ~
+        "index, which is why the streaming loops fold segments once per epoch instead; " +
+        "serve_sec_by_unfolded_segments times Epoch.unfolded's one multi-path scan over " +
+        "base and the first S segments (MAINTAIN_r11..r17 timed one union leg per segment, " +
+        "so their values are not comparable with these)")) ~
       ("tiers" -> JObject(rows.toList)), Some(out))
   }
 }

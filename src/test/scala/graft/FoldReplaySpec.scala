@@ -162,10 +162,12 @@ class FoldReplaySpec extends AnyFunSuite {
         "the recovery fold must land the postings exactly once")
       assert(idx.doclens.read(spark).count() === dRows1,
         "the already-folded doclens must not re-land (keyed merge would mask a dup; count pins it)")
-      // the postings head names a doclens snapshot that holds sub-batch
-      // 0 — the pair a session resolves is whole
-      val paired = idx.postings.txnsAt(idx.postings.snapshots.last)(Retrieval.PairMarker)
-      assert(idx.doclens.txnsAt(paired).contains("bm25dl.seg0"))
+      // the recovery postings commit re-stamps the pair marker to the
+      // CURRENT doclens head, which holds sub-batch 0 — the pair a
+      // session resolves is whole
+      val paired = idx.postings.txnsAt(idx.postings.snapshots.last).get(Retrieval.PairMarker)
+      assert(paired.contains(idx.doclens.snapshots.last))
+      assert(paired.exists(idx.doclens.txnsAt(_).contains("bm25dl.seg0")))
 
       // the recovered state answers exactly the one-shot build
       assert(rows(served(spark, idx, Retrieval.queryGramsOf(docs))) ===
