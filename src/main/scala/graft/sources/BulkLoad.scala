@@ -25,11 +25,11 @@ object BulkLoad {
     // Downstream reads of the snappy-parquet staging are cheap scans.
     // The extra write volume is the classic ELT staging trade and holds
     // at cluster scale for the same reason.
-    // (Measured: the generic XML source beats the hand-rolled StAX
-    // alternative (OsmXml.scanStax) ~26k vs ~18k rows/s here — the
-    // Dataset row-encoder tax on nested case classes outweighs the
-    // leaner parse. Keep the codegen'd source; scanStax remains the
-    // golden-equality-tested fallback.)
+    // (Measured: the generic XML source beat a distributed job of the
+    // StAX parse, OsmXml.parseFile, ~26k vs ~18k rows/s here — the
+    // Dataset row-encoder tax on nested rows outweighs the leaner
+    // parse. A dump takes the codegen'd source; the StAX parse serves
+    // the KB-sized replication diffs, on the driver.)
     val staging = s"$outDir/_staging_raw"
     OsmXml.scan(spark, dumpPath).write.mode(SaveMode.Overwrite).parquet(staging)
     val raw = spark.read.parquet(staging)

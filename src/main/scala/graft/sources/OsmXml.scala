@@ -1,8 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** OSM changeset-XML scan (SURVEY.md §2a scan_xml / scan_compressed;
   * reference `changesetmd.py:78-125`).
@@ -55,8 +57,8 @@ object OsmXml {
     * leading/trailing whitespace from values by default, which XML 1.0
     * attribute-value normalization does NOT license for #x20 — a tag
     * value of `"v "` must round-trip byte-faithfully, matching the
-    * StAX path and the reference's iterparse (XmlFuzzSpec pins the
-    * two scans equal on fuzzed content). */
+    * StAX parse and the reference's iterparse (XmlFuzzSpec pins the
+    * two equal on fuzzed content). */
   def scan(spark: SparkSession, paths: String*): DataFrame =
     spark.read
       .format("xml")
@@ -65,29 +67,19 @@ object OsmXml {
       .schema(xmlSchema)
       .load(paths: _*)
 
-  // ---- StAX fast scan (bulk-load hot path) ---------------------------
+  // ---- StAX parse (replication batches, the V2 source) ---------------
 
-  /** Raw-shape rows for the StAX parser — field names mirror the XML
-    * attribute schema above so `changesets`/`comments` work unchanged
-    * on either scan. Attribute values stay raw strings (casts remain
-    * visible plan nodes downstream). */
-  case class RawComment(_uid: String, _user: String, _date: String, text: String)
-  case class RawDiscussion(comment: Seq[RawComment])
-  case class RawTag(_k: String, _v: String)
-  case class RawChangeset(
-      _id: java.lang.Long, _created_at: String, _closed_at: String,
-      _open: String, _num_changes: String, _user: String, _uid: String,
-      _min_lat: String, _max_lat: String, _min_lon: String, _max_lon: String,
-      tag: Seq[RawTag], discussion: RawDiscussion)
-
-  /** StAX pull-parse of one changeset file (plain or any Hadoop codec)
-    * — O(1) memory per element, the reference's `iterparse` +
-    * `elem.clear()` discipline (`changesetmd.py:82,119-122`) inside
-    * each Spark task. */
-  def parseFile(in: java.io.InputStream): Iterator[RawChangeset] = {
-    val f = javax.xml.stream.XMLInputFactory.newInstance()
-    f.setProperty(javax.xml.stream.XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-    f.setProperty(javax.xml.stream.XMLInputFactory.SUPPORT_DTD, false)
+  /** StAX pull-parse of one changeset stream into raw rows in
+    * `xmlSchema`'s shape, so `changesets`/`comments` type them exactly
+    * as they type `scan`'s rows (OsmXmlSpec and XmlFuzzSpec pin the two
+    * equal). O(1) parser state per element — the reference's
+    * `iterparse` + `elem.clear()` discipline
+    * (`changesetmd.py:82,119-122`). Closes `in`. */
+  def parseFile(in: java.io.InputStream): Seq[Row] = {
+    import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
+    val f = XMLInputFactory.newInstance()
+    f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
+    f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
     val r = f.createXMLStreamReader(in)
     def attr(name: String): String = {
       var i = 0
@@ -97,99 +89,70 @@ object OsmXml {
       }
       null
     }
-    val out = Vector.newBuilder[RawChangeset]
-    var cs: RawChangeset = null
-    var tags = List.empty[RawTag]
-    var comments = List.empty[RawComment]
-    var curComment: RawComment = null
+    val out = Vector.newBuilder[Row]
+    var cs: Array[Any] = null
+    var tags = List.empty[Row]
+    var comments = List.empty[Row]
+    var curComment: Array[Any] = null
     var inText = false
     val text = new StringBuilder
-    while (r.hasNext) {
+    try while (r.hasNext) {
       r.next() match {
-        case javax.xml.stream.XMLStreamConstants.START_ELEMENT =>
+        case XMLStreamConstants.START_ELEMENT =>
           r.getLocalName match {
             case "changeset" =>
-              cs = RawChangeset(
-                Option(attr("id")).map(java.lang.Long.valueOf).orNull,
+              cs = Array[Any](Option(attr("id")).map(java.lang.Long.valueOf).orNull,
                 attr("created_at"), attr("closed_at"), attr("open"),
                 attr("num_changes"), attr("user"), attr("uid"),
                 attr("min_lat"), attr("max_lat"), attr("min_lon"), attr("max_lon"),
-                Nil, null)
+                null, null)
               tags = Nil; comments = Nil
             case "tag" if cs != null =>
-              tags = RawTag(attr("k"), attr("v")) :: tags
+              tags = Row(attr("k"), attr("v")) :: tags
             case "comment" if cs != null =>
-              curComment = RawComment(attr("uid"), attr("user"), attr("date"), null)
+              curComment = Array[Any](attr("uid"), attr("user"), attr("date"), null)
             case "text" if curComment != null =>
               inText = true; text.clear()
             case _ =>
           }
-        case javax.xml.stream.XMLStreamConstants.CHARACTERS if inText =>
+        case XMLStreamConstants.CHARACTERS if inText =>
           text.append(r.getText)
-        case javax.xml.stream.XMLStreamConstants.END_ELEMENT =>
+        case XMLStreamConstants.END_ELEMENT =>
           r.getLocalName match {
             case "text" if inText =>
               inText = false
-              curComment = curComment.copy(text = text.toString)
+              curComment(3) = text.toString
             case "comment" if curComment != null =>
-              comments = curComment :: comments
+              comments = Row.fromSeq(curComment.toSeq) :: comments
               curComment = null
             case "changeset" if cs != null =>
-              out += cs.copy(tag = tags.reverse,
-                discussion = if (comments.isEmpty) null
-                  else RawDiscussion(comments.reverse))
+              cs(11) = tags.reverse
+              cs(12) = if (comments.isEmpty) null else Row(comments.reverse)
+              out += new GenericRowWithSchema(cs, xmlSchema)
               cs = null
             case _ =>
           }
         case _ =>
       }
-    }
-    r.close(); in.close()
-    out.result().iterator
+    } finally { r.close(); in.close() }
+    out.result()
   }
 
-  /** Distributed StAX scan: one task per file, the specialized
-    * pull-parser instead of the generic XML source's row-tag scanner.
-    * Identical output to `scan` (golden-equality tested); compressed
-    * inputs go through the same Hadoop codecs; one-task-per-file
-    * saturates a cluster on a many-file dump. NOTE: measured SLOWER
-    * than the generic source at bench scale (~18k vs ~26k rows/s) —
-    * the Dataset row-encoder on nested case classes costs more than
-    * the leaner parse saves — so BulkLoad keeps the codegen'd generic
-    * source; this stays as the validated fallback (and documents why
-    * the V2 streaming source emits InternalRow directly instead). */
-  def scanStax(spark: SparkSession, paths: String*): DataFrame = {
-    import spark.implicits._
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val confB = spark.sparkContext.broadcast(
-      new org.apache.spark.SerializableWritable(hadoopConf))
-    val files: Seq[String] = paths.flatMap { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(hadoopConf)
-      val matches = Option(fs.globStatus(hp)).map(_.toSeq).getOrElse(Seq.empty)
-      val all = if (matches.nonEmpty) matches else Seq(fs.getFileStatus(hp))
-      all.flatMap { st =>
-        if (st.isDirectory) fs.listStatus(st.getPath).toSeq.filter(_.isFile)
-        else Seq(st)
-      }.map(_.getPath.toString)
-    }
-    spark.createDataset(files)
-      .repartition(math.max(files.size, 1))
-      .mapPartitions { it =>
-        val c = confB.value.value
-        val factory = new org.apache.hadoop.io.compress.CompressionCodecFactory(c)
-        it.flatMap { file =>
-          val hp = new org.apache.hadoop.fs.Path(file)
-          val raw: java.io.InputStream = hp.getFileSystem(c).open(hp)
-          val in = Option(factory.getCodec(hp))
-            .map(codec => codec.createInputStream(raw): java.io.InputStream)
-            .getOrElse(raw)
-          parseFile(in)
-        }
-      }
-      .toDF()
-      .select(xmlSchema.fieldNames.map(col): _*) // canonical column order
+  /** The driver parse of one file (plain or any Hadoop codec): open
+    * `path` on its Hadoop filesystem, decompress through the codec its
+    * extension names — the factory the XML source uses — and
+    * `parseFile` it. */
+  def parsePath(conf: org.apache.hadoop.conf.Configuration, path: String): Seq[Row] = {
+    val hp = new org.apache.hadoop.fs.Path(path)
+    val raw: java.io.InputStream = hp.getFileSystem(conf).open(hp)
+    parseFile(Option(new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
+      .getCodec(hp)).fold(raw)(_.createInputStream(raw)))
   }
+
+  /** Raw rows as a local relation in `xmlSchema`: `changesets` over it
+    * folds to a local relation on the driver (no Spark job). */
+  def local(spark: SparkSession, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, xmlSchema)
 
   /** Raw scan → the `changesets` relation: explicit casts
     * (string→long/decimal(10,7)/timestamp/boolean/int per

@@ -1,6 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal, Murmur3Hash, Pmod}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
@@ -14,8 +17,9 @@ import graft.operators.Upsert
   * file maps bucket → current data directory (relative to the table
   * root). A merge:
   *
-  *   1. computes the bucket set of the update batch (tiny collect —
-  *      bounded by nBuckets, not data),
+  *   1. computes the bucket set of the update batch: on the driver
+  *      for a local batch (a replication tick's), by one probe job over
+  *      the cached batch for a distributed one,
   *   2. anti-join+unions ONLY those buckets' current data with the
   *      updates — one distributed merge plan over all touched buckets,
   *   3. writes every touched bucket in one write (`partitionBy("__b")`
@@ -365,6 +369,15 @@ class PartitionedTable(val dir: Path, val keyCol: String, val nBuckets: Int) {
   def read(spark: SparkSession): DataFrame =
     readBuckets(spark, manifest.keys.toSeq.sorted)
 
+  /** Bucket ids of `key` over `rows`, evaluated on the driver:
+    * `pmod(murmur3(key, 42), nBuckets)`, the terms of `bucketExpr`
+    * (`hash` is murmur3 with seed 42), so no Spark job runs. Used by
+    * `lookup` and by `mergeInto`'s local-batch path. */
+  private def bucketsOf(key: Expression, rows: Iterable[InternalRow]): Seq[Int] = {
+    val b = Pmod(Murmur3Hash(Seq(key), 42), Literal(nBuckets))
+    rows.iterator.map(b.eval(_).asInstanceOf[Int]).toSeq.distinct.sorted
+  }
+
   /** Point lookup — the PK-index analog: the key's bucket id is
     * recomputed on the driver from the key itself by evaluating the
     * bucket expression (`pmod(murmur3(key, 42), nBuckets)`) over the
@@ -377,12 +390,11 @@ class PartitionedTable(val dir: Path, val keyCol: String, val nBuckets: Int) {
     * never written (or was emptied by deleteKeys) answers with zero
     * rows, not an error. */
   def lookup(spark: SparkSession, key: Any): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Murmur3Hash, Pmod}
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
     val raw = Literal(key)
     val t = storedSchema.fold(raw.dataType)(_(keyCol).dataType)
     val typed = Literal(Cast(raw, t, Some(spark.sessionState.conf.sessionLocalTimeZone)).eval(), t)
-    val b = Pmod(Murmur3Hash(Seq(typed), 42), Literal(nBuckets)).eval().asInstanceOf[Int]
-    manifest.get(b) match {
+    manifest.get(bucketsOf(typed, Seq(InternalRow.empty)).head) match {
       case Some(v) =>
         readPaths(spark, Seq(dir.resolve(v).toString), storedSchema)
           .filter(col(keyCol) === lit(key).cast(t))
@@ -445,8 +457,8 @@ class PartitionedTable(val dir: Path, val keyCol: String, val nBuckets: Int) {
   /** Merge `updates` (last-wins-compacted by caller) into the table,
     * rewriting only the buckets that hold update keys — in one
     * key-aligned write, one file per touched bucket. Returns the
-    * touched bucket ids (empty input → no-op, no jobs beyond the
-    * bucket probe).
+    * touched bucket ids (empty input → no-op, no jobs beyond a
+    * distributed batch's bucket probe).
     *
     * `txn = Some(appId -> version)` makes the write IDEMPOTENT per
     * writer: a version ≤ the recorded one for `appId` is a replay
@@ -474,10 +486,17 @@ class PartitionedTable(val dir: Path, val keyCol: String, val nBuckets: Int) {
     // single-pass and derives the manifest from the written __b= dirs
     // (the deleteKeys listing pattern).
     if (manifest.isEmpty) return freshWrite(spark, updates, txn, alsoRecord)
-    val withBucket = updates.withColumn("__b", bucketExpr).cache()
-    val touched = withBucket.select("__b").distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    if (touched.isEmpty) { withBucket.unpersist(); return Nil }
+    // A LOCAL batch (a replication batch built on the driver) names its
+    // touched buckets by evaluating the bucket expression over its rows
+    // on the driver: no cache, no probe job. A distributed batch is
+    // cached and probed.
+    val cached = updates.queryExecution.optimizedPlan match {
+      case _: LocalRelation => None
+      case _ => Some(updates.withColumn("__b", bucketExpr).cache())
+    }
+    val touched = cached.fold(localBuckets(spark, updates))(
+      _.select("__b").distinct().collect().map(_.getInt(0)).sorted.toSeq)
+    if (touched.isEmpty) { cached.foreach(_.unpersist()); return Nil }
     val m = manifest
     val existingPaths = touched.flatMap(b => m.get(b).map(v => dir.resolve(v).toString))
     // one merge plan over all touched buckets: existing bucket ids are
@@ -485,7 +504,7 @@ class PartitionedTable(val dir: Path, val keyCol: String, val nBuckets: Int) {
     val existing =
       if (existingPaths.isEmpty) None
       else Some(readPaths(spark, existingPaths, storedSchema))
-    val updFlat = withBucket.drop("__b")
+    val updFlat = cached.fold(updates)(_.drop("__b"))
     val merged = existing match {
       case Some(ex) =>
         // additive schema evolution: a batch may carry NEW columns
@@ -518,12 +537,21 @@ class PartitionedTable(val dir: Path, val keyCol: String, val nBuckets: Int) {
     val commit = nextCommit(m)
     val commitRel = attemptDir(commit)
     writeAligned(merged, commitRel)
-    withBucket.unpersist()
+    cached.foreach(_.unpersist())
     // partitionBy writes one __b=<n> dir per touched bucket under the
     // commit dir; repoint only those buckets, one atomic manifest swap
     writeManifest(m ++ touched.map(b => b -> s"$commitRel/__b=$b"), commit,
       txns ++ txn ++ alsoRecord, Some(commitRel), schemaToRecord(spark, merged.schema))
     touched
+  }
+
+  /** Touched buckets of a batch whose plan optimizes to a
+    * `LocalRelation`: its key column's values, bucketed on the driver. */
+  private def localBuckets(spark: SparkSession, updates: DataFrame): Seq[Int] = {
+    val l = updates.queryExecution.optimizedPlan.asInstanceOf[LocalRelation]
+    val i = l.output.indexWhere(a => spark.sessionState.conf.resolver(a.name, keyCol))
+    require(i >= 0, s"batch has no key column $keyCol: ${l.output.mkString(", ")}")
+    bucketsOf(BoundReference(i, l.output(i).dataType, l.output(i).nullable), l.data)
   }
 
   /** Append `rows` WITHOUT key dedup — the insert-only fact-stream

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
-import graft.operators.Upsert
 import graft.sources.OsmXml
 
 /** Minutely-replication subsystem (SURVEY.md §2h; reference
@@ -14,9 +13,9 @@ import graft.sources.OsmXml
   * upsert application.
   *
   * The reference applies diffs row-by-row against Postgres; here each
-  * diff batch is a DataFrame merged into an immutable versioned
-  * parquet table — and, unlike the reference, many diffs can be
-  * compacted last-wins into ONE merge per catch-up run.
+  * diff batch is built on the driver and merged into an immutable
+  * versioned parquet table — and, unlike the reference, many diffs can
+  * be compacted last-wins into ONE merge per catch-up run.
   */
 object Replication {
 
@@ -72,12 +71,12 @@ object Replication {
   /** Where `state.yaml` and sequence-numbered diffs come from. The
     * reference fetches both over HTTP from the planet replication
     * feed; hermetic tests use a local directory. Staging is
-    * driver-side — minutely diffs are KB-sized; the distributed XML
-    * scan then reads the staged local copies. */
+    * driver-side — minutely diffs are KB-sized — and `catchUp` parses
+    * the staged copies on the driver too (`OsmXml.parsePath`). */
   sealed trait ReplicationSource {
     /** (sequence, last_run) of the feed head. */
     def serverState(): (Long, String)
-    /** Make `seqs` available locally; returns paths for OsmXml.scan. */
+    /** Make `seqs` available locally; returns paths for OsmXml.parsePath. */
     def stage(seqs: Seq[Long]): Seq[String]
   }
 
@@ -437,11 +436,13 @@ object Replication {
   /** While local < server: fetch diff, parse, last-wins compact, merge
     * both relations, commit offset. `batchSize` > 1 compacts several
     * diffs into one merge — a capability the reference lacks.
-    * Merges go through PartitionedTable: each batch rewrites the
-    * buckets its keys hash into — 7 Spark jobs per table per batch
-    * (the bucket probe, the merge's adaptive stages and the
-    * key-aligned write) — and an empty comments batch is a no-op
-    * without a separate isEmpty probe job.
+    * A batch is built on the driver: each staged diff is parsed once,
+    * typed by the `OsmXml` projections over a local relation, and
+    * compacted there, so the merges get local relations and
+    * PartitionedTable computes their touched buckets without a probe.
+    * The Spark jobs left are the comments' typing (`explode` runs as
+    * a job) and each table's merge stages and key-aligned write; an
+    * empty comments batch is a no-op.
     * Returns the number of diffs applied. */
   def catchUp(spark: SparkSession, baseDir: Path, tableDir: Path,
       statePath: Path, batchSize: Int = 8, nBuckets: Int = 8): Int = {
@@ -469,29 +470,15 @@ object Replication {
       table.withFence(() => lease.check(), Some(lease.generation))
       comments.withFence(() => lease.check(), Some(lease.generation))
       try {
+      val conf = spark.sparkContext.hadoopConfiguration
       var local = st0.lastSequence
       while (local < serverSeq) {
         val hi = math.min(local + batchSize, serverSeq)
         val seqs = (local + 1) to hi
-        val paths = source.stage(seqs)
-        // Within-batch last-wins must follow FEED ORDER — the reference
-        // applies diffs sequentially, so the row from the highest
-        // sequence wins regardless of content (a content proxy like
-        // closed_at breaks the moment timestamps aren't monotone with
-        // the feed). Tag each diff's rows with its sequence; content
-        // columns only break ties WITHIN one diff. The per-file scans
-        // union into one distributed job — same task count as the
-        // multi-path scan they replace.
-        val parts = paths.zip(seqs).map { case (p, q) =>
-          (OsmXml.scan(spark, p), lit(q)) }
-        val cs = Upsert.lastWins(
-          parts.map { case (raw, q) => OsmXml.changesets(raw).withColumn("__seq", q) }
-            .reduce(_ unionByName _),
-          Seq("id"), Seq(col("__seq"), col("closed_at"), col("num_changes")))
-          .drop("__seq")
-        table.mergeInto(spark, cs)
-        comments.mergeInto(spark, compactComments(
-          parts.map { case (raw, _) => OsmXml.comments(raw) }.reduce(_ unionByName _)))
+        val diffs = source.stage(seqs).map(OsmXml.parsePath(conf, _)).zip(seqs)
+        table.mergeInto(spark, OsmXml.changesets(OsmXml.local(spark, lastWins(spark, diffs))))
+        comments.mergeInto(spark, compactLocal(spark,
+          OsmXml.comments(OsmXml.local(spark, diffs.flatMap(_._1)))))
         applied += (hi - local).toInt
         local = hi
         // offset committed after each applied batch → crash-safe replay ≤ batchSize
@@ -509,13 +496,54 @@ object Replication {
     applied
   }
 
-  /** Within-batch comment dedup. Identity includes the TEXT: the
+  /** Within-batch last-wins over a batch's (raw rows, sequence)
+    * diffs, `Upsert.lastWins`' rule on the driver: per id, the raw row
+    * whose typed (sequence, closed_at, num_changes) is highest, nulls
+    * lowest; winners keep feed order. The order follows the FEED — the
+    * reference applies diffs sequentially, so the row from the highest
+    * sequence wins whatever its content (a content proxy like
+    * closed_at breaks the moment timestamps aren't monotone with the
+    * feed); content columns only break ties within one diff. The typed
+    * keys come from `OsmXml.changesets`, row for row, folded on the
+    * driver. */
+  private def lastWins(spark: SparkSession, diffs: Seq[(Seq[Row], Long)]): Seq[Row] = {
+    val raw = diffs.flatMap(_._1).toIndexedSeq
+    val seqOf = diffs.flatMap { case (rows, q) => rows.map(_ => q) }.toIndexedSeq
+    val keys = OsmXml.changesets(OsmXml.local(spark, raw))
+      .select("id", "closed_at", "num_changes").collect()
+    def nullsLow(a: Any, b: Any): Int = (a, b) match {
+      case (null, null) => 0
+      case (null, _) => -1
+      case (_, null) => 1
+      case (x: Comparable[Any] @unchecked, y) => x.compareTo(y)
+    }
+    val order: Ordering[Int] = (i, j) => Seq(
+      java.lang.Long.compare(seqOf(i), seqOf(j)),
+      nullsLow(keys(i).get(1), keys(j).get(1)),
+      nullsLow(keys(i).get(2), keys(j).get(2))).find(_ != 0).getOrElse(0)
+    keys.indices.groupBy(keys(_).get(0)).values.map(_.max(order)).toSeq.sorted.map(raw)
+  }
+
+  /** Within-batch comment identity. It includes the TEXT: the
     * reference stores every comment row verbatim (changesetmd.py:
     * 71-76,105-106), so two distinct same-user same-second comments
     * must both survive — only true replays (identical text) collapse. */
+  val CommentIdentity: Seq[String] =
+    Seq("comment_changeset_id", "comment_user_id", "comment_date", "comment_text")
+
+  /** Within-batch comment dedup over a distributed relation. */
   def compactComments(comments: DataFrame): DataFrame =
-    comments.dropDuplicates(
-      "comment_changeset_id", "comment_user_id", "comment_date", "comment_text")
+    comments.dropDuplicates(CommentIdentity)
+
+  /** `compactComments` on the driver: the batch's typed comment rows
+    * (collected by one small job — `explode` does not fold into a
+    * local relation), the first row of each identity, as a local
+    * relation. */
+  private def compactLocal(spark: SparkSession, cm: DataFrame): DataFrame = {
+    val id = CommentIdentity.map(cm.schema.fieldIndex)
+    spark.createDataFrame(
+      cm.collect().toSeq.distinctBy(r => id.map(r.get)).asJava, cm.schema)
+  }
 
   // ---- hermetic fixture world ----------------------------------------
 

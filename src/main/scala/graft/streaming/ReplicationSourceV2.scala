@@ -28,10 +28,10 @@ import java.util
   * independent files → embarrassingly parallel), `maxSeqsPerBatch`
   * bounds batch width like the catch-up loop's batchSize.
   *
-  * The partition reader pull-parses the gzip diff XML with StAX —
-  * O(1) memory per element, the same discipline as the reference's
-  * `iterparse` + `elem.clear()` (`changesetmd.py:82,119-122`) — and
-  * emits rows in the `OsmXml.changesets` schema (raw per-diff rows;
+  * The partition reader pull-parses the gzip diff XML with
+  * `OsmXml.parseFile` (StAX, O(1) parser state per element, the
+  * reference's `iterparse` + `elem.clear()`, `changesetmd.py:82,119-122`)
+  * and emits rows in the `OsmXml.changesets` schema (raw per-diff rows;
   * last-wins compaction/merge stays a downstream operator, e.g.
   * foreachBatch → PartitionedTable).
   */
@@ -72,69 +72,28 @@ object ReplicationSourceV2 {
     java.time.Instant.parse(s).toEpochMilli * 1000L +
       java.time.Instant.parse(s).getNano / 1000 % 1000
 
-  /** StAX pull-parse of one diff file into InternalRows. */
+  /** One diff file's `OsmXml.parseFile` rows as InternalRows. */
   private[streaming] def parseDiff(path: java.nio.file.Path, seq: Long): Iterator[InternalRow] = {
     val in: java.io.InputStream = {
       val raw = java.nio.file.Files.newInputStream(path)
       if (path.toString.endsWith(".gz")) new java.util.zip.GZIPInputStream(raw) else raw
-    }
-    val f = javax.xml.stream.XMLInputFactory.newInstance()
-    f.setProperty(javax.xml.stream.XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-    f.setProperty(javax.xml.stream.XMLInputFactory.SUPPORT_DTD, false)
-    val r = f.createXMLStreamReader(in)
-
-    def attr(name: String): String = {
-      var i = 0
-      while (i < r.getAttributeCount) {
-        if (r.getAttributeLocalName(i) == name) return r.getAttributeValue(i)
-        i += 1
-      }
-      null
     }
     def utf8(s: String) = if (s == null) null else UTF8String.fromString(s)
     def dec(s: String) =
       if (s == null) null
       else org.apache.spark.sql.types.Decimal(new java.math.BigDecimal(s), 10, 7)
     def ts(s: String): Any = if (s == null) null else parseMicros(s)
-
-    val rows = Vector.newBuilder[InternalRow]
-    var cur: Array[Any] = null
-    var tagKeys: List[UTF8String] = Nil
-    var tagVals: List[UTF8String] = Nil
-    while (r.hasNext) {
-      r.next() match {
-        case javax.xml.stream.XMLStreamConstants.START_ELEMENT =>
-          r.getLocalName match {
-            case "changeset" =>
-              cur = Array[Any](
-                seq,
-                Option(attr("id")).map(_.toLong).orNull,
-                Option(attr("uid")).map(_.toLong).orNull,
-                ts(attr("created_at")),
-                dec(attr("min_lat")), dec(attr("max_lat")),
-                dec(attr("min_lon")), dec(attr("max_lon")),
-                ts(attr("closed_at")),
-                Option(attr("open")).map(_.toBoolean).orNull,
-                Option(attr("num_changes")).map(_.toInt).orNull,
-                utf8(attr("user")),
-                null)
-              tagKeys = Nil; tagVals = Nil
-            case "tag" if cur != null =>
-              tagKeys = utf8(attr("k")) :: tagKeys
-              tagVals = utf8(attr("v")) :: tagVals
-            case _ =>
-          }
-        case javax.xml.stream.XMLStreamConstants.END_ELEMENT
-            if r.getLocalName == "changeset" && cur != null =>
-          cur(12) = ArrayBasedMapData(
-            tagKeys.reverse.toArray[Any], tagVals.reverse.toArray[Any])
-          rows += InternalRow.fromSeq(cur.toIndexedSeq)
-          cur = null
-        case _ =>
-      }
+    graft.sources.OsmXml.parseFile(in).iterator.map { r =>
+      def a(f: String) = r.getAs[String](f)
+      val tags = r.getAs[Seq[org.apache.spark.sql.Row]]("tag")
+      InternalRow(seq, r.getAs[java.lang.Long]("_id"),
+        Option(a("_uid")).map(_.toLong).orNull, ts(a("_created_at")),
+        dec(a("_min_lat")), dec(a("_max_lat")), dec(a("_min_lon")), dec(a("_max_lon")),
+        ts(a("_closed_at")), Option(a("_open")).map(_.toBoolean).orNull,
+        Option(a("_num_changes")).map(_.toInt).orNull, utf8(a("_user")),
+        ArrayBasedMapData(tags.map(t => utf8(t.getString(0))).toArray[Any],
+          tags.map(t => utf8(t.getString(1))).toArray[Any]))
     }
-    r.close(); in.close()
-    rows.result().iterator
   }
 }
 

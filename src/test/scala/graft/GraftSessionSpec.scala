@@ -70,6 +70,14 @@ class GraftSessionSpec extends AnyFunSuite {
     }
   }
 
+  test("one StAX parser: XMLInputFactory appears only in sources/OsmXml") {
+    // OsmXml.parseFile; a factory anywhere else is a second pull-parse
+    // loop coming back
+    val hits = codeHits(sources("src/main"), "XMLInputFactory")
+    assert(hits.nonEmpty && hits.forall(_.contains("sources/OsmXml.scala:")),
+      hits.mkString("XMLInputFactory: ", ", ", ""))
+  }
+
   test("one recursive delete: reverseOrder appears only in PartitionedTable") {
     // PartitionedTable.deleteRecursively; a walk sorted in reverse
     // anywhere else is a hand-rolled copy of it

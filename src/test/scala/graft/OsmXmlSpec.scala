@@ -24,7 +24,7 @@ class OsmXmlSpec extends AnyFunSuite {
     assert(cs.count() === 3)
   }
 
-  test("scanStax is golden-equal to the generic XML scan (plain and gz)") {
+  test("the driver StAX parse is golden-equal to the generic XML scan (plain and gz)") {
     def norm(df: org.apache.spark.sql.DataFrame) =
       OsmXml.changesets(df).withColumn("tags", to_json(col("tags")))
     def normCm(df: org.apache.spark.sql.DataFrame) = OsmXml.comments(df)
@@ -32,7 +32,8 @@ class OsmXmlSpec extends AnyFunSuite {
       val p = Files.createTempDirectory("graft_stax").resolve(ext)
       OsmXml.writeFixture(p, OsmXml.bulkFixture)
       val generic = OsmXml.scan(spark, p.toString)
-      val stax = OsmXml.scanStax(spark, p.toString)
+      val stax = OsmXml.local(spark,
+        OsmXml.parsePath(spark.sparkContext.hadoopConfiguration, p.toString))
       assert(norm(stax).exceptAll(norm(generic)).isEmpty &&
         norm(generic).exceptAll(norm(stax)).isEmpty, s"changesets differ ($ext)")
       assert(normCm(stax).exceptAll(normCm(generic)).isEmpty &&

@@ -545,6 +545,35 @@ class PartitionedTableSpec extends AnyFunSuite {
     assert(longT.lookup(spark, 7).select("v").head().getString(0) === "v7")
   }
 
+  test("a local batch's driver-computed touched buckets equal the probe's for Int, Long and String keys") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    def isLocal(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+    def bothWays(name: String, base: org.apache.spark.sql.DataFrame,
+        batch: org.apache.spark.sql.DataFrame): Unit = {
+      val local = new PartitionedTable(Files.createTempDirectory(s"graft_pt_lb_$name"), "id", 8)
+      val probed = new PartitionedTable(Files.createTempDirectory(s"graft_pt_pb_$name"), "id", 8)
+      Seq(local, probed).foreach(_.mergeInto(spark, base))
+      val distributed = batch.repartition(3)
+      assert(isLocal(batch) && !isLocal(distributed), name)
+      val viaDriver = local.mergeInto(spark, batch)
+      val viaProbe = probed.mergeInto(spark, distributed)
+      assert(viaDriver === viaProbe, name)
+      assert(viaDriver.nonEmpty && viaDriver.size < 8, s"$name touched $viaDriver")
+      val expected = batch.select(pmod(hash(col("id")), lit(8))).distinct()
+        .collect().map(_.getInt(0)).sorted.toSeq
+      assert(viaDriver === expected, name)
+      val (a, b) = (local.read(spark), probed.read(spark))
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, name)
+    }
+    bothWays("long", (100L to 140L).map(k => (k, "b")).toDF("id", "v"),
+      Seq((3L, "x"), (120L, "y"), (7L, "z")).toDF("id", "v"))
+    bothWays("int", (100 to 140).map(k => (k, "b")).toDF("id", "v"),
+      Seq((3, "x"), (120, "y"), (7, "z")).toDF("id", "v"))
+    bothWays("string", (100 to 140).map(k => (s"k$k", "b")).toDF("id", "v"),
+      Seq(("k3", "x"), ("k120", "y"), ("k7", "z")).toDF("id", "v"))
+  }
+
   test("a merge into a non-empty table writes exactly one file per touched bucket") {
     val dir = Files.createTempDirectory("graft_pt_onefile")
     val t = new PartitionedTable(dir, "id", nBuckets = 8)

@@ -238,4 +238,142 @@ class UpsertSpec extends AnyFunSuite {
     Replication.StateDoc.write(p, st)
     assert(Replication.StateDoc.read(p) === st)
   }
+
+  // ---- the driver-built replication batch ----------------------------
+
+  private def csXml(id: Int, closed: Option[String], n: Option[Int], uid: Int,
+      tags: Seq[(String, String)], comments: Seq[(Int, Int, String)]): String = {
+    val attrs = Seq(s"""id="$id"""", """created_at="2015-11-15T23:00:00Z"""",
+      s"""user="u$uid"""", s"""uid="$uid"""", """open="false"""") ++
+      closed.map(c => s"""closed_at="2015-11-16T$c:00:00Z"""") ++ n.map(v => s"""num_changes="$v"""")
+    val tagXml = tags.distinctBy(_._1).map { case (k, v) => s"""<tag k="$k" v="$v"/>""" }
+    val cmXml = if (comments.isEmpty) "" else comments.map { case (cu, sec, t) =>
+      s"""<comment uid="$cu" user="c$cu" date="2015-11-16T03:00:0${sec}Z"><text>$t</text></comment>"""
+    }.mkString("<discussion>", "", "</discussion>")
+    s"""  <changeset ${attrs.mkString(" ")}>${tagXml.mkString}$cmXml</changeset>"""
+  }
+
+  /** The tick property's fixed first two diffs (one batch at every
+    * batch size it draws): id 1 in both diffs and twice in the first,
+    * where closed_at breaks the `__seq` tie; id 2 twice with one
+    * closed_at, where num_changes breaks it; id 3 with NULL closed_at
+    * and NULL num_changes beside a non-null twin; changeset 4 with two
+    * comments of one user in one second with different text, and a
+    * replayed comment. */
+  private val plantedDiffs: Seq[Seq[String]] = Seq(
+    Seq(csXml(1, Some("01"), Some(5), 1, Seq("k0" -> "old"), Nil),
+      csXml(1, Some("02"), Some(0), 2, Seq("k0" -> "new"), Nil),
+      csXml(2, Some("01"), Some(1), 1, Nil, Nil),
+      csXml(2, Some("01"), Some(2), 2, Seq("k1" -> "x"), Nil),
+      csXml(3, None, None, 1, Nil, Nil),
+      csXml(3, Some("01"), None, 2, Nil, Nil),
+      csXml(4, None, None, 1, Nil, Seq((1, 0, "a"), (1, 0, "b"), (1, 0, "a")))),
+    Seq(csXml(1, None, None, 3, Seq("k2" -> "last"), Seq((2, 1, "c")))))
+
+  /** One random diff of the tick property: ids from a pool of 6, so
+    * ids repeat within a diff and across the diffs of a batch;
+    * closed_at and num_changes from small sets with NULL; comments from
+    * 2 users in 2 seconds with 3 texts. No two rows of one diff share
+    * (id, closed_at, num_changes): that full tie has no defined winner
+    * in either pipeline. */
+  private val tickDiffGen: Gen[Seq[String]] = {
+    val changeset = for {
+      id <- Gen.chooseNum(1, 6)
+      closed <- Gen.option(Gen.oneOf("01", "02"))
+      n <- Gen.option(Gen.chooseNum(0, 2))
+      uid <- Gen.chooseNum(1, 3)
+      tags <- Gen.listOfN(2, Gen.zip(Gen.oneOf("k0", "k1", "k2"), Gen.alphaLowerStr.map(_.take(3))))
+      nc <- Gen.chooseNum(0, 3)
+      cms <- Gen.listOfN(nc, Gen.zip(Gen.chooseNum(1, 2), Gen.chooseNum(0, 1), Gen.oneOf("a", "b", "c")))
+    } yield ((id, closed, n), csXml(id, closed, n, uid, tags, cms))
+    Gen.chooseNum(1, 6).flatMap(k => Gen.listOfN(k, changeset))
+      .map(_.distinctBy(_._1).map(_._2))
+  }
+
+  private def writeDiffs(feed: java.nio.file.Path, diffs: Seq[Seq[String]]): Unit = {
+    diffs.zipWithIndex.foreach { case (cs, i) =>
+      graft.sources.OsmXml.writeFixture(feed.resolve(Replication.sequencePath(i + 1L)),
+        cs.mkString("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<osm version=\"0.6\">\n",
+          "\n", "\n</osm>\n"))
+    }
+    Files.writeString(feed.resolve("state.yaml"),
+      s"---\nlast_run: 2015-11-16 12:00:00.000000000 +00:00\nsequence: ${diffs.size}\n")
+  }
+
+  /** A replication world loaded with the bulk fixture plus ids 1..6's
+    * older versions, so every batch merges into a non-empty table. */
+  private def loadedWorld(name: String): (java.nio.file.Path, java.nio.file.Path, java.nio.file.Path) = {
+    val root = Files.createTempDirectory(name)
+    val dump = root.resolve("dump.osm")
+    graft.sources.OsmXml.writeFixture(dump, graft.sources.OsmXml.bulkFixture.replace("</osm>",
+      (1 to 6).map(i =>
+        s"""<changeset id="$i" created_at="2015-11-15T20:00:00Z" open="true" user="old" uid="9">""" +
+          s"""<discussion><comment uid="9" user="old" date="2015-11-15T20:00:00Z"><text>o$i</text></comment></discussion></changeset>"""
+      ).mkString("", "\n", "\n</osm>")))
+    val tableDir = root.resolve("tables/cs")
+    val raw = graft.sources.OsmXml.scan(spark, dump.toString)
+    Replication.changesetTable(tableDir).mergeInto(spark, graft.sources.OsmXml.changesets(raw))
+    Replication.commentsTable(tableDir).mergeInto(spark, graft.sources.OsmXml.comments(raw))
+    val state = root.resolve("state.txt")
+    Replication.StateDoc.write(state, Replication.ReplState(0L, None, updateInProgress = false))
+    (root.resolve("feed"), tableDir, state)
+  }
+
+  test("property: catchUp's driver-built batches equal the scan-based reference pipeline") {
+    val worldGen = for {
+      n <- Gen.chooseNum(1, 5)
+      diffs <- Gen.listOfN(n, tickDiffGen)
+      batch <- Gen.chooseNum(2, 4)
+    } yield (plantedDiffs ++ diffs, batch)
+    forSamples(worldGen, n = 4) { case (diffs, batchSize) =>
+      val (feed, tableDir, state) = loadedWorld("graft_t_tick_eq")
+      var refCs = Replication.readTable(spark, tableDir).localCheckpoint()
+      var refCm = Replication.commentsTable(tableDir).read(spark).localCheckpoint()
+      writeDiffs(feed, diffs)
+      assert(Replication.catchUp(spark, feed, tableDir, state, batchSize = batchSize) === diffs.size)
+      // reference: OsmXml.scan -> Upsert.lastWins -> compactComments -> Upsert.merge
+      (1 to diffs.size).grouped(batchSize).foreach { seqs =>
+        val raws = seqs.map(q =>
+          (graft.sources.OsmXml.scan(spark, feed.resolve(Replication.sequencePath(q.toLong)).toString), q))
+        val cs = Upsert.lastWins(
+          raws.map { case (raw, q) => graft.sources.OsmXml.changesets(raw).withColumn("__seq", lit(q)) }
+            .reduce(_ unionByName _),
+          Seq("id"), Seq(col("__seq"), col("closed_at"), col("num_changes"))).drop("__seq")
+        refCs = Upsert.merge(refCs, cs, Seq("id")).localCheckpoint()
+        refCm = Upsert.merge(refCm, Replication.compactComments(
+          raws.map { case (raw, _) => graft.sources.OsmXml.comments(raw) }.reduce(_ unionByName _)),
+          Seq("comment_changeset_id")).localCheckpoint()
+      }
+      assert(sameRows(Replication.readTable(spark, tableDir), refCs), s"changesets, batch $batchSize")
+      assert(sameRows(Replication.commentsTable(tableDir).read(spark), refCm), s"comments, batch $batchSize")
+    }
+  }
+
+  test("a one-diff catchUp into a loaded table launches at most 7 Spark jobs") {
+    val (feed, tableDir, state) = loadedWorld("graft_t_tick_jobs")
+    writeDiffs(feed, Seq(Seq(
+      """  <changeset id="2" created_at="2015-11-15T23:00:00Z" closed_at="2015-11-16T01:00:00Z" open="false" num_changes="3" user="u1" uid="1"><tag k="a" v="b"/><discussion><comment uid="1" user="u1" date="2015-11-16T01:00:00Z"><text>hi</text></comment></discussion></changeset>""",
+      """  <changeset id="77" created_at="2015-11-16T00:00:00Z" open="true" user="u2" uid="2"/>""")))
+    val group = s"tick-jobs-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "one-diff catchUp")
+      try assert(Replication.catchUp(spark, feed, tableDir, state, batchSize = 8) === 1)
+      finally spark.sparkContext.clearJobGroup()
+      org.apache.spark.graftbridge.ListenerFlush.waitUntilEmpty(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get > 0, "the listener saw no job of the catch-up")
+    assert(jobs.get <= 7, s"one-diff catchUp launched ${jobs.get} jobs")
+    assert(Replication.changesetTable(tableDir).lookup(spark, 2L)
+      .select("num_changes").head().getInt(0) === 3)
+    assert(Replication.commentsTable(tableDir).read(spark)
+      .filter(col("comment_changeset_id") === 2).select("comment_text").collect()
+      .map(_.getString(0)).toSeq === Seq("hi"))
+  }
 }
