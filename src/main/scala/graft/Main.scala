@@ -73,11 +73,13 @@ object Main {
     }
 
     cfg.bulkFile.foreach { dump =>
+      // the two tables load side by side, each from its own scan
       val raw = graft.sources.OsmXml.scan(spark, dump)
-      val nCs = Replication.changesetTable(csDir)
-        .mergeInto(spark, graft.sources.OsmXml.changesets(raw)).size
-      val nCm = Replication.commentsTable(csDir)
-        .mergeInto(spark, graft.sources.OsmXml.comments(raw)).size
+      val (nCs, nCm) = Replication.inParallel(
+        Replication.changesetTable(csDir)
+          .mergeInto(spark, graft.sources.OsmXml.changesets(raw)).size,
+        Replication.commentsTable(csDir)
+          .mergeInto(spark, graft.sources.OsmXml.comments(raw)).size)
       log += s"load: $dump into $nCs changeset buckets, $nCm comment buckets"
     }
 

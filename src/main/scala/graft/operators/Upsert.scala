@@ -23,7 +23,7 @@ import graft.Tables._
   * only the hash buckets that hold update keys. Ids hash uniformly, so
   * a replication batch of more than a few dozen ids touches every
   * bucket and rewrites the whole table; a merge whose cost tracks the
-  * diff needs a merge-on-read layout (ROADMAP direction 3).
+  * diff needs a merge-on-read layout (ROADMAP direction 2).
   */
 object Upsert {
 

@@ -25,11 +25,12 @@ object BulkLoad {
     // Downstream reads of the snappy-parquet staging are cheap scans.
     // The extra write volume is the classic ELT staging trade and holds
     // at cluster scale for the same reason.
-    // (Measured: the generic XML source beat a distributed job of the
-    // StAX parse, OsmXml.parseFile, ~26k vs ~18k rows/s here — the
-    // Dataset row-encoder tax on nested rows outweighs the leaner
-    // parse. A dump takes the codegen'd source; the StAX parse serves
-    // the KB-sized replication diffs, on the driver.)
+    // (Measured on a 4-core host: OsmXml.scan, the StAX parse as one
+    // task per file, runs a 10k-changeset bz2 dump through both tables'
+    // projections into a no-op sink in 0.58 s (median of 8) against
+    // 0.75 s for Spark's XML source; with
+    // the two tables also written concurrently, a `Main -c -f` load of
+    // a 100k-changeset dump took 10.1–10.4 s against 13.3–15.8 s.)
     val staging = s"$outDir/_staging_raw"
     OsmXml.scan(spark, dumpPath).write.mode(SaveMode.Overwrite).parquet(staging)
     val raw = spark.read.parquet(staging)

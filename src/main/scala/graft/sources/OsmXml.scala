@@ -1,5 +1,11 @@
 package graft.sources
 
+import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.spark.TaskContext
+import org.apache.spark.graftbridge.TaskInput
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
@@ -11,13 +17,15 @@ import scala.jdk.CollectionConverters._
   *
   * The reference pull-parses `<changeset>` elements single-threaded
   * with manual memory reclamation (`iterparse` + `elem.clear()`,
-  * changesetmd.py:82,119-122). Here the scan is Spark 4's built-in
-  * distributed XML source: `rowTag=changeset` splits a dump across
-  * executors, and O(1) memory per element is the file source's normal
-  * iterator behavior — no custom work. Gzip/bz2 decompression comes
-  * from the Hadoop codecs exactly as the reference's `gzip`/`bz2`
-  * branches do (`changesetmd.py:239-248`); bz2 stays splittable,
-  * matching the weekly-dump use.
+  * changesetmd.py:82,119-122). Here one StAX pull-parse
+  * (`parseFile`) serves every path: `scan` runs it as one Spark task
+  * per input file, and a replication batch runs it on the driver
+  * (`parsePath`). Gzip/bz2 decompression comes from the Hadoop codecs
+  * exactly as the reference's `gzip`/`bz2` branches do
+  * (`changesetmd.py:239-248`). A single dump file is ONE task: the
+  * scan does not split one huge dump by bz2 block (a block-split
+  * record reader measured 3× the CPU of a one-task parse), so a dump
+  * loads on as many cores as it has files.
   *
   * Attribute strings are kept raw in the scan schema and cast
   * explicitly downstream — the reference delegates those coercions to
@@ -52,36 +60,62 @@ object OsmXml {
         StructField("_date", StringType),
         StructField("text", StringType))))))))))
 
-  /** Distributed XML scan over one or more paths (plain, .gz or .bz2).
-    * `ignoreSurroundingSpaces=false`: Spark 4's XML source trims
-    * leading/trailing whitespace from values by default, which XML 1.0
-    * attribute-value normalization does NOT license for #x20 — a tag
-    * value of `"v "` must round-trip byte-faithfully, matching the
-    * StAX parse and the reference's iterparse (XmlFuzzSpec pins the
-    * two equal on fuzzed content). */
-  def scan(spark: SparkSession, paths: String*): DataFrame =
-    spark.read
-      .format("xml")
-      .option("rowTag", "changeset")
-      .option("ignoreSurroundingSpaces", "false")
-      .schema(xmlSchema)
-      .load(paths: _*)
+  /** Distributed scan over one or more paths (plain, .gz or .bz2) into
+    * raw rows in `xmlSchema`: one task per input file, each streaming
+    * `parsePath`'s rows. A path names a file, a directory (its files)
+    * or a glob (its matches); names starting with `_` or `.` in a
+    * directory or among a glob's matches are skipped, as Spark's file
+    * index skips them. The paths are expanded now, the files read when
+    * the relation runs. Values are byte-faithful: no whitespace
+    * trimming, which XML 1.0 attribute-value normalization does not
+    * license for #x20 (XmlFuzzSpec pins the scan equal to Spark's XML
+    * source read with `ignoreSurroundingSpaces=false`). */
+  def scan(spark: SparkSession, paths: String*): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val files = paths.flatMap(expand(conf, _))
+    val shipped = TaskInput.shipped(spark.sparkContext, conf)
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(files, math.max(1, files.size))
+        .mapPartitions(_.flatMap(parsePath(shipped(), _))),
+      xmlSchema)
+  }
 
-  // ---- StAX parse (replication batches, the V2 source) ---------------
+  /** The files a scan path names, sorted: itself, a directory's files,
+    * or a glob's matches (directories among them read their files). */
+  private def expand(conf: Configuration, path: String): Seq[String] = {
+    val hp = new HPath(path)
+    val fs = hp.getFileSystem(conf)
+    def visible(p: HPath) = !p.getName.startsWith("_") && !p.getName.startsWith(".")
+    val isGlob = path.exists("{}[]*?\\".contains(_))
+    val matched = Option(fs.globStatus(hp)).toSeq.flatten.filter(s => !isGlob || visible(s.getPath))
+    if (matched.isEmpty) throw new java.io.FileNotFoundException(s"Path does not exist: $path")
+    matched.flatMap { s =>
+      if (s.isDirectory) fs.listStatus(s.getPath).toSeq.filter(f => f.isFile && visible(f.getPath))
+      else Seq(s)
+    }.map(_.getPath.toString).sorted
+  }
+
+  // ---- StAX parse (every scan path) -----------------------------------
 
   /** StAX pull-parse of one changeset stream into raw rows in
-    * `xmlSchema`'s shape, so `changesets`/`comments` type them exactly
-    * as they type `scan`'s rows (OsmXmlSpec and XmlFuzzSpec pin the two
-    * equal). O(1) parser state per element — the reference's
-    * `iterparse` + `elem.clear()` discipline
-    * (`changesetmd.py:82,119-122`). Closes `in`. */
-  def parseFile(in: java.io.InputStream): Seq[Row] = {
-    import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
-    val f = XMLInputFactory.newInstance()
+    * `xmlSchema`'s shape, so `changesets`/`comments` type them. Lazy:
+    * each `next` parses up to the end of one `<changeset>`, so memory
+    * is O(one element) — the reference's `iterparse` + `elem.clear()`
+    * discipline (`changesetmd.py:82,119-122`). Closes `in` when the
+    * rows run out or the parse throws, and, inside a Spark task, when
+    * the task completes. */
+  def parseFile(in: java.io.InputStream): Iterator[Row] = new Iterator[Row] {
+    private val f = XMLInputFactory.newInstance()
     f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
     f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
-    val r = f.createXMLStreamReader(in)
-    def attr(name: String): String = {
+    private val r = try f.createXMLStreamReader(in) catch { case e: Throwable => in.close(); throw e }
+    private var closed = false
+    private var pending: Row = null
+    Option(TaskContext.get).foreach(_.addTaskCompletionListener[Unit](_ => close()))
+
+    private def close(): Unit = if (!closed) { closed = true; try r.close() finally in.close() }
+
+    private def attr(name: String): String = {
       var i = 0
       while (i < r.getAttributeCount) {
         if (r.getAttributeLocalName(i) == name) return r.getAttributeValue(i)
@@ -89,64 +123,97 @@ object OsmXml {
       }
       null
     }
-    val out = Vector.newBuilder[Row]
-    var cs: Array[Any] = null
-    var tags = List.empty[Row]
-    var comments = List.empty[Row]
-    var curComment: Array[Any] = null
-    var inText = false
-    val text = new StringBuilder
-    try while (r.hasNext) {
-      r.next() match {
-        case XMLStreamConstants.START_ELEMENT =>
-          r.getLocalName match {
-            case "changeset" =>
-              cs = Array[Any](Option(attr("id")).map(java.lang.Long.valueOf).orNull,
-                attr("created_at"), attr("closed_at"), attr("open"),
-                attr("num_changes"), attr("user"), attr("uid"),
-                attr("min_lat"), attr("max_lat"), attr("min_lon"), attr("max_lon"),
-                null, null)
-              tags = Nil; comments = Nil
-            case "tag" if cs != null =>
-              tags = Row(attr("k"), attr("v")) :: tags
-            case "comment" if cs != null =>
-              curComment = Array[Any](attr("uid"), attr("user"), attr("date"), null)
-            case "text" if curComment != null =>
-              inText = true; text.clear()
-            case _ =>
-          }
-        case XMLStreamConstants.CHARACTERS if inText =>
-          text.append(r.getText)
-        case XMLStreamConstants.END_ELEMENT =>
-          r.getLocalName match {
-            case "text" if inText =>
-              inText = false
-              curComment(3) = text.toString
-            case "comment" if curComment != null =>
-              comments = Row.fromSeq(curComment.toSeq) :: comments
-              curComment = null
-            case "changeset" if cs != null =>
-              cs(11) = tags.reverse
-              cs(12) = if (comments.isEmpty) null else Row(comments.reverse)
-              out += new GenericRowWithSchema(cs, xmlSchema)
-              cs = null
-            case _ =>
-          }
-        case _ =>
+
+    private var cs: Array[Any] = null
+    private var tags = List.empty[Row]
+    private var comments = List.empty[Row]
+    private var curComment: Array[Any] = null
+    private var inText = false
+    private val text = new StringBuilder
+
+    /** Pull events until one changeset completes (→ `pending`) or the
+      * stream ends (→ closed). */
+    private def advance(): Unit = try {
+      while (pending == null && r.hasNext) {
+        r.next() match {
+          case XMLStreamConstants.START_ELEMENT =>
+            r.getLocalName match {
+              case "changeset" =>
+                cs = Array[Any](Option(attr("id")).map(java.lang.Long.valueOf).orNull,
+                  attr("created_at"), attr("closed_at"), attr("open"),
+                  attr("num_changes"), attr("user"), attr("uid"),
+                  attr("min_lat"), attr("max_lat"), attr("min_lon"), attr("max_lon"),
+                  null, null)
+                tags = Nil; comments = Nil
+              case "tag" if cs != null =>
+                tags = Row(attr("k"), attr("v")) :: tags
+              case "comment" if cs != null =>
+                curComment = Array[Any](attr("uid"), attr("user"), attr("date"), null)
+              case "text" if curComment != null =>
+                inText = true; text.clear()
+              case _ =>
+            }
+          case XMLStreamConstants.CHARACTERS if inText =>
+            text.append(r.getText)
+          case XMLStreamConstants.END_ELEMENT =>
+            r.getLocalName match {
+              case "text" if inText =>
+                inText = false
+                curComment(3) = text.toString
+              case "comment" if curComment != null =>
+                comments = Row.fromSeq(curComment.toSeq) :: comments
+                curComment = null
+              case "changeset" if cs != null =>
+                cs(11) = tags.reverse
+                cs(12) = if (comments.isEmpty) null else Row(comments.reverse)
+                pending = new GenericRowWithSchema(cs, xmlSchema)
+                cs = null
+              case _ =>
+            }
+          case _ =>
+        }
       }
-    } finally { r.close(); in.close() }
-    out.result()
+      if (pending == null) close()
+    } catch { case e: Throwable => close(); throw e }
+
+    def hasNext: Boolean = {
+      if (pending == null && !closed) advance()
+      pending != null
+    }
+
+    def next(): Row = {
+      if (!hasNext) throw new NoSuchElementException("no more changesets")
+      val row = pending
+      pending = null
+      row
+    }
   }
 
-  /** The driver parse of one file (plain or any Hadoop codec): open
-    * `path` on its Hadoop filesystem, decompress through the codec its
-    * extension names — the factory the XML source uses — and
-    * `parseFile` it. */
-  def parsePath(conf: org.apache.hadoop.conf.Configuration, path: String): Seq[Row] = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val raw: java.io.InputStream = hp.getFileSystem(conf).open(hp)
-    parseFile(Option(new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
-      .getCodec(hp)).fold(raw)(_.createInputStream(raw)))
+  /** Parse one file (plain or any Hadoop codec): open `path` on its
+    * Hadoop filesystem, decompress through the codec its extension
+    * names, and `parseFile` it. Inside a Spark task the compressed
+    * bytes read count as the task's input bytes. */
+  def parsePath(conf: Configuration, path: String): Iterator[Row] = {
+    val hp = new HPath(path)
+    val raw = new CountingInputStream(hp.getFileSystem(conf).open(hp))
+    parseFile(Option(new CompressionCodecFactory(conf).getCodec(hp))
+      .fold[java.io.InputStream](raw)(_.createInputStream(raw)))
+  }
+
+  /** Counts the bytes read through it and adds them to the running
+    * task's input metrics on close. */
+  private final class CountingInputStream(in: java.io.InputStream)
+      extends java.io.FilterInputStream(in) {
+    private var n = 0L
+    override def read(): Int = { val b = super.read(); if (b >= 0) n += 1; b }
+    override def read(b: Array[Byte], off: Int, len: Int): Int = {
+      val k = super.read(b, off, len); if (k > 0) n += k; k
+    }
+    override def skip(k: Long): Long = { val s = super.skip(k); n += s; s }
+    override def close(): Unit = {
+      try super.close()
+      finally { TaskInput.addBytesRead(n); n = 0 }
+    }
   }
 
   /** Raw rows as a local relation in `xmlSchema`: `changesets` over it
@@ -180,18 +247,36 @@ object OsmXml {
 
   /** Raw scan → normalized `comments` child relation: the nested
     * discussion array exploded into one row per comment
-    * (changesetmd.py:94-103, queries.py:21-27). */
+    * (changesetmd.py:94-103, queries.py:21-27), then typed. */
   def comments(raw: DataFrame): DataFrame =
-    raw
+    typeComments(raw
       .filter(col("discussion").isNotNull && col("discussion.comment").isNotNull)
       .select(col("_id").as("comment_changeset_id"),
-        explode(col("discussion.comment")).as("c"))
-      .select(
-        col("comment_changeset_id"),
-        col("c._uid").cast(LongType).as("comment_user_id"),
-        col("c._user").as("comment_user_name"),
-        to_timestamp(col("c._date")).as("comment_date"),
-        col("c.text").as("comment_text"))
+        explode(col("discussion.comment")).as("c")))
+
+  /** The exploded shape `typeComments` reads: the changeset id beside
+    * one raw `<comment>` struct. */
+  private val commentStructs: StructType = StructType(Seq(
+    StructField("comment_changeset_id", LongType),
+    StructField("c", xmlSchema("discussion").dataType.asInstanceOf[StructType]("comment")
+      .dataType.asInstanceOf[ArrayType].elementType)))
+
+  /** `comments` over raw rows on the driver: the explode done on the
+    * rows, the typing projection over a local relation — it folds on
+    * the driver, so no Spark job runs (an `explode` does not fold). */
+  def localComments(spark: SparkSession, rows: Seq[Row]): DataFrame =
+    typeComments(spark.createDataFrame(rows.flatMap { r =>
+      Option(r.getAs[Row]("discussion")).flatMap(d => Option(d.getSeq[Row](0))).toSeq.flatten
+        .map(c => Row(r.getAs[java.lang.Long]("_id"), c))
+    }.asJava, commentStructs))
+
+  private def typeComments(exploded: DataFrame): DataFrame =
+    exploded.select(
+      col("comment_changeset_id"),
+      col("c._uid").cast(LongType).as("comment_user_id"),
+      col("c._user").as("comment_user_name"),
+      to_timestamp(col("c._date")).as("comment_date"),
+      col("c.text").as("comment_text"))
 
   // ---- fixtures (FIXTURES.md §A) -------------------------------------
 

@@ -1,10 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal, Murmur3Hash, Pmod}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 import graft.operators.Upsert
@@ -21,7 +22,8 @@ import graft.operators.Upsert
   *      for a local batch (a replication tick's), by one probe job over
   *      the cached batch for a distributed one,
   *   2. anti-join+unions ONLY those buckets' current data with the
-  *      updates — one distributed merge plan over all touched buckets,
+  *      updates — one distributed merge plan over all touched buckets;
+  *      a local batch's anti-join is a filter on its driver-held keys,
   *   3. writes every touched bucket in one write (`partitionBy("__b")`
   *      into a fresh commit directory — the dynamic-partition-overwrite
   *      shape; no serial per-bucket driver loop), each bucket from the
@@ -487,15 +489,20 @@ class PartitionedTable(val dir: Path, val keyCol: String, val nBuckets: Int) {
     // (the deleteKeys listing pattern).
     if (manifest.isEmpty) return freshWrite(spark, updates, txn, alsoRecord)
     // A LOCAL batch (a replication batch built on the driver) names its
-    // touched buckets by evaluating the bucket expression over its rows
-    // on the driver: no cache, no probe job. A distributed batch is
-    // cached and probed.
-    val cached = updates.queryExecution.optimizedPlan match {
-      case _: LocalRelation => None
-      case _ => Some(updates.withColumn("__b", bucketExpr).cache())
+    // touched buckets by evaluating the bucket expression over its keys
+    // on the driver, and drops the rows it replaces by those keys: no
+    // cache, no probe job, no broadcast. A distributed batch is cached
+    // and probed.
+    val localKeys = updates.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some(keysOf(spark, l))
+      case _ => None
     }
-    val touched = cached.fold(localBuckets(spark, updates))(
-      _.select("__b").distinct().collect().map(_.getInt(0)).sorted.toSeq)
+    val cached =
+      if (localKeys.isDefined) None else Some(updates.withColumn("__b", bucketExpr).cache())
+    val touched = localKeys match {
+      case Some((t, keys)) => bucketsOf(BoundReference(0, t, nullable = true), keys.map(InternalRow(_)))
+      case None => cached.get.select("__b").distinct().collect().map(_.getInt(0)).sorted.toSeq
+    }
     if (touched.isEmpty) { cached.foreach(_.unpersist()); return Nil }
     val m = manifest
     val existingPaths = touched.flatMap(b => m.get(b).map(v => dir.resolve(v).toString))
@@ -531,7 +538,16 @@ class PartitionedTable(val dir: Path, val keyCol: String, val nBuckets: Int) {
             if (d.columns.contains(f.name)) d
             else d.withColumn(f.name, lit(null).cast(f.dataType)))
             .select(target.fieldNames.map(col).toSeq: _*)
-        Upsert.merge(widen(ex), widen(updFlat), Seq(keyCol))
+        localKeys match {
+          // `Upsert.merge`'s left anti join by the driver-held keys: a
+          // row with a NULL key is never replaced, and a NULL key in the
+          // batch replaces nothing
+          case Some((t, keys)) =>
+            val replaced = keys.filter(_ != null).map(CatalystTypeConverters.convertToScala(_, t))
+            widen(ex).filter(col(keyCol).isNull || !col(keyCol).isInCollection(replaced))
+              .unionByName(widen(updFlat))
+          case None => Upsert.merge(widen(ex), widen(updFlat), Seq(keyCol))
+        }
       case None => updFlat
     }
     val commit = nextCommit(m)
@@ -545,13 +561,13 @@ class PartitionedTable(val dir: Path, val keyCol: String, val nBuckets: Int) {
     touched
   }
 
-  /** Touched buckets of a batch whose plan optimizes to a
-    * `LocalRelation`: its key column's values, bucketed on the driver. */
-  private def localBuckets(spark: SparkSession, updates: DataFrame): Seq[Int] = {
-    val l = updates.queryExecution.optimizedPlan.asInstanceOf[LocalRelation]
+  /** The key column of a batch whose plan optimizes to a
+    * `LocalRelation`: its type and its values, internal form. */
+  private def keysOf(spark: SparkSession, l: LocalRelation): (DataType, Seq[Any]) = {
     val i = l.output.indexWhere(a => spark.sessionState.conf.resolver(a.name, keyCol))
     require(i >= 0, s"batch has no key column $keyCol: ${l.output.mkString(", ")}")
-    bucketsOf(BoundReference(i, l.output(i).dataType, l.output(i).nullable), l.data)
+    val t = l.output(i).dataType
+    (t, l.data.map(r => if (r.isNullAt(i)) null else r.get(i, t)))
   }
 
   /** Append `rows` WITHOUT key dedup — the insert-only fact-stream

@@ -439,10 +439,12 @@ object Replication {
     * A batch is built on the driver: each staged diff is parsed once,
     * typed by the `OsmXml` projections over a local relation, and
     * compacted there, so the merges get local relations and
-    * PartitionedTable computes their touched buckets without a probe.
-    * The Spark jobs left are the comments' typing (`explode` runs as
-    * a job) and each table's merge stages and key-aligned write; an
-    * empty comments batch is a no-op.
+    * PartitionedTable computes their touched buckets and drops the
+    * replaced rows without a probe or broadcast job. The Spark jobs
+    * left are each table's merge stages and key-aligned write; the
+    * comments merge runs beside the changesets merge (`inParallel`),
+    * and the offset commits once both tables have. An empty comments
+    * batch is a no-op.
     * Returns the number of diffs applied. */
   def catchUp(spark: SparkSession, baseDir: Path, tableDir: Path,
       statePath: Path, batchSize: Int = 8, nBuckets: Int = 8): Int = {
@@ -456,14 +458,20 @@ object Replication {
   /** Transport-generic catch-up: same loop over any ReplicationSource
     * (local dir for hermetic tests, HttpSource for the live feed). */
   def catchUp(spark: SparkSession, source: ReplicationSource, tableDir: Path,
-      statePath: Path, batchSize: Int, nBuckets: Int): Int = {
+      statePath: Path, batchSize: Int, nBuckets: Int): Int =
+    catchUp(spark, source, changesetTable(tableDir, nBuckets),
+      commentsTable(tableDir, nBuckets), statePath, batchSize)
+
+  /** The catch-up loop over given table handles (tests pass handles
+    * whose commits fail on purpose). */
+  private[graft] def catchUp(spark: SparkSession, source: ReplicationSource,
+      table: PartitionedTable, comments: PartitionedTable,
+      statePath: Path, batchSize: Int): Int = {
     StateDoc.init(statePath)
     val st0 = StateDoc.read(statePath)
     val (serverSeq, serverTs) = source.serverState()
-    val table = changesetTable(tableDir, nBuckets)
-    val comments = commentsTable(tableDir, nBuckets)
     var applied = 0
-    withWriterLease(tableDir.getParent) { lease =>
+    withWriterLease(table.dir.getParent) { lease =>
       // fence every commit on the lease nonce: a frozen holder whose
       // lease was stolen is refused at the PUBLISH point, closing the
       // one-heartbeat cross-host overlap the lock alone cannot
@@ -475,10 +483,11 @@ object Replication {
       while (local < serverSeq) {
         val hi = math.min(local + batchSize, serverSeq)
         val seqs = (local + 1) to hi
-        val diffs = source.stage(seqs).map(OsmXml.parsePath(conf, _)).zip(seqs)
-        table.mergeInto(spark, OsmXml.changesets(OsmXml.local(spark, lastWins(spark, diffs))))
-        comments.mergeInto(spark, compactLocal(spark,
-          OsmXml.comments(OsmXml.local(spark, diffs.flatMap(_._1)))))
+        val diffs = source.stage(seqs).map(OsmXml.parsePath(conf, _).toVector).zip(seqs)
+        inParallel(
+          table.mergeInto(spark, OsmXml.changesets(OsmXml.local(spark, lastWins(spark, diffs)))),
+          comments.mergeInto(spark, compactLocal(spark,
+            OsmXml.localComments(spark, diffs.flatMap(_._1)))))
         applied += (hi - local).toInt
         local = hi
         // offset committed after each applied batch → crash-safe replay ≤ batchSize
@@ -535,14 +544,37 @@ object Replication {
   def compactComments(comments: DataFrame): DataFrame =
     comments.dropDuplicates(CommentIdentity)
 
-  /** `compactComments` on the driver: the batch's typed comment rows
-    * (collected by one small job — `explode` does not fold into a
-    * local relation), the first row of each identity, as a local
-    * relation. */
+  /** `compactComments` on the driver over a local relation of typed
+    * comment rows (collecting it runs no job): the first row of each
+    * identity, as a local relation. */
   private def compactLocal(spark: SparkSession, cm: DataFrame): DataFrame = {
     val id = CommentIdentity.map(cm.schema.fieldIndex)
     spark.createDataFrame(
       cm.collect().toSeq.distinctBy(r => id.map(r.get)).asJava, cm.schema)
+  }
+
+  /** Run `branch` on a new thread while `main` runs on this one, and
+    * return both results once BOTH have finished — on failure too, so
+    * no write of either outlives the caller's scope (a writer lease,
+    * say). The new thread starts with this thread's Spark local
+    * properties (job group, trace span): SparkContext keeps them in an
+    * inheritable thread-local that a new thread copies. The first
+    * failure is rethrown, the other attached to it as suppressed. */
+  def inParallel[A, B](main: => A, branch: => B): (A, B) = {
+    val first = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    def failed(e: Throwable): Unit =
+      if (!first.compareAndSet(null, e)) first.get.addSuppressed(e)
+    var b: Option[B] = None
+    val t = new Thread(() => try b = Some(branch) catch { case e: Throwable => failed(e) },
+      "graft-branch")
+    t.setDaemon(true)
+    t.start()
+    val a = try Some(main) catch { case e: Throwable => failed(e); None }
+    var interrupted = false
+    while (t.isAlive) try t.join() catch { case _: InterruptedException => interrupted = true }
+    if (interrupted) Thread.currentThread.interrupt()
+    Option(first.get).foreach(e => throw e)
+    (a.get, b.get)
   }
 
   // ---- hermetic fixture world ----------------------------------------

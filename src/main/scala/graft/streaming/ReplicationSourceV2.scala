@@ -83,7 +83,7 @@ object ReplicationSourceV2 {
       if (s == null) null
       else org.apache.spark.sql.types.Decimal(new java.math.BigDecimal(s), 10, 7)
     def ts(s: String): Any = if (s == null) null else parseMicros(s)
-    graft.sources.OsmXml.parseFile(in).iterator.map { r =>
+    graft.sources.OsmXml.parseFile(in).map { r =>
       def a(f: String) = r.getAs[String](f)
       val tags = r.getAs[Seq[org.apache.spark.sql.Row]]("tag")
       InternalRow(seq, r.getAs[java.lang.Long]("_id"),

@@ -78,6 +78,14 @@ class GraftSessionSpec extends AnyFunSuite {
       hits.mkString("XMLInputFactory: ", ", ", ""))
   }
 
+  test("one XML reader: Spark's XML source is read nowhere in src/main") {
+    // OsmXml.scan runs the StAX parse as one task per file; a
+    // format("xml") read is a second parser (and one that cannot split
+    // a multi-line dump) coming back. The tests keep it as a reference.
+    val hits = codeHits(sources("src/main"), "format\\(\"xml\"\\)")
+    assert(hits.isEmpty, hits.mkString("format(\"xml\"): ", ", ", ""))
+  }
+
   test("one recursive delete: reverseOrder appears only in PartitionedTable") {
     // PartitionedTable.deleteRecursively; a walk sorted in reverse
     // anywhere else is a hand-rolled copy of it

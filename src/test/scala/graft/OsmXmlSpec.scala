@@ -24,21 +24,60 @@ class OsmXmlSpec extends AnyFunSuite {
     assert(cs.count() === 3)
   }
 
-  test("the driver StAX parse is golden-equal to the generic XML scan (plain and gz)") {
+  test("the StAX scan and driver parse equal Spark's XML source (plain, gz, a directory)") {
     def norm(df: org.apache.spark.sql.DataFrame) =
       OsmXml.changesets(df).withColumn("tags", to_json(col("tags")))
     def normCm(df: org.apache.spark.sql.DataFrame) = OsmXml.comments(df)
+    def assertSame(got: org.apache.spark.sql.DataFrame, generic: org.apache.spark.sql.DataFrame,
+        what: String): Unit = {
+      assert(norm(got).exceptAll(norm(generic)).isEmpty &&
+        norm(generic).exceptAll(norm(got)).isEmpty, s"changesets differ ($what)")
+      assert(normCm(got).exceptAll(normCm(generic)).isEmpty &&
+        normCm(generic).exceptAll(normCm(got)).isEmpty, s"comments differ ($what)")
+    }
     for (ext <- Seq("dump.osm.xml", "dump.osm.xml.gz")) {
       val p = Files.createTempDirectory("graft_stax").resolve(ext)
       OsmXml.writeFixture(p, OsmXml.bulkFixture)
-      val generic = OsmXml.scan(spark, p.toString)
-      val stax = OsmXml.local(spark,
-        OsmXml.parsePath(spark.sparkContext.hadoopConfiguration, p.toString))
-      assert(norm(stax).exceptAll(norm(generic)).isEmpty &&
-        norm(generic).exceptAll(norm(stax)).isEmpty, s"changesets differ ($ext)")
-      assert(normCm(stax).exceptAll(normCm(generic)).isEmpty &&
-        normCm(generic).exceptAll(normCm(stax)).isEmpty, s"comments differ ($ext)")
+      val generic = TestSpark.xmlSource(spark, p.toString)
+      assertSame(OsmXml.scan(spark, p.toString), generic, s"scan, $ext")
+      assertSame(OsmXml.local(spark,
+        OsmXml.parsePath(spark.sparkContext.hadoopConfiguration, p.toString).toSeq),
+        generic, s"driver parse, $ext")
     }
+    // a directory of two dumps (one plain, one gz; the second holds the
+    // diff fixture's rows) beside a `_`-named file both readers skip
+    val dir = Files.createTempDirectory("graft_stax_dir")
+    OsmXml.writeFixture(dir.resolve("a.osm.xml"), OsmXml.bulkFixture)
+    OsmXml.writeFixture(dir.resolve("b.osm.xml.gz"), OsmXml.diffFixture(3L))
+    OsmXml.writeFixture(dir.resolve("_SUCCESS"), OsmXml.diffFixture(4L))
+    val scanned = OsmXml.scan(spark, dir.toString)
+    assert(scanned.rdd.getNumPartitions === 2, "one task per file")
+    assert(scanned.count() === 5)
+    assertSame(scanned, TestSpark.xmlSource(spark, dir.toString), "directory")
+  }
+
+  test("parseFile is lazy: rows come out before the stream fails, and the failure closes it") {
+    val xml = (0 until 2000).map(i =>
+      s"""<changeset id="$i" created_at="2015-11-15T22:00:01Z" open="true"><tag k="k" v="v$i"/></changeset>""")
+      .mkString("<osm>\n", "\n", "\n</osm>\n").getBytes("UTF-8")
+    val failAt = xml.length / 2
+    var closed = false
+    val in = new java.io.InputStream {
+      private var pos = 0
+      def read(): Int = {
+        if (pos >= failAt) throw new java.io.IOException(s"fault at byte $pos")
+        pos += 1
+        xml(pos - 1) & 0xff
+      }
+      override def close(): Unit = closed = true
+    }
+    val rows = OsmXml.parseFile(in)
+    assert(rows.take(3).map(_.getAs[Long]("_id")).toSeq === Seq(0L, 1L, 2L))
+    assert(!closed)
+    val e = intercept[Exception](rows.foreach(_ => ()))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage.contains(s"fault at byte $failAt")), e.toString)
+    assert(closed, "a failed parse leaves its stream open")
   }
 
   test("hstore containment: tags ? 'comment' (README.md:110-112)") {

@@ -11,6 +11,17 @@ object TestSpark {
     s
   }
 
+  /** Spark's own XML source read with the options the engine's scan
+    * used to pass it: the reference the StAX scan (`OsmXml.scan`) is
+    * pinned golden-equal to. */
+  def xmlSource(spark: SparkSession, paths: String*): org.apache.spark.sql.DataFrame =
+    spark.read
+      .format("xml")
+      .option("rowTag", "changeset")
+      .option("ignoreSurroundingSpaces", "false")
+      .schema(graft.sources.OsmXml.xmlSchema)
+      .load(paths: _*)
+
   /** This JVM's `--add-opens` flags: a forked child that starts Spark
     * needs the ones sbt gave the test JVM. */
   def addOpens: Seq[String] = {

@@ -241,9 +241,11 @@ class UpsertSpec extends AnyFunSuite {
 
   // ---- the driver-built replication batch ----------------------------
 
+  /** One `<changeset>` element; id 0 writes no id attribute (a NULL key). */
   private def csXml(id: Int, closed: Option[String], n: Option[Int], uid: Int,
       tags: Seq[(String, String)], comments: Seq[(Int, Int, String)]): String = {
-    val attrs = Seq(s"""id="$id"""", """created_at="2015-11-15T23:00:00Z"""",
+    val attrs = Seq(s"""id="$id"""").filter(_ => id != 0) ++
+      Seq("""created_at="2015-11-15T23:00:00Z"""",
       s"""user="u$uid"""", s"""uid="$uid"""", """open="false"""") ++
       closed.map(c => s"""closed_at="2015-11-16T$c:00:00Z"""") ++ n.map(v => s"""num_changes="$v"""")
     val tagXml = tags.distinctBy(_._1).map { case (k, v) => s"""<tag k="$k" v="$v"/>""" }
@@ -259,9 +261,12 @@ class UpsertSpec extends AnyFunSuite {
     * closed_at, where num_changes breaks it; id 3 with NULL closed_at
     * and NULL num_changes beside a non-null twin; changeset 4 with two
     * comments of one user in one second with different text, and a
-    * replayed comment. */
+    * replayed comment; a changeset with no id (a NULL key in both
+    * tables), which replaces nothing. */
+  private val nullIdChangeset = csXml(0, Some("01"), None, 2, Nil, Seq((2, 0, "n")))
   private val plantedDiffs: Seq[Seq[String]] = Seq(
-    Seq(csXml(1, Some("01"), Some(5), 1, Seq("k0" -> "old"), Nil),
+    Seq(nullIdChangeset,
+      csXml(1, Some("01"), Some(5), 1, Seq("k0" -> "old"), Nil),
       csXml(1, Some("02"), Some(0), 2, Seq("k0" -> "new"), Nil),
       csXml(2, Some("01"), Some(1), 1, Nil, Nil),
       csXml(2, Some("01"), Some(2), 2, Seq("k1" -> "x"), Nil),
@@ -270,15 +275,15 @@ class UpsertSpec extends AnyFunSuite {
       csXml(4, None, None, 1, Nil, Seq((1, 0, "a"), (1, 0, "b"), (1, 0, "a")))),
     Seq(csXml(1, None, None, 3, Seq("k2" -> "last"), Seq((2, 1, "c")))))
 
-  /** One random diff of the tick property: ids from a pool of 6, so
-    * ids repeat within a diff and across the diffs of a batch;
+  /** One random diff of the tick property: ids from a pool of 6 and
+    * NULL, so ids repeat within a diff and across the diffs of a batch;
     * closed_at and num_changes from small sets with NULL; comments from
     * 2 users in 2 seconds with 3 texts. No two rows of one diff share
     * (id, closed_at, num_changes): that full tie has no defined winner
     * in either pipeline. */
   private val tickDiffGen: Gen[Seq[String]] = {
     val changeset = for {
-      id <- Gen.chooseNum(1, 6)
+      id <- Gen.chooseNum(0, 6)
       closed <- Gen.option(Gen.oneOf("01", "02"))
       n <- Gen.option(Gen.chooseNum(0, 2))
       uid <- Gen.chooseNum(1, 3)
@@ -301,7 +306,8 @@ class UpsertSpec extends AnyFunSuite {
   }
 
   /** A replication world loaded with the bulk fixture plus ids 1..6's
-    * older versions, so every batch merges into a non-empty table. */
+    * older versions and a changeset with no id (a NULL key, which no
+    * batch replaces), so every batch merges into a non-empty table. */
   private def loadedWorld(name: String): (java.nio.file.Path, java.nio.file.Path, java.nio.file.Path) = {
     val root = Files.createTempDirectory(name)
     val dump = root.resolve("dump.osm")
@@ -309,7 +315,7 @@ class UpsertSpec extends AnyFunSuite {
       (1 to 6).map(i =>
         s"""<changeset id="$i" created_at="2015-11-15T20:00:00Z" open="true" user="old" uid="9">""" +
           s"""<discussion><comment uid="9" user="old" date="2015-11-15T20:00:00Z"><text>o$i</text></comment></discussion></changeset>"""
-      ).mkString("", "\n", "\n</osm>")))
+      ).mkString("", "\n", "\n") + csXml(0, None, None, 9, Nil, Seq((9, 0, "o"))) + "\n</osm>"))
     val tableDir = root.resolve("tables/cs")
     val raw = graft.sources.OsmXml.scan(spark, dump.toString)
     Replication.changesetTable(tableDir).mergeInto(spark, graft.sources.OsmXml.changesets(raw))
@@ -349,17 +355,20 @@ class UpsertSpec extends AnyFunSuite {
     }
   }
 
-  test("a one-diff catchUp into a loaded table launches at most 7 Spark jobs") {
+  test("a one-diff catchUp into a loaded table launches at most 4 Spark jobs") {
     val (feed, tableDir, state) = loadedWorld("graft_t_tick_jobs")
     writeDiffs(feed, Seq(Seq(
       """  <changeset id="2" created_at="2015-11-15T23:00:00Z" closed_at="2015-11-16T01:00:00Z" open="false" num_changes="3" user="u1" uid="1"><tag k="a" v="b"/><discussion><comment uid="1" user="u1" date="2015-11-16T01:00:00Z"><text>hi</text></comment></discussion></changeset>""",
       """  <changeset id="77" created_at="2015-11-16T00:00:00Z" open="true" user="u2" uid="2"/>""")))
     val group = s"tick-jobs-${java.util.UUID.randomUUID}"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val all = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        all.incrementAndGet()
         if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
           jobs.incrementAndGet()
+      }
     }
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -369,11 +378,55 @@ class UpsertSpec extends AnyFunSuite {
       org.apache.spark.graftbridge.ListenerFlush.waitUntilEmpty(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(jobs.get > 0, "the listener saw no job of the catch-up")
-    assert(jobs.get <= 7, s"one-diff catchUp launched ${jobs.get} jobs")
+    assert(jobs.get === all.get, "a job of the catch-up ran outside its job group")
+    // each table's merge stages and key-aligned write; the comments
+    // merge runs on its own thread and carries the caller's job group
+    assert(jobs.get <= 4, s"one-diff catchUp launched ${jobs.get} jobs")
     assert(Replication.changesetTable(tableDir).lookup(spark, 2L)
       .select("num_changes").head().getInt(0) === 3)
     assert(Replication.commentsTable(tableDir).read(spark)
       .filter(col("comment_changeset_id") === 2).select("comment_text").collect()
       .map(_.getString(0)).toSeq === Seq("hi"))
+  }
+
+  test("a failing commit in either table: catchUp joins the other, rethrows, keeps the offset, and a re-run converges") {
+    // no NULL-key rows here: a NULL key replaces nothing, so a replayed
+    // batch appends its NULL-key rows a second time
+    val diffs = plantedDiffs.map(_.filterNot(_ == nullIdChangeset))
+    for (failing <- Seq("changesets", "comments")) {
+      val (feed, tableDir, state) = loadedWorld("graft_t_branch_fail")
+      writeDiffs(feed, diffs)
+      val other = new java.util.concurrent.atomic.AtomicBoolean(false)
+      // the failing table throws at its commit; the other commits late,
+      // so it is still running when the failure is thrown
+      def handle(t: graft.streaming.PartitionedTable, fail: Boolean) =
+        new graft.streaming.PartitionedTable(t.dir, t.keyCol, t.nBuckets) {
+          override protected[graft] def onBeforeCommit(commit: Long): Unit =
+            if (fail) throw new IllegalStateException(s"injected $failing commit failure")
+            else Thread.sleep(1500)
+          override def mergeInto(spark: SparkSession, updates: DataFrame,
+              txn: Option[(String, Long)], alsoRecord: Map[String, Long]): Seq[Int] = {
+            val r = super.mergeInto(spark, updates, txn, alsoRecord)
+            if (!fail) other.set(true)
+            r
+          }
+        }
+      val cs = handle(Replication.changesetTable(tableDir), failing == "changesets")
+      val cm = handle(Replication.commentsTable(tableDir), failing == "comments")
+      val e = intercept[IllegalStateException](Replication.catchUp(spark,
+        Replication.LocalDirSource(feed), cs, cm, state, batchSize = 8))
+      assert(e.getMessage === s"injected $failing commit failure")
+      assert(other.get, s"the other table's merge had not finished when $failing failed")
+      assert(Replication.StateDoc.read(state).lastSequence === 0L, "the offset advanced")
+      // a clean re-run replays the batch and lands where a clean run does
+      assert(Replication.catchUp(spark, feed, tableDir, state, batchSize = 8) === diffs.size)
+      val (refFeed, refDir, refState) = loadedWorld("graft_t_branch_ref")
+      writeDiffs(refFeed, diffs)
+      assert(Replication.catchUp(spark, refFeed, refDir, refState, batchSize = 8) === diffs.size)
+      assert(sameRows(Replication.readTable(spark, tableDir), Replication.readTable(spark, refDir)),
+        s"changesets after a $failing failure")
+      assert(sameRows(Replication.commentsTable(tableDir).read(spark),
+        Replication.commentsTable(refDir).read(spark)), s"comments after a $failing failure")
+    }
   }
 }
