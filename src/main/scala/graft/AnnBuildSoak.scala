@@ -140,7 +140,7 @@ object AnnBuildSoak {
       }
       // finish() is the one close fold, then OPTIMIZE
       val (_, finishS) = timed(ep.finish())
-      val foldS = ep.folds.map(_.sec).sum
+      val foldS = ep.foldSec.getOrElse(0.0)
       (segS, foldS, finishS - foldS)
     }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.JsonDSL._
-import graft.Probe.{mad, median, num, timed}
+import graft.Probe.{median, num, timed}
 import graft.streaming.Epoch
 
 /** Measures the index-maintenance trilogy's scale contract: merging a
@@ -23,20 +23,16 @@ import graft.streaming.Epoch
   * the property that keeps a touched-bucket rewrite O(bucket), and
   * therefore the whole merge O(batch × bucket), at any corpus size.
   *
-  * Usage: runMain graft.MaintainProbe [outFile] [sfDir ...]
+  * Usage: runMain graft.MaintainProbe <outFile> <sfDir> [sfDir ...]
   */
 object MaintainProbe {
 
-  /** Runs of the tiered loop per tier: its fold schedule follows an
-    * EWMA of wall-clock serve times, so one run cannot tell a cadence
-    * change from noise. */
-  private val TieredRuns = 3
-
   def main(args: Array[String]): Unit = Probe.run() { h =>
+    require(args.length >= 2,
+      "usage: runMain graft.MaintainProbe <outFile> <sfDir> [sfDir ...]")
     val spark = h.spark
-    val out = args.headOption.getOrElse("MAINTAIN_r12.json")
-    val tiers = if (args.length > 1) args.drop(1).toSeq
-      else Seq("/root/testdata/sf0.1", "/root/repo/testdata-local/sf1")
+    val out = args.head
+    val tiers = args.toSeq.drop(1)
     // bounded bucket size: the derived bucket count must grow with
     // the standing corpus for the O(bucket) touched-rewrite bound
     spark.conf.set("spark.graft.bucket.targetRows", (1 << 16).toString)
@@ -76,7 +72,7 @@ object MaintainProbe {
             idx.postings.appendInto(spark, batchP, Some("probe" -> 2L)))
           val (_, secDl) = timed(idx.doclens.mergeInto(spark,
             Retrieval.doclensOf(arrD), Some("probedl" -> 2L)))
-          (standing, idx.postings.nBuckets, secSeg, ep.folds.head.sec,
+          (standing, idx.postings.nBuckets, secSeg, ep.foldSec.get,
             touched.size, secP + secDl)
         }
       // ---- frozen-quantizer ANN family ---------------------------
@@ -101,18 +97,19 @@ object MaintainProbe {
           ep.finish()
           val (touched, secDirect) = timed(
             t.pt.appendInto(spark, batchV, Some("probe" -> 2L)))
-          (standing, secSeg, ep.folds.head.sec, touched.size, secDirect)
+          (standing, secSeg, ep.foldSec.get, touched.size, secDirect)
         }
       // ---- serve latency vs UNFOLDED segment count (r11 age-out) --
       // the LSM read path between folds is base ∪ segments, read as
-      // ONE multi-path scan (`Epoch.unfolded`): the first unfolded leaf
-      // costs a step (the union), further leaves add little — the curve
-      // that sets the fold cadence. Land the same fixed batch as 32 hash-split sub-batches on a
-      // fresh index over the non-arrival base, serve over base ∪ the
-      // first S segments for S ∈ {0, 8, 32}, then the epoch's one close
-      // fold + compact, the post-OPTIMIZE serve and worst-bucket file
-      // count.
-      val segN = 32
+      // ONE multi-path scan (`Epoch.unfolded`). Land the same fixed
+      // batch as `segN` hash-split sub-batches on a fresh index over
+      // the non-arrival base, serve over base ∪ the first S segments
+      // (median of 3), then the epoch's one close fold + compact, the
+      // post-OPTIMIZE serve and worst-bucket file count. The curve is
+      // why an epoch folds once, at its close: it steps at the first
+      // segment and grows slowly after, so the few segments an epoch
+      // lands buy no earlier fold.
+      val segN = 128
       val arrSeg = arrD.withColumn("__seg",
         pmod(hash(col("doc_id")), lit(segN)))
       def segBatch(k: Int): DataFrame =
@@ -120,17 +117,15 @@ object MaintainProbe {
       val qterms = Retrieval.queryGramsOf(docs)
       def serveSec(served: => DataFrame): Double =
         timed(served.write.mode("overwrite").format("noop").save())._2
-      val (serveBySeg, filesPerSeg, secFoldServe, servePost, maxFiles, segsLeft) =
+      val (serveBySeg, secFoldServe, servePost, maxFiles, segsLeft) =
         Epoch.run(spark, "graft_maintprobe_serve") { ep =>
           val idx = Retrieval.maintainedIndex(spark, ep.dir.resolve("idx"), base)
           val pair = new Retrieval.Bm25Epoch(ep, idx)
           Retrieval.seedMaintained(spark, idx, base)
           (0 until segN).foreach(k => pair.land(k, segBatch(k)))
           serveSec(pair.serve(qterms, 0)) // warm the serve path (codegen) outside the samples
-          val curve = Seq(0, 8, 32).map(n => n -> serveSec(pair.serve(qterms, n)))
-          val leaves = pair.ep.leaves(pair.postings) ++ pair.ep.leaves(pair.doclens)
-          val filesPerSeg = math.max(1.0,
-            leaves.map(graft.streaming.LsmFold.parquetFiles).sum.toDouble / leaves.size)
+          val curve = Seq(0, 1, 2, 8, 32, segN).map(n =>
+            n -> median((1 to 3).map(_ => serveSec(pair.serve(qterms, n)))))
           ep.finish()
           val maxFiles = idx.postings.manifest.values.map { rel =>
             graft.streaming.LsmFold.parquetFiles(idx.postings.dir.resolve(rel))
@@ -140,68 +135,11 @@ object MaintainProbe {
             .map(t => ep.dir.resolve("segs").resolve(t.app))
             .filter(java.nio.file.Files.exists(_))
             .map(graft.streaming.PartitionedTable.listDir(_).size).sum
-          (curve, filesPerSeg, ep.folds.head.sec, serveSec(pair.serve(qterms)),
-            maxFiles, segsLeft)
+          (curve, ep.foldSec.get, serveSec(pair.serve(qterms)), maxFiles, segsLeft)
         }
       println(f"[maintain] $tag serve-vs-segments: " +
         serveBySeg.map { case (n, t) => f"S$n=$t%.2f" }.mkString(" ") +
         f" post_fold=$servePost%.2f files/bucket<=$maxFiles segs_left=$segsLeft")
-      // the tiered loop's seeds, from this curve: tax = least-squares
-      // slope of serve-vs-segments per SEGMENT; the policy prices per
-      // FILE and these segments are multi-file, so its per-file seed
-      // divides by their average files-per-segment (r17 ADVICE; the
-      // EWMA recalibrates from the first observed serve either way)
-      val taxSeed = math.max(1e-3,
-        graft.streaming.TieredFoldPolicy.estimateTaxPerSegment(serveBySeg))
-      // ---- TIERED policy loop (r16): the serve-interleaved cadence
-      // the gate entries never see — one serve per landed segment, on
-      // the same Epoch the maintain loops run: mid-epoch folds go to
-      // flat-priced RUNS (O(segments since last run fold)), the
-      // O(standing) base rewrite is paid only when the run tax has
-      // accrued to it or at epoch close. The artifact claim: per-fold
-      // mid-epoch cost stays FLAT across the epoch (the single-level
-      // loop's fold cost grew with every fold — MAINTAIN_r15 sf1:
-      // 8.2 → 27.6 s within one epoch).
-      def tieredRun(): (Seq[Double], Seq[Epoch.Fold]) = {
-        val tPolicy = new graft.streaming.TieredFoldPolicy(
-          initialRunFoldCostSec = math.max(0.05, secSeg),
-          initialBaseFoldCostSec = secFoldServe,
-          initialTaxPerFileSec = taxSeed / filesPerSeg)
-        Epoch.run(spark, "graft_maintprobe_tier", tPolicy) { ep =>
-          val idx = Retrieval.maintainedIndex(spark, ep.dir.resolve("idx"), base)
-          val pair = new Retrieval.Bm25Epoch(ep, idx)
-          Retrieval.seedMaintained(spark, idx, base)
-          val base0T = serveSec(pair.serve(qterms))
-          val secs = (0 until segN).map { k =>
-            pair.land(k, segBatch(k))
-            val sec = serveSec(pair.serve(qterms))
-            ep.onServe(Some(sec), base0T)
-            sec
-          }
-          ep.finish()
-          (secs, ep.folds)
-        }
-      }
-      def schedule(serveSecs: Seq[Double], folds: Seq[Epoch.Fold]): JObject = {
-        val runFolds = folds.count(_.level == "run")
-        ("fold_at_segments" -> folds.map(_.atSegment)) ~
-          ("fold_levels" -> folds.map(_.level)) ~
-          ("fold_secs" -> folds.map(f => num(f.sec))) ~
-          ("total_fold_secs" -> num(folds.map(_.sec).sum)) ~
-          ("realized_run_folds" -> runFolds) ~
-          ("realized_base_folds" -> (folds.size - runFolds)) ~
-          ("serve_secs" -> serveSecs.map(num(_)))
-      }
-      val tiered = (1 to TieredRuns).map(_ => tieredRun())
-      val bills = tiered.map(_._2.map(_.sec).sum)
-      tiered.foreach { case (_, folds) =>
-        println(f"[maintain] $tag tiered-loop: " +
-          s"fold_at=${folds.map(_.atSegment).mkString(",")} " +
-          s"levels=${folds.map(_.level).mkString(",")} " +
-          s"fold_secs=${folds.map(f => f"${f.sec}%.3f").mkString(",")}")
-      }
-      // the top-level schedule is the run whose fold bill is the median
-      val (medServe, medFolds) = tiered(bills.indexOf(median(bills)))
       println(f"[maintain] $tag bm25: standing=$standingP%,d batch=$batchPRows%,d " +
         f"buckets=$nbP touched=$touchedP " +
         f"seg=$secSeg%.2f fold=$secFold%.2f direct=$secDirect%.2f")
@@ -219,15 +157,7 @@ object MaintainProbe {
           ("epoch_fold_sec" -> num(secFoldServe)) ~
           ("serve_sec_post_fold" -> num(servePost)) ~
           ("postings_files_per_bucket_max_post_optimize" -> maxFiles) ~
-          ("segments_after_prune" -> segsLeft) ~
-          ("policy_loop_tiered" -> (
-            ("seed_run_fold_sec" -> num(math.max(0.05, secSeg))) ~
-            ("seed_base_fold_sec" -> num(secFoldServe)) ~
-            ("seed_tax_sec_per_file" -> num(taxSeed)) ~
-            schedule(medServe, medFolds) ~
-            ("runs" -> tiered.map { case (sv, f) => schedule(sv, f) }) ~
-            ("total_fold_secs_median" -> num(median(bills))) ~
-            ("total_fold_secs_mad" -> num(mad(bills)))))) ~
+          ("segments_after_prune" -> segsLeft)) ~
         ("ann" ->
           ("standing_rows" -> standingV) ~ ("batch_rows" -> batchVRows) ~
           ("buckets" -> nbV) ~ ("touched_buckets" -> touchedV) ~
@@ -240,8 +170,8 @@ object MaintainProbe {
         "ablation - uniform keys touch every bucket so its cost tracks the standing " +
         "index, which is why the streaming loops fold segments once per epoch instead; " +
         "serve_sec_by_unfolded_segments times Epoch.unfolded's one multi-path scan over " +
-        "base and the first S segments (MAINTAIN_r11..r17 timed one union leg per segment, " +
-        "so their values are not comparable with these)")) ~
+        "base and the first S of 128 segments, median of 3 (MAINTAIN_r11..r17 timed one " +
+        "union leg per segment, so their values are not comparable with these)")) ~
       ("tiers" -> JObject(rows.toList)), Some(out))
   }
 }

@@ -991,28 +991,28 @@ object Dedup {
         Some("admsets" -> 0L))
       val results = new graft.streaming.SubBatchState[DataFrame]
       graft.streaming.SubBatchState.streamSubBatches(s, batchDocs) { (k, batch) =>
-        // a replay of a sub-batch a mid-epoch fold already landed
-        // (base markers or a live run) skips the VERDICT recompute:
-        // its admission verdict is already in `results` (first
-        // delivery — this holds for same-process retries; after a
-        // checkpoint-recovery RESTART the in-memory results store
-        // starts empty and the replayed sub-batch's verdict row is
-        // absent from the returned relation, a documented limit of
-        // this in-process harness), and recomputing it against a
-        // corpus that now CONTAINS its own admitted rows would
-        // mis-flag them as duplicates of themselves. The landing
-        // guard is per table: a restart between the close fold's two
-        // commits leaves bands folded and sets not — the replay
-        // re-lands ONLY the missing table's segment, reconstructing
-        // the admitted set from the table that DID land (admitted
-        // docs are exactly the sub-batch docs present in it).
+        // until the close fold every sub-batch is fresh, so a
+        // same-process replay recomputes its verdict against exactly
+        // the state its first delivery saw and overwrites its segment
+        // and its `results` entry. A sub-batch already in the base (a
+        // restart after a close fold) skips the VERDICT recompute:
+        // recomputing it against a corpus that now CONTAINS its own
+        // admitted rows would mis-flag them as duplicates of
+        // themselves, and the in-memory results store starts empty
+        // after a restart, so its verdict row is absent from the
+        // returned relation — a documented limit of this in-process
+        // harness. The landing guard is per table: a restart between
+        // the close fold's two commits leaves bands folded and sets
+        // not — the replay re-lands ONLY the missing table's segment,
+        // reconstructing the admitted set from the table that DID land
+        // (admitted docs are exactly the sub-batch docs present in it).
         val bFresh = ep.fresh(bands, k)
         val sFresh = ep.fresh(sets, k)
         if (bFresh || sFresh) {
           val base = minhashBaseOf(batch).localCheckpoint(true)
           val admitted =
             // fully fresh on both tables: the normal verdict path against
-            // base ∪ runs ∪ strictly-earlier segments — exactly the state
+            // base ∪ strictly-earlier segments — exactly the state
             // a same-process replay saw the first time
             if (bFresh && sFresh) admitSubBatch(k, base,
               ep.unfolded(bands, before = k), ep.unfolded(sets, before = k), results)

@@ -37,9 +37,13 @@ object Upsert {
   }
 
   /** Anti-join + union merge: rows of `existing` whose key appears in
-    * `updates` are replaced. Both inputs must share a schema. */
+    * `updates` are replaced. Keys match null-safely, so NULL is one key
+    * here as in `lastWins`, and re-applying `updates` is a no-op. Both
+    * inputs must share a schema. */
   def merge(existing: DataFrame, updates: DataFrame, key: Seq[String]): DataFrame =
-    existing.join(updates, key, "left_anti").unionByName(updates)
+    existing.as("e").join(updates.as("u"),
+      key.map(k => col(s"e.$k") <=> col(s"u.$k")).reduce(_ && _), "left_anti")
+      .unionByName(updates)
 
   // ---- demonstrations on the test tables -----------------------------
 

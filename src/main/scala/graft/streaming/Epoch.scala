@@ -8,50 +8,40 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the loop every maintained index (BM25 postings + doclens, ANN
   * cells, dedup bands + sets) runs, written once:
   *
-  *   - a temp work dir holding the segment and run stores, deleted
-  *     when the epoch closes;
+  *   - a temp work dir holding the segment store, deleted when the
+  *     epoch closes;
   *   - a fenced single-writer lease over every registered table, so a
   *     maintainer whose lease is stolen is refused at the commit point;
   *   - per sub-batch k, an O(batch) SEGMENT write per table (`land`),
   *     named by k so a replay overwrites in place, behind the landing
-  *     guard `fresh` (k is neither in the base — its `<app>.seg<k>`
-  *     marker — nor in a live run);
-  *   - the TIERED rent-or-buy cadence (TieredFoldPolicy): a serve
-  *     (`onServe`) may fold loose segments into a flat-priced RUN
-  *     (LsmFold.mergeRun) or everything into the bucketed base
-  *     (LsmFold.foldToBase, replay-safe by its markers);
-  *   - `finish()`: the close fold to base, then `compact`, both in
-  *     table order.
+  *     guard `fresh` (k's `<app>.seg<k>` marker is not in the base);
+  *   - reads between lands over base ∪ loose segments (`unfolded`), one
+  *     multi-path scan: it costs a step at the first segment, stays
+  *     within ~0.3 s of the base through 32 segments and adds ~0.012 s
+  *     per segment after that (MaintainProbe, sf0.1). The maintain
+  *     loops land 3 sub-batches per epoch (AnnBuildSoak 4), so no
+  *     segment count buys a fold before the close;
+  *   - `finish()`: the one fold per epoch, every loose segment into the
+  *     bucketed base (LsmFold.foldToBase, replay-safe by its markers),
+  *     then `compact`, both in table order.
   *
   * Tables fold and compact in REGISTRATION order, each with its lazily
   * evaluated `alsoRecord` — so the BM25 pair registers doclens first and
-  * postings second with the PairMarker, and needs no special case.
-  * A write-only epoch (no serves) accrues no tax at either level, so its
-  * only fold is the close fold straight to base.
-  *
-  * The landed files of one sub-batch, over all tables, are one policy
-  * segment: they are reported when another sub-batch lands, at the next
-  * serve, or at the close. */
+  * postings second with the PairMarker, and needs no special case. */
 final class Epoch private (s: SparkSession, val dir: Path,
-    lease: Replication.WriterLease, val policy: TieredFoldPolicy) {
+    lease: Replication.WriterLease) {
 
   /** A table registered with this epoch: its base, the app name its txn
     * and `<app>.seg<k>` markers are keyed by, append (`merge = false`)
     * or keyed upsert, extra markers every base commit carries, and its
-    * unfolded segments and runs. */
+    * loose segments. */
   final class Table private[Epoch] (val pt: PartitionedTable, val app: String,
       val merge: Boolean, val alsoRecord: () => Map[String, Long]) {
     private[Epoch] val segs = new SubBatchState[Path]
-    private[Epoch] val runs = ArrayBuffer[(Seq[Int], Path)]()
-    private[Epoch] def parts: Seq[(Seq[Int], Path)] =
-      runs.toSeq ++ segs.entries.map { case (k, p) => (Seq(k), p) }
   }
 
   private val tables = ArrayBuffer[Table]()
-  private var runSeq = 0
-  private var landed: Option[(Int, Int)] = None // (sub-batch, files) not yet reported
-  private var segments = 0
-  private val log = ArrayBuffer[Epoch.Fold]()
+  private var closeFold: Option[Double] = None
 
   /** Register `pt` and fence it on this epoch's lease. Register every
     * table before its first commit, in fold order. */
@@ -63,25 +53,21 @@ final class Epoch private (s: SparkSession, val dir: Path,
     t
   }
 
-  /** Sub-batch k is not yet in `t`: neither folded into its base nor
-    * held by a live run. Guarded PER TABLE, so a crash between two
-    * tables' base commits re-lands only the table that missed it. */
-  def fresh(t: Table, k: Int): Boolean =
-    t.pt.lastTxn(s"${t.app}.seg$k").isEmpty && !t.runs.exists(_._1.contains(k))
+  /** Sub-batch k is not yet folded into `t`'s base. Guarded PER TABLE,
+    * so a crash between two tables' base commits re-lands only the
+    * table that missed it. */
+  def fresh(t: Table, k: Int): Boolean = t.pt.lastTxn(s"${t.app}.seg$k").isEmpty
 
   /** Land sub-batch k's rows for `t` as one loose segment. */
   def land(t: Table, k: Int, rows: DataFrame): Unit = {
-    if (!landed.exists(_._1 == k)) report()
     val seg = dir.resolve("segs").resolve(t.app).resolve(f"seg$k%04d")
     rows.write.mode("overwrite").parquet(seg.toString)
     t.segs.put(k, seg)
-    landed = Some(k -> (landed.fold(0)(_._2) + LsmFold.parquetFiles(seg)))
   }
 
-  /** `t`'s unfolded leaves — runs, then loose segments of sub-batches
-    * strictly before `before` — the parts a serve unions onto the base. */
-  def leaves(t: Table, before: Int = Int.MaxValue): Seq[Path] =
-    t.runs.map(_._2).toSeq ++ t.segs.earlier(before)
+  /** `t`'s loose segments of sub-batches strictly before `before` —
+    * the leaves a serve unions onto the base. */
+  def leaves(t: Table, before: Int = Int.MaxValue): Seq[Path] = t.segs.earlier(before)
 
   /** Base ∪ `leaves(t, before)`: the state sub-batch `before` must see,
     * exactly what it saw on first delivery. */
@@ -91,94 +77,40 @@ final class Epoch private (s: SparkSession, val dir: Path,
     else t.pt.read(s).unionByName(s.read.parquet(ls.map(_.toString): _*))
   }
 
-  /** A query was served over base ∪ leaves; fold if its accrued tax
-    * buys a fold at either level. */
-  def onServe(observedServeSec: Option[Double] = None,
-      baselineServeSec: Double = 0.0): Unit = {
-    report()
-    policy.onServe(observedServeSec, baselineServeSec)
-    if (policy.shouldFoldToBase) foldToBase()
-    else if (policy.shouldFoldToRun) foldToRun()
-  }
-
-  /** Epoch close: land every unfolded leaf in the base, then compact,
-    * in table order. */
+  /** Epoch close: land every loose segment in the base (one commit per
+    * table, in order, each at the version after the table's own last
+    * one; the segments are pruned after all), then compact, in table
+    * order. */
   def finish(): Unit = {
-    report()
-    if (policy.unfoldedLeaves > 0) foldToBase()
-    tables.foreach(t => t.pt.compact(s, alsoRecord = t.alsoRecord()))
-  }
-
-  /** Every fold so far, in order. */
-  def folds: Seq[Epoch.Fold] = log.toSeq
-
-  private def report(): Unit = {
-    landed.foreach { case (_, files) =>
-      policy.onSegment(math.max(1, files))
-      segments += 1
-    }
-    landed = None
-  }
-
-  private def timed(level: String)(fold: => Unit): Double = {
-    val t0 = System.nanoTime()
-    fold
-    val sec = (System.nanoTime() - t0) / 1e9
-    log += Epoch.Fold(level, segments, sec)
-    sec
-  }
-
-  private def foldToRun(): Unit = {
-    var files = 0
-    val sec = timed("run") {
-      tables.foreach { t =>
-        val se = t.segs.entries
-        if (se.nonEmpty) {
-          val r = LsmFold.mergeRun(s, dir.resolve("runs").resolve(t.app), runSeq, se)
-          t.runs += r
-          files += LsmFold.parquetFiles(r._2)
-          LsmFold.prune(se.map(_._2))
-          t.segs.clear()
-        }
-      }
-      runSeq += 1
-    }
-    policy.onFoldToRun(Some(sec), math.max(1, files))
-  }
-
-  /** One base commit per table, in order, each at the version after the
-    * table's own last one; the consumed parts are pruned after all. */
-  private def foldToBase(): Unit = {
-    val sec = timed("base") {
-      val parts = tables.toSeq.map { t =>
-        val ps = t.parts
+    if (tables.exists(_.segs.nonEmpty)) {
+      val t0 = System.nanoTime()
+      val parts = tables.toSeq.flatMap { t =>
+        val ps = t.segs.entries
         LsmFold.foldToBase(s, t.pt, t.app, ps,
           t.pt.lastTxn(t.app).fold(1L)(_ + 1), t.merge, t.alsoRecord())
         ps
       }
-      LsmFold.prune(parts.flatten.map(_._2))
-      tables.foreach { t => t.runs.clear(); t.segs.clear() }
+      LsmFold.prune(parts.map(_._2))
+      tables.foreach(_.segs.clear())
+      closeFold = Some((System.nanoTime() - t0) / 1e9)
     }
-    policy.onFoldToBase(Some(sec))
+    tables.foreach(t => t.pt.compact(s, alsoRecord = t.alsoRecord()))
   }
+
+  /** Seconds of the close fold, once `finish()` has folded a segment. */
+  def foldSec: Option[Double] = closeFold
 }
 
 object Epoch {
-
-  /** One realized fold: "run" or "base", after how many sub-batch
-    * segments of the epoch, and its seconds. */
-  final case class Fold(level: String, atSegment: Int, sec: Double)
 
   /** Run `body` as one epoch: a fresh work dir `prefix*` under the
     * writer lease; every table `body` registers is unfenced when it
     * returns or throws, and the work dir is deleted. `body` calls
     * `finish()` itself, before it reads the folded base. */
-  def run[T](s: SparkSession, prefix: String,
-      policy: TieredFoldPolicy = TieredFoldPolicy.defaultPolicy())(
-      body: Epoch => T): T = {
+  def run[T](s: SparkSession, prefix: String)(body: Epoch => T): T = {
     val dir = Files.createTempDirectory(prefix)
     try Replication.withWriterLease(dir) { lease =>
-      val ep = new Epoch(s, dir, lease, policy)
+      val ep = new Epoch(s, dir, lease)
       try body(ep) finally ep.tables.foreach(_.pt.clearFence())
     } finally PartitionedTable.deleteRecursively(dir)
   }

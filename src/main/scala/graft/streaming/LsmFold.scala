@@ -3,53 +3,25 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 import java.nio.file.Path
 
-/** Shared physical fold kernels for the LSM maintain loops (bm25 /
-  * ann / dedup) — the two levels of the r16 TIERED fold:
+/** Shared physical fold kernel for the LSM maintain loops (bm25 /
+  * ann / dedup): the one fold of an epoch, loose segments into the
+  * bucketed base.
   *
-  *   segments --foldToRun--> runs --foldToBase--> bucketed base
+  * A PART is one (sub-batch id, parquet dir): a loose segment. Parts
+  * land in the base through `foldToBase`, which is REPLAY-SAFE
+  * structurally: each base fold commits one `<app>.seg<k>` txn marker
+  * per folded sub-batch atomically with the data
+  * (PartitionedTable.alsoRecord), and parts whose id the table has
+  * already folded are filtered here — a replayed already-folded
+  * sub-batch can never re-land, whatever the loop around the fold
+  * does (FoldReplaySpec).
   *
-  * A PART is (constituent sub-batch ids, parquet dir): a loose
-  * segment is a single-id part, a RUN is a many-id part produced by
-  * `mergeRun`. Both land in the base through `foldToBase`, which is
-  * REPLAY-SAFE structurally: each base fold commits one
-  * `<app>.seg<k>` txn marker per constituent sub-batch id atomically
-  * with the data (PartitionedTable.alsoRecord), and parts whose ids
-  * the table has already folded are filtered here — a replayed
-  * already-folded sub-batch can never re-land, whatever the loop
-  * around the fold does (FoldReplaySpec).
-  *
-  * Cost shapes (the reason the run level exists — r15 VERDICT
-  * item 3): `mergeRun` reads only THESE segments' rows and writes one
-  * merged dir — O(epoch arrivals so far), flat across the epoch;
-  * `foldToBase` is the bucketed-base rewrite — O(standing index),
-  * the price MAINTAIN_r15 measured growing 8.2 → 27.6 s within one
-  * sf1 epoch when every mid-epoch fold paid it. Tiered, mid-epoch
-  * folds pay the flat run price and the standing-index price is paid
-  * once per epoch (or when the run tax has genuinely accrued to it —
-  * TieredFoldPolicy). */
+  * Cost shape: a segment write reads and writes only its own rows,
+  * O(batch); `foldToBase` is the bucketed-base rewrite, O(standing
+  * index), paid once per epoch at its close. */
 object LsmFold {
 
-  /** Target run-file size: a run is a SERVE-path leaf, so its file
-    * count is a per-query open/footer tax — size-coalesce to ~128 MB
-    * files (the parquet-scan split size) instead of inheriting one
-    * part-file per input split, which would leave a run of k tiny
-    * segments as ~k files: same open count as the segments it
-    * replaced, i.e. no serve win at all (the r16 "serve p50 moved
-    * only 2–3%" observation — fewer union legs, same file count). */
-  private val RunTargetBytes = 128L << 20
-
-  private def dirBytes(p: Path): Long = {
-    val w = java.nio.file.Files.walk(p)
-    try w.filter(java.nio.file.Files.isRegularFile(_))
-      .mapToLong(java.nio.file.Files.size(_)).sum()
-    finally w.close()
-  }
-
-  /** Parquet file count of a part dir — the serve-path weight of a
-    * leaf (what a query pays is per-file open/footer/scan setup on
-    * the union read path), which is how the tiered policy prices
-    * leaves (r17: a 1-file run serves at ~base cost while the k
-    * multi-file segments it merged cost the full union tax). */
+  /** Parquet file count of a part dir. */
   def parquetFiles(p: Path): Int = {
     if (!java.nio.file.Files.exists(p)) 0
     else {
@@ -60,54 +32,19 @@ object LsmFold {
     }
   }
 
-  /** Merge segment parts into ONE run dir — O(these rows), never
-    * O(standing) — coalesced to size-targeted files so the run costs
-    * the serve path what ONE leaf should, not what k did. Returns the
-    * run as a part carrying every constituent sub-batch id (the base
-    * fold's marker set). */
-  def mergeRun(s: SparkSession, runDir: Path, runId: Int,
-      segs: Seq[(Int, Path)]): (Seq[Int], Path) = {
-    require(segs.nonEmpty, "mergeRun needs at least one segment")
-    java.nio.file.Files.createDirectories(runDir)
-    val p = runDir.resolve(f"run$runId%04d")
-    val dirs = segs.map(_._2).distinct
-    val nFiles = math.max(1L,
-      (dirs.map(dirBytes).sum + RunTargetBytes - 1) / RunTargetBytes).toInt
-    s.read.parquet(dirs.map(_.toString): _*)
-      .coalesce(nFiles)
-      .write.mode("overwrite").parquet(p.toString)
-    (segs.map(_._1).distinct, p)
-  }
-
-  /** Land parts (segments and/or runs) into the bucketed base in one
-    * commit, refusing parts whose sub-batch ids are all already
-    * folded. `merge=false` → appendInto (postings/bands/codes),
-    * `merge=true` → mergeInto (doclens/sets — keyed upserts).
-    * `alsoRecord` commits EXTRA markers atomically with the fold —
-    * the BM25 paired-snapshot record rides here. */
+  /** Land segments into the bucketed base in one commit, refusing
+    * those whose sub-batch is already folded. `merge=false` →
+    * appendInto (postings/bands/codes), `merge=true` → mergeInto
+    * (doclens/sets — keyed upserts). `alsoRecord` commits EXTRA
+    * markers atomically with the fold — the BM25 paired-snapshot
+    * record rides here. */
   def foldToBase(s: SparkSession, t: PartitionedTable, app: String,
-      parts: Seq[(Seq[Int], Path)], ver: Long, merge: Boolean,
+      parts: Seq[(Int, Path)], ver: Long, merge: Boolean,
       alsoRecord: Map[String, Long] = Map.empty): Unit = {
-    // a run only ever forms from segments that passed the landing
-    // guard, so a part is either entirely fresh or an entirely
-    // replayed segment — ENFORCED, not assumed (r16 ADVICE): a part
-    // mixing folded and unfolded ids would re-land the folded ids'
-    // rows, silently duplicating them in an append-only base
-    val fresh = parts.filter { case (ids, p) =>
-      val freshIds = ids.filter(k => t.lastTxn(s"$app.seg$k").isEmpty)
-      require(freshIds.isEmpty || freshIds.size == ids.size,
-        s"mixed part $p under $app: sub-batches " +
-          s"${(ids.toSet -- freshIds.toSet).toSeq.sorted.mkString(",")} are " +
-          "already folded while " +
-          s"${freshIds.sorted.mkString(",")} are not — re-landing the part " +
-          "would duplicate the folded rows; rebuild the run from unfolded " +
-          "segments only")
-      freshIds.nonEmpty
-    }
+    val fresh = parts.filter { case (k, _) => t.lastTxn(s"$app.seg$k").isEmpty }
     if (fresh.isEmpty) return
-    val markers = fresh.flatMap(_._1).distinct
-      .map(k => s"$app.seg$k" -> ver).toMap ++ alsoRecord
-    val df = s.read.parquet(fresh.map(_._2.toString).distinct: _*)
+    val markers = fresh.map { case (k, _) => s"$app.seg$k" -> ver }.toMap ++ alsoRecord
+    val df = s.read.parquet(fresh.map(_._2.toString): _*)
     if (merge) t.mergeInto(s, df, Some(app -> ver), markers)
     else t.appendInto(s, df, Some(app -> ver), markers)
   }

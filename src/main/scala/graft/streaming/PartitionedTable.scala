@@ -539,12 +539,15 @@ class PartitionedTable(val dir: Path, val keyCol: String, val nBuckets: Int) {
             else d.withColumn(f.name, lit(null).cast(f.dataType)))
             .select(target.fieldNames.map(col).toSeq: _*)
         localKeys match {
-          // `Upsert.merge`'s left anti join by the driver-held keys: a
-          // row with a NULL key is never replaced, and a NULL key in the
-          // batch replaces nothing
+          // `Upsert.merge`'s null-safe anti join by the driver-held
+          // keys: NULL is one key, so a NULL key in the batch replaces
+          // the row with a NULL key
           case Some((t, keys)) =>
             val replaced = keys.filter(_ != null).map(CatalystTypeConverters.convertToScala(_, t))
-            widen(ex).filter(col(keyCol).isNull || !col(keyCol).isInCollection(replaced))
+            val kept = !col(keyCol).isInCollection(replaced)
+            widen(ex).filter(
+              if (keys.contains(null)) col(keyCol).isNotNull && kept
+              else col(keyCol).isNull || kept)
               .unionByName(widen(updFlat))
           case None => Upsert.merge(widen(ex), widen(updFlat), Seq(keyCol))
         }

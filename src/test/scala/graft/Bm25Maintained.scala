@@ -22,7 +22,7 @@ object Bm25Maintained {
     * behind the landing guard or, with `guarded = false`, as a loop that
     * re-lands a replay; then the close fold and compaction. */
   def epoch(s: SparkSession, idx: Retrieval.MaintainedIndex,
-      batches: Seq[(Int, DataFrame)], guarded: Boolean = true): Seq[Epoch.Fold] =
+      batches: Seq[(Int, DataFrame)], guarded: Boolean = true): Unit =
     Epoch.run(s, "graft_bm25_spec") { ep =>
       val pair = new Retrieval.Bm25Epoch(ep, idx)
       batches.foreach { case (k, docs) =>
@@ -33,7 +33,6 @@ object Bm25Maintained {
         }
       }
       ep.finish()
-      ep.folds
     }
 
   /** BM25 top-10 served from the pair's committed state. */

@@ -7,9 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.{Epoch, LsmFold, PartitionedTable}
 
 /** The LSM epoch kernel the maintain loops run on, driven directly:
-  * the write-only cadence the gate loops see, the serve-interleaved
-  * run path no gate loop reaches, and the per-table landing guard
-  * across a crash between two tables' base commits. */
+  * the write-only cadence every loop runs (one close fold), a replayed
+  * sub-batch inside an epoch, and the per-table landing guard across a
+  * crash between two tables' base commits. */
 class EpochSpec extends AnyFunSuite {
   private val spark = TestSpark.session
 
@@ -27,66 +27,49 @@ class EpochSpec extends AnyFunSuite {
     df.select("doc_id", "text").as[(Long, String)].collect().toSeq.sorted
   }
 
-  /** One append table over `n - 1` sub-batches, `serve` after each,
-    * then sub-batch 0 delivered again. Returns the folds and the folded
-    * base's rows. */
-  private def oneTableEpoch(n: Int, serve: Boolean): (Seq[Epoch.Fold], Seq[(Long, String)]) = {
-    val (base, batch) = corpus(n)
-    Epoch.run(spark, "graft_epochspec") { ep =>
-      val t = ep.table(new PartitionedTable(ep.dir.resolve("t"), "doc_id", 4),
-        "docs", merge = false)
-      t.pt.appendInto(spark, base, Some("docs" -> 0L))
-      (0 until n - 1).foreach { k =>
-        if (ep.fresh(t, k)) ep.land(t, k, batch(k))
-        if (serve) ep.onServe(None)
-      }
-      // a replay of sub-batch 0: loose, it overwrites its own segment;
-      // run-folded, the guard must refuse it (a re-land would duplicate)
-      if (serve) assert(!ep.fresh(t, 0), "a run-folded sub-batch is not fresh")
-      if (ep.fresh(t, 0)) ep.land(t, 0, batch(0))
-      ep.finish()
-      (0 until n - 1).foreach { k =>
-        assert(t.pt.lastTxn(s"docs.seg$k").nonEmpty, s"sub-batch $k not in the base")
-      }
-      assert(ep.leaves(t).isEmpty)
-      Seq("segs", "runs").foreach { sub =>
-        assert(LsmFold.parquetFiles(ep.dir.resolve(sub)) === 0, s"$sub not pruned")
-      }
-      (ep.folds, sorted(t.pt.read(spark)))
-    }
-  }
-
-  test("tiered: write-only epoch = exactly one close fold, straight to base (gate loops unchanged)") {
+  test("write-only epoch = exactly one close fold, straight to base") {
     val (base, batch) = corpus(33)
     Epoch.run(spark, "graft_epochspec") { ep =>
       val t = ep.table(new PartitionedTable(ep.dir.resolve("t"), "doc_id", 4),
         "docs", merge = false)
       t.pt.appendInto(spark, base, Some("docs" -> 0L))
       (0 until 32).foreach(k => ep.land(t, k, batch(k)))
-      def runFolds = ep.folds.count(_.level == "run")
-      def baseFolds = ep.folds.count(_.level == "base")
-      assert(runFolds === 0 && baseFolds === 0,
-        "no serve paid a tax; nothing to amortize at either level")
+      assert(ep.foldSec.isEmpty && t.pt.lastTxn("docs") === Some(0L),
+        "landing folds nothing")
       ep.finish()
-      assert(runFolds === 0 && baseFolds === 1,
+      assert(ep.foldSec.nonEmpty && t.pt.lastTxn("docs") === Some(1L),
         "the close fold lands everything in the base in one commit")
-      assert(ep.policy.unfoldedLeaves === 0)
+      assert(ep.leaves(t).isEmpty)
+      val folded = ep.foldSec
       ep.finish()
-      assert(baseFolds === 1, "finish is idempotent when nothing is unfolded")
+      assert(ep.foldSec === folded && t.pt.lastTxn("docs") === Some(1L),
+        "finish is idempotent when nothing is unfolded")
     }
   }
 
-  test("serve-interleaved epoch folds to a run at segment 2, lands every sub-batch, prunes, and equals the write-only epoch") {
-    val (served, rows) = oneTableEpoch(7, serve = true)
-    // default seed: run fold 0.4 s, tax 0.15 s/file — segment tax
-    // crosses the run price at the second serve (0.15 + 0.30 >= 0.4)
-    assert(served.head.level === "run" && served.head.atSegment === 2,
-      s"first fold ${served.head}")
-    assert(served.last.level === "base")
-    val (writeOnly, rowsWriteOnly) = oneTableEpoch(7, serve = false)
-    assert(writeOnly.map(_.level) === Seq("base"))
-    assert(rows === rowsWriteOnly)
-    assert(rows.map(_._1).distinct.size === rows.size, "a sub-batch landed twice")
+  test("a re-delivered sub-batch overwrites its own segment; every sub-batch lands once, segments are pruned, rows equal the one-shot") {
+    val (base, batch) = corpus(7)
+    Epoch.run(spark, "graft_epochspec") { ep =>
+      val t = ep.table(new PartitionedTable(ep.dir.resolve("t"), "doc_id", 4),
+        "docs", merge = false)
+      t.pt.appendInto(spark, base, Some("docs" -> 0L))
+      (0 until 6).foreach { k => if (ep.fresh(t, k)) ep.land(t, k, batch(k)) }
+      // a replay of sub-batch 0 before the close fold: still fresh, and
+      // its re-land overwrites the one segment it already has
+      assert(ep.fresh(t, 0), "a loose sub-batch is fresh until the close fold")
+      ep.land(t, 0, batch(0))
+      assert(ep.leaves(t).size === 6, "one segment per sub-batch")
+      ep.finish()
+      (0 until 6).foreach { k =>
+        assert(t.pt.lastTxn(s"docs.seg$k").nonEmpty, s"sub-batch $k not in the base")
+        assert(!ep.fresh(t, k), s"folded sub-batch $k is still fresh")
+      }
+      assert(ep.leaves(t).isEmpty)
+      assert(LsmFold.parquetFiles(ep.dir.resolve("segs")) === 0, "segments not pruned")
+      val rows = sorted(t.pt.read(spark))
+      assert(rows === sorted((0 until 6).map(batch).foldLeft(base)(_ unionByName _)))
+      assert(rows.map(_._1).distinct.size === rows.size, "a sub-batch landed twice")
+    }
   }
 
   test("a crash between two tables' base commits re-lands only the table that missed them") {

@@ -5,13 +5,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Retrieval
-import graft.streaming.{Epoch, LsmFold, PartitionedTable, TieredFoldPolicy}
+import graft.streaming.{Epoch, LsmFold, PartitionedTable}
 
-/** Mid-epoch fold REPLAY idempotence, structural form (r15 VERDICT
-  * item 5): a fold commit records its sub-batch ids as txn markers
-  * atomically with the data, so a replay of an already-FOLDED
-  * sub-batch (AvailableNow re-delivering a micro-batch whose segment
-  * a mid-epoch fold already consumed) is refused at the next fold —
+/** Fold REPLAY idempotence, structural form (r15 VERDICT item 5): a
+  * fold commit records its sub-batch ids as txn markers atomically
+  * with the data, so a replay of an already-FOLDED sub-batch (a
+  * restart re-delivering a micro-batch whose segment an earlier
+  * epoch's close fold already consumed) is refused at the next fold —
   * final state identical to the no-replay run, however the loop
   * around the fold behaves. Pre-r16 this property was documented as
   * configurational (FoldPolicy.scala caveat, now deleted); this spec
@@ -72,7 +72,7 @@ class FoldReplaySpec extends AnyFunSuite {
     } finally PartitionedTable.deleteRecursively(wd)
   }
 
-  test("tiered fold: serve equality holds at every level; the run carries its ids into the base markers") {
+  test("close fold: serve equality over base and loose segments; every id lands as a base marker") {
     val base = docs.filter(!isArr)
     val qterms = Retrieval.queryGramsOf(docs)
     // the one-shot build over base + sub-batches `ks`, same query terms
@@ -80,44 +80,31 @@ class FoldReplaySpec extends AnyFunSuite {
       val c = base.unionByName(arrivals.filter(col("sub_batch").isin(ks: _*)).drop("sub_batch"))
       rows(Retrieval.bm25Of(Retrieval.postingsOf(c), Retrieval.totalsOf(c), qterms))
     }
-    // a serve over >= 2 loose segments buys a run fold; the base fold
-    // is left to the close
-    val policy = new TieredFoldPolicy(initialRunFoldCostSec = 1e-3,
-      initialBaseFoldCostSec = 1e9, initialTaxPerFileSec = 1.0)
-    Epoch.run(spark, "graft_tieredfold", policy) { ep =>
+    Epoch.run(spark, "graft_closefold") { ep =>
       val idx = Retrieval.maintainedIndex(spark, ep.dir.resolve("idx"), base)
       val pair = new Retrieval.Bm25Epoch(ep, idx)
       Retrieval.seedMaintained(spark, idx, base)
 
-      // level 0: base ∪ two loose segments
-      Seq(0, 1).foreach(k => pair.land(k, sub(k)))
-      assert(rows(pair.serve(qterms)) === oneShot(0, 1))
+      // before the fold: base ∪ loose segments
+      (0 to 2).foreach(k => pair.land(k, sub(k)))
+      assert(rows(pair.serve(qterms)) === oneShot(0, 1, 2))
       assert(rows(pair.serve(qterms, before = 1)) === oneShot(0))
 
-      // level 1: the serve folds segments 0,1 to a RUN — serve base ∪ run ∪ seg2
-      ep.onServe()
-      assert(ep.folds.map(_.level) === Seq("run"))
-      pair.land(2, sub(2))
-      assert(pair.ep.leaves(pair.postings).size === 2)
-      assert(rows(pair.serve(qterms)) === oneShot(0, 1, 2))
-
-      // level 2: run + loose seg2 fold to BASE in one commit per table;
-      // the run's CONSTITUENT ids land as markers (the replay guard)
+      // the close fold lands the segments in the base in one commit per
+      // table, with one marker per sub-batch id (the replay guard)
       ep.finish()
-      assert(ep.folds.map(_.level) === Seq("run", "base"))
       (0 to 2).foreach { k =>
         assert(idx.postings.lastTxn(s"bm25idx.seg$k").contains(1L),
-          s"run constituent $k must be marker-recorded at the base fold")
+          s"sub-batch $k must be marker-recorded at the base fold")
         assert(idx.doclens.lastTxn(s"bm25dl.seg$k").contains(1L))
       }
       assert(rows(pair.serve(qterms)) === oneShot(0, 1, 2))
 
-      // a replayed constituent (seg 0, folded via the run) is refused
+      // a replayed folded sub-batch is refused
       val replay = ep.dir.resolve("replay0")
       Retrieval.postingsOf(sub(0)).write.parquet(replay.toString)
       val before = idx.postings.read(spark).count()
-      LsmFold.foldToBase(spark, idx.postings, "bm25idx",
-        Seq((Seq(0), replay)), 2L, merge = false)
+      LsmFold.foldToBase(spark, idx.postings, "bm25idx", Seq(0 -> replay), 2L, merge = false)
       assert(idx.postings.read(spark).count() === before)
     }
   }
@@ -173,31 +160,6 @@ class FoldReplaySpec extends AnyFunSuite {
       assert(rows(served(spark, idx, Retrieval.queryGramsOf(docs))) ===
         rows(Retrieval.bm25TopkOf(docs.filter(!isArr).unionByName(all),
           Retrieval.QueryDocs)))
-    } finally PartitionedTable.deleteRecursively(wd)
-  }
-
-  test("foldToBase refuses a MIXED part (some ids folded, some not) instead of silently duplicating the folded rows") {
-    val wd = Files.createTempDirectory("graft_mixedpart")
-    try {
-      val idx = seeded(spark, wd.resolve("idx"), docs.filter(!isArr))
-      def seg(k: Int): (Int, java.nio.file.Path) = {
-        val p = wd.resolve("segs").resolve(k.toString)
-        Retrieval.postingsOf(sub(k)).write.mode("overwrite").parquet(p.toString)
-        k -> p
-      }
-      // sub-batch 0 folds to base; a (buggy) run then forms from
-      // segments 0 AND 1 — re-landing it would duplicate 0's rows
-      LsmFold.foldToBase(spark, idx.postings, "bm25idx",
-        Seq((Seq(0), seg(0)._2)), 1L, merge = false)
-      val mixedRun = LsmFold.mergeRun(spark, wd.resolve("runs"), 0, Seq(seg(0), seg(1)))
-      val before = idx.postings.read(spark).count()
-      val ex = intercept[IllegalArgumentException] {
-        LsmFold.foldToBase(spark, idx.postings, "bm25idx",
-          Seq(mixedRun), 2L, merge = false)
-      }
-      assert(ex.getMessage.contains("mixed part"))
-      assert(idx.postings.read(spark).count() === before,
-        "the refused fold must not have landed anything")
     } finally PartitionedTable.deleteRecursively(wd)
   }
 

@@ -338,16 +338,22 @@ class PartitionedTableSpec extends AnyFunSuite {
   }
 
   test("mergeInto is idempotent and inserts new keys into their buckets") {
-    val dir = Files.createTempDirectory("graft_pt2")
-    val t = new PartitionedTable(dir, "id", nBuckets = 4)
-    t.mergeInto(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
-    val upd = Seq((2L, "b2"), (999L, "new")).toDF("id", "v")
-    t.mergeInto(spark, upd)
-    val once = t.read(spark).orderBy("id").as[(Long, String)].collect().toSeq
-    t.mergeInto(spark, upd) // re-apply: idempotent
-    val twice = t.read(spark).orderBy("id").as[(Long, String)].collect().toSeq
-    assert(once === twice)
-    assert(once === Seq((1L, "a"), (2L, "b2"), (999L, "new")))
+    // a driver-held batch takes the local path, a repartitioned one the
+    // distributed path; on both, NULL is one key that a batch replaces
+    Seq(false, true).foreach { distributed =>
+      val dir = Files.createTempDirectory("graft_pt2")
+      val t = new PartitionedTable(dir, "id", nBuckets = 4)
+      t.mergeInto(spark, Seq((Some(1L), "a"), (Some(2L), "b"), (None, "n")).toDF("id", "v"))
+      val local = Seq((Some(2L), "b2"), (Some(999L), "new"), (None, "n2")).toDF("id", "v")
+      val upd = if (distributed) local.repartition(2) else local
+      t.mergeInto(spark, upd)
+      val once = t.read(spark).orderBy("id").as[(Option[Long], String)].collect().toSeq
+      t.mergeInto(spark, upd) // re-apply: idempotent
+      val twice = t.read(spark).orderBy("id").as[(Option[Long], String)].collect().toSeq
+      assert(once === twice, s"distributed=$distributed")
+      assert(once === Seq((None, "n2"), (Some(1L), "a"), (Some(2L), "b2"), (Some(999L), "new")),
+        s"distributed=$distributed")
+    }
   }
 
   test("optimistic concurrency: a lost commit race throws, leaves state intact, cleans its attempt dir") {

@@ -262,10 +262,9 @@ class UpsertSpec extends AnyFunSuite {
     * and NULL num_changes beside a non-null twin; changeset 4 with two
     * comments of one user in one second with different text, and a
     * replayed comment; a changeset with no id (a NULL key in both
-    * tables), which replaces nothing. */
-  private val nullIdChangeset = csXml(0, Some("01"), None, 2, Nil, Seq((2, 0, "n")))
+    * tables), which replaces the loaded world's NULL-key rows. */
   private val plantedDiffs: Seq[Seq[String]] = Seq(
-    Seq(nullIdChangeset,
+    Seq(csXml(0, Some("01"), None, 2, Nil, Seq((2, 0, "n"))),
       csXml(1, Some("01"), Some(5), 1, Seq("k0" -> "old"), Nil),
       csXml(1, Some("02"), Some(0), 2, Seq("k0" -> "new"), Nil),
       csXml(2, Some("01"), Some(1), 1, Nil, Nil),
@@ -306,8 +305,9 @@ class UpsertSpec extends AnyFunSuite {
   }
 
   /** A replication world loaded with the bulk fixture plus ids 1..6's
-    * older versions and a changeset with no id (a NULL key, which no
-    * batch replaces), so every batch merges into a non-empty table. */
+    * older versions and a changeset with no id (a NULL key, which a
+    * batch's NULL-key rows replace), so every batch merges into a
+    * non-empty table. */
   private def loadedWorld(name: String): (java.nio.file.Path, java.nio.file.Path, java.nio.file.Path) = {
     val root = Files.createTempDirectory(name)
     val dump = root.resolve("dump.osm")
@@ -390,12 +390,11 @@ class UpsertSpec extends AnyFunSuite {
   }
 
   test("a failing commit in either table: catchUp joins the other, rethrows, keeps the offset, and a re-run converges") {
-    // no NULL-key rows here: a NULL key replaces nothing, so a replayed
-    // batch appends its NULL-key rows a second time
-    val diffs = plantedDiffs.map(_.filterNot(_ == nullIdChangeset))
+    // the planted NULL-id changeset rides along: NULL is one key, so
+    // the replayed batch replaces its NULL-key rows instead of adding them
     for (failing <- Seq("changesets", "comments")) {
       val (feed, tableDir, state) = loadedWorld("graft_t_branch_fail")
-      writeDiffs(feed, diffs)
+      writeDiffs(feed, plantedDiffs)
       val other = new java.util.concurrent.atomic.AtomicBoolean(false)
       // the failing table throws at its commit; the other commits late,
       // so it is still running when the failure is thrown
@@ -419,10 +418,10 @@ class UpsertSpec extends AnyFunSuite {
       assert(other.get, s"the other table's merge had not finished when $failing failed")
       assert(Replication.StateDoc.read(state).lastSequence === 0L, "the offset advanced")
       // a clean re-run replays the batch and lands where a clean run does
-      assert(Replication.catchUp(spark, feed, tableDir, state, batchSize = 8) === diffs.size)
+      assert(Replication.catchUp(spark, feed, tableDir, state, batchSize = 8) === plantedDiffs.size)
       val (refFeed, refDir, refState) = loadedWorld("graft_t_branch_ref")
-      writeDiffs(refFeed, diffs)
-      assert(Replication.catchUp(spark, refFeed, refDir, refState, batchSize = 8) === diffs.size)
+      writeDiffs(refFeed, plantedDiffs)
+      assert(Replication.catchUp(spark, refFeed, refDir, refState, batchSize = 8) === plantedDiffs.size)
       assert(sameRows(Replication.readTable(spark, tableDir), Replication.readTable(spark, refDir)),
         s"changesets after a $failing failure")
       assert(sameRows(Replication.commentsTable(tableDir).read(spark),
